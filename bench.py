@@ -83,18 +83,6 @@ def _table_bytes(sf_dir: str) -> int:
     return total
 
 
-def _cpus_for_derivation() -> int:
-    """$SPARK_GRAFT_CPUS as an int, tolerating the non-integer values
-    session.py accepts for the master URL (e.g. "*" = all cores) —
-    ADVICE-r13: `local[*]` worked for get_spark but crashed this
-    derivation with ValueError before the session was even built."""
-    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    try:
-        return int(raw)
-    except ValueError:
-        return os.cpu_count() or 32
-
-
 def _sf_from_dir(sf_dir: str) -> float:
     base = os.path.basename(sf_dir.rstrip("/"))
     try:
@@ -140,7 +128,7 @@ def main() -> None:
             duck_times[name] = round(statistics.median(samples), 4)
         con.close()
 
-    from hbase_sep_spark.session import get_spark
+    from hbase_sep_spark.session import cpus, get_spark
 
     # Shuffle partitions: $SPARK_GRAFT_SHUFFLE wins if set; otherwise
     # DERIVED from input size (round 13, guide §2.2) — one partition
@@ -157,7 +145,7 @@ def main() -> None:
     if env_shuffle is not None:
         shuffle = int(env_shuffle)
     else:
-        shuffle = max(8, min(_cpus_for_derivation(), _table_bytes(sf_dir) // (32 << 20)))
+        shuffle = max(8, min(cpus(), _table_bytes(sf_dir) // (32 << 20)))
     spark = get_spark("bench", shuffle_partitions=shuffle)
 
     # Warm the whole suite twice before any timing: first pass pays

@@ -191,7 +191,7 @@ ASCII_FOLD_SQL = "regexp_replace({}, '[^\\x00-\\x7F]+', '#', 'g')"
 # ",}" or the word "NaN") costs only conservatism, never agreement.
 # The pattern text uses only syntax Java regex and RE2 parse the
 # same way (\xhh classes, alternation, literal-backslash escapes).
-# Probed variant-by-variant in tests/test_jsonhostile_fixture.py.
+# Probed variant-by-variant in the jsonhostile class of tests/mutations.py.
 HOSTILE_JSON_RE = (
     "[\\x00-\\x1f]"  # raw C0 control char anywhere (incl. bare tab/CR/LF)
     "|\\\\u[dD][89a-fA-F]"  # any UTF-16 surrogate \u-escape, paired or lone
@@ -379,7 +379,7 @@ def fin(col) -> Column:
     is NULL so the otherwise branch passes the NULL through).
 
     SQL mirror — spell ONE of the two canonical forms in the oracle
-    (tests/test_nonfinite_fixture.py rejects any other isnan spelling):
+    (the nonfinite class of tests/mutations.py rejects any other isnan spelling):
       NULL-the-measure:  (CASE WHEN isnan(v) OR isinf(v) THEN NULL ELSE v END)
       drop-the-row:      WHERE NOT (isnan(v) OR isinf(v))    -- rank tests
     """

@@ -107,6 +107,41 @@ def fixture_key(sf_dir: str) -> str:
     ).hexdigest()[:12]
 
 
+def listing(path: str) -> tuple[list[str], tuple]:
+    """The data files of a table path and their listing signature.
+
+    A file is its own one-file listing; a directory lists its
+    `*.parquet` files in sorted-filename order (the layout rule),
+    skipping names that start with `.` or `_` — Spark's own rule for
+    hidden and metadata files (`_SUCCESS`, a writer's `_tmp.parquet`),
+    so a footer count never includes a file the scan does not read.
+    The signature is each file's (path, size, mtime_ns): a same-path
+    rewrite or a new segment changes it, so a cache keyed on it never
+    serves a stale listing."""
+    import os
+
+    if os.path.isdir(path):
+        files = sorted(
+            os.path.join(path, f)
+            for f in os.listdir(path)
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        )
+    else:
+        files = [path]
+    sig = tuple(
+        (fp, st.st_size, st.st_mtime_ns) for fp in files for st in (os.stat(fp),)
+    )
+    return files, sig
+
+
+def fanout(sf_dir: str, name: str, rows_per_worker: int, cores: int) -> int:
+    """Python-worker fan-out for a table that ships as one input split:
+    one partition per `rows_per_worker` footer rows, capped at `cores`
+    (the session's defaultParallelism). Callers apply their own floor
+    or skip-below-2 rule, so small fixtures keep their historical plan."""
+    return min(cores, table_rows(sf_dir, name) // rows_per_worker)
+
+
 _TABLE_ROWS_CACHE: LruCache[int] = LruCache(maxsize=64)
 
 
@@ -118,21 +153,9 @@ def table_rows(sf_dir: str, name: str) -> int:
     Use this to make fan-out knobs scale with the data instead of
     pinning a local-mode constant (round 13 — the batch analog of the
     streaming `_scaled_bs` discipline)."""
-    import os
-
     import pyarrow.parquet as pq
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    files = (
-        sorted(
-            os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
-        )
-        if os.path.isdir(path)
-        else [path]
-    )
-    sig = tuple(
-        (fp, st.st_size, st.st_mtime_ns) for fp in files for st in (os.stat(fp),)
-    )
+    files, sig = listing(f"{sf_dir}/{name}.parquet")
     cached = _TABLE_ROWS_CACHE.get(sig)
     if cached is not None:
         return cached
@@ -238,20 +261,9 @@ def int_ts_unit(path: str) -> str:
     all-NULL feed returns 'ns' (nothing to convert — preserves the
     pre-round-11 nanos assumption byte-for-byte on rounds-1-3 files,
     whose values classify as 'ns' by magnitude anyway)."""
-    import os
-
     import pyarrow.parquet as pq
 
-    files = (
-        sorted(
-            os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
-        )
-        if os.path.isdir(path)
-        else [path]
-    )
-    sig = tuple(
-        (fp, st.st_size, st.st_mtime_ns) for fp in files for st in (os.stat(fp),)
-    )
+    files, sig = listing(path)
     cached = _TS_UNIT_CACHE.get(("unit", sig))
     if cached is not None:
         return cached

@@ -214,7 +214,7 @@ def ts_daily_gapfill_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     filled value directly, so no second window runs over the (larger)
     densified result. The previous span+calendar+LEFT JOIN shape was
     measured at sf1 to spend +0.686 s (half the query) in the spine
-    join (scripts/decompose_gapfill_sf1.py); generating gaps from
+    join (BASELINE.md, round-11 gap-fill resolution); generating gaps from
     lead() removes that term entirely and nothing in the plan grows
     faster than the daily table.
 

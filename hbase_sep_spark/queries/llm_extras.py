@@ -244,7 +244,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Java includes \\x0B in \\s, RE2 doesn't — round-8 control-char
     sweep); the oracle's pattern must stay byte-equal to
     operators.text.BPE_ISH_PATTERN (drift-pinned by
-    tests/test_ctrlchar_fixture.py)."""
+    the ctrlchar class of tests/mutations.py)."""
     d = t(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
@@ -316,12 +316,9 @@ def _doc_fanout(spark: SparkSession, sf_dir: str) -> int:
     below 2 the repartition is SKIPPED, so every graded-SF plan stays
     bit-identical to the historical form. A real 100 TB corpus
     parallelizes by file count natively."""
-    from hbase_sep_spark.io import table_rows
+    from hbase_sep_spark.io import fanout
 
-    return min(
-        int(spark.sparkContext.defaultParallelism),
-        table_rows(sf_dir, "documents") // 50_000,
-    )
+    return fanout(sf_dir, "documents", 50_000, spark.sparkContext.defaultParallelism)
 
 
 @register(

@@ -622,12 +622,9 @@ def _emb_fanout(spark: SparkSession, sf_dir: str) -> int:
     single-split form (floor pinned by tests/test_plans.py). At real
     deployment scale the file count provides this parallelism
     natively — the knob only matters in the single-file middle."""
-    from hbase_sep_spark.io import table_rows
+    from hbase_sep_spark.io import fanout
 
-    return min(
-        int(spark.sparkContext.defaultParallelism),
-        table_rows(sf_dir, "embeddings") // 25_000,
-    )
+    return fanout(sf_dir, "embeddings", 25_000, spark.sparkContext.defaultParallelism)
 
 
 @register("vec_pca_project", oracle=None, memoize=True, section=SECTION)

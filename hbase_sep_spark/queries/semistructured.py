@@ -140,7 +140,7 @@ def json_to_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides fail the row to a NULL map (Spark: map_keys vs
     array_distinct size; oracle: json_keys vs list_distinct len —
     DuckDB's json_keys does preserve duplicates). Pinned by
-    tests/test_dupkey_fixture.py."""
+    the dupkey class of tests/mutations.py."""
     ev = t(spark, sf_dir, "events").filter(F.col("event_id") <= 3000)
     raw = F.from_json("props", "map<string,int>")
     # ~json_gate: the round-8 lenient-parser class (raw control chars,

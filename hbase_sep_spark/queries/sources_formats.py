@@ -143,7 +143,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer: the typed columnar formats are the real 100 TB path.
     Splittability pinned by tests/test_plans.py (no multiLine) and
     value-correctness on embedded-newline payloads by
-    tests/test_extreme_fixture.py."""
+    the extreme class of tests/mutations.py."""
     out = scratch_dir(spark, "fmt_roundtrip", "csv")
     opts = {
         "header": "true", "quote": '"', "escape": '"',

@@ -15,7 +15,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import pandas_udf, udf, udtf
 
-from hbase_sep_spark.io import t, table_rows
+from hbase_sep_spark.io import fanout, t
 from hbase_sep_spark.operators import vectors as V
 from hbase_sep_spark.registry import register
 
@@ -87,13 +87,7 @@ def udf_pandas_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 150k rows up to the session's cores, so a 100× feed is not
     # pinned to 8 Python workers on 32 cores (footer-only count;
     # the batch analog of the streaming _scaled_bs rule).
-    fan = max(
-        8,
-        min(
-            spark.sparkContext.defaultParallelism,
-            table_rows(sf_dir, "orders") // 150_000,
-        ),
-    )
+    fan = max(8, fanout(sf_dir, "orders", 150_000, spark.sparkContext.defaultParallelism))
     o = t(spark, sf_dir, "orders").repartition(fan)
     return o.select("o_orderkey", F.round(sigmoid("o_totalprice"), 6).alias("price_sigmoid"))
 

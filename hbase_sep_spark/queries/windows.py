@@ -15,7 +15,7 @@ nullable time key silently diverges the moment a feed ships NULL
 timestamps. Policy: time-ordered operators DROP null-time rows on
 both sides (`ts IS NOT NULL` — the dead-letter route; a record
 without an event time has no position in the order), a no-op on
-clean feeds. Pinned by tests/test_nullts_fixture.py.
+clean feeds. Pinned by the nullts class of tests/mutations.py.
 """
 
 from __future__ import annotations

@@ -14,13 +14,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def cpus() -> int:
+    """Worker cores: $SPARK_GRAFT_CPUS, or every core of this host when
+    it is unset or not an integer (e.g. "*", which `local[*]` accepts)."""
+    try:
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    except (KeyError, ValueError):
+        return os.cpu_count() or 1
+
+
 def get_spark(app_name: str = "hbase-sep-spark", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    n = cpus()
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
+        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", n))
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
+        .master(f"local[{n}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")

@@ -43,6 +43,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from hbase_sep_spark.io import LruCache, listing
+
 EVENT_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -70,8 +72,9 @@ def _feed_segments(path: str) -> tuple[tuple[str, int, int], ...]:
     """The feed as an ordered list of (file, base_offset, n_rows)
     segments. A single parquet file is the one-segment case; a
     DIRECTORY is replayed as its `*.parquet` files in sorted-filename
-    order — the shape a real 100 TB feed has (WAL/Kafka-style segment
-    files, each a contiguous ts range, named in rotation order). The
+    order, hidden `.`/`_` names skipped (io.listing) — the shape a real
+    100 TB feed has (WAL/Kafka-style segment files, each a contiguous ts
+    range, named in rotation order). The
     feed contract is unchanged either way: the concatenation in
     segment order is (ts, event_id)-sorted (asserted in tests for the
     fixture generator).
@@ -82,23 +85,14 @@ def _feed_segments(path: str) -> tuple[tuple[str, int, int], ...]:
     SAME PATH inside a live process (the driver's testdata-regeneration
     precedent) misses the memo and re-reads footers instead of serving
     stale offsets — wrong replay slices and feed_total otherwise.
-    Signature cost is one glob + one stat per segment, paid every
+    Signature cost is one listdir + one stat per segment, paid every
     call; only the footer reads are memoized. (At cluster scale the
     same information would come from the table format's manifest
     instead of footers; the memo is the single-process stand-in.)
     """
-    import glob
-    import os
-
-    if os.path.isdir(path):
-        files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-        if not files:
-            raise FileNotFoundError(f"no *.parquet segments under {path}")
-    else:
-        files = [path]
-    sig = tuple(
-        (fp, st.st_size, st.st_mtime_ns) for fp in files for st in (os.stat(fp),)
-    )
+    files, sig = listing(path)
+    if not files:
+        raise FileNotFoundError(f"no *.parquet segments under {path}")
     cached = _SEGMENT_CACHE.get((path, sig))
     if cached is not None:
         return cached
@@ -145,9 +139,7 @@ def _feed_segments(path: str) -> tuple[tuple[str, int, int], ...]:
         segs.append((fp, base, n))
         base += n
     out = tuple(segs)
-    if len(_SEGMENT_CACHE) > 64:
-        _SEGMENT_CACHE.clear()
-    _SEGMENT_CACHE[(path, sig)] = out
+    _SEGMENT_CACHE.put((path, sig), out)
     return out
 
 
@@ -175,7 +167,7 @@ def _ts_stats_range(md) -> tuple:
     return mn, mx
 
 
-_SEGMENT_CACHE: dict[tuple, tuple[tuple[str, int, int], ...]] = {}
+_SEGMENT_CACHE: LruCache[tuple[tuple[str, int, int], ...]] = LruCache(maxsize=64)
 
 
 def feed_total(path: str) -> int:

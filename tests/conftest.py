@@ -28,3 +28,19 @@ def duck():
     con = duck_connection(SF_ORACLE)
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def mutated(tmp_path_factory):
+    """cls -> directory of that tests/mutations.py class built from
+    sf0.001, once per session."""
+    from tests.mutations import MUTATIONS, materialize
+
+    built = {}
+
+    def get(cls: str) -> str:
+        if cls not in built:
+            built[cls] = materialize(MUTATIONS[cls], SF_UNIT, str(tmp_path_factory.mktemp(cls)))
+        return built[cls]
+
+    return get

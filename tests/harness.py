@@ -35,7 +35,7 @@ def duck_connection(sf_dir: str):
         src = (
             f"read_parquet('{path}/*.parquet')"
             if os.path.isdir(path)
-            # Multi-file table layout (scripts/gen_layout_fixture.py):
+            # Multi-file table layout (the layout class of tests/mutations.py):
             # Spark reads the directory natively; DuckDB needs a glob.
             else f"read_parquet('{path}')"
         )

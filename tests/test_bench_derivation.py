@@ -13,7 +13,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _cpus_for_derivation, _table_bytes  # noqa: E402
+from bench import _table_bytes  # noqa: E402
+from hbase_sep_spark.session import cpus  # noqa: E402
 
 SF_UNIT = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
@@ -57,11 +58,13 @@ def test_table_bytes_counts_directory_tables(tmp_path):
 
 
 def test_cpus_for_derivation_tolerates_star(monkeypatch):
-    """ADVICE-r13: SPARK_GRAFT_CPUS="*" builds `local[*]` fine in
-    session.py but crashed the derivation with ValueError."""
+    """ADVICE-r13: SPARK_GRAFT_CPUS="*" builds `local[*]` fine but
+    crashed the derivation with ValueError. session.cpus() is the one
+    parse both the session and bench use; unset or non-integer means
+    every core of the host, never a literal count."""
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "*")
-    assert _cpus_for_derivation() == (os.cpu_count() or 32)
+    assert cpus() == os.cpu_count()
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "16")
-    assert _cpus_for_derivation() == 16
+    assert cpus() == 16
     monkeypatch.delenv("SPARK_GRAFT_CPUS")
-    assert _cpus_for_derivation() == 32
+    assert cpus() == os.cpu_count()

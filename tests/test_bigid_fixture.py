@@ -1,86 +1,18 @@
-"""Big-id regression tests — the 100 TB id regime (round 6).
-
-Fixture ids top out around 10^6, but a 100 TB corpus has event/doc
-ids far past 2^31 — where ANSI turns `id * <knuth-constant>` into
-ARITHMETIC_OVERFLOW and int-typed schemas truncate. A full-registry
-sweep with ids shifted by 5e9 caught two such bugs (the bare Knuth
-multiply, and vec_kmeans_lloyd's `cid int` schema); these tests pin
-the fixes on representatives of each hash family so the class can't
-regress.
-"""
+"""Class ``bigid`` of tests/mutations.py: ids past 2^31, plus the knuth_hash overflow check."""
 
 from __future__ import annotations
 
-import shutil
+import pyspark.sql.functions as F
 
-import duckdb
-import pytest
-
-from hbase_sep_spark.registry import load_all
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-SHIFT = 5_000_000_000
-
-# One representative per hash/schema family that the big-id sweep
-# exercised: event_id Knuth (reservoir), doc_id Knuth threshold
-# (Bernoulli), doc_id bucket (dataset split), (user_id+1) multi-hash
-# (CMS), quality-scaled threshold, and the k-means centroid schema.
-BIGID = [
-    "sample_reservoir_topk_hash",
-    "sample_bernoulli_hash",
-    "pipeline_dataset_split",
-    "agg_cms_freq_sketch",
-    "agg_kmv_distinct_sketch",
-    "pipeline_mixture_sample",
-    "sample_quality_weighted",
-    "vec_kmeans_lloyd",
-]
+from tests.mutations import compare
 
 
-@pytest.fixture(scope="module")
-def bigid_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("bigid_sf")
-    for name in "region nation customer supplier part orders lineitem".split():
-        shutil.copy(f"{SF_UNIT}/{name}.parquet", dst / f"{name}.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT event_id + {SHIFT} AS event_id, ts,
-                         user_id + {SHIFT} AS user_id, event_type, value, props
-                  FROM '{SF_UNIT}/events.parquet')
-            TO '{dst}/events.parquet' (FORMAT PARQUET)"""
-    )
-    con.execute(
-        f"""COPY (SELECT doc_id + {SHIFT} AS doc_id, text, lang, source, n_chars
-                  FROM '{SF_UNIT}/documents.parquet')
-            TO '{dst}/documents.parquet' (FORMAT PARQUET)"""
-    )
-    con.execute(
-        f"""COPY (SELECT vec_id + {SHIFT} AS vec_id, embedding, label
-                  FROM '{SF_UNIT}/embeddings.parquet')
-            TO '{dst}/embeddings.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    return str(dst)
-
-
-@pytest.mark.parametrize("name", BIGID)
-def test_bigid_query_matches_oracle(name, spark, bigid_sf):
-    con = duck_connection(bigid_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, bigid_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), f"{name}: {res['status']}: {res['detail']}"
+test_bigid_query_matches_oracle = compare("bigid")
 
 
 def test_knuth_hash_no_overflow_and_small_id_identity(spark):
     """portable.knuth_hash: (a) never overflows, even at id = 2^62;
     (b) equals the naive id*K%M form for every id below 2^31."""
-    import pyspark.sql.functions as F
-
     from hbase_sep_spark.functions.portable import HASH_MOD, KNUTH, knuth_hash
 
     ids = [0, 1, 12345, 2**31 - 1, 2**31, 5_000_000_000, 2**62]
@@ -88,14 +20,11 @@ def test_knuth_hash_no_overflow_and_small_id_identity(spark):
     rows = df.select(
         "id",
         knuth_hash("id").alias("h"),
-        F.when(F.col("id") < 2**31, (F.col("id") * F.lit(KNUTH)) % F.lit(HASH_MOD)).alias(
-            "naive"
-        ),
+        F.when(F.col("id") < 2**31, (F.col("id") * F.lit(KNUTH)) % F.lit(HASH_MOD)).alias("naive"),
     ).collect()
     for r in rows:
         assert 0 <= r["h"] < HASH_MOD
         if r["id"] < 2**31:
             assert r["h"] == r["naive"], r
         # engine-mirror: DuckDB evaluates the same expression text
-        want = ((r["id"] % 2147483648) * KNUTH) % HASH_MOD
-        assert r["h"] == want, r
+        assert r["h"] == ((r["id"] % 2147483648) * KNUTH) % HASH_MOD, r

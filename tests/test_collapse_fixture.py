@@ -1,65 +1,8 @@
-"""Total-collapse regression tests (round-10 adversarial sweep).
-
-Every event on one user/type/second with a DECIMAL-typed value,
-every document identical, every embedding the same vector — the
-extreme-skew endpoint beyond the round-6 half-collapse. Found one
-real gap: the streaming transport crashed on decimal feed values
-(pyarrow to_pylist yields decimal.Decimal against the declared
-DoubleType schema) — fixed by the feed-edge cast in
-sources/sep_events.py:_read_rows. See
-scripts/gen_collapse_fixture.py for the class write-up; 278/279
-after (the one non-pass is join_interval_events' genuinely
-quadratic ~30 M-row output exceeding the compare harness's driver
-collect — identical on both engines, a compare-envelope limit).
-
-RULE: the transport normalizes feed physical types exactly like
-io.t() — decimal(20,0) → int64, other decimals → float64; never
-read the feed around _read_rows.
-"""
+"""Class ``collapse`` of tests/mutations.py: total collapse of every grouping axis."""
 
 from __future__ import annotations
 
-import pytest
-
-from hbase_sep_spark.registry import load_all
-from scripts.gen_collapse_fixture import build
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-# Streaming through the decimal-valued collapsed feed (the fixed
-# class), plus the batch surfaces most exposed to total collapse:
-# zero-variance stats, all-tied picks, all-pairs dedup buckets,
-# cosine-1 similarity, single-session sessionization.
-PINNED = [
-    "stream_sep_source",
-    "stream_bootstrap_then_tail",
-    "stream_sliding_avg",
-    "stream_stateful_latest",
-    "ts_autocorrelation",
-    "agg_min_max_stats",
-    "events_latest_per_key",
-    "win_sessionize_batch",
-    "dedup_exact_docs",
-    "dedup_minhash_near",
-    "simsearch_cosine_topk",
-    "agg_spearman_corr",
-]
+from tests.mutations import compare
 
 
-@pytest.fixture(scope="module")
-def collapse_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("collapse_sf")
-    build(SF_UNIT, str(dst))
-    return str(dst)
-
-
-@pytest.mark.parametrize("name", PINNED)
-def test_collapse_fixture_matches_oracle(name, spark, collapse_sf):
-    con = duck_connection(collapse_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, collapse_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), f"{name}: {res['status']}: {res['detail']}"
+test_collapse_fixture_matches_oracle = compare("collapse")

@@ -1,58 +1,19 @@
-"""Control-character / regex-dialect regression tests (round-8 sweep).
-
-Spark compiles patterns with Java's regex engine; DuckDB uses RE2.
-The dialects agree on almost everything the registry uses — probed:
-`\\d`, `\\w`, alternation, bounded quantifiers, anchors — but NOT on
-`\\s`: Java's whitespace class is [ \\t\\n\\x0B\\f\\r] while RE2's
-omits \\x0B (vertical tab). Any negated-class tokenizer built on
-`\\s` therefore counts a vertical-tab character as a symbol token in
-the oracle and as whitespace in Spark.
-
-The round-8 sweep injected control characters (\\x0B, \\f, \\r\\n,
-\\x1F, \\x01, control-only docs) into documents.text and ran the full
-registry: exactly one divergence — text_token_count's BPE-ish class —
-fixed by spelling the whitespace class explicitly on both sides
-(operators.text.BPE_ISH_PATTERN). Rule for new regexes: never use
-`\\s` in a pattern that is mirrored in an oracle; spell the class.
-
-This file pins (a) the mutated-corpus compare for every text-regex
-consumer, and (b) pattern identity between the Spark helper and the
-oracle SQL so the two spellings cannot drift.
-"""
+"""Class ``ctrlchar`` of tests/mutations.py: control characters in documents.text,
+plus the lints that keep `\\s` out of patterns and oracles."""
 
 from __future__ import annotations
 
-import shutil
+from tests.mutations import REGISTRY, compare
 
-import duckdb
-import pytest
 
-from hbase_sep_spark.operators import text as T
-from hbase_sep_spark.registry import load_all
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-PINNED = [
-    "text_token_count",       # the fix
-    "text_tokenize_wordcount",
-    "text_ngrams",
-    "text_quality_score",
-    "text_redact_numbers",
-    "text_fingerprint",
-    "text_entropy_score",
-    "text_repetition_ratio",
-    "text_chunk_documents",
-    "text_langid_heuristic",
-    "str_regex",              # part-type regexes (dialect-safe classes)
-    "dedup_exact_docs",
-]
+test_ctrlchar_fixture_matches_oracle = compare("ctrlchar")
 
 
 def test_bpe_pattern_shared_with_oracle():
     """The explicit whitespace class must appear byte-equal in the
     oracle SQL — a drift here reintroduces the \\s dialect split."""
+    from hbase_sep_spark.operators import text as T
+
     assert "\\s" not in T.BPE_ISH_PATTERN
     assert T.BPE_ISH_PATTERN == T.BPE_ISH_SQL_PATTERN
     assert T.BPE_ISH_PATTERN in REGISTRY["text_token_count"].oracle
@@ -61,47 +22,5 @@ def test_bpe_pattern_shared_with_oracle():
 def test_no_backslash_s_in_any_oracle():
     """No oracle may use the `\\s` class at all (Java vs RE2 \\x0B
     split); explicit classes only."""
-    offenders = [
-        n for n, q in REGISTRY.items() if q.oracle and "\\s" in q.oracle
-    ]
+    offenders = [n for n, q in REGISTRY.items() if q.oracle and "\\s" in q.oracle]
     assert not offenders, f"oracles using dialect-divergent \\s: {offenders}"
-
-
-@pytest.fixture(scope="module")
-def ctrlchar_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("ctrlchar_sf")
-    for name in (
-        "region nation customer supplier part orders lineitem events embeddings"
-    ).split():
-        shutil.copy(f"{SF_UNIT}/{name}.parquet", dst / f"{name}.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (
-          SELECT doc_id,
-                 CASE
-                   WHEN doc_id % 13 = 2 THEN 'alpha' || chr(11) || 'beta gamma'
-                   WHEN doc_id % 13 = 5 THEN 'alpha' || chr(12) || 'beta'
-                                             || chr(13) || chr(10) || 'gamma'
-                   WHEN doc_id % 13 = 8 THEN 'alpha' || chr(31) || 'beta'
-                                             || chr(1) || 'g'
-                   WHEN doc_id % 13 = 11 THEN chr(11) || chr(9) || chr(11)
-                   WHEN doc_id % 17 = 3 THEN text || chr(11) || text
-                   ELSE text END AS text,
-                 * EXCLUDE (doc_id, text)
-          FROM '{SF_UNIT}/documents.parquet'
-        ) TO '{dst}/documents.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    return str(dst)
-
-
-@pytest.mark.parametrize("name", PINNED)
-def test_ctrlchar_fixture_matches_oracle(name, spark, ctrlchar_sf):
-    con = duck_connection(ctrlchar_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, ctrlchar_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), (
-        f"{name}: {res['status']}: {res['detail']}"
-    )

@@ -1,77 +1,21 @@
-"""Decimal-money regression tests (round-10 adversarial sweep).
-
-TPC-H's canonical money encoding is DECIMAL(12,2); the fixture ships
-DOUBLE. A decimal regeneration broke 29 of 100 money queries three
-ways (Decimal output reprs vs the oracle's floats, decimal→object
-dtype crashing pandas UDFs, DuckDB's exact decimal arithmetic vs
-Spark's doubles in per-row/quantile expressions). See
-scripts/gen_decmoney_fixture.py for the class write-up; 279/279
-after the fixes.
-
-RULES going forward: io.t() normalizes scan-edge decimals to DOUBLE
-(decimal(20,0) → BIGINT is the unsigned-id path) — never read a
-table around it; any oracle whose RAW per-row money arithmetic or
-quantile interpolation reaches the output casts those inputs to
-DOUBLE (DuckDB otherwise computes exact decimal where Spark computes
-double); dsum/davg-style DECIMAL(18,6)-cast aggregates need nothing
-(the cast recovers identical exact values from either physical
-type).
-"""
+"""Class ``decmoney`` of tests/mutations.py: DECIMAL(12,2) money, plus the
+scan-normalization schema check."""
 
 from __future__ import annotations
 
-import pytest
+import duckdb
 
-from hbase_sep_spark.registry import load_all
-from scripts.gen_decmoney_fixture import build
 from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-# The six oracle-fixed names, the three crash surfaces (pandas UDFs,
-# footer-stats audit), and a dsum/davg flagship that must stay exact
-# across physical encodings.
-PINNED = [
-    "math_basic",
-    "project_alias",
-    "limit_topn",
-    "agg_median_percentile",
-    "agg_median_abs_deviation",
-    "agg_trimmed_mean",
-    "udf_pandas_vectorized",
-    "udaf_pandas_group",
-    "scan_rowgroup_stats_audit",
-    "agg_groupby_basic",
-    "agg_global",
-    "tpch_q6_forecast_revenue",
-]
+from tests.mutations import compare
 
 
-@pytest.fixture(scope="module")
-def decmoney_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("decmoney_sf")
-    build(SF_UNIT, str(dst))
-    return str(dst)
-
-
-@pytest.mark.parametrize("name", PINNED)
-def test_decmoney_fixture_matches_oracle(name, spark, decmoney_sf):
-    con = duck_connection(decmoney_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, decmoney_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), f"{name}: {res['status']}: {res['detail']}"
+test_decmoney_fixture_matches_oracle = compare("decmoney")
 
 
 def test_scan_normalizes_decimals(spark, tmp_path):
     """io.t() must hand every query DOUBLE money and BIGINT ids no
-    matter the physical encoding (drift guard on the normalization:
-    decimal(20,0) — the UINT64 signature — goes to bigint, every
-    other decimal to double)."""
-    import duckdb
-
+    matter the physical encoding: decimal(20,0) — the UINT64
+    signature — goes to bigint, every other decimal to double."""
     from hbase_sep_spark.io import t
 
     duckdb.sql(
@@ -81,6 +25,6 @@ def test_scan_normalizes_decimals(spark, tmp_path):
            FROM '{SF_UNIT}/orders.parquet')
            TO '{tmp_path}/orders.parquet' (FORMAT PARQUET)"""
     )
-    dt = dict(t(spark, str(tmp_path), "orders").dtypes)
-    assert dt["o_orderkey"] == "bigint", dt
-    assert dt["o_totalprice"] == "double", dt
+    dt_ = dict(t(spark, str(tmp_path), "orders").dtypes)
+    assert dt_["o_orderkey"] == "bigint", dt_
+    assert dt_["o_totalprice"] == "double", dt_

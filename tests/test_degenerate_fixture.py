@@ -1,122 +1,8 @@
-"""Degenerate-fixture guards (ADVICE r5 + the ANSI-corr hazard).
-
-CLAUDE.md warns the driver regenerates /root/testdata between rounds.
-These tests build a PATHOLOGICAL fixture — a two-weekday event feed
-(empty weekend class, too short for lag-2/3 autocorrelation pairs)
-and an all-long document set (both kappa labelers saturated, pe = 1)
-— and run the guarded queries through the SAME spark-vs-DuckDB
-compare the driver uses. Without the guards these either crash
-(ANSI Spark corr throws DIVIDE_BY_ZERO on 1-pair / zero-variance
-groups; probed in round 6) or hash-diverge (Spark NULLs a double
-division by zero where DuckDB ieee_floating_point_ops yields
-inf/NaN).
-"""
+"""Class ``degenerate`` of tests/mutations.py: pathological inputs for the guarded statistics."""
 
 from __future__ import annotations
 
-import shutil
-
-import duckdb
-import pytest
-
-from hbase_sep_spark.registry import load_all
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-GUARDED = [
-    "agg_jensen_shannon_drift",  # empty weekend class → p or q total 0
-    "agg_mannwhitney_u",         # n1 = 0 → AUC ratio guard
-    "agg_ks_test",               # n1 = 0 → CDF/crit guards
-    "agg_cohens_kappa",          # pe = 1 → kappa 0/0 guard
-    "ts_autocorrelation",        # 1-pair / zero-variance corr groups
-    "agg_spearman_corr",         # 1-day groups → n=1 corr
-    "agg_skew_kurtosis_portable",  # zero-variance group → pow(0,..) div
-    "agg_corr",                  # 1-row / zero-variance returnflag groups
-]
+from tests.mutations import compare
 
 
-@pytest.fixture(scope="module")
-def degenerate_sf(tmp_path_factory):
-    """All 10 tables (copied from sf0.001 so every oracle view
-    registers), with events/documents replaced by pathological
-    versions."""
-    dst = tmp_path_factory.mktemp("degenerate_sf")
-    for name in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
-        shutil.copy(f"{SF_UNIT}/{name}.parquet", dst / f"{name}.parquet")
-
-    con = duckdb.connect()
-    # Events: two consecutive WEEKDAYS only (2024-01-03/04 = Wed/Thu),
-    # one type confined to a single day (1-day spearman group, 0 lag
-    # pairs), another with exactly 2 days (1 lag-1 pair — the ANSI
-    # corr crash case without the guard).
-    # Explicit casts: VALUES literals infer INT32/DECIMAL, but the
-    # real fixture schema is int64/double (FIXTURES.md) — a schema
-    # drift here makes every events query emit Decimal cells and
-    # breaks the streaming source's declared long/double schema.
-    con.execute(
-        f"""
-        COPY (
-            SELECT CAST(event_id AS BIGINT) AS event_id, ts,
-                   CAST(user_id AS BIGINT) AS user_id, event_type,
-                   CAST(value AS DOUBLE) AS value, props
-            FROM (VALUES
-                (1, TIMESTAMP '2024-01-03 10:00:00', 1, 'click',    1.5, '{{"k": 1}}'),
-                (2, TIMESTAMP '2024-01-03 11:00:00', 2, 'click',    2.5, '{{"k": 2}}'),
-                (3, TIMESTAMP '2024-01-04 10:00:00', 1, 'click',    3.5, '{{"k": 3}}'),
-                (4, TIMESTAMP '2024-01-04 11:00:00', 3, 'click',    1.0, '{{"k": 4}}'),
-                (5, TIMESTAMP '2024-01-03 12:00:00', 2, 'purchase', 9.0, '{{"k": 5}}'),
-                (6, TIMESTAMP '2024-01-04 12:00:00', 1, 'view',     4.0, '{{"k": 6}}'),
-                (7, TIMESTAMP '2024-01-04 13:00:00', 2, 'view',     4.0, '{{"k": 7}}')
-            ) t(event_id, ts, user_id, event_type, value, props)
-            ORDER BY ts, event_id
-        ) TO '{dst}/events.parquet' (FORMAT PARQUET)
-        """
-    )
-    # Lineitem: every corr-degenerate class by return flag — 1-row
-    # group 'X' (n < 2), zero-variance quantity 'Y', zero-variance
-    # price 'Z', plus a healthy varied group 'N'. Without the
-    # same-exchange guard, ANSI Spark's corr THROWS DIVIDE_BY_ZERO on
-    # X/Y/Z where DuckDB returns NULL.
-    con.execute(
-        f"""
-        COPY (
-            SELECT * FROM (VALUES
-                ('X', CAST(10.0 AS DOUBLE), CAST(100.0 AS DOUBLE)),
-                ('Y', 5.0, 100.0), ('Y', 5.0, 250.0), ('Y', 5.0, 400.0),
-                ('Z', 1.0, 777.0), ('Z', 9.0, 777.0),
-                ('N', 1.0, 120.0), ('N', 2.0, 260.0), ('N', 3.0, 330.0)
-            ) t(l_returnflag, l_quantity, l_extendedprice)
-        ) TO '{dst}/lineitem.parquet' (FORMAT PARQUET)
-        """
-    )
-    # Documents: every doc ≥ 300 chars AND ≥ 55 tokens → both kappa
-    # labelers all-1 → pe = 1 → the unguarded kappa is 0/0.
-    word = "lorem "
-    text = (word * 60).strip()  # 60 tokens, 359 chars
-    con.execute(
-        f"""
-        COPY (
-            SELECT i AS doc_id, '{text}' AS text, 'en' AS lang,
-                   'src' || (i % 3) AS source,
-                   CAST(len('{text}') AS BIGINT) AS n_chars
-            FROM range(10) t(i)
-        ) TO '{dst}/documents.parquet' (FORMAT PARQUET)
-        """
-    )
-    con.close()
-    return str(dst)
-
-
-@pytest.mark.parametrize("name", GUARDED)
-def test_guarded_query_survives_degenerate_fixture(name, spark, degenerate_sf):
-    con = duck_connection(degenerate_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, degenerate_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), f"{name}: {res['status']}: {res['detail']}"
+test_guarded_query_survives_degenerate_fixture = compare("degenerate")

@@ -1,100 +1,18 @@
-"""Duplicate-JSON-key payload regression tests (round-8 sweep).
-
-JSON does not forbid duplicate object keys, and an at-least-once
-event feed assembled from multiple producers WILL eventually ship
-'{"k":1,"k":7}'. The engines disagree about what that means:
-
-- Spark `from_json('map<string,int>')` keeps BOTH entries
-  (map_keys = ['k','k']) and `getItem` reads the FIRST;
-- every DuckDB json path extraction (`json_extract_string '$.k'`)
-  reads the FIRST occurrence only, while `json_keys` preserves the
-  duplicates — so a keys/values projection built from json_keys
-  emits the first value TWICE where Spark emits both values;
-- a type-hostile SECOND occurrence ('{"k":5,"k":{"a":1}}') fails
-  Spark's whole-map parse but slips past a first-occurrence-only
-  oracle type check.
-
-The round-8 full-registry sweep over this fixture found exactly one
-divergence (json_to_map — 278/279 passed; the scalar extract path
-`portable.json_int` is first-occurrence on BOTH engines, probed).
-Policy: duplicate-keyed payloads join the hostile-key class —
-json_to_map fails such rows to a NULL map on both sides.
-
-Fixture mutation: ~25% of events.props get duplicate-key variants
-(both-int, dup+other-key, first-non-int, nested-second-occurrence).
-"""
+"""Class ``dupkey`` of tests/mutations.py: duplicate JSON keys, plus the
+NULL-map policy check."""
 
 from __future__ import annotations
 
-import shutil
-
-import duckdb
-import pytest
-
-from hbase_sep_spark.registry import load_all
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-# json_to_map carries the fix; the rest are every other props-consuming
-# sql-hash query (first-occurrence extraction, must stay divergence-free).
-PINNED = [
-    "json_to_map",
-    "events_payload_extract",
-    "json_extract_props",
-    "agg_regr_slope",
-    "agg_bitwise",
-    "map_lambda_ops",
-    "cast_types",
-    "filter_null_handling",
-    "source_csv_roundtrip",   # dup-key payloads must survive the CSV trip verbatim
-    "source_json_roundtrip",
-]
+from tests.mutations import collect_rows, compare
 
 
-@pytest.fixture(scope="module")
-def dupkey_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("dupkey_sf")
-    for name in (
-        "region nation customer supplier part orders lineitem documents embeddings"
-    ).split():
-        shutil.copy(f"{SF_UNIT}/{name}.parquet", dst / f"{name}.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (
-          SELECT event_id, ts, user_id, event_type, value,
-                 CASE
-                   WHEN event_id % 11 = 2 THEN '{{"k":1,"k":7}}'
-                   WHEN event_id % 11 = 5 THEN '{{"k": 3, "x": 9, "k": 4}}'
-                   WHEN event_id % 11 = 8 THEN '{{"k":"s","k":5}}'
-                   WHEN event_id % 13 = 6 THEN '{{"k":5,"k":{{"a":1}}}}'
-                   ELSE props END AS props
-          FROM '{SF_UNIT}/events.parquet'
-        ) TO '{dst}/events.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    return str(dst)
+test_dupkey_fixture_matches_oracle = compare("dupkey")
 
 
-@pytest.mark.parametrize("name", PINNED)
-def test_dupkey_fixture_matches_oracle(name, spark, dupkey_sf):
-    con = duck_connection(dupkey_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, dupkey_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), (
-        f"{name}: {res['status']}: {res['detail']}"
-    )
-
-
-def test_dupkey_rows_null_on_both_sides(spark, dupkey_sf):
+def test_dupkey_rows_null_on_both_sides(spark, mutated):
     """The policy itself: every mutated row must carry a NULL map
     (NULL prop_keys) — not a first-wins or last-wins pick."""
-    q = REGISTRY["json_to_map"]
-    rows = (q.raw or q.fn)(spark, dupkey_sf).collect()
-    by_id = {r["event_id"]: r for r in rows}
+    by_id = {r["event_id"]: r for r in collect_rows("json_to_map", spark, mutated("dupkey"))}
     dup_ids = [i for i in by_id if i % 11 in (2, 5, 8) or i % 13 == 6]
     assert dup_ids, "fixture should hold duplicate-key rows under event_id <= 3000"
     for i in dup_ids:

@@ -1,139 +1,8 @@
-"""Hostile-embeddings regression tests (round-7 adversarial sweep).
-
-The fixture's embeddings table is benign: every vector is non-null,
-exactly 64 finite float32 components, nonzero. A real (or
-regenerated) 100 TB embedding feed is not: upstream model crashes and
-partial writes ship NULL rows, empty and truncated arrays, NaN/Inf
-components, and exact-zero vectors. The sweep injected all of these
-and ran the registry through the spark-vs-DuckDB compare. Sixteen
-queries failed, in four classes:
-
-- ANSI DIVIDE_BY_ZERO: every cosine (probe/corpus/pair) divides by
-  the vector norm, and a zero vector crashes the whole query — eight
-  searchers/normalizers. Fixed with the V.is_valid scan gate
-  (non-null ∧ dim=64 ∧ all-finite ∧ nonzero) mirrored by
-  V.valid_sql in the oracles.
-- ANSI element_at crash: per-dimension element_at over an empty /
-  truncated array (vec_quantize_int8 stats, arr_lambda_transform
-  head) — try_element_at or the validity gate.
-- Python-worker crash: np.stack over a batch containing None/ragged
-  vectors (vec_pca_project, udf_pandas_vector_score) and a NULL
-  seed centroid (vec_kmeans_lloyd) — validity gate before the UDF.
-- Cross-engine semantics: DuckDB list_sum over an empty list is NULL
-  where Spark's fold seed is 0.0; DuckDB's total-order NaN > 0 is
-  TRUE where Spark's IEEE NaN > 0 is false; printf reprs of NaN/Inf
-  never agree ('NaN'/'Infinity' vs 'nan'/'inf'). Fixed with
-  element-level finite guards + coalesce (arr_lambda_filter_agg,
-  arr_lambda_transform, multimodal_struct_cols' norm).
-
-vec_quantize_int8 additionally guards the DEGENERATE DIMENSION
-(max = min corpus-wide → zero scale) and a zero dequantized vector —
-both reachable on real skewed corpora, not just this fixture.
-
-The NULL-ELEMENT variant ([1.0, NULL, ...] — a null inside the list,
-not a null list) is its own class, found by the round-7 review pass:
-Spark's `exists` over such an array is NULL (three-valued logic ⇒
-the validity filter DROPS the row) while DuckDB's list_filter drops
-the NULL-predicate element and KEEPS it — the gate needs an explicit
-IS NULL conjunct on both sides or row counts diverge.
-"""
+"""Class ``embedding`` of tests/mutations.py: NULL, ragged and non-finite embedding rows."""
 
 from __future__ import annotations
 
-import shutil
-
-import pyarrow as pa
-import pyarrow.parquet as pq
-import pytest
-
-from hbase_sep_spark.registry import load_all
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-FIXED = [
-    "vec_normalize_norm",
-    "simsearch_cosine_topk",
-    "simsearch_knn_join",
-    "simsearch_lsh_bucketed",
-    "simsearch_ivf_coarse",
-    "simsearch_quantized_rerank",
-    "vec_quantize_int8",
-    "vec_pca_project",
-    "vec_matryoshka_truncate",
-    "vec_centroid_distance",
-    "vec_kmeans_lloyd",
-    "udf_pandas_vector_score",
-    "dedup_embedding_cosine",
-    "multimodal_struct_cols",
-    "arr_lambda_transform",
-    "arr_lambda_filter_agg",
-]
+from tests.mutations import compare
 
 
-def write_hostile_embeddings(src: str, dst_path: str) -> None:
-    """The canonical hostile-embeddings mutation — ALSO imported by
-    test_kitchen_sink_fixture so the standalone class fixture and the
-    combined-hostility capstone can never drift apart."""
-    t = pq.read_table(src)
-    ids = t.column("vec_id").to_pylist()
-    embs = t.column("embedding").to_pylist()
-    labels = t.column("label").to_pylist()
-    out = []
-    for i, e in zip(ids, embs):
-        if i % 11 == 3:
-            v = [0.0] * 64  # zero vector (no direction)
-        elif i % 13 == 5:
-            v = None  # NULL row
-        elif i % 17 == 7:
-            v = []  # empty array
-        elif i % 19 == 9:
-            v = e[:8]  # truncated / ragged
-        elif i % 23 == 11:
-            v = e[:]
-            v[0] = float("nan")
-        elif i % 29 == 13:
-            v = e[:]
-            v[1] = float("inf")
-        elif i % 31 == 17:
-            v = e[:]
-            v[5] = None  # NULL ELEMENT inside the list (round-7 review)
-        else:
-            v = e
-        out.append(v)
-    pq.write_table(
-        pa.table(
-            {
-                "vec_id": pa.array(ids, pa.int64()),
-                "embedding": pa.array(out, pa.list_(pa.float32())),
-                "label": pa.array(labels, pa.int32()),
-            }
-        ),
-        dst_path,
-    )
-
-
-@pytest.fixture(scope="module")
-def hostile_emb_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("hostile_emb_sf")
-    for name in (
-        "region nation customer supplier part orders lineitem events documents"
-    ).split():
-        shutil.copy(f"{SF_UNIT}/{name}.parquet", dst / f"{name}.parquet")
-    write_hostile_embeddings(
-        f"{SF_UNIT}/embeddings.parquet", str(dst / "embeddings.parquet")
-    )
-    return str(dst)
-
-
-@pytest.mark.parametrize("name", FIXED)
-def test_hostile_embeddings_match_oracle(name, spark, hostile_emb_sf):
-    con = duck_connection(hostile_emb_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, hostile_emb_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), (
-        f"{name}: {res['status']}: {res['detail']}"
-    )
+test_hostile_embeddings_match_oracle = compare("embedding")

@@ -1,85 +1,8 @@
-"""Empty-feed regression tests (round-7 adversarial sweep).
-
-Day-1 pipelines, freshly-created tables, and fully-filtered
-partitions are all EMPTY feeds — and empty inputs are exactly where
-driver-side seed logic and schema inference break. The sweep zeroed
-events/documents/embeddings (schema preserved, 0 rows; the TPC-H
-tables stay populated) and ran all 279 registered queries: seven
-failed, in three classes:
-
-- Schema inference over an empty write: a partitioned parquet sink
-  with zero rows writes no files, and `spark.read.parquet` then
-  throws UNABLE_TO_INFER_SCHEMA (sink_partitioned_prune,
-  join_dpp_partition_prune, scan_incremental_manifest). Fixed by
-  pinning the WRITER's schema on the read — which is also the 100 TB
-  posture: schemas come from the table catalog, never footer
-  sniffing.
-- Driver-side seeds over an empty corpus: vec_pca_project's moment
-  collect ({}[0] KeyError), vec_kmeans_lloyd's centroid seed
-  (max() of nothing), stream_bootstrap_then_tail's boundary-row read
-  (StopIteration at position 0). Fixed with explicit empty-result
-  paths (schema-typed empty frames / a false seam predicate).
-- 0/0 ratios: pipeline_dataset_card_report's mean/share/dup-rate are
-  ANSI DIVIDE_BY_ZERO on Spark and engine-specific NaN/NULL in
-  DuckDB; both sides now publish NULL for ratios over an empty
-  corpus (count(*) > 0 guards).
-
-Everything else returns empty results cleanly (the ANSI division
-guards and NULL policies from earlier sweeps hold). 279/279 after
-the fixes.
-"""
+"""Class ``empty_feed`` of tests/mutations.py: zero-row events, documents and embeddings."""
 
 from __future__ import annotations
 
-import shutil
-
-import pyarrow.parquet as pq
-import pytest
-
-from hbase_sep_spark.registry import load_all
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-FIXED = [
-    "sink_partitioned_prune",
-    "join_dpp_partition_prune",
-    "scan_incremental_manifest",
-    "vec_pca_project",
-    "vec_kmeans_lloyd",
-    "stream_bootstrap_then_tail",
-    "pipeline_dataset_card_report",
-]
-PINNED_SAFE = [
-    "events_latest_per_key",     # empty snapshot
-    "agg_global",                # global aggregate over nothing
-    "ts_weekly_ohlc",            # picks over nothing
-    "simsearch_cosine_topk",     # no probe -> empty result both sides
-    "dedup_exact_docs",          # empty corpus
-    "text_tfidf",                # empty vocabulary
-    "stream_tumbling_count",     # empty stream drains clean
-]
+from tests.mutations import compare
 
 
-@pytest.fixture(scope="module")
-def empty_feed_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("empty_feed_sf")
-    for name in "region nation customer supplier part orders lineitem".split():
-        shutil.copy(f"{SF_UNIT}/{name}.parquet", dst / f"{name}.parquet")
-    for name in ("events", "documents", "embeddings"):
-        t = pq.read_table(f"{SF_UNIT}/{name}.parquet")
-        pq.write_table(t.slice(0, 0), str(dst / f"{name}.parquet"))
-    return str(dst)
-
-
-@pytest.mark.parametrize("name", FIXED + PINNED_SAFE)
-def test_empty_feed_matches_oracle(name, spark, empty_feed_sf):
-    con = duck_connection(empty_feed_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, empty_feed_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), (
-        f"{name}: {res['status']}: {res['detail']}"
-    )
+test_empty_feed_matches_oracle = compare("empty_feed")

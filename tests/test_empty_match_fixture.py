@@ -1,91 +1,8 @@
-"""Empty-match regression tests (round-6 adversarial sweep #5).
-
-A regenerated fixture can move the data out from under every literal
-predicate: different date ranges (TPC-H queries filter literal
-windows), different enum values (event types, order statuses, return
-flags), different id ranges. The query then runs against an EMPTY (or
-fully-novel-valued) input — the regime where engines disagree most
-easily: aggregates over zero rows, percentiles of nothing, guarded
-divisions hitting their 0/0 branch, min/max NULLs, empty arrays.
-
-The sweep shifted every timestamp/date 30 years forward and collapsed
-every enum column to a single novel value, then ran ALL 279 queries
-through the spark-vs-DuckDB compare: 279/279 passed — the ANSI
-division guards, NULL policies, and empty-group handling built up by
-the earlier sweeps hold with zero new fixes. This module pins a
-representative slice so the property survives future query edits.
-"""
+"""Class ``empty_match`` of tests/mutations.py: data moved out from under every literal predicate."""
 
 from __future__ import annotations
 
-import shutil
-
-import duckdb
-import pytest
-
-from hbase_sep_spark.registry import load_all
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-# Chosen for maximal empty-input surface: literal date windows
-# (tpch_q6/q14), enum-literal filters (events_table_filter, tpch_q4),
-# guarded divisions + rank stats over one-class data (mannwhitney,
-# uptime), quantiles/histograms over shifted ranges, seasonality over
-# a different calendar year.
-PINNED = [
-    "tpch_q6_forecast_revenue",
-    "tpch_q14_promo_effect",
-    "tpch_q4_order_priority",
-    "events_table_filter",
-    "filter_in",
-    "agg_mannwhitney_u",
-    "events_uptime_pct",
-    "agg_median_percentile",
-    "agg_histogram",
-    "events_hourly_seasonality",
-    "win_streak_longest",
-    "text_lang_filter_stats",
-]
+from tests.mutations import compare
 
 
-@pytest.fixture(scope="module")
-def empty_match_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("empty_match_sf")
-    for name in "region nation customer supplier part documents embeddings".split():
-        shutil.copy(f"{SF_UNIT}/{name}.parquet", dst / f"{name}.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT event_id, ts + INTERVAL 30 YEAR AS ts, user_id,
-                     'zzz_novel' AS event_type, value, props
-              FROM '{SF_UNIT}/events.parquet')
-            TO '{dst}/events.parquet' (FORMAT PARQUET)"""
-    )
-    con.execute(
-        f"""COPY (SELECT o_orderkey, o_custkey, 'Z' AS o_orderstatus,
-                     o_totalprice, o_orderdate + INTERVAL 30 YEAR AS o_orderdate,
-                     '9-NOVEL' AS o_orderpriority
-              FROM '{SF_UNIT}/orders.parquet')
-            TO '{dst}/orders.parquet' (FORMAT PARQUET)"""
-    )
-    con.execute(
-        f"""COPY (SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber,
-                     l_quantity, l_extendedprice, l_discount, l_tax,
-                     'Z' AS l_returnflag, 'Z' AS l_linestatus,
-                     l_shipdate + INTERVAL 30 YEAR AS l_shipdate
-              FROM '{SF_UNIT}/lineitem.parquet')
-            TO '{dst}/lineitem.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    return str(dst)
-
-
-@pytest.mark.parametrize("name", PINNED)
-def test_empty_match_fixture_matches_oracle(name, spark, empty_match_sf):
-    con = duck_connection(empty_match_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, empty_match_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), f"{name}: {res['status']}: {res['detail']}"
+test_empty_match_fixture_matches_oracle = compare("empty_match")

@@ -1,76 +1,16 @@
-"""Negative-epoch (pre-1970) regression tests (round-7 era sweep).
-
-Every fixture to date puts the events feed in the 2020s, so nothing
-ever exercised a NEGATIVE unix epoch — yet a backfilled historical
-feed (or a regenerated fixture) can sit before 1970, where three
-things can silently break: `%020d`-formatted epoch sort keys pick up
-a sign and lexically INVERT the order among negative epochs (both
-engines agree on the same wrong pick — invisible to the oracle
-compare, wrong for the user; fixed with a 2^62 bias on both sides),
-integer microsecond arithmetic crosses zero, and calendar functions
-(dow/week/trunc) run on the proleptic side of the epoch.
-
-The sweep shifted the whole events feed to 1963 and ran all 279
-registered queries against the oracle: 279/279 PASS with zero fixes
-beyond the pre-emptive key bias. This file pins the mechanism on the
-composite-key pickers and the most ts-heavy queries rather than
-re-running the whole registry.
-"""
+"""Class ``era`` of tests/mutations.py: a feed shifted 61 years before 1970."""
 
 from __future__ import annotations
 
-import shutil
-
 import duckdb
-import pytest
 
-from hbase_sep_spark.registry import load_all
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-PINNED = [
-    "agg_argmax_misc",           # %020d epoch key feeds max_by/min_by
-    "ts_weekly_ohlc",            # %020d epoch key feeds open/close picks
-    "events_interarrival_stats", # integer micros gaps across negative epochs
-    "events_hourly_seasonality", # dow/hour calendar pre-1970
-    "events_watermark_lag_audit",
-    "events_order_repair",       # rank-by-time vs rank-by-id
-    "ts_autocorrelation",
-    "events_latest_per_key",
-]
+from tests.mutations import compare
 
 
-@pytest.fixture(scope="module")
-def era_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("era_sf")
-    for name in (
-        "region nation customer supplier part orders lineitem documents embeddings"
-    ).split():
-        shutil.copy(f"{SF_UNIT}/{name}.parquet", dst / f"{name}.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (
-          SELECT event_id, ts - INTERVAL 61 YEAR AS ts, user_id, event_type,
-                 value, props
-          FROM '{SF_UNIT}/events.parquet'
-        ) TO '{dst}/events.parquet' (FORMAT PARQUET)"""
-    )
-    assert con.execute(
-        f"select max(epoch_us(ts)) from '{dst}/events.parquet'"
-    ).fetchone()[0] < 0, "era fixture must be entirely pre-1970"
-    con.close()
-    return str(dst)
+test_pre1970_feed_matches_oracle = compare("era")
 
 
-@pytest.mark.parametrize("name", PINNED)
-def test_pre1970_feed_matches_oracle(name, spark, era_sf):
-    con = duck_connection(era_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, era_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), (
-        f"{name}: {res['status']}: {res['detail']}"
-    )
+def test_era_feed_is_pre1970(mutated):
+    sf = mutated("era")
+    (mx,) = duckdb.sql(f"SELECT max(epoch_us(ts)) FROM '{sf}/events.parquet'").fetchone()
+    assert mx < 0, "era fixture must be entirely pre-1970"

@@ -1,131 +1,22 @@
-"""Extreme-value + payload-variant regression tests (round-6
-adversarial sweep #4).
-
-The fixture's events feed is benign: positive money-like values and
-uniformly well-formed single-key int payloads ('{"k": 87}'). A real
-(or regenerated) at-least-once event feed is not: values go negative,
-zero, tiny, and orders of magnitude larger; payloads arrive with
-missing keys, string-typed numbers, nested objects, JSON nulls,
-malformed fragments, and empty strings. The sweep injected all of
-these and ran the full registry through the spark-vs-DuckDB compare.
-Ten queries failed, in four classes:
-
-- ANSI CAST crash: `get_json_object(props,'$.k').cast("int")` THROWS
-  CAST_INVALID_INPUT on a nested-object extract (seven queries).
-  Fixed with portable.json_int / json_int_sql — try_cast semantics
-  probed variant-by-variant to match DuckDB's TRY_CAST exactly.
-- int32 overflow: map_lambda_ops multiplied int map cells; a 1e9-scale
-  value overflows under ANSI. Fixed by BIGINT cells.
-- from_json parse semantics: json_to_map's oracle assumed well-formed
-  payloads (DuckDB json_* ERRORS on malformed input) and a constant
-  'k' key. Fixed with an oracle that replicates Spark's
-  from_json('map<string,int>') coercion rules exactly.
-- CSV null/empty ambiguity: source_csv_roundtrip lost '' to NULL
-  (both serialize to the same empty field by default). Fixed with a
-  distinct nullValue sentinel on writer+reader.
-
-Round 8 (VERDICT-r7 item 5): agg_skew_kurtosis_portable's
-DECIMAL(38,8) fourth-moment envelope (|v| ≤ 1e5) no longer THROWS
-out-of-envelope — groups holding a larger |value| degrade to NULL
-moments on both engines (this fixture's value*1e7 rows exercise
-exactly that), pinned by test_skew_kurtosis_envelope_degrades_to_null
-below. tests/test_fixture_assumptions.py still documents the real
-fixture's observed range.
-"""
+"""Class ``extreme`` of tests/mutations.py: extreme values and payload variants,
+plus the moment-envelope NULL degrade."""
 
 from __future__ import annotations
 
-import shutil
-
-import duckdb
-import pytest
-
-from hbase_sep_spark.registry import load_all
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-FIXED = [
-    "events_payload_extract",
-    "json_extract_props",
-    "json_to_map",
-    "filter_null_handling",
-    "cast_types",
-    "agg_bitwise",
-    "agg_regr_slope",
-    "map_lambda_ops",
-    "source_csv_roundtrip",
-    "agg_skew_kurtosis_portable",  # r8: out-of-envelope degrades to NULL
-]
-PINNED_SAFE = [
-    "source_json_roundtrip",   # JSON-lines keeps '' vs NULL distinct
-    "agg_global",              # decimal sums over negative/zero/large
-    "agg_groupby_basic",
-    "events_latest_per_key",
-    "win_running_sum",
-    "agg_median_percentile",   # quantiles over the widened range
-    "agg_histogram",           # width_bucket under/overflow bins
-    "agg_benford_price_audit", # first-digit of negative/tiny values
-]
+from tests.mutations import collect_rows, compare
 
 
-@pytest.fixture(scope="module")
-def extreme_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("extreme_sf")
-    for name in (
-        "region nation customer supplier part orders lineitem documents embeddings"
-    ).split():
-        shutil.copy(f"{SF_UNIT}/{name}.parquet", dst / f"{name}.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (
-          SELECT event_id, ts, user_id, event_type,
-                 CASE
-                   WHEN event_id % 4 = 0  THEN -value          -- negative
-                   WHEN event_id % 9 = 2  THEN 0.0             -- exact zero
-                   WHEN event_id % 17 = 5 THEN value * 1e7     -- large (int32-breaking)
-                   WHEN event_id % 19 = 7 THEN value * 1e-9    -- tiny
-                   ELSE value END AS value,
-                 CASE
-                   WHEN event_id % 37 = 6  THEN '{{' || chr(10) || '  "k": 21' || chr(10) || '}}'  -- pretty-printed (embedded newline)
-                   WHEN event_id % 29 = 4  THEN '{{"a\\"b": 3}}'       -- quote in key (ADVICE-r6)
-                   WHEN event_id % 29 = 9  THEN '{{"a\\\\b": 3}}'      -- backslash in key
-                   WHEN event_id % 29 = 14 THEN '{{"": 3}}'            -- empty key (path-breaking)
-                   WHEN event_id % 29 = 19 THEN '\\N'                  -- legacy CSV sentinel literal
-                   WHEN event_id % 23 = 3  THEN '{{"x": 1}}'           -- key missing
-                   WHEN event_id % 23 = 7  THEN '{{"k": "12"}}'        -- string-typed
-                   WHEN event_id % 23 = 11 THEN '{{"k": {{"a": 1}}}}'  -- nested object
-                   WHEN event_id % 23 = 15 THEN '{{"k": null}}'        -- JSON null
-                   WHEN event_id % 23 = 19 THEN '{{k: 12'               -- malformed
-                   WHEN event_id % 23 = 21 THEN ''                      -- empty string
-                   ELSE props END AS props
-          FROM '{SF_UNIT}/events.parquet'
-        ) TO '{dst}/events.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    return str(dst)
+test_extreme_fixture_matches_oracle = compare("extreme")
 
 
-@pytest.mark.parametrize("name", FIXED + PINNED_SAFE)
-def test_extreme_fixture_matches_oracle(name, spark, extreme_sf):
-    con = duck_connection(extreme_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, extreme_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), f"{name}: {res['status']}: {res['detail']}"
-
-
-def test_skew_kurtosis_envelope_degrades_to_null(spark, extreme_sf):
-    """VERDICT-r7 item 5: an out-of-envelope |value| (this fixture's
-    value*1e7 rows reach ~5e9 ≫ 1e5) must NULL the group's moments —
-    on BOTH engines — instead of throwing ANSI ARITHMETIC_OVERFLOW on
-    the DECIMAL(38,8) fourth-power sum. Every event_type group holds
-    at least one mutated row here, so every output row must carry
-    NULL skewness/kurtosis while n stays populated."""
-    q = REGISTRY["agg_skew_kurtosis_portable"]
-    rows = (q.raw or q.fn)(spark, extreme_sf).collect()
+def test_skew_kurtosis_envelope_degrades_to_null(spark, mutated):
+    """An out-of-envelope |value| (the extreme class's value*1e7 rows
+    reach ~5e9 ≫ 1e5) must NULL the group's moments — on BOTH engines
+    — instead of throwing ANSI ARITHMETIC_OVERFLOW on the
+    DECIMAL(38,8) fourth-power sum. Every event_type group holds a
+    mutated row, so every output row carries NULL moments while n
+    stays populated."""
+    rows = collect_rows("agg_skew_kurtosis_portable", spark, mutated("extreme"))
     assert rows, "expected per-event_type output rows"
     for r in rows:
         assert r["n"] > 0

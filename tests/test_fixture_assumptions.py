@@ -132,7 +132,7 @@ def test_events_value_within_decimal_moment_envelope(sf_dir):
     for order-independence (portable.py); since round 8 an
     out-of-envelope group DEGRADES to NULL moments on both engines
     (no more ANSI throw — VERDICT-r7 item 5, pinned by
-    tests/test_extreme_fixture.py). This canary still documents the
+    the extreme class of tests/mutations.py). This canary still documents the
     fixture's range: if a regeneration pushes |value| past 1e5 the
     moment queries silently return NULL rows — correct and
     crash-free, but a signal the value scale changed (rescale by a
@@ -242,7 +242,7 @@ def test_events_event_id_non_null(sf_dir):
     tie-break, and a NULL id has no dedup identity and no rank
     position. NULL ts / user_id / event_type became IN-CONTRACT in
     the round-8 null-ts and null-keys sweeps (dead-letter +
-    null-safe policies, tests/test_nullts_fixture.py) — only the
+    null-safe policies, the nullts class of tests/mutations.py) — only the
     primary id stays pinned, so a regeneration shipping NULL ids
     fails THIS test by name instead of surfacing as query
     'regressions'."""

@@ -1,127 +1,46 @@
-"""Raw-integer-epoch ts regression tests (round-11 sweep).
-
-A Kafka/Debezium-shaped CDC feed ships events.ts as a plain
-UNANNOTATED int64 epoch — in seconds, milliseconds, microseconds, or
-nanoseconds, with nothing in the file saying which. Before round 11,
-io.t() assumed any bigint ts was nanos (the rounds-1-3
-TIMESTAMP(NANOS) shape): an int64-millis feed would have become
-silent 1970-era garbage in every batch query, and the streaming
-transport crashed outright (AttributeError on int.tzinfo). See
-scripts/gen_intts_fixture.py for the class write-up.
-
-RULES going forward: any integer ts column's unit comes from
-io.int_ts_unit (footer-stats magnitude bands, 1000× apart —
-unambiguous for epochs between 1973 and 5138, by |value| pre-1970);
-io.t(), the bootstrap seam literal (epoch_us_to_unit), the streaming
-transport's arrow rebuild, and the harness duck view all share it.
-Never hand-roll a `div 1000`-style rebuild — dispatch on the
-classified unit.
-"""
+"""Classes ``intts`` and ``intts_*`` of tests/mutations.py: integer-epoch event
+times in every wire shape, plus the unit classifier's checks."""
 
 from __future__ import annotations
 
-import pytest
+import os
+import shutil
+import time
 
-from hbase_sep_spark.io import classify_epoch_unit, epoch_us_to_unit, int_ts_unit
-from hbase_sep_spark.registry import load_all
-from scripts.gen_intts_fixture import build
+import pyarrow as pa
+import pyarrow.parquet as pq
+
 from tests.conftest import SF_UNIT
 from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-# Every consumer family of the classified unit: the batch scan
-# (io.t), a window pick and an as-of join over the rebuilt ts, the
-# payload path (unrelated columns must pass through untouched), the
-# streaming transport (replay + the bootstrap seam literal), and a
-# date-bucketing aggregate whose day boundaries would shift under a
-# mis-classified unit.
-PINNED = [
-    "scan_events_feed",
-    "events_latest_per_key",
-    "ts_weekly_ohlc",
-    "join_asof_latest_event",
-    "events_payload_extract",
-    "agg_argmax_misc",
-    "stream_sep_source",
-    "stream_tumbling_count",
-    "stream_bootstrap_then_tail",
-]
+from tests.mutations import REGISTRY, compare, int_epoch_events
 
 
-@pytest.fixture(scope="module")
-def intts_ms_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("intts_ms_sf")
-    build(SF_UNIT, str(dst), "ms")
-    return str(dst)
-
-
-@pytest.mark.parametrize("name", PINNED)
-def test_intts_ms_fixture_matches_oracle(name, spark, intts_ms_sf):
-    con = duck_connection(intts_ms_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, intts_ms_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), (
-        f"{name}: {res['status']}: {res['detail']}"
-    )
-
-
-@pytest.mark.parametrize(
-    "unit,unsigned,narrow",
-    [
-        ("s", False, False),
-        ("us", False, False),
-        ("ms", True, False),
-        ("s", True, False),
-        ("s", False, True),
-    ],
+test_intts_ms_fixture_matches_oracle = compare("intts")
+# One case per wire shape, each checking all of that class's pins.
+test_intts_other_units_match_oracle = compare(
+    "intts_int64_s", "intts_int64_us", "intts_uint64_ms", "intts_uint32_s", "intts_int32_s",
     ids=["int64-s", "int64-us", "uint64-ms", "uint32-s", "int32-s"],
 )
-def test_intts_other_units_match_oracle(unit, unsigned, narrow, spark, tmp_path_factory):
-    """The seconds and microseconds wire shapes, plus the UNSIGNED
-    epochs (uint64_t millis scans as DecimalType(20,0) and bypasses
-    the bigint branch without the io.t()/bootstrap normalization;
-    uint32 time_t seconds widens to bigint natively) and the SIGNED
-    32-bit time_t seconds feed (scans as IntegerType — io.t() and the
-    bootstrap widen it to bigint before unit dispatch, round-12
-    ADVICE), through the scan, a pick, and the transport (the ms
-    fixture above covers the rest)."""
-    tag = f"{'u' if unsigned else ''}{'int32-' if narrow else ''}{unit}"
-    dst = str(tmp_path_factory.mktemp(f"intts_{tag.replace('-', '_')}_sf"))
-    build(SF_UNIT, dst, unit, unsigned, narrow)
-    names = ["scan_events_feed", "events_latest_per_key", "stream_sep_source"]
-    if narrow:
-        # The int32 widening touched the bootstrap's seam mirror too —
-        # drive it on the one variant that exercises that branch.
-        names.append("stream_bootstrap_then_tail")
-    con = duck_connection(dst)
-    try:
-        for name in names:
-            res = check_query(name, REGISTRY[name], spark, con, dst)
-            assert res["status"] in ("ok", "ok-rows-only"), (
-                f"{tag}/{name}: {res['status']}: {res['detail']}"
-            )
-    finally:
-        con.close()
 
 
 def test_classify_epoch_unit_bands():
     """The four bands, their 1000×-apart boundaries, and the
     negative-epoch (pre-1970) |value| rule."""
+    from hbase_sep_spark.io import classify_epoch_unit
+
     e2024 = 1_700_000_000
     assert classify_epoch_unit(e2024) == "s"
     assert classify_epoch_unit(e2024 * 10**3) == "ms"
     assert classify_epoch_unit(e2024 * 10**6) == "us"
     assert classify_epoch_unit(e2024 * 10**9) == "ns"
-    # Pre-1970 (negative-epoch class): same bands by magnitude.
     e1920 = -1_600_000_000
     assert classify_epoch_unit(abs(e1920)) == "s"
     assert classify_epoch_unit(abs(e1920 * 10**3)) == "ms"
 
 
 def test_epoch_us_round_trip():
+    from hbase_sep_spark.io import epoch_us_to_unit
+
     us = 1_704_067_200_123_456  # 2024-01-01 00:00:00.123456
     assert epoch_us_to_unit(us, "us") == us
     assert epoch_us_to_unit(us, "ns") == us * 1000
@@ -135,55 +54,37 @@ def test_annotated_nanos_still_dispatches_ns(spark, tmp_path):
     scans as bigint under nanosAsLong, but pyarrow reads its footer
     stats as datetimes — int_ts_unit must short-circuit to 'ns' on
     the arrow schema, never touch those stats, and the full compare
-    must still pass (DuckDB reads TIMESTAMP_NS natively, no view
-    rebuild)."""
-    import shutil
+    must still pass (DuckDB reads TIMESTAMP_NS natively)."""
+    from hbase_sep_spark.io import int_ts_unit
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    dst = tmp_path / "nanos_sf"
-    dst.mkdir()
-    for t in (
-        "region nation customer supplier part orders lineitem documents embeddings"
-    ).split():
-        shutil.copyfile(f"{SF_UNIT}/{t}.parquet", str(dst / f"{t}.parquet"))
+    dst = str(tmp_path)
+    for name in "region nation customer supplier part orders lineitem documents embeddings".split():
+        shutil.copyfile(f"{SF_UNIT}/{name}.parquet", f"{dst}/{name}.parquet")
     tbl = pq.read_table(f"{SF_UNIT}/events.parquet")
     i = tbl.schema.get_field_index("ts")
-    tbl = tbl.set_column(
-        i,
-        pa.field("ts", pa.timestamp("ns"), True),
-        tbl.column("ts").cast(pa.timestamp("ns")),
-    )
-    pq.write_table(tbl, str(dst / "events.parquet"), store_schema=False)
-    assert int_ts_unit(str(dst / "events.parquet")) == "ns"
-    con = duck_connection(str(dst))
+    tbl = tbl.set_column(i, pa.field("ts", pa.timestamp("ns"), True), tbl.column("ts").cast(pa.timestamp("ns")))
+    pq.write_table(tbl, f"{dst}/events.parquet", store_schema=False)
+    assert int_ts_unit(f"{dst}/events.parquet") == "ns"
+    con = duck_connection(dst)
     try:
         for name in ("scan_events_feed", "events_latest_per_key"):
-            res = check_query(name, REGISTRY[name], spark, con, str(dst))
-            assert res["status"] in ("ok", "ok-rows-only"), (
-                f"{name}: {res['status']}: {res['detail']}"
-            )
+            res = check_query(name, REGISTRY[name], spark, con, dst)
+            assert res["status"] in ("ok", "ok-rows-only"), f"{name}: {res['status']}: {res['detail']}"
     finally:
         con.close()
 
 
 def test_int_ts_unit_reads_footer_only(tmp_path):
     """Unit classification must come from row-group statistics, not a
-    data read, and re-classify after a same-path rewrite (the driver's
-    regeneration precedent — the cache keys on the listing signature)."""
-    import pyarrow.parquet as pq
-
-    from scripts.gen_intts_fixture import mutate_events
+    data read, and re-classify after a same-path rewrite (the cache
+    keys on the listing signature)."""
+    from hbase_sep_spark.io import int_ts_unit
 
     src = pq.read_table(f"{SF_UNIT}/events.parquet")
     p = str(tmp_path / "events.parquet")
-    pq.write_table(mutate_events(src, "ms"), p)
+    pq.write_table(int_epoch_events(src, "ms"), p)
     assert int_ts_unit(p) == "ms"
-    import os
-    import time
-
     time.sleep(0.01)
-    pq.write_table(mutate_events(src, "s"), p)
+    pq.write_table(int_epoch_events(src, "s"), p)
     os.utime(p)
     assert int_ts_unit(p) == "s"

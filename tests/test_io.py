@@ -104,3 +104,25 @@ def test_scan_cache_is_bounded_type():
     assert isinstance(io._SCAN_CACHE, io.LruCache)
     assert isinstance(aggregates._PCTL_STATS_CACHE, io.LruCache)
     assert io._SCAN_CACHE.maxsize >= 16  # ample for 10 tables × few sf dirs
+
+
+def test_listing_skips_hidden_files_like_spark(spark, tmp_path):
+    """A directory table holding a valid `_tmp.parquet` (a writer's
+    in-flight file) and a `.crc`-style dotfile: Spark's scan skips
+    `_`/`.` names, so the footer count and the feed index must too —
+    otherwise fan-out and replay offsets count rows no scan returns."""
+    from hbase_sep_spark.io import table_rows
+    from hbase_sep_spark.sources.sep_events import feed_total
+    from tests.conftest import SF_UNIT
+
+    src = pq.read_table(f"{SF_UNIT}/events.parquet")
+    d = tmp_path / "events.parquet"
+    d.mkdir()
+    pq.write_table(src.slice(0, 100), str(d / "part-000.parquet"))
+    pq.write_table(src.slice(100, 200), str(d / "part-001.parquet"))
+    pq.write_table(src.slice(300), str(d / "_tmp.parquet"))
+    pq.write_table(src.slice(300), str(d / ".part-002.parquet"))
+    scanned = spark.read.parquet(str(d)).count()
+    assert scanned == 300
+    assert table_rows(str(tmp_path), "events") == scanned
+    assert feed_total(str(d)) == scanned

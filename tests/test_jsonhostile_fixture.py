@@ -1,47 +1,21 @@
-"""Hostile-JSON / lenient-parser regression tests (round-8 sweep).
-
-The two engines' JSON PARSERS disagree at the lexical fringe, in both
-directions. Spark's get_json_object (Jackson, lenient) extracts values
-from payloads that DuckDB's json_valid (yyjson, strict) rejects: raw
-C0 control chars inside strings, lone-surrogate \\u-escapes, and
-single-quoted keys/values. yyjson conversely ACCEPTS trailing commas
-and bare NaN/Infinity literals, which Jackson rejects. Six probed
-variants silently diverged through the old json_valid-only oracle
-guard the moment a feed shipped them.
-
-The fix (portable.HOSTILE_JSON_RE): a raw-byte gate computed
-IDENTICALLY on both engines — deliberately overbroad (an escaped
-emoji pair, a string containing ",}" or "NaN", an apostrophe after a
-colon inside a string all degrade to NULL), because overbreadth costs
-only conservatism while any one-sided leniency costs agreement. The
-gate is spliced into json_int (Spark) and generated into json_int_sql
-(oracle) from ONE constant, and every consumer oracle interpolates
-json_int_sql() instead of hand-copying the guard, so the spellings
-cannot drift.
-
-This file pins (a) variant-level agreement of the json_int pair over
-the full probed corpus, (b) the mutated-fixture driver-compare for
-every JSON-consuming and NUL-text-consuming query, and (c) the
-no-hand-copied-guard rule.
-"""
+"""Class ``jsonhostile`` of tests/mutations.py: JSON at the parsers' lexical
+fringe, plus the variant-by-variant agreement corpus for the json_int gate."""
 
 from __future__ import annotations
 
 import duckdb
-import pytest
 
-from hbase_sep_spark.functions import HOSTILE_JSON_RE, json_int, json_int_sql
-from hbase_sep_spark.registry import load_all
-from scripts.gen_jsonhostile_fixture import build
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
+from tests.mutations import REGISTRY, compare
 
-REGISTRY = load_all()
+
+test_jsonhostile_fixture_matches_oracle = compare("jsonhostile")
+
 
 _BS = "\\"
 
-# Every probed variant: clean ones must extract the SAME value on both
-# engines; hostile ones must be NULL on both.
+
+# Every probed JSON variant: clean ones must extract the SAME value on
+# both engines; hostile ones must be NULL on both.
 VARIANTS = {
     "plain_int": ('{"k":1}', 1),
     "spaced_int": ('{"k": 87}', 87),
@@ -74,91 +48,52 @@ VARIANTS = {
     "bare_scalar": ("17", None),
     "utf8_bom": (chr(0xFEFF) + '{"k":1}', None),
     "ctrl_del_in_str": ('{"k":1,"n":"a' + chr(127) + 'b"}', 1),
-    # Nesting-depth class (round 9): Jackson caps depth (~1000) and
-    # NULLs the whole payload where yyjson parses to any depth —
-    # gated by the MAX_JSON_OPENERS length proxy on both sides.
+    # Nesting depth: Jackson caps depth (~1000) and NULLs the whole
+    # payload where yyjson parses any depth — gated by MAX_JSON_OPENERS.
     "clean_nested6": ('{"k":1,"d":{"a":{"b":{"c":{"e":{"f":1}}}}}}', 1),
-    "deep_950_under_cap": (
-        '{"k":1,"d":' + '{"a":' * 950 + "1" + "}" * 950 + "}",
-        None,  # overbroad: both parsers handle it, the gate NULLs both
-    ),
-    "deep_1200_over_cap": (
-        '{"k":1,"d":' + '{"a":' * 1200 + "1" + "}" * 1200 + "}",
-        None,  # the real divergence: Jackson fails, yyjson extracts
-    ),
+    "deep_950_under_cap": ('{"k":1,"d":' + '{"a":' * 950 + "1" + "}" * 950 + "}", None),  # overbroad
+    "deep_1200_over_cap": ('{"k":1,"d":' + '{"a":' * 1200 + "1" + "}" * 1200 + "}", None),
     "deep_100k_arrays": ('{"k":1,"d":' + "[" * 100000 + "1" + "]" * 100000 + "}", None),
-    "wide_952_openers": (
-        '{"k":1,"a":[' + '{"b":1},' * 949 + '{"b":1}]}',
-        None,  # shallow but >900 openers: conservative NULL both sides
-    ),
+    "wide_952_openers": ('{"k":1,"a":[' + '{"b":1},' * 949 + '{"b":1}]}', None),  # conservative
     "braces_in_string_950": ('{"k":1,"s":"' + "{" * 950 + '"}', None),
-    # Integral-cast class (round 10): DuckDB TRY_CAST(VARCHAR AS INT)
-    # accepts fractional/exponent strings and ROUNDS them ('1.5' → 2,
-    # '1e3' → 1000) where ANSI Spark's try_cast NULLs anything
-    # non-integral — the oracle pre-filters with _INTEGRAL_RE.
+    # Integral casts: DuckDB TRY_CAST rounds '1.5' and '1e3' where ANSI
+    # Spark NULLs anything non-integral — the oracle pre-filters.
     "frac_val": ('{"k":1.5}', None),
     "frac_round_up": ('{"k":2.5}', None),
     "frac_neg": ('{"k":-1.5}', None),
-    "frac_int_valued": ('{"k":7.0}', None),  # duck renders '7.0' — still non-integral
-    "exp_val": ('{"k":1e3}', None),  # duck renders '1000.0'
+    "frac_int_valued": ('{"k":7.0}', None),
+    "exp_val": ('{"k":1e3}', None),
     "quoted_frac": ('{"k":"1.5"}', None),
     "quoted_exp": ('{"k":"1e3"}', None),
     "quoted_spaced_int": ('{"k":" 87 "}', 87),  # both engines trim plain spaces
     "quoted_signed": ('{"k":"+9"}', 9),
-    "int32_overflow": ('{"k":2147483648}', None),  # try_cast overflow, both NULL
-    # Number-token-length class (round 10): Jackson caps number tokens
-    # at ~1000 chars and NULLs the WHOLE payload — even extracting a
-    # different, clean key — where yyjson parses fine. Gated by the
-    # MAX_JSON_DIGITS total-digit proxy on both sides.
+    "int32_overflow": ('{"k":2147483648}', None),
+    # Number-token length: Jackson's ~1000-char cap NULLs the whole
+    # payload — gated by the MAX_JSON_DIGITS total-digit proxy.
     "longnum_k_1001": ('{"k":' + "1" * 1001 + "}", None),
     "longnum_sibling": ('{"k":5,"pad":' + "7" * 2000 + "}", None),
     "longfrac_sibling": ('{"k":5,"pad":1.' + "1" * 2000 + "}", None),
-    "digits_950_spread": (
-        '{"k":1,"a":[' + "11," * 470 + "11]}",
-        None,  # overbroad: both parsers fine, >900 total digits gates both
-    ),
-    "digits_890_spread": (
-        '{"k":1,"a":[' + "11," * 440 + "11]}",
-        1,  # under the digit cap: stays clean, extracts
-    ),
-    # Field-name-length class (round 10): Jackson caps key names at
-    # 50k chars — a 60k name NULLs the whole payload, yyjson extracts
-    # the clean sibling. Gated by MAX_JSON_LENGTH on both sides.
+    "digits_950_spread": ('{"k":1,"a":[' + "11," * 470 + "11]}", None),  # overbroad
+    "digits_890_spread": ('{"k":1,"a":[' + "11," * 440 + "11]}", 1),
+    # Field-name length: Jackson's 50k name cap — gated by MAX_JSON_LENGTH.
     "name_60k": ('{"' + "a" * 60000 + '":1,"k":5}', None),
-    "len_40k_string": (
-        '{"k":5,"pad":"' + "x" * 40000 + '"}',
-        None,  # overbroad: both parsers fine, >32768 chars gates both
-    ),
+    "len_40k_string": ('{"k":5,"pad":"' + "x" * 40000 + '"}', None),  # overbroad
     "str_25k_under_cap": ('{"k":5,"pad":"' + "x" * 25000 + '"}', 5),
 }
 
-# Queries whose Spark side or oracle touches props-JSON.
-JSON_PINNED = [
-    "events_payload_extract",
-    "filter_null_handling",
-    "cast_types",
-    "agg_bitwise",
-    "agg_regr_slope",
-    "json_extract_props",
-    "json_to_map",
-    "map_lambda_ops",
-]
 
-# Text consumers that must survive NUL bytes in documents.text.
-NUL_TEXT_PINNED = [
-    "text_token_count",
-    "text_tokenize_wordcount",
-    "text_fingerprint",
-    "text_entropy_score",
-    "dedup_exact_docs",
-    "text_quality_score",
-]
+# Queries whose Spark side or oracle touches props-JSON.
+_JSON_CONSUMERS = (
+    "events_payload_extract", "filter_null_handling", "cast_types", "agg_bitwise",
+    "agg_regr_slope", "json_extract_props", "json_to_map", "map_lambda_ops",
+)
 
 
 def test_gate_is_sql_splicable():
     """The pattern is interpolated into a SQL '...' literal — a single
-    quote or brace would corrupt the oracle text (quotes must use
-    \\x27, and f-string consumers would swallow braces)."""
+    quote or brace would corrupt the oracle text."""
+    from hbase_sep_spark.functions import HOSTILE_JSON_RE, json_int_sql
+
     assert "'" not in HOSTILE_JSON_RE
     assert "{" not in HOSTILE_JSON_RE.replace("[{,:", "")  # class literal only
     assert HOSTILE_JSON_RE in json_int_sql()
@@ -168,8 +103,10 @@ def test_consumer_oracles_interpolate_the_helper():
     """No consumer may hand-copy the json_valid guard: every oracle that
     extracts props-JSON must contain the generated json_int_sql text
     (or, for json_to_map, the gate regex itself)."""
+    from hbase_sep_spark.functions import HOSTILE_JSON_RE, json_int_sql
+
     frag = json_int_sql()
-    for name in JSON_PINNED:
+    for name in _JSON_CONSUMERS:
         oracle = REGISTRY[name].oracle
         assert oracle is not None, name
         ok = frag in oracle or json_int_sql(sql_type="BIGINT") in oracle
@@ -177,11 +114,7 @@ def test_consumer_oracles_interpolate_the_helper():
             ok = HOSTILE_JSON_RE in oracle
         assert ok, f"{name}: oracle does not interpolate json_int_sql()"
     offenders = [
-        n
-        for n, q in REGISTRY.items()
-        if q.oracle
-        and "json_valid" in q.oracle
-        and HOSTILE_JSON_RE not in q.oracle
+        n for n, q in REGISTRY.items() if q.oracle and "json_valid" in q.oracle and HOSTILE_JSON_RE not in q.oracle
     ]
     assert not offenders, f"oracles using ungated json_valid: {offenders}"
 
@@ -189,37 +122,16 @@ def test_consumer_oracles_interpolate_the_helper():
 def test_variant_agreement(spark):
     """json_int (Spark) == json_int_sql (DuckDB) == the pinned expected
     value, variant by variant."""
+    from hbase_sep_spark.functions import json_int, json_int_sql
+
     con = duckdb.connect()
     try:
         for name, (payload, expected) in VARIANTS.items():
-            got = con.execute(
-                f"SELECT {json_int_sql('j')} FROM (SELECT ?::VARCHAR AS j)",
-                [payload],
-            ).fetchone()[0]
+            got = con.execute(f"SELECT {json_int_sql('j')} FROM (SELECT ?::VARCHAR AS j)", [payload]).fetchone()[0]
             assert got == expected, f"duckdb {name}: {got!r} != {expected!r}"
     finally:
         con.close()
-    rows = [(n, p) for n, (p, _) in VARIANTS.items()]
-    df = spark.createDataFrame(rows, "name string, j string")
+    df = spark.createDataFrame([(n, p) for n, (p, _) in VARIANTS.items()], "name string, j string")
     got = {r.name: r.v for r in df.select("name", json_int("j").alias("v")).collect()}
     for name, (_, expected) in VARIANTS.items():
         assert got[name] == expected, f"spark {name}: {got[name]!r} != {expected!r}"
-
-
-@pytest.fixture(scope="module")
-def jsonhostile_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("jsonhostile_sf")
-    build(SF_UNIT, str(dst))
-    return str(dst)
-
-
-@pytest.mark.parametrize("name", JSON_PINNED + NUL_TEXT_PINNED)
-def test_jsonhostile_fixture_matches_oracle(name, spark, jsonhostile_sf):
-    con = duck_connection(jsonhostile_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, jsonhostile_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), (
-        f"{name}: {res['status']}: {res['detail']}"
-    )

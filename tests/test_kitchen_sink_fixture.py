@@ -1,200 +1,8 @@
-"""Combined-hostility regression tests (round-6 adversarial capstone).
-
-Each adversarial class has its own fixture module (nulls, ties,
-unicode, extremes/payloads, empty-match, big-ids, degenerate stats)
-— but classes can INTERACT: a NULL value inside a tied (user_id, ts)
-group, a unicode doc that is also an exact duplicate, a mistyped
-payload on a second-quantized timestamp. This fixture turns
-everything on at once — timestamps truncated to whole seconds
-(pervasive pick-key ties and zero inter-arrival gaps), NULL
-values/props/text/lang, tie-duplicate events, unicode + case-mapping
-doc pairs, negative/zero values (large ones clamped inside the
-decimal moment envelope), all payload variants, cloned orders,
-(round 7) hostile embeddings (NULL/empty/ragged/zero/NaN/Inf
-vectors), and (round 8) NULL event-times / user ids / event types
-riding the SAME tied-second feed (NULL time keys inside tie groups
-— the null-ts and null-keys classes interacting with the tie class),
-lexically-hostile JSON payloads (raw control chars, NaN literals,
-trailing commas, single quotes, lone surrogates — the
-lenient-parser class), and NUL-byte documents. Full-registry sweeps
-over the capstone passed with zero interaction-only fixes each
-round. This module pins a representative interaction-heavy slice.
-
-NOTE the round-6 pretty-printed payload variant (raw newlines
-between tokens) is HOSTILE under the round-8 gate — both engines
-now NULL it by policy, which this fixture re-proves.
-"""
+"""Class ``kitchen_sink`` of tests/mutations.py: every hostility class at once."""
 
 from __future__ import annotations
 
-import shutil
-
-import duckdb
-import pyarrow as pa
-import pyarrow.parquet as pq
-import pytest
-
-from hbase_sep_spark.registry import load_all
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-# Interaction-heavy picks: every query here touches at least two
-# hostile classes at once on this fixture.
-PINNED = [
-    "agg_argmax_misc",         # ties × NULL values × quantized ts
-    "ts_weekly_ohlc",          # NULL-skip picks × pervasive ts ties
-    "events_interarrival_stats",  # zero gaps × NULL values
-    "json_to_map",             # payload variants × NULL props
-    "events_payload_extract",  # tolerant extraction × tie duplicates
-    "dedup_exact_docs",        # unicode fold × NULL text × dup docs
-    "text_fingerprint",        # case-mapping pair × NULL text
-    "pipeline_training_prep",  # fold × NULL text × quality gate
-    "agg_mannwhitney_u",       # NULL-value skip × weekend classes
-    "win_first_last",          # ordered picks over tied seconds
-    "topk_per_group",          # rank ties × negative values
-    "agg_skew_kurtosis_portable",  # zero-variance guard × in-envelope extremes
-    "multimodal_struct_cols",  # hostile embeddings × NULL lang × dup docs
-    "dedup_embedding_cosine",  # validity gate × hostile vectors in pairs
-    "arr_lambda_filter_agg",   # finite guards × empty/NaN arrays
-    # round-8 interaction picks
-    "events_per_key_ordered",  # NULL ts dead-letter × tied seconds
-    "join_asof_latest_event",  # NULL ts/user drops × exact-ts ASOF ties
-    "win_running_distinct",    # NULL event_type × null-safe flag × ties
-    "win_sessionize_batch",    # NULL ts × zero gaps × tie duplicates
-    "filter_null_handling",    # hostile-JSON gate × NULL props
-    "agg_bitwise",             # gated payload extraction × clones
-]
+from tests.mutations import compare
 
 
-@pytest.fixture(scope="module")
-def sink_sf(tmp_path_factory):
-    from tests.test_embedding_fixture import write_hostile_embeddings
-
-    dst = tmp_path_factory.mktemp("sink_sf")
-    for name in "region nation customer supplier part".split():
-        shutil.copy(f"{SF_UNIT}/{name}.parquet", dst / f"{name}.parquet")
-    write_hostile_embeddings(
-        f"{SF_UNIT}/embeddings.parquet", str(dst / "embeddings.parquet")
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (
-          WITH base AS (
-            SELECT event_id,
-                   CASE WHEN event_id % 41 = 8 THEN NULL
-                        ELSE date_trunc('second', ts) END AS ts,
-                   CASE WHEN event_id % 43 = 9 THEN NULL ELSE user_id END
-                       AS user_id,
-                   CASE WHEN event_id % 47 = 10 THEN NULL ELSE event_type END
-                       AS event_type,
-                   CASE
-                     WHEN event_id % 10 = 3 THEN NULL
-                     WHEN event_id % 4 = 0  THEN -value
-                     WHEN event_id % 9 = 2  THEN 0.0
-                     WHEN event_id % 17 = 5 THEN round(value * 1e2, 2)
-                     ELSE value END AS value,
-                   CASE
-                     WHEN event_id % 13 = 5  THEN NULL
-                     WHEN event_id % 37 = 6  THEN '{{' || chr(10) || '  "k": 21' || chr(10) || '}}'
-                     WHEN event_id % 29 = 4  THEN '{{"a\\"b": 3}}'
-                     WHEN event_id % 29 = 9  THEN '{{"a\\\\b": 3}}'
-                     WHEN event_id % 29 = 14 THEN '{{"": 3}}'
-                     WHEN event_id % 29 = 19 THEN '\\N'
-                     WHEN event_id % 23 = 3  THEN '{{"x": 1}}'
-                     WHEN event_id % 23 = 7  THEN '{{"k": "12"}}'
-                     WHEN event_id % 23 = 11 THEN '{{"k": {{"a": 1}}}}'
-                     WHEN event_id % 23 = 15 THEN '{{"k": null}}'
-                     WHEN event_id % 23 = 19 THEN '{{k: 12'
-                     WHEN event_id % 23 = 21 THEN ''
-                     WHEN event_id % 53 = 11
-                          THEN '{{"k":1,"n":"a' || chr(1) || 'b"}}'
-                     WHEN event_id % 53 = 24 THEN '{{"k":2,"n":NaN}}'
-                     WHEN event_id % 53 = 37 THEN '{{"k":3,}}'
-                     WHEN event_id % 53 = 50 THEN concat(chr(123), chr(39),
-                          'k', chr(39), ':4}}')
-                     WHEN event_id % 59 = 13 THEN '{{"k":5,"n":"\\ud800"}}'
-                     WHEN event_id % 59 = 26 THEN '{{"k":6,"n":"a\\u0000b"}}'
-                     ELSE props END AS props
-            FROM '{SF_UNIT}/events.parquet')
-          SELECT * FROM base
-          UNION ALL
-          SELECT event_id + 1000000, ts, user_id,
-                 'tie_' || coalesce(event_type, ''), value + 7.5, props
-          FROM base WHERE event_id % 5 = 0
-          UNION ALL
-          SELECT event_id + 3000000, ts, user_id, event_type,
-                 value * 2 + 1, props
-          FROM base WHERE event_id % 11 = 1
-        ) TO '{dst}/events.parquet' (FORMAT PARQUET)"""
-    )
-    edge = [
-        "", " \t\n ", "a", "你好世界" * 2,
-        "Ünïcode ÉÉÉ ß Straße İstanbul",
-        "İstanbul Z", "i̇stanbul z",       # case-mapping merge pair
-        "Hello World", "hello world",      # ASCII fold pair (must merge)
-        "hello \U0001F44B world", ("abc " * 200).strip(),
-        "alpha" + chr(0) + "beta gamma",   # NUL-byte doc (round-8 class)
-        chr(0),                            # NUL-only doc
-    ]
-    rows = [
-        (300000 + i, t, "en" if i % 2 == 0 else "xx", "edge", len(t))
-        for i, t in enumerate(edge)
-    ]
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-                "text": pa.array([r[1] for r in rows], pa.string()),
-                "lang": pa.array([r[2] for r in rows], pa.string()),
-                "source": pa.array([r[3] for r in rows], pa.string()),
-                "n_chars": pa.array([r[4] for r in rows], pa.int64()),
-            }
-        ),
-        str(dst / "_edge.parquet"),
-    )
-    con.execute(
-        f"""COPY (
-          WITH base AS (
-            SELECT doc_id,
-                   CASE WHEN doc_id % 17 = 2 THEN NULL ELSE text END AS text,
-                   CASE WHEN doc_id % 19 = 4 THEN NULL ELSE lang END AS lang,
-                   source, n_chars
-            FROM '{SF_UNIT}/documents.parquet')
-          SELECT * FROM base
-          UNION ALL SELECT * FROM '{dst}/_edge.parquet'
-          UNION ALL
-          SELECT doc_id + 100000, text, lang, source, n_chars
-          FROM base WHERE doc_id % 6 = 0
-        ) TO '{dst}/documents.parquet' (FORMAT PARQUET)"""
-    )
-    con.execute(
-        f"""COPY (SELECT * FROM '{SF_UNIT}/orders.parquet'
-              UNION ALL
-              SELECT o_orderkey + 10000000, o_custkey, o_orderstatus,
-                     o_totalprice, o_orderdate, o_orderpriority
-              FROM '{SF_UNIT}/orders.parquet' WHERE o_orderkey % 13 = 0)
-            TO '{dst}/orders.parquet' (FORMAT PARQUET)"""
-    )
-    con.execute(
-        f"""COPY (SELECT * FROM '{SF_UNIT}/lineitem.parquet'
-              UNION ALL
-              SELECT l_orderkey + 10000000, l_partkey, l_suppkey,
-                     l_linenumber, l_quantity, l_extendedprice, l_discount,
-                     l_tax, l_returnflag, l_linestatus, l_shipdate
-              FROM '{SF_UNIT}/lineitem.parquet' WHERE l_orderkey % 13 = 0)
-            TO '{dst}/lineitem.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    return str(dst)
-
-
-@pytest.mark.parametrize("name", PINNED)
-def test_kitchen_sink_fixture_matches_oracle(name, spark, sink_sf):
-    con = duck_connection(sink_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, sink_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), f"{name}: {res['status']}: {res['detail']}"
+test_kitchen_sink_fixture_matches_oracle = compare("kitchen_sink")

@@ -1,93 +1,29 @@
-"""Physical-layout regression tests (round-9 sweep).
-
-The driver fixture ships every table as ONE parquet file in generator
-order, but nothing in the contract promises that — a regenerated
-fixture (or any production dataset) can ship multi-file tables with
-arbitrary row order. Results must be invariant to physical layout:
-a query whose answer depends on scan order passes forever on a single
-sorted file and silently diverges the day the layout changes.
-
-The round-9 sweep (scripts/gen_layout_fixture.py: every table a
-3-part directory, non-feed tables row-permuted, the events feed split
-into contiguous ts-ordered SEGMENTS — the WAL/Kafka shape a 100 TB
-feed actually has) ran the full registry through the spark-vs-DuckDB
-compare: two failures —
-
-- `scan_rowgroup_stats_audit` crashed (pq.ParquetFile on a directory);
-  now audits every part file in sorted-filename order with a global
-  row-group index;
-- `udaf_pandas_group` MISMATCHED: its float `kept.mean()` sum order
-  followed scan order, and round(., 4) sat on a rounding boundary —
-  the engines disagreed in the 4th decimal on the permuted layout.
-  Now exact integer cents with the half-away-from-zero 4-dp integer
-  division on both sides (the _iavg4 idiom; c_acctbal is 2-dp money,
-  envelope-pinned).
-
-The segment-dir feed support itself lives in
-sources/sep_events.py:_feed_segments (driver = footer-only reads;
-workers slice row groups per overlapping segment) and is exercised
-here end-to-end through the streaming source, the bootstrap seam,
-and a direct transport-equivalence check.
-"""
+"""Class ``layout`` of tests/mutations.py: multi-part table directories, plus
+the segmented-feed transport checks."""
 
 from __future__ import annotations
 
+import glob
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 
-from hbase_sep_spark.registry import load_all
-from scripts.gen_layout_fixture import mutate
 from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-PINNED = [
-    # the two round-9 fixes
-    "udaf_pandas_group",
-    "scan_rowgroup_stats_audit",
-    # transport over a segmented feed (offsets, seam, per-key order)
-    "stream_sep_source",
-    "stream_bootstrap_then_tail",
-    "stream_stateful_latest",
-    # order-sensitive batch shapes that must not follow scan order
-    "events_per_key_ordered",
-    "win_row_number",
-    "topk_per_group",
-    "limit_topn",
-    "agg_collect_sorted",
-    "join_asof_latest_event",
-    # file-manifest pattern (input_file_name over its own landing)
-    "scan_incremental_manifest",
-]
+from tests.mutations import collect_rows, compare
 
 
-@pytest.fixture(scope="module")
-def layout_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("layout") / "sf"
-    mutate(SF_UNIT, str(dst))
-    return str(dst)
+test_layout_fixture_matches_oracle = compare("layout")
 
 
-@pytest.mark.parametrize("name", PINNED)
-def test_layout_fixture_matches_oracle(name, spark, layout_sf):
-    con = duck_connection(layout_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, layout_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), (
-        f"{name}: {res['status']}: {res['detail']}"
-    )
-
-
-def test_segmented_feed_equals_single_file(layout_sf):
+def test_segmented_feed_equals_single_file(mutated):
     """Transport equivalence: reading the segmented feed in arbitrary
     global-row slices yields exactly the single-file feed's rows, in
     feed order (the replay-offset contract)."""
     from hbase_sep_spark.sources.sep_events import _read_rows, feed_total
 
-    single = f"{SF_UNIT}/events.parquet"
-    seg = f"{layout_sf}/events.parquet"
+    single, seg = f"{SF_UNIT}/events.parquet", f"{mutated('layout')}/events.parquet"
     assert feed_total(seg) == feed_total(single)
     n = feed_total(seg)
     # Slice boundaries chosen to straddle segment and row-group edges.
@@ -97,17 +33,12 @@ def test_segmented_feed_equals_single_file(layout_sf):
         got.extend(_read_rows(seg, lo, hi))
         want.extend(_read_rows(single, lo, hi))
     assert got == want
-    # And one full-range read equals the concatenated slices.
     assert list(_read_rows(seg, 0, n)) == got
 
 
 def test_empty_segment_is_transparent(tmp_path):
     """A zero-row segment file (a rotation that caught no events) must
     not shift offsets or break the range reader."""
-    import shutil
-
-    import pyarrow.parquet as pq
-
     from hbase_sep_spark.sources.sep_events import _read_rows, feed_total
 
     single = f"{SF_UNIT}/events.parquet"
@@ -121,33 +52,23 @@ def test_empty_segment_is_transparent(tmp_path):
     assert feed_total(str(seg_dir)) == n
     assert list(_read_rows(str(seg_dir), 0, n)) == list(_read_rows(single, 0, n))
     # A range that starts exactly at the empty segment's base.
-    assert list(_read_rows(str(seg_dir), n // 2, n)) == list(
-        _read_rows(single, n // 2, n)
-    )
-    shutil.rmtree(seg_dir)
+    assert list(_read_rows(str(seg_dir), n // 2, n)) == list(_read_rows(single, n // 2, n))
 
 
 def test_out_of_order_segments_fail_loudly(tmp_path):
-    """The feed contract — sorted-filename order IS ts order — is now
-    CHECKED from row-group ts statistics (footer-only), not assumed: a
-    regenerated feed named data_9/data_10 sorts 10-before-9 lexically
-    and would silently corrupt every replay slice. The transport must
-    raise, not serve wrong offsets."""
-    import pyarrow.parquet as pq
-    import pytest as _pytest
-
+    """The feed contract — sorted-filename order IS ts order — is
+    CHECKED from row-group ts statistics: a feed named data_9/data_10
+    sorts 10-before-9 lexically and would silently corrupt every
+    replay slice. The transport must raise, not serve wrong offsets."""
     from hbase_sep_spark.sources.sep_events import feed_total
 
-    single = f"{SF_UNIT}/events.parquet"
-    tbl = pq.read_table(single)
+    tbl = pq.read_table(f"{SF_UNIT}/events.parquet")
     n = tbl.num_rows
     seg_dir = tmp_path / "events.parquet"
     seg_dir.mkdir()
-    # The lexical trap: data_10 < data_9 as filenames, but data_9
-    # holds the EARLIER half of the feed.
     pq.write_table(tbl.slice(n // 2), str(seg_dir / "data_10.parquet"))
     pq.write_table(tbl.slice(0, n // 2), str(seg_dir / "data_9.parquet"))
-    with _pytest.raises(ValueError, match="out of order"):
+    with pytest.raises(ValueError, match="out of order"):
         feed_total(str(seg_dir))
     # Zero-padded rotation names order correctly and pass the check.
     ok_dir = tmp_path / "ok.parquet"
@@ -160,47 +81,31 @@ def test_out_of_order_segments_fail_loudly(tmp_path):
 def test_mixed_tz_segments_skip_order_check(tmp_path):
     """A feed mixing ntz and tz-annotated segments is out of contract
     (cross-segment reads fail loudly with ArrowInvalid), but the
-    footer-only feed-order check must not trip over it first: naive
-    and aware datetime stats share a Python type yet don't order
-    against each other, and the old type()-only guard raised a bare
-    TypeError at index-build time (ADVICE-r10). The check now also
-    compares tzinfo-ness and skips, best-effort."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
+    footer-only order check must not trip over it first: naive and
+    aware datetime stats share a Python type yet don't order against
+    each other, so the check compares tzinfo-ness and skips."""
     from hbase_sep_spark.sources.sep_events import feed_total
 
-    single = f"{SF_UNIT}/events.parquet"
-    tbl = pq.read_table(single)
+    tbl = pq.read_table(f"{SF_UNIT}/events.parquet")
     n = tbl.num_rows
     first, second = tbl.slice(0, n // 2), tbl.slice(n // 2)
-    ts_i = second.schema.get_field_index("ts")
-    tz_ts = pc.assume_timezone(
-        second.column("ts").combine_chunks().cast(pa.timestamp("us")), "UTC"
-    )
-    second = second.set_column(ts_i, pa.field("ts", tz_ts.type), tz_ts)
+    tz_ts = pc.assume_timezone(second.column("ts").combine_chunks().cast(pa.timestamp("us")), "UTC")
+    second = second.set_column(second.schema.get_field_index("ts"), pa.field("ts", tz_ts.type), tz_ts)
     seg_dir = tmp_path / "events.parquet"
     seg_dir.mkdir()
     pq.write_table(first, str(seg_dir / "data_00.parquet"))
     pq.write_table(second, str(seg_dir / "data_01.parquet"))
-    # Index build succeeds (check skipped across the encoding change),
-    # no TypeError.
     assert feed_total(str(seg_dir)) == n
 
 
 def test_segment_memo_detects_same_path_rewrite(tmp_path):
-    """A feed regenerated AT THE SAME PATH inside a live process (the
-    driver's testdata-regeneration precedent) must not be served stale
-    (file, base, n) offsets: the memo keys on the listing's
-    (name, size, mtime_ns) signature, so a rewrite misses and
-    re-reads footers (ADVICE r9)."""
-    import pyarrow.parquet as pq
-
+    """A feed regenerated AT THE SAME PATH inside a live process must
+    not be served stale (file, base, n) offsets: the memo keys on the
+    listing's (name, size, mtime_ns) signature, so a rewrite misses
+    and re-reads footers."""
     from hbase_sep_spark.sources.sep_events import feed_total
 
-    single = f"{SF_UNIT}/events.parquet"
-    tbl = pq.read_table(single)
+    tbl = pq.read_table(f"{SF_UNIT}/events.parquet")
     n = tbl.num_rows
     feed = tmp_path / "events.parquet"
     pq.write_table(tbl.slice(0, n // 2), str(feed))
@@ -216,20 +121,14 @@ def test_segment_memo_detects_same_path_rewrite(tmp_path):
     assert feed_total(str(seg_dir)) == n
 
 
-def test_rowgroup_audit_covers_all_parts(spark, layout_sf):
+def test_rowgroup_audit_covers_all_parts(spark, mutated):
     """The audit must report every part file's row groups (global
     index, no duplicates), not just the first file's."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    q = REGISTRY["scan_rowgroup_stats_audit"]
-    rows = (q.raw or q.fn)(spark, layout_sf).collect()
-    files = sorted(glob.glob(f"{layout_sf}/lineitem.parquet/*.parquet"))
+    sf = mutated("layout")
+    rows = collect_rows("scan_rowgroup_stats_audit", spark, sf)
+    files = sorted(glob.glob(f"{sf}/lineitem.parquet/*.parquet"))
     expected_groups = sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
     assert len(files) == 3
     assert len(rows) == expected_groups
     assert sorted(r["row_group"] for r in rows) == list(range(expected_groups))
-    assert sum(r["n_rows"] for r in rows) == pq.read_table(
-        f"{SF_UNIT}/lineitem.parquet"
-    ).num_rows
+    assert sum(r["n_rows"] for r in rows) == pq.read_table(f"{SF_UNIT}/lineitem.parquet").num_rows

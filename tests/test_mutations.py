@@ -1,19 +1,27 @@
-"""Delete/tombstone mutation semantics (queries/mutations.py,
-operators/sep_model.py, stream_latest_op_wins).
+"""Mutation tests, in both senses the engine uses the word.
 
-The invariant under test everywhere: a key whose newest mutation is a
-delete is ABSENT from the snapshot; a put newer than the tombstone
-revives it; DeleteColumn kills one qualifier, DeleteFamily the row.
+1. Delete/tombstone semantics (queries/mutations.py,
+   operators/sep_model.py, stream_latest_op_wins). The invariant: a
+   key whose newest mutation is a delete is ABSENT from the snapshot;
+   a put newer than the tombstone revives it; DeleteColumn kills one
+   qualifier, DeleteFamily the row.
+2. Hostile-input fixtures (tests/mutations.py): the checks on the
+   MUTATIONS table itself. The compares and each class's own checks
+   live in the tests/test_*_fixture.py modules.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import glob
+import importlib
+import os
 
 import pyspark.sql.functions as F
 import pytest
 
 from tests.conftest import SF_UNIT
+from tests.mutations import MUTATIONS
 
 
 def _mutation_feed(spark):
@@ -123,3 +131,31 @@ def test_stream_latest_op_wins_matches_batch(spark):
     got = {(r.user_id, r.last_event_id, r.last_value) for r in stream.collect()}
     want = {(r.user_id, r.event_id, r.value) for r in batch.collect()}
     assert got == want
+
+
+# ---- the hostile-input table (tests/mutations.py) -------------------
+
+
+def test_table_rejects_bad_entries():
+    """The import-time guard: no pins, an unregistered pin, a pin listed
+    twice, or a class defined twice would each silently shrink the matrix."""
+    from tests.mutations import Mutation, _index
+
+    for table in (
+        [Mutation("a", "", ())],
+        [Mutation("a", "", ("no_such_query",))],
+        [Mutation("a", "", ("agg_global", "agg_global"))],
+        [Mutation("a", "", ("agg_global",)), Mutation("a", "", ("agg_cube",))],
+    ):
+        with pytest.raises(RuntimeError):
+            _index(table)
+
+
+def test_every_class_is_compared_once():
+    """Each class is bound by exactly one compare() across the
+    tests/test_*_fixture.py modules, so no class drops out of the matrix."""
+    seen = []
+    for path in sorted(glob.glob(os.path.join(os.path.dirname(__file__), "test_*_fixture.py"))):
+        mod = importlib.import_module(f"tests.{os.path.basename(path)[:-3]}")
+        seen += [c for v in vars(mod).values() for c in getattr(v, "mutation_classes", ())]
+    assert sorted(seen) == sorted(MUTATIONS)

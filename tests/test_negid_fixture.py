@@ -1,126 +1,21 @@
-"""Negative-id regression tests (round-8 sweep).
-
-The fixture's ids are all non-negative, but nothing in the schema
-promises that — a merged feed, a sign-encoding producer, or a tombstone
-convention can ship negative event_id/user_id/doc_id. Signedness is a
-cross-engine minefield because the engines agree on `%` (both
-trunc-mod, sign of dividend) but DISAGREE downstream of it. The
-round-8 sweep negated a slice of every id column and ran the full
-registry through the spark-vs-DuckDB compare: three failures, three
-distinct classes —
-
-- negative shift distance: `1::BIGINT << (user_id % 32)` — DuckDB
-  ERRORS, Spark silently wraps (agg_bitmap_distinct_users; fixed with
-  the floor-mod pair `((x % 32) + 32) % 32` + exactly-divisible
-  integral bucket on both sides);
-- salt domain escape: a fact-side `event_id % N` salt goes negative
-  and never matches the dim side's explode(0..N-1) — the salted join
-  SILENTLY DROPS rows (join_skew_salted; fact salt is now floor-mod,
-  Spark-only fix since the oracle is the unsalted join);
-- floor-mod vs trunc-mod: numpy `%` is floor (non-negative result),
-  SQL `%` is trunc (sign of dividend) — any Pandas-UDF hash mirrored
-  in SQL diverges on negative inputs (multimodal_frame_sample's
-  frame_sig; oracle wrapped into the floor form).
-
-Probed-identical and needing NO fix: knuth_hash's `(id % 2^31) * K %
-2^32` chain (both engines trunc-mod consistently end-to-end),
-printf('%010d') of negatives (same sign rendering), and `% bucket`
-group keys (same negative buckets both sides).
-
-The PINNED list drives the three fixed queries plus the other
-id-arithmetic consumers through the driver compare on the mutated
-feed; uniqueness is preserved (negating a residue slice cannot
-collide with the remaining positives).
-"""
+"""Class ``negid`` of tests/mutations.py: negative ids, plus the salted-join
+row-count check."""
 
 from __future__ import annotations
 
-import shutil
-
-import duckdb
-import pytest
-
-from hbase_sep_spark.registry import load_all
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-PINNED = [
-    # the three round-8 fixes
-    "agg_bitmap_distinct_users",
-    "join_skew_salted",
-    "multimodal_frame_sample",
-    # id-hash / id-arithmetic consumers that must stay clean
-    "sample_bernoulli_hash",
-    "pipeline_dataset_split",
-    "pipeline_mixture_sample",
-    "agg_kmv_distinct_sketch",
-    "agg_cms_freq_sketch",
-    "agg_argmax_misc",          # printf %010d composite pick key
-    "events_dedup_redelivery",
-    "dedup_exact_docs",
-    "json_extract_props",       # user_id/event_id untouched paths stay green
-]
+from tests.mutations import collect_rows, compare
 
 
-@pytest.fixture(scope="module")
-def negid_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("negid_sf")
-    for name in "region nation customer supplier part orders lineitem".split():
-        shutil.copy(f"{SF_UNIT}/{name}.parquet", dst / f"{name}.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (
-          SELECT CASE WHEN event_id % 7 = 3 THEN -event_id ELSE event_id END AS event_id,
-                 ts,
-                 CASE WHEN user_id % 5 = 2 THEN -user_id ELSE user_id END AS user_id,
-                 event_type, value, props
-          FROM '{SF_UNIT}/events.parquet'
-        ) TO '{dst}/events.parquet' (FORMAT PARQUET)"""
-    )
-    # documents/embeddings: negate a PAIRED slice so doc<->vec joins
-    # keep their pairs.
-    con.execute(
-        f"""COPY (
-          SELECT CASE WHEN doc_id % 9 = 4 THEN -doc_id ELSE doc_id END AS doc_id,
-                 * EXCLUDE (doc_id)
-          FROM '{SF_UNIT}/documents.parquet'
-        ) TO '{dst}/documents.parquet' (FORMAT PARQUET)"""
-    )
-    con.execute(
-        f"""COPY (
-          SELECT CASE WHEN vec_id % 9 = 4 THEN -vec_id ELSE vec_id END AS vec_id,
-                 * EXCLUDE (vec_id)
-          FROM '{SF_UNIT}/embeddings.parquet'
-        ) TO '{dst}/embeddings.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    return str(dst)
+test_negid_fixture_matches_oracle = compare("negid")
 
 
-@pytest.mark.parametrize("name", PINNED)
-def test_negid_fixture_matches_oracle(name, spark, negid_sf):
-    con = duck_connection(negid_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, negid_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), (
-        f"{name}: {res['status']}: {res['detail']}"
-    )
-
-
-def test_salted_join_loses_no_rows(spark, negid_sf):
+def test_salted_join_loses_no_rows(spark, mutated):
     """The silent-drop class directly: the salted join's total row
     count must equal the unsalted join's (every fact row finds its
     salt replica) even when event_id goes negative."""
-    q = REGISTRY["join_skew_salted"]
-    rows = (q.raw or q.fn)(spark, negid_sf).collect()
-    import pyspark.sql.functions as F
-
     from hbase_sep_spark.io import t
 
-    ev = t(spark, negid_sf, "events")
-    expected = ev.count()  # inner join on hot_key: every event's user exists
-    assert sum(r["n_rows"] for r in rows) == expected
+    sf = mutated("negid")
+    rows = collect_rows("join_skew_salted", spark, sf)
+    # inner join on hot_key: every event's user exists
+    assert sum(r["n_rows"] for r in rows) == t(spark, sf, "events").count()

@@ -1,105 +1,43 @@
-"""Non-finite-measure regression tests (round-7 adversarial sweep,
-pinned round 8 per ADVICE-r7 item 1).
-
-The fixture's events feed carries only finite money-like doubles in
-`value`; a real 100 TB metric/sensor feed ships NaN, ±Inf, and -0.0
-(upstream divide-by-zero, overflow, sentinel encodings). The round-7
-sweep injected those into ~4% of events.value and crashed or diverged
-33 queries (ANSI CAST_OVERFLOW on NaN→decimal/bigint, engine-specific
-NaN ordering in rank tests, DuckDB total-order NaN bucketing). The fix
-is the `fin()` gate (functions/portable.py): garbage measures degrade
-to NULL identically on both engines before any cast/rank/bucket.
-
-This file makes the class regression-pinned like its sibling sweeps
-(embeddings/empty-feed/era): the mutation comes from
-scripts/gen_nonfinite_fixture.py::write_nonfinite_events — imported,
-not copied, so the sweep fixture and the pin test can never drift —
-and every fin()-gated sql-hash query (discovered from oracle text, so
-the list can't go stale either) must match its DuckDB oracle on the
-mutated feed.
-
-A second guard (ADVICE-r7 item 4) pins the non-finite gate's SQL
-FORM: every oracle's inlined isnan/isinf expression must match one of
-the two canonical shapes — the NULL-the-measure CASE or the
-NOT(isnan OR isinf) drop-the-row filter — so the ~20 inlined variants
-cannot silently drift from portable.fin's semantics. The regexes
-below ARE the single source of truth for the form (the old FIN_SQL
-constant was deleted round 9 — it was a second, unused spelling).
-"""
+"""Class ``nonfinite`` of tests/mutations.py: NaN, +-Inf and -0.0 values, plus
+the lints on the oracles' isnan gates."""
 
 from __future__ import annotations
 
 import re
-import shutil
 
-import pytest
+from tests.mutations import MUTATIONS, REGISTRY, compare
 
-from hbase_sep_spark.registry import load_all
-from scripts.gen_nonfinite_fixture import TABLES, write_nonfinite_events
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
 
-REGISTRY = load_all()
+test_nonfinite_fixture_matches_oracle = compare("nonfinite")
 
-# Self-discovering: a query is in the non-finite class iff its oracle
-# carries an isnan gate (the Spark side then carries fin() or the
-# WHERE-filter mirror — the compare below proves they agree).
-FIN_GATED = sorted(
-    n for n, q in REGISTRY.items() if q.oracle and "isnan(" in q.oracle
-)
 
-# The NULL-the-measure form and the drop-the-row filter form (rank
-# tests: agg_ks_test / agg_mannwhitney_u) — the only two sanctioned
-# ways to spell the gate in an oracle.
+# Nonfinite: self-discovering — a query is in the class iff its oracle
+# carries an isnan gate. The NULL-the-measure CASE and the drop-the-row
+# filter are the only two sanctioned spellings of that gate.
+_FIN_GATED = MUTATIONS["nonfinite"].queries
+
+
 _CANON_NULL = re.compile(
-    r"CASE\s+WHEN\s+isnan\(([a-z_0-9.]+)\)\s+OR\s+isinf\(\1\)"
-    r"\s+THEN\s+NULL\s+ELSE\s+\1\s+END",
-    re.I,
+    r"CASE\s+WHEN\s+isnan\(([a-z_0-9.]+)\)\s+OR\s+isinf\(\1\)\s+THEN\s+NULL\s+ELSE\s+\1\s+END", re.I
 )
-_CANON_FILTER = re.compile(
-    r"NOT\s*\(\s*isnan\(([a-z_0-9.]+)\)\s+OR\s+isinf\(\1\)\s*\)", re.I
-)
+
+
+_CANON_FILTER = re.compile(r"NOT\s*\(\s*isnan\(([a-z_0-9.]+)\)\s+OR\s+isinf\(\1\)\s*\)", re.I)
 
 
 def test_fin_gated_class_is_nonempty_and_expected_size():
-    # The round-7 sweep gated ~20 queries; a collapse of this list
-    # means oracles stopped spelling the gate (or fin() was removed).
-    assert len(FIN_GATED) >= 15, FIN_GATED
-    assert "agg_skew_kurtosis_portable" in FIN_GATED
-    assert "agg_histogram" in FIN_GATED
+    # ~20 gated queries; a collapse means oracles stopped spelling the gate.
+    assert len(_FIN_GATED) >= 15, _FIN_GATED
+    assert "agg_skew_kurtosis_portable" in _FIN_GATED
+    assert "agg_histogram" in _FIN_GATED
 
 
 def test_oracle_nonfinite_gates_match_canonical_form():
-    """ADVICE-r7 item 4: every inlined oracle gate must be textually
-    one of the two canonical shapes so the variants can't drift (e.g.
-    an oracle that checks isnan but not isinf would silently disagree
-    with fin() on an Inf feed)."""
-    for name in FIN_GATED:
+    """Every inlined oracle gate must be textually one of the two
+    canonical shapes so the variants can't drift (an oracle checking
+    isnan but not isinf would disagree with fin() on an Inf feed)."""
+    for name in _FIN_GATED:
         o = REGISTRY[name].oracle
         total = len(re.findall(r"isnan\(", o))
         canon = len(_CANON_NULL.findall(o)) + len(_CANON_FILTER.findall(o))
-        assert canon == total, (
-            f"{name}: {total - canon} isnan site(s) not in canonical "
-            f"FIN_SQL/filter form — drift risk vs portable.fin()"
-        )
-
-
-@pytest.fixture(scope="module")
-def nonfinite_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("nonfinite_sf")
-    for name in TABLES:
-        shutil.copy(f"{SF_UNIT}/{name}.parquet", dst / f"{name}.parquet")
-    write_nonfinite_events(f"{SF_UNIT}/events.parquet", str(dst / "events.parquet"))
-    return str(dst)
-
-
-@pytest.mark.parametrize("name", FIN_GATED)
-def test_nonfinite_fixture_matches_oracle(name, spark, nonfinite_sf):
-    con = duck_connection(nonfinite_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, nonfinite_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), (
-        f"{name}: {res['status']}: {res['detail']}"
-    )
+        assert canon == total, f"{name}: {total - canon} isnan site(s) not in canonical form"

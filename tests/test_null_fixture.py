@@ -1,73 +1,8 @@
-"""Null-injection regression tests (round-6 adversarial sweep).
-
-Fixtures to date have been null-free, but a regenerated feed could
-carry NULL value/props/text. The round-6 sweep injected them and
-found: Python workers crashing on len(None) payloads, Spark
-min_by/max_by returning null-value rows DuckDB's arg_min skips,
-engines disagreeing on NULL-text shingles, an oracle assuming
-non-null props, and one exact round-half tie (sum 319.03 / count 8 =
-39.87875) where Spark and DuckDB round a double quotient apart.
-These tests drive the fixed queries over the same null-bearing
-fixture through the full spark-vs-DuckDB compare.
-"""
+"""Class ``null`` of tests/mutations.py: NULL value, props, text and lang."""
 
 from __future__ import annotations
 
-import shutil
-
-import duckdb
-import pytest
-
-from hbase_sep_spark.registry import load_all
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-FIXED = [
-    "agg_mannwhitney_u",          # NULL values drop from rank tests
-    "agg_ks_test",
-    "ts_weekly_ohlc",             # min_by/max_by must skip NULL values
-    "json_to_map",                # NULL props NULLs all derived cols
-    "text_fingerprint",           # NULL text → '' on both sides
-    "text_repetition_ratio",
-    "text_contamination_check",
-    "multimodal_decode_stub",     # NULL text → empty payload (no crash)
-    "multimodal_frame_sample",
-    "events_hourly_seasonality",  # integer half-away avg (tie-free)
-]
+from tests.mutations import compare
 
 
-@pytest.fixture(scope="module")
-def null_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("null_sf")
-    for name in "region nation customer supplier part orders lineitem embeddings".split():
-        shutil.copy(f"{SF_UNIT}/{name}.parquet", dst / f"{name}.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT event_id, ts, user_id, event_type,
-                 CASE WHEN event_id % 10 = 3 THEN NULL ELSE value END AS value,
-                 CASE WHEN event_id % 13 = 5 THEN NULL ELSE props END AS props
-            FROM '{SF_UNIT}/events.parquet')
-            TO '{dst}/events.parquet' (FORMAT PARQUET)"""
-    )
-    con.execute(
-        f"""COPY (SELECT doc_id,
-                 CASE WHEN doc_id % 17 = 2 THEN NULL ELSE text END AS text,
-                 CASE WHEN doc_id % 19 = 4 THEN NULL ELSE lang END AS lang,
-                 source, n_chars
-            FROM '{SF_UNIT}/documents.parquet')
-            TO '{dst}/documents.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    return str(dst)
-
-
-@pytest.mark.parametrize("name", FIXED)
-def test_null_fixture_matches_oracle(name, spark, null_sf):
-    con = duck_connection(null_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, null_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), f"{name}: {res['status']}: {res['detail']}"
+test_null_fixture_matches_oracle = compare("null")

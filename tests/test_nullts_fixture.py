@@ -1,100 +1,25 @@
-"""NULL-event-time regression tests (round-8 null-ts sweep).
-
-Spark default-sorts ASC NULLS FIRST; DuckDB NULLS LAST. The moment a
-feed ships NULL timestamps, every window/rank/pick/as-of ordered by a
-nullable time key silently diverges, NULL-keyed arg_min/arg_max picks
-differ, and the Python streaming DataSource crashed converting NaT
-("NaTType does not support timetuple") — 52 of 279 registered queries
-failed on the mutated fixture before the fix.
-
-Policy (applied on BOTH sides of every affected query, and at the SEP
-transport edge in sources/sep_events.py): time-ordered operators DROP
-null-time rows — the dead-letter route; a record without an event
-time has no position in any time order, no window, no as-of match,
-and no replay offset. A no-op on clean feeds.
-
-This file pins (a) the mutated-fixture driver-compare for every fixed
-batch query, (b) the streaming core's survival (rows>0, no crash) on
-the mutated feed, and (c) the transport-level drop.
-"""
+"""Classes ``nullts`` and ``nullkeys`` of tests/mutations.py: NULL event times
+and NULL keys, plus the transport's dead-letter checks."""
 
 from __future__ import annotations
 
-import pytest
+import pyarrow as pa
+import pyarrow.parquet as pq
 
-from hbase_sep_spark.registry import load_all
-from scripts.gen_nullkeys_fixture import build as build_nullkeys
-from scripts.gen_nullts_fixture import build
 from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-# Every sql-hash query the sweep failed, now fixed with the two-sided
-# null-time drop.
-BATCH_PINNED = [
-    "agg_argmax_misc",
-    "agg_spearman_corr",
-    "agg_theil_sen_slope",
-    "events_compact_changelog",
-    "events_incremental_agg_merge",
-    "events_order_repair",
-    "events_per_key_ordered",
-    "events_scd2_history",
-    "events_session_duration_histogram",
-    "events_transition_matrix",
-    "join_asof_latest_event",
-    "join_asof_nearest",
-    "join_pit_scd2",
-    "ts_autocorrelation",
-    "ts_cusum_drift",
-    "ts_ewma_halflife",
-    "ts_max_drawdown",
-    "ts_rolling_zscore",
-    "ts_seasonal_naive_mae",
-    "ts_stl_decompose_lite",
-    "ts_weekly_ohlc",
-    "win_conditional_reset_sum",
-    "win_first_last",
-    "win_funnel_conversion",
-    "win_hampel_outlier",
-    "win_lag_lead",
-    "win_leave_one_out_avg",
-    "win_moving_avg",
-    "win_nth_value",
-    "win_period_over_period",
-    "win_rolling_median",
-    "win_row_number",
-    "win_running_distinct",
-    "win_running_sum",
-    "win_sessionize_batch",
-    "win_streak_longest",
-]
-
-# The streaming core: crashed on NaT before the transport-edge drop.
-STREAM_PINNED = [
-    "stream_sep_source",
-    "stream_stateful_latest",
-    "stream_dedup_watermark",
-    "stream_bootstrap_then_tail",
-]
+from tests.mutations import compare
 
 
-@pytest.fixture(scope="module")
-def nullts_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("nullts_sf")
-    build(SF_UNIT, str(dst))
-    return str(dst)
+test_nullts_fixture_matches_oracle = compare("nullts")
+test_nullkeys_fixture_matches_oracle = compare("nullkeys")
 
 
-def test_transport_drops_null_ts(nullts_sf):
-    """The SEP source's range read dead-letters NULL-ts records (a
-    NaT reaching Spark's row converter kills the whole stream)."""
-    import pyarrow.parquet as pq
-
+def test_transport_drops_null_ts(mutated):
+    """The SEP source's range read dead-letters NULL-ts records (a NaT
+    reaching Spark's row converter kills the whole stream)."""
     from hbase_sep_spark.sources.sep_events import _read_rows
 
-    path = f"{nullts_sf}/events.parquet"
+    path = f"{mutated('nullts')}/events.parquet"
     total = pq.ParquetFile(path).metadata.num_rows
     rows = list(_read_rows(path, 0, total))
     n_null = pq.read_table(path, columns=["ts"]).column("ts").null_count
@@ -103,100 +28,36 @@ def test_transport_drops_null_ts(nullts_sf):
     assert all(r[1] is not None for r in rows)
 
 
-@pytest.mark.parametrize("name", BATCH_PINNED + STREAM_PINNED)
-def test_nullts_fixture_matches_oracle(name, spark, nullts_sf):
-    con = duck_connection(nullts_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, nullts_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), (
-        f"{name}: {res['status']}: {res['detail']}"
-    )
-
-
-# ---- the null-KEYS sibling sweep (NULL user_id / event_type / lang;
-# see scripts/gen_nullkeys_fixture.py for the per-divergence story) --
-
-NULLKEYS_PINNED = [
-    "agg_argmax_misc",          # duck arg_max skips NULL values; Spark doesn't
-    "agg_kmv_distinct_sketch",  # NULL hash sorts into Spark's bottom-k only
-    "join_asof_latest_event",   # duck ASOF drops NULL equi-keys
-    "join_asof_nearest",
-    "join_pit_scd2",
-    "map_keys_values",          # array_join skips NULL elements; concat doesn't
-    "win_running_distinct",     # non-null-safe first-occurrence flag
-    "events_latest_per_key",    # NULL-user partition: both engines agree (guard)
-    "text_lang_filter_stats",   # NULL lang
-]
-NULLKEYS_STREAM_PINNED = [
-    "stream_sep_source",        # pandas float-widened NULL user_id crashed it
-    "stream_stateful_latest",
-    "stream_bootstrap_then_tail",
-]
-
-
-@pytest.fixture(scope="module")
-def nullkeys_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("nullkeys_sf")
-    build_nullkeys(SF_UNIT, str(dst))
-    return str(dst)
-
-
 def test_transport_drops_null_event_id(tmp_path):
     """A record without an idempotency key cannot be safely
-    REDELIVERED (at-least-once with no dedup identity double-counts)
-    — the transport dead-letters NULL event_ids like NULL
-    event-times. Batch queries keep NULL primary ids OUT of contract
-    (test_fixture_assumptions.py::test_events_event_id_non_null
-    fails by name if a regeneration ever ships them)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    REDELIVERED — the transport dead-letters NULL event_ids like NULL
+    event-times. Batch queries keep NULL primary ids out of contract
+    (test_fixture_assumptions.py::test_events_event_id_non_null)."""
     from hbase_sep_spark.sources.sep_events import _read_rows
 
     src = pq.read_table(f"{SF_UNIT}/events.parquet")
     ids = src.column("event_id").to_pylist()
-    mutated = [None if (i is not None and i % 11 == 1) else i for i in ids]
-    arrays = {
-        n: (pa.array(mutated, src.schema.field(n).type) if n == "event_id"
-            else src.column(n))
-        for n in src.schema.names
-    }
+    mutated_ids = [None if (i is not None and i % 11 == 1) else i for i in ids]
+    i = src.schema.get_field_index("event_id")
     path = str(tmp_path / "events.parquet")
-    pq.write_table(pa.table(arrays), path)
+    pq.write_table(src.set_column(i, "event_id", pa.array(mutated_ids, pa.int64())), path)
     rows = list(_read_rows(path, 0, len(ids)))
-    n_null = sum(1 for i in mutated if i is None)
+    n_null = mutated_ids.count(None)
     assert n_null > 0
     assert len(rows) == len(ids) - n_null
     assert all(r[0] is not None for r in rows)
 
 
-def test_transport_survives_null_keys(nullkeys_sf):
+def test_transport_survives_null_keys(mutated):
     """NULL user_id/event_type must flow through the source as None
     (pandas would widen the int column to float and crash the
     LongType converter on NaN)."""
-    import pyarrow.parquet as pq
-
     from hbase_sep_spark.sources.sep_events import _read_rows
 
-    path = f"{nullkeys_sf}/events.parquet"
+    path = f"{mutated('nullkeys')}/events.parquet"
     total = pq.ParquetFile(path).metadata.num_rows
     rows = list(_read_rows(path, 0, total))
     assert len(rows) == total  # no ts mutation here — nothing dropped
-    uid_idx = 2  # EVENT_SCHEMA order: event_id, ts, user_id, ...
-    uids = [r[uid_idx] for r in rows]
+    uids = [r[2] for r in rows]  # EVENT_SCHEMA order: event_id, ts, user_id, ...
     assert any(u is None for u in uids)
     assert all(u is None or isinstance(u, int) for u in uids)
-
-
-@pytest.mark.parametrize("name", NULLKEYS_PINNED + NULLKEYS_STREAM_PINNED)
-def test_nullkeys_fixture_matches_oracle(name, spark, nullkeys_sf):
-    con = duck_connection(nullkeys_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, nullkeys_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), (
-        f"{name}: {res['status']}: {res['detail']}"
-    )

@@ -338,7 +338,7 @@ def test_gapfill_two_shuffles_no_join(spark):
     GENERATED from each daily row's lead(day) with sequence()+
     posexplode (round-11 rewrite: the old span+calendar LEFT JOIN
     spine was measured at +0.686 s / half the query at sf1,
-    scripts/decompose_gapfill_sf1.py; nothing in this plan grows
+    BASELINE.md, round-11 gap-fill resolution; nothing in this plan grows
     faster than the daily table)."""
     import re
 
@@ -1359,7 +1359,7 @@ def test_udf_fanout_scales_with_table_and_floors_at_graded_sf(spark, tmp_path):
     pinned to 8 Python workers."""
     import pyarrow.parquet as pq
 
-    from hbase_sep_spark.io import table_rows
+    from hbase_sep_spark.io import fanout, table_rows
 
     # (1) graded-SF plan floor
     plan = plan_of(spark, "udf_pandas_vectorized")
@@ -1377,17 +1377,17 @@ def test_udf_fanout_scales_with_table_and_floors_at_graded_sf(spark, tmp_path):
     pq.write_table(src.slice(half), str(d / "part-001.parquet"))
     assert table_rows(str(tmp_path), "orders") == len(src)
 
-    # (3) the derivation formula: floor at small tables, cores cap
-    # (ADVICE-r13: assert INCLUDING the floor so a host with
-    # SPARK_GRAFT_CPUS < 8 doesn't fail spuriously, plus a literal
-    # check of the cap at the reference core count)
-    cores = spark.sparkContext.defaultParallelism
-    assert max(8, min(cores, table_rows(SF_UNIT, "orders") // 150_000)) == 8
-    assert max(8, min(cores, 15_000_000 // 150_000)) == max(8, min(cores, 100))
-    assert max(8, min(32, 15_000_000 // 150_000)) == 32
+    # (3) the derivation helper on controlled row counts (the 1500-row
+    # directory table above) with a literal core cap: one worker per
+    # rows_per_worker rows, capped at the cores; the query's floor of 8
+    # covers the graded SF, where the quotient is 0
+    assert fanout(SF_UNIT, "orders", 150_000, 32) == 0
+    assert fanout(str(tmp_path), "orders", 100, 32) == len(src) // 100 == 15
+    assert fanout(str(tmp_path), "orders", 10, 32) == 32
+    assert fanout(str(tmp_path), "orders", 10, 4) == 4
 
 
-def test_pca_fanout_floors_at_graded_sf(spark):
+def test_pca_fanout_floors_at_graded_sf(spark, tmp_path):
     """Round-14: vec_pca_project's projection is SIZE-BRANCHED on the
     embeddings footer row count (one Python worker per 25k vectors;
     below 2 workers the Python round-trip costs more than the whole
@@ -1404,5 +1404,12 @@ def test_pca_fanout_floors_at_graded_sf(spark):
     plan = plan_of(spark, "vec_pca_project")
     assert "RoundRobinPartitioning" not in plan
     assert "MapInPandas" not in plan
-    cores = spark.sparkContext.defaultParallelism
-    assert min(cores, 200_000 // 25_000) == min(cores, 8)
+    # the 200k-vector derivation, footer-only, at a literal core cap
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hbase_sep_spark.io import fanout
+
+    pq.write_table(pa.table({"vec_id": pa.array(range(200_000), pa.int64())}), str(tmp_path / "embeddings.parquet"))
+    assert fanout(str(tmp_path), "embeddings", 25_000, 32) == 8
+    assert fanout(str(tmp_path), "embeddings", 25_000, 4) == 4

@@ -1,126 +1,8 @@
-"""Tie-injection regression tests (round-6 adversarial sweep #2).
-
-Every fixture SF to date has had a ts-unique event feed, unique doc
-texts, and distinct order totals — so any query whose pick/rank/argmax
-key is non-unique would still LOOK deterministic. A regenerated
-fixture (or a real at-least-once feed, where redelivery makes
-same-key collisions routine) breaks that silently: Spark and DuckDB
-each pick an ARBITRARY row among ties and need not agree.
-
-The sweep duplicated rows along every tie axis — events sharing
-(user_id, ts) with different types/values, events sharing
-(event_type, ts) across users, exact-duplicate and same-length
-documents, identical embedding vectors under new ids, whole cloned
-orders with identical revenue — and ran ALL 279 registered queries
-through the spark-vs-DuckDB compare. Exactly ONE divergence surfaced:
-`agg_argmax_misc`, whose arg_max/min keyed on bare ts (fixed: the
-composite (ts, event_id) printf key, the ts_weekly_ohlc pattern).
-These tests pin that fix plus a representative slice of the
-tie-sensitive queries that proved tie-safe, so the class stays
-covered as queries evolve.
-"""
+"""Class ``tie`` of tests/mutations.py: ties along every pick axis."""
 
 from __future__ import annotations
 
-import shutil
-
-import duckdb
-import pytest
-
-from hbase_sep_spark.registry import load_all
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-# The fixed query first; the rest are tie-exposed picks/ranks/top-ks
-# that the full-registry sweep confirmed tie-safe (composite keys,
-# tie-break columns, or tie-invariant aggregation) — pinned here.
-SWEPT = [
-    "agg_argmax_misc",          # FIXED: bare-ts arg_max → (ts, event_id) key
-    "ts_weekly_ohlc",           # composite arg key (the pattern source)
-    "events_latest_per_key",    # latest-event pick under (user_id, ts) dupes
-    "join_asof_latest_event",   # as-of pick under equal-ts candidates
-    "win_first_last",           # window first/last under order-key ties
-    "topk_per_group",           # rank boundary under duplicate metric values
-    "limit_topn",               # global top-n under cloned-order ties
-    "dedup_keep_best",          # keep-best pick under exact-duplicate docs
-    "simsearch_cosine_topk",    # k-boundary under identical embeddings
-    "sample_quality_weighted",  # weighted pick under duplicate scores
-]
+from tests.mutations import compare
 
 
-@pytest.fixture(scope="module")
-def tie_sf(tmp_path_factory):
-    """All 10 tables, with ties injected along every pick axis."""
-    dst = tmp_path_factory.mktemp("tie_sf")
-    for name in "region nation customer supplier part".split():
-        shutil.copy(f"{SF_UNIT}/{name}.parquet", dst / f"{name}.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (
-          SELECT * FROM '{SF_UNIT}/events.parquet'
-          UNION ALL  -- same (user_id, ts), different type + value
-          SELECT event_id + 1000000, ts, user_id, 'tie_' || event_type,
-                 value + 7.5, props
-          FROM '{SF_UNIT}/events.parquet' WHERE event_id % 5 = 0
-          UNION ALL  -- same (event_type, ts), different user
-          SELECT event_id + 2000000, ts, user_id + 100000, event_type,
-                 value, props
-          FROM '{SF_UNIT}/events.parquet' WHERE event_id % 7 = 3
-          UNION ALL  -- same (user_id, ts, event_type), different value
-          SELECT event_id + 3000000, ts, user_id, event_type,
-                 value * 2 + 1, props
-          FROM '{SF_UNIT}/events.parquet' WHERE event_id % 11 = 1
-        ) TO '{dst}/events.parquet' (FORMAT PARQUET)"""
-    )
-    con.execute(
-        f"""COPY (
-          SELECT * FROM '{SF_UNIT}/documents.parquet'
-          UNION ALL  -- exact-duplicate text under a new id
-          SELECT doc_id + 100000, text, lang, source, n_chars
-          FROM '{SF_UNIT}/documents.parquet' WHERE doc_id % 6 = 0
-          UNION ALL  -- same length, different text (n_chars ties)
-          SELECT doc_id + 200000, reverse(text), lang, source, n_chars
-          FROM '{SF_UNIT}/documents.parquet' WHERE doc_id % 8 = 1
-        ) TO '{dst}/documents.parquet' (FORMAT PARQUET)"""
-    )
-    con.execute(
-        f"""COPY (
-          SELECT * FROM '{SF_UNIT}/embeddings.parquet'
-          UNION ALL  -- identical vector under a new id (distance ties)
-          SELECT vec_id + 1000000, embedding, label + 100
-          FROM '{SF_UNIT}/embeddings.parquet' WHERE vec_id % 9 = 0
-        ) TO '{dst}/embeddings.parquet' (FORMAT PARQUET)"""
-    )
-    con.execute(
-        f"""COPY (
-          SELECT * FROM '{SF_UNIT}/orders.parquet'
-          UNION ALL  -- cloned order: identical totalprice/date ties
-          SELECT o_orderkey + 10000000, o_custkey, o_orderstatus,
-                 o_totalprice, o_orderdate, o_orderpriority
-          FROM '{SF_UNIT}/orders.parquet' WHERE o_orderkey % 13 = 0
-        ) TO '{dst}/orders.parquet' (FORMAT PARQUET)"""
-    )
-    con.execute(
-        f"""COPY (
-          SELECT * FROM '{SF_UNIT}/lineitem.parquet'
-          UNION ALL  -- the cloned orders' lineitems (identical revenue)
-          SELECT l_orderkey + 10000000, l_partkey, l_suppkey, l_linenumber,
-                 l_quantity, l_extendedprice, l_discount, l_tax,
-                 l_returnflag, l_linestatus, l_shipdate
-          FROM '{SF_UNIT}/lineitem.parquet' WHERE l_orderkey % 13 = 0
-        ) TO '{dst}/lineitem.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    return str(dst)
-
-
-@pytest.mark.parametrize("name", SWEPT)
-def test_tie_fixture_matches_oracle(name, spark, tie_sf):
-    con = duck_connection(tie_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, tie_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), f"{name}: {res['status']}: {res['detail']}"
+test_tie_fixture_matches_oracle = compare("tie")

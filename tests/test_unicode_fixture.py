@@ -1,130 +1,8 @@
-"""Unicode/edge-text regression tests (round-6 adversarial sweep #3).
-
-Fixture corpora to date are ASCII prose. A regenerated corpus could
-carry anything a real crawl does: empty/whitespace-only docs, docs
-shorter than a shingle, CJK text with no spaces, emoji, combining
-accents, and case-mapping landmines. The sweep added a batch of such docs and
-ran all 47 document-reading queries through the spark-vs-DuckDB
-compare. Three diverged, all on the SAME root cause family:
-
-- full-Unicode lower(): Java (Spark) applies the FULL case mapping —
-  lower('İ') = "i" + U+0307 COMBINING DOT (two code points) — while
-  DuckDB's utf8proc applies the SIMPLE mapping to plain "i". Any
-  hash/token/distinct over lower(text) silently disagrees
-  (text_fingerprint, text_entropy_score). Fix: portable.ascii_lower
-  (translate A-Z→a-z, engine-identical, equal to lower() on ASCII).
-- char-prefix != byte-prefix: multimodal_decode_stub's oracle sliced
-  8 *characters* before utf-8 encoding where the engine slices 8
-  *bytes* of the payload. Fix: oracle hexes the whole blob and takes
-  16 hex chars (DuckDB 1.0 has no BLOB substring).
-
-These tests drive the fixed queries plus a representative slice of
-the unicode-proven passers over the same edge corpus.
-"""
+"""Class ``unicode`` of tests/mutations.py: edge documents (CJK, emoji, case-mapping pairs)."""
 
 from __future__ import annotations
 
-import shutil
-
-import duckdb
-import pyarrow as pa
-import pyarrow.parquet as pq
-import pytest
-
-from hbase_sep_spark.registry import load_all
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-EDGE_TEXTS = [
-    "",                                   # empty
-    " \t\n ",                             # whitespace only
-    "a",                                  # single char
-    "ab",                                 # below shingle width
-    "Héllo wörld café naïve accents",     # precomposed accents
-    "café NFD combining",           # decomposed accent
-    "你好世界" * 2,       # CJK, no spaces
-    "hello \U0001F44B\U0001F3FD world \U0001F30D\U0001F30D emoji",
-    "Ünïcode ÉÉÉ ß Straße İstanbul",      # ß + Turkish dotted capital
-    "!!! ??? ... ;;; ---",                # punctuation only
-    ("abc " * 500).strip(),               # extreme repetition
-    "123 456 789 000",                    # digits only
-    "line1\nline2\ttab\rcarriage",        # control whitespace
-    'he said "hi" \\ backslash \'quote\'',
-    "THE THE THE the the tHe",            # case-folding repetition
-    "word",                               # one token
-    # The latent dedup-merge pair: under full-Unicode lower() Java
-    # maps BOTH to "i̇stanbul z" (merge) while DuckDB maps the first
-    # to "istanbul z" (no merge) — count(DISTINCT digest) diverges.
-    # Under ascii_lower neither engine merges them: consistent.
-    "İstanbul Z",
-    "i̇stanbul z",
-    # ...and an ASCII case pair that MUST still merge under the fold.
-    "Hello World",
-    "hello world",
-]
-
-FIXED = [
-    "text_fingerprint",       # ascii_lower fold (was full lower())
-    "text_entropy_score",     # ascii_lower token fold
-    "multimodal_decode_stub", # oracle byte-prefix slice
-    # second wave — dedup digest normalization migrated to ascii_lower
-    # (latent: the sweep's single-İ corpus couldn't diverge a count
-    # DISTINCT of digests, but two docs differing only by a full-vs-
-    # simple case mapping would merge in one engine and not the other)
-    "dedup_exact_docs",
-    "pipeline_training_prep",
-    "pipeline_dataset_card_report",
-]
-PINNED_SAFE = [
-    "text_tokenize_wordcount",
-    "text_token_count",
-    "text_ngrams",
-    "text_quality_score",
-    "text_langid_heuristic",
-    "text_repetition_ratio",
-    "dedup_exact_docs",
-    "sample_stratified_docs",
-]
+from tests.mutations import compare
 
 
-@pytest.fixture(scope="module")
-def unicode_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("unicode_sf")
-    for name in (
-        "region nation customer supplier part orders lineitem events embeddings"
-    ).split():
-        shutil.copy(f"{SF_UNIT}/{name}.parquet", dst / f"{name}.parquet")
-    rows = [
-        (300000 + i, txt, "en" if i % 2 == 0 else "xx", "edge", len(txt))
-        for i, txt in enumerate(EDGE_TEXTS)
-    ]
-    edge = pa.table(
-        {
-            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-            "text": pa.array([r[1] for r in rows], pa.string()),
-            "lang": pa.array([r[2] for r in rows], pa.string()),
-            "source": pa.array([r[3] for r in rows], pa.string()),
-            "n_chars": pa.array([r[4] for r in rows], pa.int64()),
-        }
-    )
-    pq.write_table(edge, str(dst / "_edge_docs.parquet"))
-    con = duckdb.connect()
-    con.execute(
-        f"""COPY (SELECT * FROM '{SF_UNIT}/documents.parquet'
-              UNION ALL SELECT * FROM '{dst}/_edge_docs.parquet')
-            TO '{dst}/documents.parquet' (FORMAT PARQUET)"""
-    )
-    con.close()
-    return str(dst)
-
-
-@pytest.mark.parametrize("name", FIXED + PINNED_SAFE)
-def test_unicode_fixture_matches_oracle(name, spark, unicode_sf):
-    con = duck_connection(unicode_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, unicode_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), f"{name}: {res['status']}: {res['detail']}"
+test_unicode_fixture_matches_oracle = compare("unicode")

@@ -1,81 +1,24 @@
-"""Unicode-enum/name regression tests (round-10 adversarial sweep).
-
-The round-6 unicode sweep covered the documents corpus; this one
-mutates EVERY string column in EVERY table (names, TPC-H enums,
-event_type, lang/source) with the case-mapping probe set (İ, ß,
-CJK, combining dot, non-BMP emoji). Three divergences found and
-fixed — full-vs-simple case mappings on upper()/lower() output
-columns (str_basic), Python str.lower()'s full mapping in a UDF
-(udf_python_scalar), and UTF-16-unit vs codepoint edit-distance
-counting (str_levenshtein). See scripts/gen_uninames_fixture.py for
-the class write-up; 279/279 after the fixes.
-
-RULE going forward: no bare upper()/lower() (use ascii_upper/
-ascii_lower ↔ ASCII_UPPER_SQL/ASCII_LOWER_SQL), no str.lower()
-inside a Python UDF mirrored by SQL, and any code-unit-sensitive
-string metric (levenshtein and kin) folds non-ASCII runs first
-(ASCII_FOLD_RE ↔ ASCII_FOLD_SQL).
-"""
+"""Class ``uninames`` of tests/mutations.py: case-mapping probes in every
+string column, plus the lint against bare case folds in oracles."""
 
 from __future__ import annotations
 
 import re
 
-import pytest
-
-from hbase_sep_spark.registry import load_all
-from scripts.gen_uninames_fixture import build
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-# The three fixed queries, plus the surfaces most exposed to a
-# unicode refresh of names/enums: group-by-enum aggregates, enum
-# join keys, substring/length natives, and rank keys over names.
-PINNED = [
-    "str_basic",
-    "str_levenshtein",
-    "udf_python_scalar",
-    "str_regex",
-    "str_split_pad",
-    "agg_groupby_basic",
-    "agg_rollup",
-    "select_distinct",
-    "reshape_pivot",
-    "agg_string_concat",
-]
+from tests.mutations import REGISTRY, compare
 
 
-@pytest.fixture(scope="module")
-def uninames_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("uninames_sf")
-    build(SF_UNIT, str(dst))
-    return str(dst)
-
-
-@pytest.mark.parametrize("name", PINNED)
-def test_uninames_fixture_matches_oracle(name, spark, uninames_sf):
-    con = duck_connection(uninames_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, uninames_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), f"{name}: {res['status']}: {res['detail']}"
+test_uninames_fixture_matches_oracle = compare("uninames")
 
 
 def test_no_bare_case_fold_in_oracles():
-    """Drift guard: a new oracle must not reintroduce full-Unicode
-    case folds — upper()/lower() diverge between engines the moment
-    a regenerated fixture ships non-ASCII strings. The lone allowed
-    shape is lower(hex(...)): hex output is ASCII by construction."""
+    """A new oracle must not reintroduce full-Unicode case folds —
+    upper()/lower() diverge between engines the moment a fixture ships
+    non-ASCII strings. The lone allowed shape is lower(hex(...))."""
     bad = []
     for name, q in REGISTRY.items():
-        if not q.oracle:
-            continue
-        for m in re.finditer(r"\b(upper|lower)\s*\(", q.oracle, re.IGNORECASE):
-            tail = q.oracle[m.end() : m.end() + 4].lower()
-            if m.group(1).lower() == "lower" and tail.startswith("hex("):
+        for m in re.finditer(r"\b(upper|lower)\s*\(", q.oracle or "", re.IGNORECASE):
+            if m.group(1).lower() == "lower" and q.oracle[m.end() : m.end() + 4].lower() == "hex(":
                 continue
             bad.append((name, m.group(0)))
     assert not bad, f"bare case folds in oracles: {bad}"

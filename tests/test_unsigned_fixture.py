@@ -1,76 +1,22 @@
-"""Unsigned-id regression tests (round-10 adversarial sweep).
-
-A parquet feed from a C++/Rust writer legitimately carries unsigned
-integer ids. Spark maps UINT64 to DecimalType(20,0) — crashing
-printf composite pick keys and diverging every id repr — while
-DuckDB keeps UINT32 narrow through arithmetic, overflowing the
-knuth-hash mirror, and rejects printf('%d', UBIGINT). See
-scripts/gen_unsigned_fixture.py for the class write-up; 279/279
-after the fixes.
-
-RULES going forward: io.t() normalizes decimal(20,0) scan columns
-to BIGINT (don't read tables around it); the knuth-hash SQL mirror
-is `((CAST(id AS BIGINT) % 2147483648) * K) % M` (the CAST is
-mandatory — portable.knuth_hash docstring); any printf('%..d') over
-an id in an oracle casts the id to BIGINT first.
-"""
+"""Class ``unsigned`` of tests/mutations.py: unsigned ids, plus the scanner that
+keeps BIGINT casts on the oracles' knuth and printf sites."""
 
 from __future__ import annotations
 
-import pytest
-
-from hbase_sep_spark.registry import load_all
-from scripts.gen_unsigned_fixture import build
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-# The nine fixed names (printf pick keys, knuth consumers) plus the
-# id-repr surfaces the Decimal(20,0) mapping diverged on (as-of /
-# PIT join outputs) and a latest-per-key pick over the uint feed.
-PINNED = [
-    "agg_argmax_misc",
-    "ts_weekly_ohlc",
-    "agg_cms_freq_sketch",
-    "agg_kmv_distinct_sketch",
-    "pipeline_dataset_split",
-    "pipeline_mixture_sample",
-    "sample_bernoulli_hash",
-    "sample_quality_weighted",
-    "sample_reservoir_topk_hash",
-    "join_asof_latest_event",
-    "join_pit_scd2",
-    "events_latest_per_key",
-]
-
-
-@pytest.fixture(scope="module")
-def unsigned_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("unsigned_sf")
-    build(SF_UNIT, str(dst))
-    return str(dst)
-
-
-@pytest.mark.parametrize("name", PINNED)
-def test_unsigned_fixture_matches_oracle(name, spark, unsigned_sf):
-    con = duck_connection(unsigned_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, unsigned_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), f"{name}: {res['status']}: {res['detail']}"
-
-
 import re
+
+from tests.mutations import REGISTRY, compare
+
+
+test_unsigned_fixture_matches_oracle = compare("unsigned")
+
 
 _ID_REF = re.compile(r"\b\w+_id\b|\b[a-z]_\w*key\b")
 
 
 def _knuth_operand(sql: str, at: int) -> str:
-    """Expression text immediately left of a `% 2147483648` occurrence
-    at index `at`, scanned back over one balanced-paren operand chain
-    (stops at an unmatched '(' or a top-level comma/keyword break)."""
+    """Expression text immediately left of a `% 2147483648` at index
+    `at`, scanned back over one balanced-paren operand chain."""
     depth = 0
     j = at - 1
     while j >= 0:
@@ -113,62 +59,42 @@ def _printf_args(sql: str) -> list:
 
 
 def _unsigned_unsafe_sites(sql: str) -> list:
-    """All unsigned-unsafe arithmetic sites in one rendered oracle:
-    a `% 2147483648` whose operand lacks the BIGINT cast (DuckDB
+    """A `% 2147483648` whose id operand lacks the BIGINT cast (DuckDB
     UINT32 arithmetic stays narrow and overflows the knuth multiply),
-    or a printf('%0Nd', ...) argument referencing an id/key column
-    without one (printf rejects UBIGINT outright)."""
+    or a printf('%0Nd', ...) id argument without one (printf rejects
+    UBIGINT outright)."""
     bad = []
     for m in re.finditer(r"%\s*2147483648", sql):
         operand = _knuth_operand(sql, m.start())
         if _ID_REF.search(operand) and "AS BIGINT" not in operand.upper():
             bad.append(("knuth-no-cast", operand))
     for args in _printf_args(sql):
-        for a in args[1:]:
-            if _ID_REF.search(a) and "AS BIGINT" not in a.upper():
-                bad.append(("printf-no-cast", a))
+        bad.extend(("printf-no-cast", a) for a in args[1:] if _ID_REF.search(a) and "AS BIGINT" not in a.upper())
     return bad
 
 
 def test_knuth_mirror_carries_bigint_cast():
-    """Drift guard: every knuth-hash oracle site must cast the id to
-    BIGINT before the mod-multiply, and every printf('%0Nd') argument
-    that references an id must be BIGINT-cast. Balanced-paren scan —
-    the old regexes could not cross `epoch_us(ts)` inside a printf
-    argument list nor see the `(id + 1) %` knuth variant (ADVICE-r10)."""
-    bad = []
-    for name, q in REGISTRY.items():
-        if not q.oracle:
-            continue
-        for kind, frag in _unsigned_unsafe_sites(q.oracle):
-            bad.append((name, kind, frag))
+    """Every knuth-hash oracle site casts the id to BIGINT before the
+    mod-multiply, and every id argument of printf('%0Nd') is
+    BIGINT-cast (balanced-paren scan, so `epoch_us(ts)` inside a printf
+    and the `(id + 1) %` variant are both seen)."""
+    bad = [(n, k, f) for n, q in REGISTRY.items() for k, f in _unsigned_unsafe_sites(q.oracle or "")]
     assert not bad, f"unsigned-unsafe oracle arithmetic: {bad}"
 
 
 def test_unsigned_guard_catches_known_bad_shapes():
-    """Negative self-test: the exact shapes ADVICE-r10 proved the old
-    guard blind to must be flagged by the scanner."""
+    """Negative self-test: the shapes a regex guard was blind to must
+    be flagged by the scanner."""
     uncast_printf = (
-        "SELECT arg_max(value, printf('%020d-%010d', "
-        "epoch_us(ts) + 4611686018427387904, event_id)) FROM events"
+        "SELECT arg_max(value, printf('%020d-%010d', epoch_us(ts) + 4611686018427387904, event_id)) FROM events"
     )
-    assert any(
-        k == "printf-no-cast" for k, _ in _unsigned_unsafe_sites(uncast_printf)
-    ), "printf guard missed an uncast final id argument behind epoch_us(ts)"
-
+    assert any(k == "printf-no-cast" for k, _ in _unsigned_unsafe_sites(uncast_printf))
     uncast_knuth_plus = "WHERE ((((user_id + 1) % 2147483648) * 31) % 7) = 0"
-    assert any(
-        k == "knuth-no-cast" for k, _ in _unsigned_unsafe_sites(uncast_knuth_plus)
-    ), "knuth guard missed the (id + 1) % variant"
-
+    assert any(k == "knuth-no-cast" for k, _ in _unsigned_unsafe_sites(uncast_knuth_plus))
     uncast_knuth_plain = "ORDER BY ((doc_id % 2147483648) * 2654435761)"
-    assert any(
-        k == "knuth-no-cast" for k, _ in _unsigned_unsafe_sites(uncast_knuth_plain)
-    )
-
+    assert any(k == "knuth-no-cast" for k, _ in _unsigned_unsafe_sites(uncast_knuth_plain))
     cast_ok = (
-        "SELECT printf('%020d-%010d', epoch_us(ts) + 4611686018427387904, "
-        "CAST(event_id AS BIGINT)), "
+        "SELECT printf('%020d-%010d', epoch_us(ts) + 4611686018427387904, CAST(event_id AS BIGINT)), "
         "(((CAST(user_id AS BIGINT) + 1) % 2147483648) * 31) % 7 FROM events"
     )
     assert _unsigned_unsafe_sites(cast_ok) == []

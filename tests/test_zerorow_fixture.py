@@ -1,106 +1,11 @@
-"""Zero-row-table regression tests (round-10 adversarial sweep).
-
-Any table can legitimately arrive empty — a new tenant's feed, a
-total tombstone compaction, an upstream filter that dropped every
-row.  The round-10 empty-feed probe covered a 0-row events.parquet
-through the streaming/scan surface only; this sweep ran the FULL
-registry against (a) an ALL-tables-empty fixture and (b) ten
-one-table-empty fixtures (each restricted to the queries referencing
-that table).
-
-Result: 276/279 on ALL-empty, one real divergence class — **grouping
-sets over zero input rows**.  Spark expands ROLLUP/CUBE/GROUPING SETS
-to Expand + hash aggregate keyed by grouping id, so zero input rows
-produce ZERO output rows; DuckDB follows the SQL standard and still
-emits the grand-total `()` grouping-set row (count=0, NULL sums).
-The same shape reproduces with real tables when a join input is
-empty (empty region × real customer/nation).  Policy: the engine's
-contract is Spark's (empty in → empty out); oracles mirror it with
-`HAVING count(*) > 0`, a no-op on any non-empty input since every
-grouping-set row aggregates at least one source row.
-
-Everything else — global aggregates' one-NULL-row shape, quantile
-histograms, k-means/PCA driver-state collects, pandas-UDF groups,
-LSH/minhash over an empty corpus, all 16 streaming queries — agreed
-with the oracle on fully-empty input with zero fixes.
-
-The fixture mutation is imported from scripts/gen_zerorow_fixture.py
-so the sweep fixture and this pin can never drift apart.
-"""
+"""Classes ``zerorow*`` of tests/mutations.py: every table, only a dim, only the
+feed or only the corpus empty."""
 
 from __future__ import annotations
 
-import pytest
-
-from hbase_sep_spark.registry import load_all
-from scripts.gen_zerorow_fixture import ALL_TABLES, build
-from tests.conftest import SF_UNIT
-from tests.harness import check_query, duck_connection
-
-REGISTRY = load_all()
-
-# The three fixed queries plus the empty-input surfaces most likely
-# to regress: driver-state collects (quantile histogram, k-means
-# centroid seeding, PCA moments), the global-aggregate one-NULL-row
-# shape, pandas-UDF groups, and the empty-corpus dedup/text paths.
-PINNED_ALL_EMPTY = [
-    "agg_rollup",
-    "agg_cube",
-    "agg_grouping_sets",
-    "agg_global",
-    "agg_median_percentile",
-    "vec_kmeans_lloyd",
-    "vec_pca_project",
-    "tpch_q6_forecast_revenue",
-    "win_funnel_conversion",
-    "dedup_minhash_near",
-    "text_tfidf",
-    "join_left_outer",
-    "events_latest_per_key",
-    "udaf_pandas_group",
-    # round-12 ops: the sink audit's no-epochs guard (an empty feed
-    # fires no micro-batch, so there are no epoch dirs to read back)
-    # and the empty-corpus upsert (empty signature store, empty
-    # delta, empty pair sets on both audit sides).
-    "stream_sink_exactly_once_audit",
-    "dedup_minhash_incremental_upsert",
-]
-
-# The empty-dim × real-fact shape that reproduced the grouping-sets
-# divergence with only ONE table empty (region empties the 3-way
-# join feeding the rollup).
-PINNED_EMPTY_REGION = ["agg_rollup", "join_multiway_star"]
+from tests.mutations import compare
 
 
-@pytest.fixture(scope="module")
-def zerorow_all_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("zerorow_all_sf")
-    build(SF_UNIT, str(dst), tuple(ALL_TABLES))
-    return str(dst)
-
-
-@pytest.fixture(scope="module")
-def zerorow_region_sf(tmp_path_factory):
-    dst = tmp_path_factory.mktemp("zerorow_region_sf")
-    build(SF_UNIT, str(dst), ("region",))
-    return str(dst)
-
-
-@pytest.mark.parametrize("name", PINNED_ALL_EMPTY)
-def test_all_empty_matches_oracle(name, spark, zerorow_all_sf):
-    con = duck_connection(zerorow_all_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, zerorow_all_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), f"{name}: {res['status']}: {res['detail']}"
-
-
-@pytest.mark.parametrize("name", PINNED_EMPTY_REGION)
-def test_empty_dim_matches_oracle(name, spark, zerorow_region_sf):
-    con = duck_connection(zerorow_region_sf)
-    try:
-        res = check_query(name, REGISTRY[name], spark, con, zerorow_region_sf)
-    finally:
-        con.close()
-    assert res["status"] in ("ok", "ok-rows-only"), f"{name}: {res['status']}: {res['detail']}"
+test_all_empty_matches_oracle = compare("zerorow")
+test_empty_dim_matches_oracle = compare("zerorow_region")
+test_empty_table_matches_oracle = compare("zerorow_events", "zerorow_documents")
