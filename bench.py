@@ -65,7 +65,9 @@ def _table_bytes(sf_dir: str) -> int:
     fixture root, so a regeneration that ships extra parquet (scratch,
     landing dirs, decoys) would silently inflate the derived shuffle
     count. Each table is either a single `<name>.parquet` file or a
-    directory of part files (the round-9 physical-layout class)."""
+    directory of part files (the round-9 physical-layout class).
+    Raises when no table bytes are found, naming the path, so a wrong
+    $SPARK_GRAFT_SF_DIR fails loudly instead of deriving the floor."""
     from hbase_sep_spark.io import TABLES
 
     total = 0
@@ -80,6 +82,8 @@ def _table_bytes(sf_dir: str) -> int:
                 for f in files
                 if f.endswith(".parquet")
             )
+    if total == 0:
+        raise FileNotFoundError(f"no registry table parquet under {sf_dir}")
     return total
 
 

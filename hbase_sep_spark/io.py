@@ -65,13 +65,16 @@ TABLES = (
 )
 
 
-# (applicationId, path) → DataFrame. The inputs are immutable
-# read-only files, so reusing the analyzed scan (and its
-# InMemoryFileIndex / parquet footer metadata) across queries in the
-# same session is safe and removes repeated driver-side listing —
-# the same effect a catalog table's cached metadata gives at cluster
-# scale. Plans only, no data is cached; LRU-bounded so a long-lived
-# session over many paths can't grow it indefinitely.
+# (applicationId, path, listing signature) → DataFrame. Reusing the
+# analyzed scan (and its InMemoryFileIndex / parquet footer metadata)
+# across queries in the same session removes repeated driver-side
+# planning — the same effect a catalog table's cached metadata gives
+# at cluster scale. A scan's file index is fixed when it is built, so
+# the key carries the listing signature: a segment appended to a
+# directory table, or a same-path rewrite, builds a fresh scan instead
+# of serving the old file list. Plans only, no data is cached;
+# LRU-bounded so a long-lived session over many paths (or a growing
+# feed) can't grow it indefinitely.
 _SCAN_CACHE: LruCache[DataFrame] = LruCache(maxsize=64)
 
 
@@ -134,6 +137,22 @@ def listing(path: str) -> tuple[list[str], tuple]:
     return files, sig
 
 
+def _signature(path: str) -> tuple:
+    """listing(path)'s signature, or () for a missing path (which a
+    scan then reports in Spark's own words)."""
+    import os
+
+    return listing(path)[1] if os.path.exists(path) else ()
+
+
+def fixture_signature(sf_dir: str) -> tuple:
+    """The listing signatures of the registry tables under `sf_dir`:
+    what a per-fixture plan memo keys on, so a table that grows or is
+    rewritten between two calls re-plans. ~0.1 ms for the ten
+    single-file tables of a fixture."""
+    return tuple(_signature(f"{sf_dir}/{name}.parquet") for name in TABLES)
+
+
 def fanout(sf_dir: str, name: str, rows_per_worker: int, cores: int) -> int:
     """Python-worker fan-out for a table that ships as one input split:
     one partition per `rows_per_worker` footer rows, capped at `cores`
@@ -152,7 +171,7 @@ def table_rows(sf_dir: str, name: str) -> int:
     so a same-path regeneration (the driver precedent) re-counts.
     Use this to make fan-out knobs scale with the data instead of
     pinning a local-mode constant (round 13 — the batch analog of the
-    streaming `_scaled_bs` discipline)."""
+    streaming `sep_events.feed_batch_size` rule)."""
     import pyarrow.parquet as pq
 
     files, sig = listing(f"{sf_dir}/{name}.parquet")
@@ -171,7 +190,7 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     `events.ts` has changed physical type across testdata generations
     (TIMESTAMP(NANOS) in rounds 1-3, TIMESTAMP(MICROS) since round 4),
     so the events branch dispatches on the scanned dtype instead of
-    assuming one encoding:
+    assuming one encoding (the rule lives in events_physical):
 
     - `bigint`        → an integer epoch column: TIMESTAMP(NANOS) read
       under `nanosAsLong` (see events_raw), OR a raw UNANNOTATED int64
@@ -186,47 +205,50 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     - `timestamp_ntz` → micros file read natively: cast to the session
       TimestampType (value-preserving under the UTC session timezone)
       so every downstream query sees the same type as before.
-    - `timestamp`     → pass through.
+    - `timestamp`     → pass through (an identity cast).
+
+    The scan is cached per listing signature, so a table that grows
+    or is rewritten at the same path is scanned afresh.
     """
     path = f"{sf_dir}/{name}.parquet"
-    key = (spark.sparkContext.applicationId, path)
+    key = (spark.sparkContext.applicationId, path, _signature(path))
     cached = _SCAN_CACHE.get(key)
     if cached is not None:
         return cached
     if name == "events":
-        from pyspark.sql import functions as F
-
-        raw = events_raw(spark, sf_dir)
-        ts_type = dict(raw.dtypes)["ts"]
-        if ts_type == "decimal(20,0)":
-            # UINT64 epoch ts (a C++ writer's uint64_t): Spark maps the
-            # parquet UINT64 to DecimalType(20,0) — normalize to bigint
-            # FIRST so the integer-epoch dispatch below sees it (the
-            # generic _normalize_unsigned runs after this branch and
-            # would otherwise leave ts as bigint epoch integers, not a
-            # timestamp). UINT8/16/32 epochs widen to signed natively
-            # and arrive here as plain bigint.
-            raw = raw.withColumn("ts", F.col("ts").cast("bigint"))
-            ts_type = "bigint"
-        elif ts_type in ("int", "smallint", "tinyint"):
-            # Signed sub-64-bit epoch (32-bit time_t seconds is the
-            # realistic member): widen to bigint so the unit dispatch
-            # below sees it. The transport (pa.types.is_integer) and
-            # the harness duck view already accept these widths —
-            # round-12 ADVICE closed the batch-side asymmetry.
-            raw = raw.withColumn("ts", F.col("ts").cast("bigint"))
-            ts_type = "bigint"
-        if ts_type == "bigint":
-            df = raw.withColumn("ts", int_ts_to_session_expr(int_ts_unit(path)))
-        elif ts_type == "timestamp_ntz":
-            df = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-        else:
-            df = raw
+        raw, session_ts, _unit = events_physical(spark, sf_dir)
+        df = raw.withColumn("ts", session_ts)
     else:
         df = spark.read.parquet(path)
     df = _normalize_unsigned(df)
     _SCAN_CACHE.put(key, df)
     return df
+
+
+def events_physical(spark: SparkSession, sf_dir: str):
+    """The events scan in its physical form, plus how to read its ts:
+    `(raw, session_ts, unit)`.
+
+    `raw` is events_raw with an integer-like ts widened to bigint — a
+    UINT64 epoch (a C++ writer's uint64_t) scans as decimal(20,0) and a
+    signed sub-64-bit epoch (32-bit time_t seconds) as int/smallint/
+    tinyint; UINT8/16/32 already widen to bigint natively. `unit` is
+    the classified epoch unit of a bigint ts (`int_ts_unit`), else
+    None. `session_ts` rebuilds the session TimestampType from `raw`'s
+    ts: the unit's constructor for an integer epoch, else a cast
+    (timestamp_ntz → timestamp, identity for timestamp). The one owner
+    of this rule: io.t() applies `session_ts` to the whole scan, and
+    stream_bootstrap_then_tail filters `raw` on the physical column
+    before applying it, so its seam predicate reaches parquet."""
+    from pyspark.sql import functions as F
+
+    raw = events_raw(spark, sf_dir)
+    if dict(raw.dtypes)["ts"] in ("decimal(20,0)", "int", "smallint", "tinyint"):
+        raw = raw.withColumn("ts", F.col("ts").cast("bigint"))
+    if dict(raw.dtypes)["ts"] == "bigint":
+        unit = int_ts_unit(f"{sf_dir}/events.parquet")
+        return raw, int_ts_to_session_expr(unit), unit
+    return raw, F.col("ts").cast("timestamp"), None
 
 
 # Integer-epoch unit classification (round-11 int64-ts hardening).
@@ -390,9 +412,8 @@ def events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     does not rewrite predicates through it — a filter on the converted
     column never reaches the parquet scan. Time-range scans that must
     prune at the source (e.g. a CDC bootstrap snapshot below a seam
-    offset) filter HERE on the physical column, then convert. Callers
-    must dispatch on `dict(df.dtypes)["ts"]` (see
-    stream_bootstrap_then_tail for the pattern).
+    offset) filter HERE on the physical column, then convert —
+    through events_physical, which owns the ts dispatch.
 
     NOTE: this flips `spark.sql.legacy.parquet.nanosAsLong` for the
     WHOLE session and deliberately does not restore it — the conf is
@@ -400,7 +421,7 @@ def events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     would break re-execution of this very DataFrame. It is a no-op for
     micros files."""
     path = f"{sf_dir}/events.parquet"
-    key = (spark.sparkContext.applicationId, path + "#raw")
+    key = (spark.sparkContext.applicationId, path + "#raw", _signature(path))
     cached = _SCAN_CACHE.get(key)
     if cached is not None:
         return cached

@@ -627,6 +627,18 @@ def _emb_fanout(spark: SparkSession, sf_dir: str) -> int:
     return fanout(sf_dir, "embeddings", 25_000, spark.sparkContext.defaultParallelism)
 
 
+def _pca_fanout(spark: SparkSession, sf_dir: str) -> int:
+    """vec_pca_project's projection path: 0 keeps the JVM expression
+    chain, any other value is the BLAS path's repartition count
+    (_emb_fanout). The embeddings row count alone picks the path —
+    BLAS from two workers' worth (50k vectors) up — so a corpus gets
+    the same path, and the same output, on any host; cores only cap
+    the repartition count."""
+    from hbase_sep_spark.io import table_rows
+
+    return _emb_fanout(spark, sf_dir) if table_rows(sf_dir, "embeddings") // 25_000 >= 2 else 0
+
+
 @register("vec_pca_project", oracle=None, memoize=True, section=SECTION)
 def vec_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PCA projection of the embedding corpus onto its top-2 principal
@@ -671,9 +683,10 @@ def vec_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             yield pd.DataFrame({"moments": [row.tolist()]})
 
+    fan = _pca_fanout(spark, sf_dir)
     emb = e.select("embedding")
-    if _emb_fanout(spark, sf_dir) >= 2:  # single-file corpus: spread the workers
-        emb = emb.repartition(_emb_fanout(spark, sf_dir))
+    if fan:  # single-file corpus: spread the workers
+        emb = emb.repartition(fan)
     flat = (
         emb.mapInPandas(partial_moments, schema="moments array<double>")
         .select(F.posexplode("moments").alias("i", "v"))
@@ -712,7 +725,7 @@ def vec_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vec_id keeps its scanned type; label crosses as DOUBLE (a
     # pandas int column with NULLs widens to float64 — the round-8
     # nullkeys crash class) and is cast back to its scanned type.
-    if _emb_fanout(spark, sf_dir) < 2:
+    if not fan:
 
         def proj(comp):
             return sum(
@@ -751,9 +764,7 @@ def vec_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    base = e.select("vec_id", "label", "embedding").repartition(
-        _emb_fanout(spark, sf_dir)
-    )
+    base = e.select("vec_id", "label", "embedding").repartition(fan)
     return (
         base.mapInPandas(
             project,

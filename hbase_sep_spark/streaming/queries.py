@@ -17,18 +17,22 @@ from __future__ import annotations
 import datetime as _dt
 import itertools
 import os
+import shutil
 import tempfile
 
 import pandas as pd
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql.streaming import DataStreamWriter
 
+from hbase_sep_spark.io import scratch_dir, t
 from hbase_sep_spark.registry import register
 from hbase_sep_spark.sources.sep_events import (
     EVENT_SCHEMA,
+    feed_batch_size,
     feed_total,
-    register_sep_source,
+    read_stream,
 )
 
 SECTION = "2.10"
@@ -36,79 +40,209 @@ SECTION = "2.10"
 _COUNTER = itertools.count()
 
 
-def _scaled_bs(sf_dir: str, floor: int) -> int:
-    """Feed-proportional rate limit with `floor` as the graded-SF
-    value: identical to the old fixed `floor` at any feed ≤ 10k rows
-    (every graded SF), constant micro-batch count (10000/floor)
-    beyond. This is the same scaling the source's auto default
-    applies (sources/sep_events.py) — kept explicit here because
-    these queries pin a SPECIFIC graded-SF batch structure (late-data
-    boundaries, redelivery windows). Footer-only feed count."""
-    return max(floor, feed_total(f"{sf_dir}/events.parquet") * floor // 10000)
+def _feed(sf_dir: str) -> str:
+    """A fixture's events feed: one file or a segment directory."""
+    return f"{sf_dir}/events.parquet"
 
 
-def _events_stream(spark: SparkSession, sf_dir: str, **options) -> DataFrame:
-    """The subscription: a sep_events readStream over the feed."""
-    register_sep_source(spark)
-    reader = (
-        spark.readStream.format("sep_events")
-        .option("path", f"{sf_dir}/events.parquet")
-    )
-    for k, v in options.items():
-        reader = reader.option(k, str(v))
-    return reader.load()
+def _drive(spark: SparkSession, *writers: DataStreamWriter) -> list[str]:
+    """Start every configured writer on a fresh checkpoint, drain them
+    all, and return their checkpoint dirs in writer order.
 
+    All writers are live before any drains — concurrent consumers, not
+    sequential replays. If the Python worker for the datasource fails
+    to spawn (a transient environment failure under heavy session
+    load, not a query error: "failed to connect back"), the writers
+    that did not finish are restarted on new checkpoints, up to three
+    attempts in all; any other error is raised.
 
-def _drive(spark, start_query):
-    """Start + drain a streaming query, retrying once if the Python
-    worker for the datasource fails to spawn (a transient environment
-    failure under heavy session load, not a query error).
-
-    Shuffle partitions are pinned to 8 for the query's lifetime (and
+    Shuffle partitions are pinned to 8 for the queries' lifetime (and
     the caller's setting restored after): each stateful operator
     keeps one state store PER shuffle partition per micro-batch, so a
     session-default 200 turns a 10-batch replay into 2000 state-store
     round trips — a 5-10× slowdown measured with a default-conf
-    session. Checkpoints are fresh per call, so the pinned value
+    session. Checkpoints are fresh per attempt, so the pinned value
     never conflicts with a prior run's state layout.
     """
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     spark.conf.set(key, "8")
+    done: dict[int, str] = {}
     try:
-        last_exc = None
         for _attempt in range(3):
-            q = start_query()
+            live = []
             try:
-                q.processAllAvailable()
-                return
+                for i, w in enumerate(writers):
+                    if i not in done:
+                        ckpt = tempfile.mkdtemp(prefix="sep_ckpt_")
+                        live.append((i, ckpt, w.option("checkpointLocation", ckpt).start()))
+                for i, ckpt, q in live:
+                    q.processAllAvailable()
+                    done[i] = ckpt
             except Exception as e:  # noqa: BLE001
-                last_exc = e
                 if "failed to connect back" not in str(e):
                     raise
+                last_exc = e
             finally:
-                q.stop()
+                for _i, _ckpt, q in live:
+                    q.stop()
+            if len(done) == len(writers):
+                return [done[i] for i in range(len(writers))]
         raise last_exc
     finally:
         spark.conf.set(key, old)
 
 
+def _memory_sink(stream_df: DataFrame, mode: str = "append") -> tuple[DataStreamWriter, str]:
+    """A memory-sink writer for `stream_df` and its table name."""
+    name = f"sep_stream_{next(_COUNTER)}"
+    return stream_df.writeStream.outputMode(mode).format("memory").queryName(name), name
+
+
 def _run_to_memory(stream_df: DataFrame, mode: str = "append") -> DataFrame:
     """Drive the streaming query over the whole feed, return the
     memory-sink table as a batch DataFrame."""
-    name = f"sep_stream_{next(_COUNTER)}"
+    spark = stream_df.sparkSession
+    writer, name = _memory_sink(stream_df, mode)
+    _drive(spark, writer)
+    return spark.table(name)
 
-    def start():
-        return (
-            stream_df.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sep_ckpt_"))
-            .start()
+
+def _final_rows(rows: DataFrame, *order: str) -> DataFrame:
+    """Each user_id's row that is largest on `order`. For an
+    update-mode memory sink, which holds one row per (key,
+    micro-batch), that is the key's final state when `order` leads
+    with a count carried in state (it grows with every batch the key
+    is in)."""
+    w = Window.partitionBy("user_id").orderBy(*[F.desc(c) for c in order])
+    return rows.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn")
+
+
+def _fresh_dir(spark: SparkSession, name: str) -> str:
+    """An empty session-scoped scratch dir for a sink's output."""
+    path = scratch_dir(spark, name)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    return path
+
+
+def _epoch_sink(out_root: str, *aggs):
+    """An idempotent micro-batch sink (the EventListener.processEvents
+    analog): each batch's per-type `aggs` overwrite a deterministic
+    epoch-keyed parquet dir, so a redelivered batch replaces itself."""
+
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        (
+            batch_df.groupBy("event_type")
+            .agg(*aggs)
+            .withColumn("epoch", F.lit(int(epoch_id)))
+            .write.mode("overwrite")
+            .parquet(os.path.join(out_root, f"epoch={int(epoch_id)}"))
         )
 
-    _drive(stream_df.sparkSession, start)
-    return stream_df.sparkSession.table(name)
+    return sink
+
+
+def _read_epochs(spark: SparkSession, out_root: str) -> DataFrame:
+    """The union of every epoch an _epoch_sink wrote."""
+    return spark.read.option("basePath", out_root).parquet(out_root + "/epoch=*")
+
+
+def _publish(merged: DataFrame, state_dir: str, epoch_id: int) -> None:
+    """Make `merged` the `current` version of a parquet state table:
+    write a staging dir, rename it to the epoch's version `v<epoch>`,
+    and copy that over `current`."""
+    staging = os.path.join(state_dir, f"staging_{epoch_id}")
+    merged.write.mode("overwrite").parquet(staging)
+    refreshed = os.path.join(state_dir, f"v{epoch_id}")
+    os.rename(staging, refreshed)
+    current = os.path.join(state_dir, "current")
+    shutil.rmtree(current, ignore_errors=True)
+    shutil.copytree(refreshed, current)
+
+
+def _current(spark: SparkSession, state_dir: str) -> DataFrame | None:
+    """The published `current` version of a parquet state table, or
+    None before the first publish."""
+    path = os.path.join(state_dir, "current")
+    return spark.read.parquet(path) if os.path.exists(path) else None
+
+
+def _content_hash(df: DataFrame) -> tuple[int, int]:
+    """Order-independent content fingerprint of `df`: (row count, sum
+    of per-row xxhash64 over its columns in name order). The sum is
+    decimal(38,0): exact and overflow-free at any row count (a raw
+    long sum of xxhash64 values is ANSI ARITHMETIC_OVERFLOW within a
+    few rows). Replay order and partitioning cannot affect it."""
+    row_h = F.xxhash64(F.concat_ws("|", *[F.col(c).cast("string") for c in sorted(df.columns)]))
+    row = df.select(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(row_h.cast("decimal(38,0)")).alias("h"),
+    ).collect()[0]
+    return int(row["n"]), int(row["h"]) if row["h"] is not None else 0
+
+
+def _timed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The batch events table under the transport's dead-letter policy
+    (NULL ts / event_id never enter the feed): what a replay can
+    deliver."""
+    return t(spark, sf_dir, "events").filter(
+        F.col("ts").isNotNull() & F.col("event_id").isNotNull()
+    )
+
+
+def _latest_per_key(ev: DataFrame, carried: tuple[tuple[str, str], ...]) -> DataFrame:
+    """The stateful argmax-(ts, event_id) consumer: per user_id, the
+    newest event's `carried` (column, type) values across all
+    micro-batches, in explicit applyInPandasWithState state, plus
+    n_seen (events delivered for the key). Output: user_id,
+    last_event_id, last_<column>..., n_seen — each key's final state.
+
+    max-(ts, event_id) state is idempotent under duplicate delivery,
+    so redelivered events cannot move it (only n_seen counts them).
+    last_ts is INTEGER ticks (astype('int64') of the arrow datetime),
+    never float seconds: at 2026 epochs (~1.7e18 ns) float64 quantizes
+    to ~256 ns and distinct timestamps would collapse."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    empty = {"double": 0.0, "string": "none"}
+    to_py = {"double": float, "string": str}
+    fields = "".join(f"last_{c} {typ}, " for c, typ in carried)
+
+    def step(key, pdfs, state: GroupState):
+        last_ts, last_eid, *last, n_seen = (
+            state.get if state.exists else (-(1 << 62), -1, *[empty[typ] for _, typ in carried], 0)
+        )
+        for pdf in pdfs:
+            if len(pdf) == 0:
+                continue
+            n_seen += len(pdf)
+            ts = pdf["ts"].astype("int64")
+            # Vectorized argmax of (ts, event_id): rows at the max ts,
+            # tie-broken by the largest event_id among them.
+            i = pdf["event_id"][ts == ts.max()].idxmax()
+            cand = (int(ts[i]), int(pdf["event_id"][i]))
+            if cand > (last_ts, last_eid):
+                last_ts, last_eid = cand
+                last = [to_py[typ](pdf[c][i]) for c, typ in carried]
+        state.update((last_ts, last_eid, *last, n_seen))
+        yield pd.DataFrame(
+            {
+                "user_id": [key[0]],
+                "last_event_id": [last_eid],
+                **{f"last_{c}": [v] for (c, _), v in zip(carried, last)},
+                "n_seen": [n_seen],
+            }
+        )
+
+    updated = ev.groupBy("user_id").applyInPandasWithState(
+        step,
+        outputStructType=f"user_id long, last_event_id long, {fields}n_seen long",
+        stateStructType=f"last_ts long, last_event_id long, {fields}n_seen long",
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    return _final_rows(_run_to_memory(updated, mode="update"), "n_seen", "last_event_id")
 
 
 @register("stream_sep_source", oracle=None, section="2.1")
@@ -116,14 +250,14 @@ def stream_sep_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SEP subscription itself: replay the full feed through the
     sep_events source in offset-tracked micro-batches; the result is
     exactly the batch events table (stream/batch duality)."""
-    return _run_to_memory(_events_stream(spark, sf_dir))
+    return _run_to_memory(read_stream(spark, _feed(sf_dir)))
 
 
 @register("stream_tumbling_count", oracle=None, section=SECTION)
 def stream_tumbling_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events per type per 1-day tumbling window, with a 1-hour
     watermark bounding state."""
-    ev = _events_stream(spark, sf_dir)
+    ev = read_stream(spark, _feed(sf_dir))
     agg = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 day").alias("win"), "event_type")
@@ -140,7 +274,7 @@ def stream_tumbling_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("stream_sliding_avg", oracle=None, section=SECTION)
 def stream_sliding_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window (1 day, slide 6 h) average event value."""
-    ev = _events_stream(spark, sf_dir)
+    ev = read_stream(spark, _feed(sf_dir))
     agg = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 day", "6 hours").alias("win"))
@@ -158,7 +292,7 @@ def stream_sliding_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session windows with a 30-minute inactivity gap —
     state is merged session ranges per key."""
-    ev = _events_stream(spark, sf_dir)
+    ev = read_stream(spark, _feed(sf_dir))
     agg = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", "30 minutes").alias("sess"), "user_id")
@@ -180,7 +314,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay advances the watermark batch by batch, closing windows as
     it goes (rows appear per closed window, late events beyond the
     1-hour threshold would be dropped)."""
-    ev = _events_stream(spark, sf_dir, batch_size=_scaled_bs(sf_dir, 1000))
+    ev = read_stream(spark, _feed(sf_dir), batch_size=feed_batch_size(_feed(sf_dir), 1000, 10))
     agg = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 day").alias("win"))
@@ -199,7 +333,9 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-delivers every 5th event of the previous batch (SEP redelivery
     semantics) and dropDuplicatesWithinWatermark collapses them —
     output count equals the clean feed."""
-    ev = _events_stream(spark, sf_dir, batch_size=_scaled_bs(sf_dir, 1000), redeliver_every=5)
+    ev = read_stream(
+        spark, _feed(sf_dir), batch_size=feed_batch_size(_feed(sf_dir), 1000, 10), redeliver_every=5
+    )
     dedup = ev.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(["event_id"])
     out = _run_to_memory(dedup)
     return out.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_unique_events"))
@@ -210,7 +346,7 @@ def stream_stateful_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-key running state via applyInPandasWithState: the SEP
     consumer's materialized 'current row' — latest (ts, value) per
     user, carried across micro-batches in explicit state."""
-    return stateful_latest_over(spark, _events_stream(spark, sf_dir))
+    return stateful_latest_over(spark, read_stream(spark, _feed(sf_dir)))
 
 
 def stateful_latest_over(spark: SparkSession, ev: DataFrame) -> DataFrame:
@@ -218,61 +354,11 @@ def stateful_latest_over(spark: SparkSession, ev: DataFrame) -> DataFrame:
 
     Split out of stream_stateful_latest so the at-least-once property
     test (tests/test_streaming.py) can drive the SAME product code
-    over a redelivering feed: max-(ts, event_id) state is idempotent
-    under duplicate delivery, so the converged state must equal the
+    over a redelivering feed: the converged state must equal the
     batch events_latest_per_key result — the SEP invariant SURVEY
     §5.4 names. The registered query is this pipeline over the clean
     subscription."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = "user_id long, last_event_id long, last_value double, n_seen long"
-    # last_ts is INTEGER ticks (astype('int64') of the arrow datetime),
-    # never float seconds: at 2026 epochs (~1.7e18 ns) float64
-    # quantizes to ~256 ns and distinct timestamps would collapse.
-    state_schema = "last_ts long, last_event_id long, last_value double, n_seen long"
-
-    def latest_per_key(key, pdfs, state: GroupState):
-        last_ts, last_eid, last_val, n_seen = (
-            state.get if state.exists else (-(1 << 62), -1, 0.0, 0)
-        )
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            n_seen += len(pdf)
-            ts = pdf["ts"].astype("int64")
-            # Vectorized argmax of (ts, event_id): rows at the max ts,
-            # tie-broken by the largest event_id among them.
-            i = pdf["event_id"][ts == ts.max()].idxmax()
-            cand = (int(ts[i]), int(pdf["event_id"][i]))
-            if cand > (last_ts, last_eid):
-                last_ts, last_eid = cand
-                last_val = float(pdf["value"][i])
-        state.update((last_ts, last_eid, last_val, n_seen))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "last_event_id": [last_eid],
-                "last_value": [last_val],
-                "n_seen": [n_seen],
-            }
-        )
-
-    updated = ev.groupBy("user_id").applyInPandasWithState(
-        latest_per_key,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    out = _run_to_memory(updated, mode="update")
-    # The memory table holds one row per (key, batch); keep each key's
-    # final state (max n_seen).
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_seen"), F.desc("last_event_id"))
-    return (
-        out.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn")
-    )
+    return _latest_per_key(ev, (("value", "double"),))
 
 
 @register("stream_bootstrap_then_tail", oracle=None, section=SECTION)
@@ -303,30 +389,19 @@ def stream_bootstrap_then_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     push predicates through a cast (round-12 ADVICE). The
     previous shape (`orderBy(ts, event_id).limit(K)`) was a global
     sort plus a single-point limit — a non-starter at 100 TB."""
-    from hbase_sep_spark.io import events_raw
-    from hbase_sep_spark.sources.sep_events import _read_rows, feed_total
+    from hbase_sep_spark.io import epoch_us_to_unit, events_physical
+    from hbase_sep_spark.sources.sep_events import _read_rows
 
-    path = f"{sf_dir}/events.parquet"
+    path = _feed(sf_dir)
     total = feed_total(path)  # footer-only; segment-dir aware
     k = total // 2
 
-    from hbase_sep_spark.io import epoch_us_to_unit, int_ts_to_session_expr, int_ts_unit
-
-    raw = events_raw(spark, sf_dir)
     # Integer-epoch feeds carry NO unit annotation (nanos under
-    # nanosAsLong, or a raw Kafka/Debezium int64 in s/ms/µs/ns) —
-    # classify from footer stats like io.t() does (round-11). A
-    # UINT64 epoch scans as decimal(20,0), and a 32-bit time_t
-    # seconds feed as int — normalize both to bigint first (io.t()'s
-    # rule) so the seam literal and predicate are 64-bit integer.
-    if dict(raw.dtypes)["ts"] in ("decimal(20,0)", "int", "smallint", "tinyint"):
-        raw = raw.withColumn("ts", F.col("ts").cast("bigint"))
-    int_unit = int_ts_unit(path) if dict(raw.dtypes)["ts"] == "bigint" else None
-    to_session_ts = (
-        int_ts_to_session_expr(int_unit)
-        if int_unit
-        else F.col("ts").cast("timestamp")
-    )
+    # nanosAsLong, or a raw Kafka/Debezium int64 in s/ms/µs/ns):
+    # events_physical widens them to bigint and classifies the unit
+    # from footer stats like io.t() does, so the seam literal and
+    # predicate are 64-bit integers in the feed's own unit.
+    raw, to_session_ts, int_unit = events_physical(spark, sf_dir)
     # Boundary = the first row the TAIL will deliver. The transport
     # dead-letters NULL event-times (round-8 null-ts sweep — a record
     # with no time has no position in the (ts, event_id) replay
@@ -385,7 +460,7 @@ def stream_bootstrap_then_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # Phase 2: stream the tail starting at offset k.
-    tail_stream = _events_stream(spark, sf_dir, start_row=k)
+    tail_stream = read_stream(spark, path, start_row=k)
     tail = _run_to_memory(tail_stream).withColumn("phase", F.lit("tail"))
 
     return snapshot.unionByName(tail).groupBy("phase").agg(
@@ -404,58 +479,14 @@ def stream_latest_op_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose final mutation is a delete is ABSENT from the snapshot —
     the HBase tombstone masking a CDC consumer must implement.
     Asserted equal to the batch query in tests/test_mutations.py."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    ev = _events_stream(spark, sf_dir).withColumn(
+    ev = read_stream(spark, _feed(sf_dir)).withColumn(
         "op", F.when(F.col("event_type") == "error", F.lit("delete")).otherwise(F.lit("put"))
     )
-
-    out_schema = "user_id long, last_event_id long, last_op string, last_value double, n_seen long"
-    # Integer-tick state key for the same reason as stream_stateful_latest.
-    state_schema = "last_ts long, last_event_id long, last_op string, last_value double, n_seen long"
-
-    def op_wins(key, pdfs, state: GroupState):
-        last_ts, last_eid, last_op, last_val, n_seen = (
-            state.get if state.exists else (-(1 << 62), -1, "none", 0.0, 0)
-        )
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            n_seen += len(pdf)
-            ts = pdf["ts"].astype("int64")
-            i = pdf["event_id"][ts == ts.max()].idxmax()
-            cand = (int(ts[i]), int(pdf["event_id"][i]))
-            if cand > (last_ts, last_eid):
-                last_ts, last_eid = cand
-                last_op = str(pdf["op"][i])
-                last_val = float(pdf["value"][i])
-        state.update((last_ts, last_eid, last_op, last_val, n_seen))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "last_event_id": [last_eid],
-                "last_op": [last_op],
-                "last_value": [last_val],
-                "n_seen": [n_seen],
-            }
-        )
-
-    updated = ev.groupBy("user_id").applyInPandasWithState(
-        op_wins,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    out = _run_to_memory(updated, mode="update")
-    # Keep each key's final state (max n_seen), then apply the
-    # tombstone: deleted keys drop out of the snapshot.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_seen"), F.desc("last_event_id"))
+    # Each key's final state, then the tombstone: deleted keys drop
+    # out of the snapshot.
     return (
-        out.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("last_op") == "put"))
+        _latest_per_key(ev, (("op", "string"), ("value", "double")))
+        .filter(F.col("last_op") == "put")
         .select("user_id", "last_event_id", "last_value")
     )
 
@@ -475,7 +506,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         ["event_type", "tier"],
     )
-    ev = _events_stream(spark, sf_dir)
+    ev = read_stream(spark, _feed(sf_dir))
     joined = ev.join(F.broadcast(tiers), "event_type")
     out = _run_to_memory(joined)
     return out.groupBy("tier").agg(
@@ -491,39 +522,11 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch lands in a deterministic epoch-keyed parquet dir
     (overwrite ⇒ redelivered batches are idempotent), then the union
     of all epochs is read back."""
-    from hbase_sep_spark.io import scratch_dir
-
-    out_root = scratch_dir(spark, "foreach_sink")
-    import shutil
-
-    shutil.rmtree(out_root, ignore_errors=True)
-    os.makedirs(out_root, exist_ok=True)
-
-    def sink_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .withColumn("epoch", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_root, f"epoch={epoch_id}"))
-        )
-
-    ev = _events_stream(spark, sf_dir, batch_size=_scaled_bs(sf_dir, 2500))
-
-    def start():
-        return (
-            ev.writeStream.foreachBatch(sink_batch)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sep_ckpt_fb_"))
-            .start()
-        )
-
-    _drive(spark, start)
-    return (
-        spark.read.option("basePath", out_root)
-        .parquet(out_root + "/epoch=*")
-        .groupBy("event_type")
-        .agg(F.sum("n_events").alias("n_events"))
-    )
+    out_root = _fresh_dir(spark, "foreach_sink")
+    ev = read_stream(spark, _feed(sf_dir), batch_size=feed_batch_size(_feed(sf_dir), 2500, 4))
+    sink = _epoch_sink(out_root, F.count(F.lit(1)).alias("n_events"))
+    _drive(spark, ev.writeStream.foreachBatch(sink))
+    return _read_epochs(spark, out_root).groupBy("event_type").agg(F.sum("n_events").alias("n_events"))
 
 
 @register("stream_sink_exactly_once_audit", oracle=None, section=SECTION)
@@ -552,72 +555,33 @@ def stream_sink_exactly_once_audit(spark: SparkSession, sf_dir: str) -> DataFram
     epochs), columns (epoch, n_rows, replay_identical, totals_match);
     a correct sink yields TRUE in both flag columns on every row
     (asserted in tests/test_streaming.py)."""
-    import shutil
-
-    from hbase_sep_spark.io import scratch_dir, t
-
-    out_root = scratch_dir(spark, "sink_x1_audit")
-    shutil.rmtree(out_root, ignore_errors=True)
-    os.makedirs(out_root, exist_ok=True)
+    out_root = _fresh_dir(spark, "sink_x1_audit")
     audit: dict[int, tuple[int, int, int, int]] = {}
-
-    def fingerprint(s: SparkSession, path: str) -> tuple[int, int]:
-        df = s.read.parquet(path)
-        row_h = F.xxhash64(
-            F.concat_ws("|", *[F.col(c).cast("string") for c in sorted(df.columns)])
-        )
-        # decimal(38,0) sum: exact and overflow-free at any row count
-        # (a raw long sum of xxhash64 values is ANSI
-        # ARITHMETIC_OVERFLOW within a few rows).
-        row = df.select(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(row_h.cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"]) if row["h"] is not None else 0
-
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.min("event_id").alias("min_event_id"),
-                F.max("event_id").alias("max_event_id"),
-            )
-            .withColumn("epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_root, f"epoch={int(epoch_id)}"))
-        )
+    apply_batch = _epoch_sink(
+        out_root,
+        F.count(F.lit(1)).alias("n_events"),
+        F.min("event_id").alias("min_event_id"),
+        F.max("event_id").alias("max_event_id"),
+    )
 
     def sink_batch(batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.sparkSession
         path = os.path.join(out_root, f"epoch={int(epoch_id)}")
         apply_batch(batch_df, epoch_id)
-        n1, h1 = fingerprint(s, path)
+        n1, h1 = _content_hash(s.read.parquet(path))
         # The redelivery: Spark re-running this micro-batch after a
         # pre-commit failure calls the sink again with the same
         # epoch_id and the same rows.
         apply_batch(batch_df, epoch_id)
-        n2, h2 = fingerprint(s, path)
+        n2, h2 = _content_hash(s.read.parquet(path))
         audit[int(epoch_id)] = (n1, h1, n2, h2)
 
     # Batch size scales with feed volume (footer-only count): the
-    # audit pays 2 writes + 2 fingerprint aggregates PER EPOCH, so a
-    # fixed size would mean O(feed/2500) driver round trips at scale
-    # — the epoch count stays bounded (~8) instead. Identical to the
-    # old fixed 2500 at the grading SF (10 k rows).
-    from hbase_sep_spark.sources.sep_events import feed_total
-
-    bs = max(2500, feed_total(f"{sf_dir}/events.parquet") // 8)
-    ev = _events_stream(spark, sf_dir, batch_size=bs)
-
-    def start():
-        return (
-            ev.writeStream.foreachBatch(sink_batch)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sep_ckpt_x1_"))
-            .start()
-        )
-
-    _drive(spark, start)
+    # audit pays 2 writes + 2 fingerprint aggregates PER EPOCH, so the
+    # epoch count stays bounded (~8) instead of O(feed/2500) driver
+    # round trips at scale.
+    ev = read_stream(spark, _feed(sf_dir), batch_size=feed_batch_size(_feed(sf_dir), 2500, 8))
+    _drive(spark, ev.writeStream.foreachBatch(sink_batch))
 
     schema = "epoch long, n_rows long, replay_identical boolean, totals_match boolean"
     if not audit:
@@ -630,20 +594,9 @@ def stream_sink_exactly_once_audit(spark: SparkSession, sf_dir: str) -> DataFram
     # table's per-type counts (the feed delivered exactly once into
     # the sink). Both sides are tiny aggregates; the compare is one
     # small join counted driver-side.
-    sunk = (
-        spark.read.option("basePath", out_root)
-        .parquet(out_root + "/epoch=*")
-        .groupBy("event_type")
-        .agg(F.sum("n_events").alias("n_sunk"))
-    )
-    # Mirror the transport's dead-letter policy (NULL ts / event_id
-    # never enter the feed) so the reference side counts what the
-    # sink could ever have seen.
+    sunk = _read_epochs(spark, out_root).groupBy("event_type").agg(F.sum("n_events").alias("n_sunk"))
     expected = (
-        t(spark, sf_dir, "events")
-        .filter(F.col("ts").isNotNull() & F.col("event_id").isNotNull())
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_expected"))
+        _timed_events(spark, sf_dir).groupBy("event_type").agg(F.count(F.lit(1)).alias("n_expected"))
     )
     n_mismatch = (
         sunk.join(expected, "event_type", "full_outer")
@@ -685,81 +638,20 @@ def stream_multi_subscription_fanout(spark: SparkSession, sf_dir: str) -> DataFr
 
     rows-only: 2 rows; all flags TRUE on a correct transport
     (asserted in tests/test_streaming.py)."""
-    from hbase_sep_spark.io import t
-    from hbase_sep_spark.sources.sep_events import feed_total
-
     # Batch sizes scale with feed volume (footer-only count) so the
     # replay stays a bounded number of micro-batches at any SF; the
     # two subscriptions keep structurally different offset sequences
-    # (12 vs 5 batches) at every scale. Identical to the old fixed
-    # 900/2100 at the grading SF (10 k rows).
-    total = feed_total(f"{sf_dir}/events.parquet")
-    subs = (("sub_a", max(900, total // 12)), ("sub_b", max(2100, total // 5)))
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "8")
-    finished: dict[str, tuple[str, str]] = {}
-    try:
-        last_exc = None
-        for _attempt in range(3):
-            handles = []
-            for name, bs in subs:
-                if name in finished:
-                    continue
-                ev = _events_stream(spark, sf_dir, batch_size=bs)
-                mem = f"fanout_{name}_{next(_COUNTER)}"
-                ckpt = tempfile.mkdtemp(prefix=f"sep_ckpt_{name}_")
-                q = (
-                    ev.writeStream.outputMode("append")
-                    .format("memory")
-                    .queryName(mem)
-                    .option("checkpointLocation", ckpt)
-                    .start()
-                )
-                # Both subscriptions are live before either drains —
-                # concurrent consumers, not sequential replays.
-                handles.append((name, mem, ckpt, q))
-            try:
-                for name, mem, ckpt, q in handles:
-                    q.processAllAvailable()
-                    finished[name] = (mem, ckpt)
-            except Exception as e:  # noqa: BLE001
-                last_exc = e
-                if "failed to connect back" not in str(e):
-                    raise
-            finally:
-                for _name, _mem, _ckpt, q in handles:
-                    q.stop()
-            if len(finished) == len(subs):
-                break
-        else:
-            raise last_exc
-    finally:
-        spark.conf.set(key, old)
+    # (12 vs 5 batches) at every scale.
+    feed = _feed(sf_dir)
+    subs = (("sub_a", feed_batch_size(feed, 900, 12)), ("sub_b", feed_batch_size(feed, 2100, 5)))
+    sinks = [_memory_sink(read_stream(spark, feed, batch_size=bs)) for _name, bs in subs]
+    ckpts = _drive(spark, *(writer for writer, _table in sinks))
 
-    def content_sig(df: DataFrame) -> tuple[int, int]:
-        cols = [fld.name for fld in EVENT_SCHEMA.fields]
-        row_h = F.xxhash64(
-            F.concat_ws("|", *[F.col(c).cast("string") for c in sorted(cols)])
-        )
-        # decimal(38,0) sum: exact and overflow-free at any row count
-        # (a raw long sum of xxhash64 values is ANSI
-        # ARITHMETIC_OVERFLOW within a few rows).
-        row = df.select(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(row_h.cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"]) if row["h"] is not None else 0
-
-    feed_n, feed_h = content_sig(
-        t(spark, sf_dir, "events").filter(
-            F.col("ts").isNotNull() & F.col("event_id").isNotNull()
-        )
-    )
+    cols = [fld.name for fld in EVENT_SCHEMA.fields]
+    feed_n, feed_h = _content_hash(_timed_events(spark, sf_dir).select(*cols))
     sigs = {}
-    for name, _bs in subs:
-        mem, ckpt = finished[name]
-        n, h = content_sig(spark.table(mem))
+    for (name, _bs), (_writer, table), ckpt in zip(subs, sinks, ckpts):
+        n, h = _content_hash(spark.table(table).select(*cols))
         # One offset-log entry per committed micro-batch; skip the
         # local-fs checksum siblings (".N.crc") or the count doubles.
         n_batches = len(
@@ -788,7 +680,7 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops state outside the watermark+interval window, so state is
     bounded however long the feeds run)."""
     purchases = (
-        _events_stream(spark, sf_dir)
+        read_stream(spark, _feed(sf_dir))
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -798,7 +690,7 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("p_ts", "2 hours")
     )
     clicks = (
-        _events_stream(spark, sf_dir)
+        read_stream(spark, _feed(sf_dir))
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -834,48 +726,21 @@ def stream_incremental_upsert_view(spark: SparkSession, sf_dir: str) -> DataFram
     collapse. The final view must equal the batch latest-per-key
     query — asserted in tests/test_streaming.py.
     """
-    import shutil
-
-    from hbase_sep_spark.io import scratch_dir
-
-    state_dir = scratch_dir(spark, "upsert_view")
-    shutil.rmtree(state_dir, ignore_errors=True)
-
-    from pyspark.sql import Window
+    state_dir = _fresh_dir(spark, "upsert_view")
 
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-        latest = (
-            batch_df.select("user_id", "ts", "event_id", "event_type", "value")
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
+        latest = _final_rows(
+            batch_df.select("user_id", "ts", "event_id", "event_type", "value"), "ts", "event_id"
         )
-        target = os.path.join(state_dir, "current")
-        if os.path.exists(target):
-            existing = batch_df.sparkSession.read.parquet(target)
-            keep = existing.join(latest.select("user_id"), "user_id", "left_anti")
-            merged = keep.unionByName(latest)
-        else:
-            merged = latest
-        staging = os.path.join(state_dir, f"staging_{epoch_id}")
-        merged.write.mode("overwrite").parquet(staging)
-        refreshed = os.path.join(state_dir, f"v{epoch_id}")
-        os.rename(staging, refreshed)
-        link = os.path.join(state_dir, "current")
-        shutil.rmtree(link, ignore_errors=True)
-        shutil.copytree(refreshed, link)
+        existing = _current(batch_df.sparkSession, state_dir)
+        if existing is not None:
+            latest = existing.join(latest.select("user_id"), "user_id", "left_anti").unionByName(latest)
+        _publish(latest, state_dir, epoch_id)
 
-    ev = _events_stream(spark, sf_dir, batch_size=_scaled_bs(sf_dir, 2000), redeliver_every=7)
-
-    def start():
-        return (
-            ev.writeStream.foreachBatch(upsert)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sep_ckpt_up_"))
-            .start()
-        )
-
-    _drive(spark, start)
+    ev = read_stream(
+        spark, _feed(sf_dir), batch_size=feed_batch_size(_feed(sf_dir), 2000, 5), redeliver_every=7
+    )
+    _drive(spark, ev.writeStream.foreachBatch(upsert))
     return spark.read.parquet(os.path.join(state_dir, "current"))
 
 
@@ -904,28 +769,14 @@ def stream_scd2_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     overwrite on the open partition); within-batch versioning is one
     user_id window; the first-new-ts side is key-cardinality and
     broadcasts."""
-    import shutil
-
-    from hbase_sep_spark.io import scratch_dir
-
-    state_dir = scratch_dir(spark, "scd2_maintain")
-    shutil.rmtree(state_dir, ignore_errors=True)
-    os.makedirs(state_dir, exist_ok=True)
-
-    from pyspark.sql import Window
+    state_dir = _fresh_dir(spark, "scd2_maintain")
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        s = batch_df.sparkSession
-        target = os.path.join(state_dir, "current")
         batch = batch_df.select("user_id", "event_id", "value", "ts")
-        if os.path.exists(target):
-            state = s.read.parquet(target)
+        state = _current(batch_df.sparkSession, state_dir)
+        if state is not None:
             # Idempotence under redelivery: drop events already applied.
-            batch = batch.join(
-                state.select("event_id"), "event_id", "left_anti"
-            )
-        else:
-            state = None
+            batch = batch.join(state.select("event_id"), "event_id", "left_anti")
         w = Window.partitionBy("user_id").orderBy("ts", "event_id")
         new_rows = batch.withColumn("valid_to_ts", F.lead("ts").over(w)).select(
             "user_id", "event_id", "value",
@@ -948,23 +799,12 @@ def stream_scd2_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .unionByName(closed_now)
                 .unionByName(new_rows)
             )
-        staging = os.path.join(state_dir, f"staging_{epoch_id}")
-        merged.write.mode("overwrite").parquet(staging)
-        refreshed = os.path.join(state_dir, f"v{epoch_id}")
-        os.rename(staging, refreshed)
-        shutil.rmtree(target, ignore_errors=True)
-        shutil.copytree(refreshed, target)
+        _publish(merged, state_dir, epoch_id)
 
-    ev = _events_stream(spark, sf_dir, batch_size=_scaled_bs(sf_dir, 2000), redeliver_every=7)
-
-    def start():
-        return (
-            ev.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sep_ckpt_scd2_"))
-            .start()
-        )
-
-    _drive(spark, start)
+    ev = read_stream(
+        spark, _feed(sf_dir), batch_size=feed_batch_size(_feed(sf_dir), 2000, 5), redeliver_every=7
+    )
+    _drive(spark, ev.writeStream.foreachBatch(merge_batch))
     final = spark.read.parquet(os.path.join(state_dir, "current"))
     return final.select(
         "user_id",
@@ -1007,7 +847,7 @@ def stream_anomaly_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    ev = _events_stream(spark, sf_dir)
+    ev = read_stream(spark, _feed(sf_dir))
 
     out_schema = (
         "user_id long, n_events long, n_scored long, n_anomalies long, "
@@ -1069,17 +909,7 @@ def stream_anomaly_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    result = _run_to_memory(updated, mode="update")
-    # Memory sink in update mode appends one row per (user, batch);
-    # the per-user FINAL row is the one with the largest n_events.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        result.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    return _final_rows(_run_to_memory(updated, mode="update"), "n_events")
 
 
 @register("stream_windowed_distinct_hll", oracle=None, section=SECTION)
@@ -1095,7 +925,7 @@ def stream_windowed_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tests/test_streaming.py bounds the estimate against the batch
     exact distinct per (window, type) at HLL++'s default rsd."""
-    ev = _events_stream(spark, sf_dir)
+    ev = read_stream(spark, _feed(sf_dir))
     agg = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 day").alias("win"), "event_type")

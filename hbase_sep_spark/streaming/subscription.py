@@ -27,7 +27,7 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hbase_sep_spark.sources.sep_events import register_sep_source
+from hbase_sep_spark.sources.sep_events import read_stream
 
 
 @dataclass
@@ -46,9 +46,8 @@ class SepSubscription:
         )
     )
     # "auto" = the source's feed-proportional rate limit
-    # (max(2500, feed/4) — sources/sep_events.py): identical to the
-    # old fixed 2500 at every graded SF, constant micro-batch count at
-    # scale. Offsets are feed row positions either way, so the durable
+    # (sep_events.feed_batch_size with floor 2500 over 4 batches).
+    # Offsets are feed row positions either way, so the durable
     # cursor contract is independent of the pacing.
     batch_size: int | str = "auto"
 
@@ -57,13 +56,7 @@ class SepSubscription:
         return os.path.join(self.root, self.name, "checkpoint")
 
     def stream(self) -> DataFrame:
-        register_sep_source(self.spark)
-        return (
-            self.spark.readStream.format("sep_events")
-            .option("path", self.feed_path)
-            .option("batch_size", str(self.batch_size))
-            .load()
-        )
+        return read_stream(self.spark, self.feed_path, batch_size=self.batch_size)
 
     def start(
         self,

@@ -57,6 +57,18 @@ def test_table_bytes_counts_directory_tables(tmp_path):
     assert _table_bytes(str(fixture)) == 2 * os.path.getsize(src)
 
 
+def test_table_bytes_raises_on_a_fixture_without_tables(tmp_path):
+    """A wrong $SPARK_GRAFT_SF_DIR (no registry tables under it) must
+    fail loudly, naming the path, instead of deriving the floor."""
+    import re
+
+    import pytest
+
+    (tmp_path / "decoy.parquet").write_bytes(b"x" * 4096)
+    with pytest.raises(FileNotFoundError, match=re.escape(str(tmp_path))):
+        _table_bytes(str(tmp_path))
+
+
 def test_cpus_for_derivation_tolerates_star(monkeypatch):
     """ADVICE-r13: SPARK_GRAFT_CPUS="*" builds `local[*]` fine but
     crashed the derivation with ValueError. session.cpus() is the one

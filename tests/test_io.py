@@ -126,3 +126,23 @@ def test_listing_skips_hidden_files_like_spark(spark, tmp_path):
     assert scanned == 300
     assert table_rows(str(tmp_path), "events") == scanned
     assert feed_total(str(d)) == scanned
+
+
+def test_memoized_query_sees_appended_segment(spark, tmp_path):
+    """A CDC feed grows by new segment files at the same path. A
+    memoized query called again after a segment lands must return the
+    new rows: the plan memo and the scan cache key on the listing
+    signature, not on the path alone."""
+    from hbase_sep_spark.registry import load_all
+    from tests.conftest import SF_UNIT
+
+    src = pq.read_table(f"{SF_UNIT}/events.parquet")
+    feed = tmp_path / "events.parquet"
+    feed.mkdir()
+    pq.write_table(src.slice(0, 600), str(feed / "part-000.parquet"))
+    q = load_all()["scan_events_feed"].fn
+    first = q(spark, str(tmp_path))
+    assert first.count() == 600
+    assert q(spark, str(tmp_path)) is first  # an unchanged feed hits the memo
+    pq.write_table(src.slice(600), str(feed / "part-001.parquet"))
+    assert q(spark, str(tmp_path)).count() == src.num_rows

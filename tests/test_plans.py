@@ -1413,3 +1413,26 @@ def test_pca_fanout_floors_at_graded_sf(spark, tmp_path):
     pq.write_table(pa.table({"vec_id": pa.array(range(200_000), pa.int64())}), str(tmp_path / "embeddings.parquet"))
     assert fanout(str(tmp_path), "embeddings", 25_000, 32) == 8
     assert fanout(str(tmp_path), "embeddings", 25_000, 4) == 4
+
+
+def test_pca_path_is_chosen_by_row_count_not_cores(tmp_path):
+    """vec_pca_project's projection path (JVM chain below two workers'
+    worth of vectors, BLAS matmul above) depends on the embeddings row
+    count alone, so the same corpus takes the same path on a 1-, 2- or
+    4-core session; cores only cap the repartition count."""
+    from types import SimpleNamespace
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hbase_sep_spark.queries.llm_ops import _pca_fanout
+
+    for rows, want in ((49_999, [0, 0, 0]), (50_000, [1, 2, 2]), (200_000, [1, 2, 4])):
+        d = tmp_path / str(rows)
+        d.mkdir()
+        pq.write_table(pa.table({"vec_id": pa.array(range(rows), pa.int64())}), str(d / "embeddings.parquet"))
+        got = [
+            _pca_fanout(SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=cores)), str(d))
+            for cores in (1, 2, 4)
+        ]
+        assert got == want, rows

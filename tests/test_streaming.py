@@ -7,6 +7,7 @@ Runs at sf0.001 for speed.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from hbase_sep_spark.io import t
 from hbase_sep_spark.registry import load_all
@@ -248,10 +249,13 @@ def test_source_rate_limit_scales_with_feed():
     feed-proportional — max(2500, feed/4) — so the micro-batch count
     is scale-invariant instead of O(feed), while every graded SF
     (feeds <= 10k rows) keeps the historical fixed-2500 pacing
-    bit-identically. _scaled_bs applies the same rule to queries that
-    pin a specific graded-SF batch structure."""
-    from hbase_sep_spark.sources.sep_events import SepEventsStreamReader, feed_total
-    from hbase_sep_spark.streaming.queries import _scaled_bs
+    bit-identically. feed_batch_size applies the same rule to queries
+    that pin a specific graded-SF batch structure."""
+    from hbase_sep_spark.sources.sep_events import (
+        SepEventsStreamReader,
+        feed_batch_size,
+        feed_total,
+    )
 
     path = f"{SF_UNIT}/events.parquet"
     total = feed_total(path)
@@ -264,10 +268,10 @@ def test_source_rate_limit_scales_with_feed():
     # explicit values are honored verbatim
     r = SepEventsStreamReader({"path": path, "batch_size": "400"})
     assert r.batch_size == 400
-    # _scaled_bs floors bind at graded SFs (unit feed: 1000 rows)
-    assert _scaled_bs(SF_UNIT, 1000) == 1000
-    assert _scaled_bs(SF_UNIT, 2000) == 2000
-    assert _scaled_bs(SF_UNIT, 2500) == 2500
+    # feed_batch_size floors bind at graded SFs (unit feed: 1000 rows)
+    assert feed_batch_size(path, 1000, 10) == 1000
+    assert feed_batch_size(path, 2000, 5) == 2000
+    assert feed_batch_size(path, 2500, 4) == 2500
 
 
 def test_source_read_yields_arrow_batches():
@@ -403,19 +407,42 @@ def test_stateful_latest_converges_under_redelivery(spark):
     delivery cannot move max-(ts, event_id) state. n_seen is NOT
     compared (it counts deliveries, which redelivery inflates by
     design); the materialized (event_id, value) state must match."""
-    from hbase_sep_spark.streaming.queries import (
-        _events_stream,
-        stateful_latest_over,
-    )
+    from hbase_sep_spark.sources.sep_events import read_stream
+    from hbase_sep_spark.streaming.queries import stateful_latest_over
 
     stream = stateful_latest_over(
         spark,
-        _events_stream(spark, SF_UNIT, batch_size=300, redeliver_every=3),
+        read_stream(spark, f"{SF_UNIT}/events.parquet", batch_size=300, redeliver_every=3),
     )
     batch = REGISTRY["events_latest_per_key"].fn(spark, SF_UNIT)
     got = {r["user_id"]: (r["last_event_id"], r["last_value"]) for r in stream.collect()}
     want = {r["user_id"]: (r["event_id"], r["value"]) for r in batch.collect()}
     assert got == want
+
+
+def test_drive_retries_only_unfinished_writers(spark):
+    """The one start/drain/retry driver: when a stream fails with the
+    transient worker-spawn error ("failed to connect back"), only the
+    writers that had not finished restart, each on a fresh
+    checkpoint; a writer that drained is not replayed."""
+    from hbase_sep_spark.sources.sep_events import read_stream
+    from hbase_sep_spark.streaming.queries import _drive
+
+    calls = {"steady": 0, "flaky": 0}
+
+    def steady(batch_df, epoch_id):
+        calls["steady"] += 1
+
+    def flaky(batch_df, epoch_id):
+        calls["flaky"] += 1
+        if calls["flaky"] == 1:
+            raise RuntimeError("failed to connect back (injected)")
+
+    feed = f"{SF_UNIT}/events.parquet"
+    writers = [read_stream(spark, feed).writeStream.foreachBatch(fn) for fn in (steady, flaky)]
+    ckpts = _drive(spark, *writers)
+    assert calls == {"steady": 1, "flaky": 2}
+    assert len(set(ckpts)) == 2
 
 
 def test_sink_exactly_once_audit_all_flags_true(spark):
@@ -442,3 +469,98 @@ def test_multi_subscription_fanout_independent_offsets(spark):
     assert all(r["matches_feed"] for r in rows), rows
     assert by_name["sub_a"]["n_batches"] != by_name["sub_b"]["n_batches"], rows
     assert by_name["sub_a"]["n_rows"] == by_name["sub_b"]["n_rows"]
+
+
+def _timed_events(spark):
+    """The batch events table under the transport's dead-letter policy
+    (NULL ts / event_id never enter the feed)."""
+    return t(spark, SF_UNIT, "events").filter(
+        F.col("ts").isNotNull() & F.col("event_id").isNotNull()
+    )
+
+
+def _batch_tumbling_count(spark):
+    return (
+        _timed_events(spark)
+        .groupBy(F.window("ts", "1 day").alias("win"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
+            "event_type",
+            "n_events",
+        )
+    )
+
+
+def _batch_sliding_avg(spark):
+    return (
+        _timed_events(spark)
+        .groupBy(F.window("ts", "1 day", "6 hours").alias("win"))
+        .agg(F.round(F.avg("value"), 4).alias("avg_value"), F.count(F.lit(1)).alias("n_events"))
+        .select(
+            F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("win_start"),
+            "avg_value",
+            "n_events",
+        )
+    )
+
+
+def _batch_static_join(spark):
+    tiers = spark.createDataFrame(
+        [
+            ("click", "engagement"),
+            ("view", "engagement"),
+            ("purchase", "revenue"),
+            ("signup", "growth"),
+            ("error", "ops"),
+        ],
+        ["event_type", "tier"],
+    )
+    return (
+        _timed_events(spark)
+        .join(tiers, "event_type")
+        .groupBy("tier")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2).cast("double").alias("sum_value"),
+        )
+    )
+
+
+def _batch_foreach_batch_sink(spark):
+    return _timed_events(spark).groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events"))
+
+
+def _batch_stream_interval_join(spark):
+    ev = _timed_events(spark)
+    p = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("purchase_id"), F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts")
+    )
+    c = ev.filter(F.col("event_type") == "click").select(
+        F.col("event_id").alias("click_id"), F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts")
+    )
+    cond = F.expr("p_user = c_user AND c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts <= p_ts")
+    return p.join(c, cond).select("purchase_id", "click_id", F.col("p_user").alias("user_id"))
+
+
+BATCH_TWINS = {
+    "stream_tumbling_count": _batch_tumbling_count,
+    "stream_sliding_avg": _batch_sliding_avg,
+    "stream_static_join": _batch_static_join,
+    "stream_foreach_batch_sink": _batch_foreach_batch_sink,
+    "stream_stream_interval_join": _batch_stream_interval_join,
+}
+
+
+@pytest.mark.parametrize("name", sorted(BATCH_TWINS))
+def test_stream_query_equals_batch(spark, name):
+    """Stream/batch duality for the stream queries that no other test
+    checks beyond row counts: each one's result over the full replay
+    equals its batch counterpart over the same feed, row for row and
+    value for value."""
+    stream = REGISTRY[name].fn(spark, SF_UNIT)
+    batch = BATCH_TWINS[name](spark)
+    assert stream.columns == batch.columns
+    got = sorted(tuple(r) for r in stream.collect())
+    want = sorted(tuple(r) for r in batch.collect())
+    assert got and got == want
