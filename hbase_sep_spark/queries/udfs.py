@@ -86,7 +86,7 @@ def udf_pandas_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical plan at every graded SF — growing one partition per
     # 150k rows up to the session's cores, so a 100× feed is not
     # pinned to 8 Python workers on 32 cores (footer-only count;
-    # the batch analog of the streaming _scaled_bs rule).
+    # the batch analog of the streaming sep_events.feed_batch_size rule).
     fan = max(8, fanout(sf_dir, "orders", 150_000, spark.sparkContext.defaultParallelism))
     o = t(spark, sf_dir, "orders").repartition(fan)
     return o.select("o_orderkey", F.round(sigmoid("o_totalprice"), 6).alias("price_sigmoid"))

@@ -27,6 +27,13 @@ A 100 TB feed replays with driver state = one integer per batch and
 per-worker IO = its own row-group slice. (The previous implementation
 used SimpleDataSourceStreamReader, which is driver-side by contract —
 it loaded the whole feed into a Python list on the driver.)
+
+A SepSubscription over a segment DIRECTORY does not use this reader:
+`read_segments` serves it from Spark's built-in parquet file source
+with the same transport contract in Spark expressions, which avoids
+the per-start Python source runner and sees segments that land while
+the query runs. Single-file feeds and `read_stream` (the 18 stream_*
+queries) stay on the reader below.
 """
 
 from __future__ import annotations
@@ -223,7 +230,8 @@ def _read_table(path: str, lo: int, hi: int, step: int = 1):
     - Physical-type normalization, mirroring io._normalize_unsigned's
       scan-edge rule: DECIMAL columns (decimal-money regeneration of
       events.value — the round-10 collapse probe crashed all 16
-      streaming queries on it) cast to float64; decimal(20,0) — the
+      streaming queries on it) cast to the nearest float64, as
+      Spark's cast does; decimal(20,0) — the
       UINT64 signature if a writer routed it through arrow — casts to
       int64 (this also normalizes a decimal-encoded ts before the
       unit dispatch below). Narrow/unsigned ints widen via the final
@@ -267,20 +275,17 @@ def _read_table(path: str, lo: int, hi: int, step: int = 1):
         return None
     names = [fld.name for fld in EVENT_SCHEMA.fields]
     tbl = pa.concat_tables(chunks).select(names)
-    casts = {
-        f.name: (pa.int64() if (f.type.precision, f.type.scale) == (20, 0) else pa.float64())
-        for f in tbl.schema
-        if pa.types.is_decimal(f.type)
-    }
-    if casts:
-        tbl = tbl.cast(
-            pa.schema(
-                [
-                    pa.field(f.name, casts.get(f.name, f.type), f.nullable)
-                    for f in tbl.schema
-                ]
-            )
-        )
+    for i, f in enumerate(tbl.schema):
+        if pa.types.is_decimal(f.type):
+            col = tbl.column(i)
+            if (f.type.precision, f.type.scale) == (20, 0):
+                col = col.cast(pa.int64())
+            else:
+                # Through the exact decimal text: arrow's direct
+                # decimal→float64 cast is not correctly rounded
+                # (37.66 → 37.660000000000004).
+                col = col.cast(pa.string()).cast(pa.float64())
+            tbl = tbl.set_column(i, pa.field(f.name, col.type, f.nullable), col)
     ts_i = tbl.schema.get_field_index("ts")
     if pa.types.is_integer(tbl.schema.field(ts_i).type):
         from hbase_sep_spark.io import int_ts_unit
@@ -535,3 +540,92 @@ def read_stream(spark, path: str, **options):
     for k, v in options.items():
         reader = reader.option(k, str(v))
     return reader.load()
+
+
+# FileStreamSource ignores a file older than its newest seen file minus
+# maxFileAge (default 7 days): a feed copied in with old mtimes, or a
+# cursor resumed after a week, would lose segments. The seen-files map
+# then never purges, so it holds one entry per segment of the feed.
+_NEVER_AGE_OUT = "1000000d"
+
+
+# (applicationId, first segment's listing entry) → its Spark schema.
+# Inferring it runs a Spark job (~0.12 s warm), once per start();
+# a live feed's first segment never changes.
+_SCHEMA_CACHE: LruCache = LruCache(maxsize=64)
+
+
+def _check_landing_order(sig: tuple) -> None:
+    """Fail loudly unless the segments' modification times, at the
+    millisecond resolution the file source sees, never decrease in
+    name order (`sig` is io.listing's signature). The file source
+    delivers new files oldest mtime first; equal mtimes keep the glob's
+    name order (a stable sort)."""
+    for (prev, _, m0), (fp, _, m1) in zip(sig, sig[1:]):
+        if m1 // 10**6 < m0 // 10**6:
+            raise ValueError(
+                f"feed segments out of landing order: {fp} was modified before "
+                f"{prev} — the file source delivers segments by modification "
+                f"time, so a segment must land after the ones it follows"
+            )
+
+
+def read_segments(spark, path: str, batch_size: int | str = "auto"):
+    """A segment directory's events through Spark's parquet file source,
+    with the transport contract of `_read_table` as Spark expressions:
+
+    - schema from the first segment's footer; the ts rule of io
+      (`int_ts_unit` + `int_ts_to_session_expr` for an integer epoch,
+      widened to bigint first; otherwise a cast to the session
+      TimestampType, which maps naive wall times unshifted under the
+      UTC session timezone);
+    - decimal and narrow/unsigned ints cast to EVENT_SCHEMA's types,
+      loud on overflow under ANSI;
+    - NULL ts / event_id rows dead-lettered;
+    - at start: the footer ts-order check (`_feed_segments`) and the
+      landing-order check (`_check_landing_order`);
+    - pacing in whole segments: `maxFilesPerTrigger` is the rows per
+      batch (`feed_batch_size`'s (2500, 4) rule, or an explicit int)
+      over the mean rows per segment, rounded up, at least 1.
+
+    The glob, not the directory, is the source path: it applies the
+    listing rule (`*.parquet`, hidden names skipped) and lists in name
+    order, which the mtime sort keeps for ties. Offsets are the file
+    source's own (`{"logOffset": N}` plus its seen-files log)."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from hbase_sep_spark.io import int_ts_to_session_expr, int_ts_unit
+
+    segs = _feed_segments(path)
+    _files, sig = listing(path)
+    _check_landing_order(sig)
+    total = segs[-1][1] + segs[-1][2]
+    rows = feed_batch_size(path, 2500, 4) if batch_size == "auto" else int(batch_size)
+    per_trigger = max(1, -(-rows * len(segs) // total)) if total else len(segs)
+    # TIMESTAMP(NANOS) segments scan as int64 (io.events_raw's setting).
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    key = (spark.sparkContext.applicationId, sig[0])
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        schema = spark.read.parquet(segs[0][0]).schema
+        _SCHEMA_CACHE.put(key, schema)
+    raw = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", per_trigger)
+        .option("maxFileAge", _NEVER_AGE_OUT)
+        .parquet(os.path.join(path, "*.parquet"))
+    )
+    if dict(raw.dtypes)["ts"] in ("decimal(20,0)", "int", "smallint", "tinyint", "bigint"):
+        raw = raw.withColumn("ts", F.col("ts").cast("bigint"))
+        ts = int_ts_to_session_expr(int_ts_unit(path))
+    else:
+        ts = F.col("ts").cast("timestamp")
+    out = raw.select(
+        *(
+            ts.alias("ts") if f.name == "ts" else F.col(f.name).cast(f.dataType)
+            for f in EVENT_SCHEMA.fields
+        )
+    )
+    return out.where(F.col("ts").isNotNull() & F.col("event_id").isNotNull())

@@ -44,3 +44,25 @@ def mutated(tmp_path_factory):
         return built[cls]
 
     return get
+
+
+def land_segment(tbl, feed_dir, index: int) -> str:
+    """Land `tbl` as segment `index` of a feed directory atomically:
+    write a hidden temp file, then rename it into its sorted name."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(feed_dir, exist_ok=True)
+    path = os.path.join(feed_dir, f"seg-{index:03d}.parquet")
+    tmp = os.path.join(feed_dir, f".seg-{index:03d}.tmp")
+    pq.write_table(tbl, tmp)
+    os.rename(tmp, path)
+    return path
+
+
+def write_segments(tbl, feed_dir, n: int) -> str:
+    """A feed in (ts, event_id) order as `n` contiguous segments, landed
+    in name order. Returns the feed directory."""
+    cuts = [round(i * tbl.num_rows / n) for i in range(n + 1)]
+    for i, (lo, hi) in enumerate(zip(cuts, cuts[1:])):
+        land_segment(tbl.slice(lo, hi - lo), feed_dir, i)
+    return str(feed_dir)

@@ -55,6 +55,25 @@ def test_stream_per_key_delivery_order(spark):
     micro-batches (batch N's events for user U all precede batch
     N+1's). Collect (batch, user, ts) via foreachBatch and assert
     per-user (batch, ts) sequences are monotone."""
+    _assert_per_key_order(spark, f"{SF_UNIT}/events.parquet", 300)
+
+
+def test_stream_per_key_delivery_order_over_segments(spark, tmp_path):
+    """The same check on a four-segment directory paced to one segment
+    per trigger: the file source must deliver segments in name order."""
+    import pyarrow.parquet as pq
+
+    from tests.conftest import write_segments
+
+    feed = write_segments(pq.read_table(f"{SF_UNIT}/events.parquet"), tmp_path / "feed", 4)
+    epochs = _assert_per_key_order(spark, feed, 250)
+    assert epochs >= 4
+
+
+def _assert_per_key_order(spark, feed_path: str, batch_size: int) -> int:
+    """Drain a subscription over the 1000-row sf0.001 feed at
+    `feed_path`, assert per-user (epoch, ts, event_id) arrival order is
+    sorted, and return the number of data epochs."""
     import tempfile
 
     from hbase_sep_spark.streaming.subscription import SepSubscription
@@ -68,9 +87,9 @@ def test_stream_per_key_delivery_order(spark):
     sub = SepSubscription(
         spark,
         name="order-test",
-        feed_path=f"{SF_UNIT}/events.parquet",
+        feed_path=feed_path,
         root=tempfile.mkdtemp(prefix="sep_order_"),
-        batch_size=300,
+        batch_size=batch_size,
     )
     q = sub.start(listener)
     try:
@@ -87,6 +106,7 @@ def test_stream_per_key_delivery_order(spark):
         # arrival order == (epoch asc, and within the feed, ts asc):
         # the sequence as delivered must already be sorted.
         assert entries == sorted(entries), f"out-of-order delivery for user {user}"
+    return len({epoch for epoch, *_ in seen})
 
 
 def test_incremental_upsert_view_equals_batch_latest(spark):

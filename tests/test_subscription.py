@@ -1,15 +1,28 @@
-"""SepSubscription durability test (the replication-position
+"""SepSubscription tests. Durability (the replication-position
 contract): a named subscription resumes from its checkpoint — stop +
 restart delivers nothing twice and nothing is skipped; unsubscribe
 drops the cursor and the next start replays from the beginning.
+Segment-directory feeds (served by Spark's file source): the live
+tail, the delivery-order checks at start(), the refusal of an old row
+cursor, and transport-rule parity with the `sep_events` reader over
+every hostile events class.
 """
 
 from __future__ import annotations
 
+import datetime as dt
+import os
 import tempfile
+from collections import Counter
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
+
+from hbase_sep_spark.sources.sep_events import _read_rows, feed_total, read_stream
 from hbase_sep_spark.streaming.subscription import SepSubscription
-from tests.conftest import SF_UNIT
+from tests.conftest import SF_UNIT, land_segment, write_segments
 
 
 def _drain(q):
@@ -49,3 +62,156 @@ def test_subscription_resumes_from_checkpoint(spark):
     delivered.clear()
     _drain(sub.start(listener))
     assert sum(delivered) == 1000
+
+
+def _events():
+    return pq.read_table(f"{SF_UNIT}/events.parquet")
+
+
+def _ids(sink: list):
+    """A listener appending each batch's event_ids to `sink`."""
+
+    def listener(batch_df, epoch_id):
+        sink.extend(r["event_id"] for r in batch_df.select("event_id").collect())
+
+    return listener
+
+
+def test_directory_subscription_delivers_live_appends(spark, tmp_path):
+    """One subscription stays running while three segments land: it
+    delivers every feed row exactly once, without a restart."""
+    events = _events()
+    feed = str(tmp_path / "feed")
+    land_segment(events.slice(0, 250), feed, 0)
+    delivered: list[int] = []
+    sub = SepSubscription(spark, "live", feed, root=str(tmp_path / "subs"))
+    q = sub.start(_ids(delivered))
+    try:
+        q.processAllAvailable()
+        for i in (1, 2, 3):
+            land_segment(events.slice(250 * i, 250), feed, i)
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert sorted(delivered) == sorted(events.column("event_id").to_pylist())
+
+
+def test_directory_subscription_reads_through_the_file_source(spark, tmp_path):
+    """A directory subscription runs on Spark's file source, not the
+    Python source runner."""
+    feed = write_segments(_events(), tmp_path / "feed", 2)
+    q = SepSubscription(spark, "guard", feed, root=str(tmp_path / "subs")).start(_ids([]))
+    _drain(q)
+    assert "FileStreamSource" in q.lastProgress["sources"][0]["description"]
+
+
+def test_directory_subscription_refuses_a_row_cursor(spark, tmp_path):
+    """A checkpoint holding a `sep_events` row offset fails at start()
+    with an error naming the subscription and unsubscribe(); after
+    unsubscribe() the feed replays in full."""
+    feed = write_segments(_events(), tmp_path / "feed", 2)
+    sub = SepSubscription(spark, "old-cursor", feed, root=str(tmp_path / "subs"))
+    os.makedirs(sub.checkpoint_dir)
+    writer = read_stream(spark, feed, batch_size=400).writeStream.foreachBatch(_ids([]))
+    _drain(writer.option("checkpointLocation", sub.checkpoint_dir).start())
+    with pytest.raises(ValueError, match=r"'old-cursor'.*unsubscribe\(\)"):
+        sub.start(_ids([]))
+    sub.unsubscribe()
+    delivered: list[int] = []
+    _drain(sub.start(_ids(delivered)))
+    assert len(delivered) == 1000
+
+
+def test_directory_subscription_fails_on_segments_out_of_ts_order(spark, tmp_path):
+    """Segment names must sort in ts order (the footer check)."""
+    feed = write_segments(_events(), tmp_path / "feed", 3)
+    first, last = (os.path.join(feed, f"seg-{i:03d}.parquet") for i in (0, 2))
+    os.rename(first, first + ".x")
+    os.rename(last, first)
+    os.rename(first + ".x", last)
+    for name in os.listdir(feed):  # equal mtimes: only the ts order is wrong
+        os.utime(os.path.join(feed, name), ns=(10**18, 10**18))
+    sub = SepSubscription(spark, "ts-order", feed, root=str(tmp_path / "subs"))
+    with pytest.raises(ValueError, match="out of order"):
+        sub.start(_ids([]))
+
+
+def test_directory_subscription_fails_on_segments_out_of_landing_order(spark, tmp_path):
+    """The file source delivers segments by modification time, so a
+    segment modified before the one its name follows fails loudly."""
+    feed = write_segments(_events(), tmp_path / "feed", 3)
+    second = os.path.join(feed, "seg-001.parquet")
+    st = os.stat(os.path.join(feed, "seg-000.parquet"))
+    os.utime(second, ns=(st.st_atime_ns, st.st_mtime_ns - 10**9))
+    sub = SepSubscription(spark, "landing-order", feed, root=str(tmp_path / "subs"))
+    with pytest.raises(ValueError, match="landing order"):
+        sub.start(_ids([]))
+
+
+# The tests/mutations.py classes whose events table differs from the
+# source fixture's (pinned by the completeness test below).
+EVENTS_CLASSES = (
+    "bigid", "collapse", "degenerate", "dupkey", "empty_feed", "empty_match", "era",
+    "extreme", "intts", "intts_int64_s", "intts_int64_us", "intts_uint64_ms",
+    "intts_uint32_s", "intts_int32_s", "jsonhostile", "kitchen_sink", "negid",
+    "nonfinite", "null", "nullts", "nullkeys", "tie", "uninames", "unsigned",
+    "zerorow", "zerorow_events",
+)
+_EPOCH = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+
+
+def _canon(row):
+    """(event_id, ts as epoch micros, user_id, event_type, value repr,
+    props): NaN compares equal to itself, -0.0 stays apart from 0.0."""
+    eid, ts, uid, etype, value, props = row
+    if isinstance(ts, dt.datetime):
+        ts = (ts - _EPOCH) // dt.timedelta(microseconds=1)
+    return eid, ts, uid, etype, repr(value), props
+
+
+def test_events_classes_are_every_class_that_rewrites_events(mutated):
+    from tests.mutations import MUTATIONS
+
+    base = _events()
+    rewrites = [c for c in MUTATIONS if not pq.read_table(f"{mutated(c)}/events.parquet").equals(base)]
+    assert tuple(rewrites) == EVENTS_CLASSES
+
+
+def _recast(name: str, fn):
+    """The sf0.001 events with column `name` rewritten by `fn`."""
+    tbl = _events()
+    col = fn(tbl.column(name))
+    return tbl.set_column(tbl.schema.get_field_index(name), pa.field(name, col.type), col)
+
+
+# Encodings no class applies to events: DECIMAL(12,2) money, and the
+# TIMESTAMP(NANOS) ts of the rounds-1-3 fixtures.
+_ENCODINGS = {
+    "decimal_value": lambda: _recast("value", lambda c: pc.round(c, 2).cast(pa.decimal128(12, 2))),
+    "nanos_ts": lambda: _recast("ts", lambda c: c.cast(pa.timestamp("ns"))),
+}
+
+
+@pytest.mark.parametrize("cls", [*EVENTS_CLASSES, *_ENCODINGS])
+def test_segment_transport_matches_python_reader(spark, mutated, tmp_path, cls):
+    """Each hostile events class, split into three ts-ordered segments
+    and drained by a directory subscription, delivers exactly the
+    multiset the `sep_events` reader's edge rules produce."""
+    from pyspark.sql import functions as F
+
+    if cls in _ENCODINGS:
+        tbl = _ENCODINGS[cls]()
+    else:
+        tbl = pq.read_table(f"{mutated(cls)}/events.parquet")
+    tbl = tbl.sort_by([("ts", "ascending"), ("event_id", "ascending")])
+    feed = write_segments(tbl, tmp_path / "feed", 3)
+    want = Counter(map(_canon, _read_rows(feed, 0, feed_total(feed))))
+
+    got: Counter = Counter()
+
+    def listener(batch_df, epoch_id):
+        cols = [F.unix_micros("ts").alias("ts") if c == "ts" else c for c in batch_df.columns]
+        got.update(_canon(tuple(r)) for r in batch_df.select(cols).collect())
+
+    _drain(SepSubscription(spark, f"parity-{cls}", feed, root=str(tmp_path / "subs")).start(listener))
+    assert got == want
