@@ -11,7 +11,7 @@ ReadSchema).
 from __future__ import annotations
 
 from collections import OrderedDict
-from typing import Generic, Hashable, TypeVar
+from typing import Callable, Generic, Hashable, Sequence, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -19,12 +19,11 @@ _V = TypeVar("_V")
 
 
 class LruCache(Generic[_V]):
-    """Tiny bounded LRU for session-scoped plan/stats caches.
+    """Tiny bounded LRU: the store behind `memo`, one per tag.
 
-    The harness touches a handful of (appId, path) keys, but a
-    long-lived multi-tenant session would otherwise grow these dicts
-    without bound (one entry per SparkSession × path ever seen) —
-    flagged two judge rounds running. Values are analyzed plans /
+    The harness touches a handful of keys, but a long-lived
+    multi-tenant session (or a growing feed) would otherwise grow the
+    store without bound. Values are analyzed plans, footer facts and
     small stats dicts, so the bound is about entry count, not bytes.
     """
 
@@ -50,6 +49,12 @@ class LruCache(Generic[_V]):
     def __contains__(self, key: Hashable) -> bool:
         return key in self._d
 
+    def __reduce__(self):
+        # A cache is process-local: a function that uses one is pickled
+        # to a worker (sep_events is pickled by value) with an empty
+        # copy, never with its values — DataFrames do not pickle.
+        return (LruCache, (self.maxsize,))
+
 
 TABLES = (
     "region",
@@ -63,19 +68,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-# (applicationId, path, listing signature) → DataFrame. Reusing the
-# analyzed scan (and its InMemoryFileIndex / parquet footer metadata)
-# across queries in the same session removes repeated driver-side
-# planning — the same effect a catalog table's cached metadata gives
-# at cluster scale. A scan's file index is fixed when it is built, so
-# the key carries the listing signature: a segment appended to a
-# directory table, or a same-path rewrite, builds a fresh scan instead
-# of serving the old file list. Plans only, no data is cached;
-# LRU-bounded so a long-lived session over many paths (or a growing
-# feed) can't grow it indefinitely.
-_SCAN_CACHE: LruCache[DataFrame] = LruCache(maxsize=64)
 
 
 def scratch_dir(spark: SparkSession, *parts: str) -> str:
@@ -96,18 +88,25 @@ def scratch_dir(spark: SparkSession, *parts: str) -> str:
     return path
 
 
+def fixture_paths(sf_dir: str) -> tuple[str, ...]:
+    """The registry tables' paths under `sf_dir`: what a value built
+    from the whole fixture (a query plan, scratch state) keys on."""
+    return tuple(f"{sf_dir}/{name}.parquet" for name in TABLES)
+
+
 def fixture_key(sf_dir: str) -> str:
-    """Stable scratch-subdir key for a fixture path: a digest of the
-    FULL absolute path, not its basename (ADVICE-r12) — two fixtures
-    sharing a basename in one session must not clobber each other's
-    persisted scratch state while the per-(appId, sf_dir) memoize
-    cache keeps them distinct."""
+    """Scratch-subdir key for a fixture: a digest of its FULL absolute
+    path (ADVICE-r12: two fixtures sharing a basename must not clobber
+    each other's persisted scratch state) and of the listing signature
+    of its tables, so state persisted from a fixture is rebuilt once a
+    table grows or is rewritten at the same path — the rule `memo`
+    applies to in-memory values."""
     import hashlib
     import os
 
-    return hashlib.sha1(
-        os.path.abspath(sf_dir.rstrip("/")).encode("utf-8")
-    ).hexdigest()[:12]
+    path = os.path.abspath(sf_dir.rstrip("/"))
+    sigs = tuple(_signature(p) for p in fixture_paths(path))
+    return hashlib.sha1(repr((path, sigs)).encode("utf-8")).hexdigest()[:12]
 
 
 def listing(path: str) -> tuple[list[str], tuple]:
@@ -122,15 +121,16 @@ def listing(path: str) -> tuple[list[str], tuple]:
     rewrite or a new segment changes it, so a cache keyed on it never
     serves a stale listing."""
     import os
+    import stat
 
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-    else:
-        files = [path]
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return [path], ((path, st.st_size, st.st_mtime_ns),)
+    files = sorted(
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
     sig = tuple(
         (fp, st.st_size, st.st_mtime_ns) for fp in files for st in (os.stat(fp),)
     )
@@ -145,12 +145,44 @@ def _signature(path: str) -> tuple:
     return listing(path)[1] if os.path.exists(path) else ()
 
 
-def fixture_signature(sf_dir: str) -> tuple:
-    """The listing signatures of the registry tables under `sf_dir`:
-    what a per-fixture plan memo keys on, so a table that grows or is
-    rewritten between two calls re-plans. ~0.1 ms for the ten
-    single-file tables of a fixture."""
-    return tuple(_signature(f"{sf_dir}/{name}.parquet") for name in TABLES)
+# tag → that kind of value's LRU: each kind keeps its own bound, so a
+# busy kind (a long feed's per-segment footers) never evicts another.
+_MEMOS: dict[str, LruCache] = {}
+
+
+def memo(
+    tag: str,
+    paths: str | Sequence[str],
+    build: Callable[[], _V],
+    *,
+    spark: SparkSession | None = None,
+    maxsize: int = 64,
+) -> _V:
+    """The one cache-key rule: `build()`'s value for `paths` as they are
+    listed now, built once and then served from the LRU named `tag`
+    (bounded at `maxsize` entries, fixed by the tag's first call).
+
+    The key is built here and nowhere else: each path with its listing
+    signature — a table that grows, is rewritten at the same path or
+    disappears misses and is rebuilt, never served stale — plus the
+    session's applicationId when `spark` is given. Pass `spark` when
+    the value is bound to the session (a DataFrame, or anything a
+    Spark job computed under its conf). Every call pays the listing
+    (a stat or two per file); only `build()` is saved."""
+    if isinstance(paths, str):
+        paths = (paths,)
+    key = (
+        spark.sparkContext.applicationId if spark is not None else None,
+        tuple((p, _signature(p)) for p in paths),
+    )
+    cache = _MEMOS.get(tag)
+    if cache is None:
+        cache = _MEMOS[tag] = LruCache(maxsize)
+    value = cache.get(key)
+    if value is None:
+        value = build()
+        cache.put(key, value)
+    return value
 
 
 def fanout(sf_dir: str, name: str, rows_per_worker: int, cores: int) -> int:
@@ -161,26 +193,22 @@ def fanout(sf_dir: str, name: str, rows_per_worker: int, cores: int) -> int:
     return min(cores, table_rows(sf_dir, name) // rows_per_worker)
 
 
-_TABLE_ROWS_CACHE: LruCache[int] = LruCache(maxsize=64)
-
-
 def table_rows(sf_dir: str, name: str) -> int:
     """Footer-only row count of one fixture table — no data pages
     read; directory tables enumerate part files in sorted-filename
-    order (the layout rule). Cached with the file-listing signature
-    so a same-path regeneration (the driver precedent) re-counts.
+    order (the layout rule). Memoized on the listing, so a same-path
+    regeneration (the driver precedent) re-counts.
     Use this to make fan-out knobs scale with the data instead of
     pinning a local-mode constant (round 13 — the batch analog of the
     streaming `sep_events.feed_batch_size` rule)."""
     import pyarrow.parquet as pq
 
-    files, sig = listing(f"{sf_dir}/{name}.parquet")
-    cached = _TABLE_ROWS_CACHE.get(sig)
-    if cached is not None:
-        return cached
-    n = sum(pq.ParquetFile(fp).metadata.num_rows for fp in files)
-    _TABLE_ROWS_CACHE.put(sig, n)
-    return n
+    path = f"{sf_dir}/{name}.parquet"
+    return memo(
+        "table_rows",
+        path,
+        lambda: sum(pq.ParquetFile(fp).metadata.num_rows for fp in listing(path)[0]),
+    )
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -207,22 +235,21 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       so every downstream query sees the same type as before.
     - `timestamp`     → pass through (an identity cast).
 
-    The scan is cached per listing signature, so a table that grows
-    or is rewritten at the same path is scanned afresh.
+    The analyzed scan (its file index and footer metadata) is memoized
+    per session and listing, so queries in one session skip repeated
+    driver-side planning — the effect a catalog table's cached metadata
+    gives at cluster scale — while a table that grows or is rewritten
+    at the same path is scanned afresh. Plans only; no data is cached.
     """
     path = f"{sf_dir}/{name}.parquet"
-    key = (spark.sparkContext.applicationId, path, _signature(path))
-    cached = _SCAN_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return memo("scan", path, lambda: _scan(spark, sf_dir, name), spark=spark)
+
+
+def _scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         raw, session_ts, _unit = events_physical(spark, sf_dir)
-        df = raw.withColumn("ts", session_ts)
-    else:
-        df = spark.read.parquet(path)
-    df = _normalize_unsigned(df)
-    _SCAN_CACHE.put(key, df)
-    return df
+        return _normalize_unsigned(raw.withColumn("ts", session_ts))
+    return _normalize_unsigned(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
 
 
 def events_physical(spark: SparkSession, sf_dir: str):
@@ -268,11 +295,6 @@ def classify_epoch_unit(max_abs: int) -> str:
     return "ns"
 
 
-# path → unit, keyed with the file listing signature so a same-path
-# regeneration (the driver's precedent) re-classifies.
-_TS_UNIT_CACHE: LruCache[str] = LruCache(maxsize=64)
-
-
 def int_ts_unit(path: str) -> str:
     """Epoch unit ('s'/'ms'/'us'/'ns') of an INTEGER-typed ts column,
     classified from parquet row-group statistics — footer-only, no
@@ -282,13 +304,14 @@ def int_ts_unit(path: str) -> str:
     which is the rare recovery path for an exotic writer; an empty or
     all-NULL feed returns 'ns' (nothing to convert — preserves the
     pre-round-11 nanos assumption byte-for-byte on rounds-1-3 files,
-    whose values classify as 'ns' by magnitude anyway)."""
+    whose values classify as 'ns' by magnitude anyway). Memoized on
+    the listing, so a same-path regeneration re-classifies."""
+    return memo("int_ts_unit", path, lambda: _classify_ts_unit(listing(path)[0]))
+
+
+def _classify_ts_unit(files: list[str]) -> str:
     import pyarrow.parquet as pq
 
-    files, sig = listing(path)
-    cached = _TS_UNIT_CACHE.get(("unit", sig))
-    if cached is not None:
-        return cached
     # An ANNOTATED timestamp column that still scanned as bigint can
     # only be TIMESTAMP(NANOS) under nanosAsLong (the rounds-1-3
     # shape) — pyarrow reads its stats as datetimes, not ints, so
@@ -299,7 +322,6 @@ def int_ts_unit(path: str) -> str:
     if "ts" in first_schema.names and patypes.is_timestamp(
         first_schema.field("ts").type
     ):
-        _TS_UNIT_CACHE.put(("unit", sig), "ns")
         return "ns"
     max_abs = 0
     stats_missing = False
@@ -328,9 +350,7 @@ def int_ts_unit(path: str) -> str:
                 for v in chunk:
                     if v.is_valid:
                         max_abs = max(max_abs, abs(v.as_py()))
-    unit = classify_epoch_unit(max_abs) if max_abs else "ns"
-    _TS_UNIT_CACHE.put(("unit", sig), unit)
-    return unit
+    return classify_epoch_unit(max_abs) if max_abs else "ns"
 
 
 def int_ts_to_session_expr(unit: str):
@@ -421,11 +441,9 @@ def events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     would break re-execution of this very DataFrame. It is a no-op for
     micros files."""
     path = f"{sf_dir}/events.parquet"
-    key = (spark.sparkContext.applicationId, path + "#raw", _signature(path))
-    cached = _SCAN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    _SCAN_CACHE.put(key, df)
-    return df
+
+    def build() -> DataFrame:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return spark.read.parquet(path)
+
+    return memo("events_raw", path, build, spark=spark)

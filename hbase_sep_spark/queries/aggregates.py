@@ -12,9 +12,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from hbase_sep_spark import io as io_mod
 from hbase_sep_spark.functions import arr_str, davg, dsum, fin, json_int, json_int_sql
-from hbase_sep_spark.io import t
+from hbase_sep_spark.io import memo, t
 from hbase_sep_spark.operators import quantiles
 from hbase_sep_spark.registry import register
 
@@ -189,22 +188,17 @@ def agg_median_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-scale shape for exact quantiles, replacing the per-group sort
     buffer entirely.  See that module's docstring for the full
     histogram → locate → (skew-refine) → bounded-sort design; the
-    per-(session, table) histogram is cached here so every percentile
-    query against the table reuses it.  `agg_approx_percentile`
+    table's histogram comes from `price_stats`, shared by every
+    percentile query against the table.  `agg_approx_percentile`
     remains the one-pass sketch alternative."""
     li = t(spark, sf_dir, "lineitem")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    st = _PCTL_STATS_CACHE.get(key)
-    if st is None:
-        st = quantiles.compute_stats(li, "l_extendedprice", "l_linestatus")
-        _PCTL_STATS_CACHE.put(key, st)
     pq = quantiles.exact_percentiles(
         spark,
         li,
         "l_extendedprice",
         "l_linestatus",
         {"median": 0.5, "p90": 0.9},
-        stats=st,
+        stats=price_stats(spark, sf_dir),
     )
     return pq.groupBy("l_linestatus").agg(
         F.round(
@@ -216,10 +210,21 @@ def agg_median_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# LRU-bounded like io._SCAN_CACHE: stats are small dicts, but a
-# long-lived session over many (appId, sf_dir) pairs shouldn't grow
-# this without bound (judge nit, rounds 3-4).
-_PCTL_STATS_CACHE: io_mod.LruCache[dict] = io_mod.LruCache(maxsize=32)
+def price_stats(spark: SparkSession, sf_dir: str) -> dict:
+    """The l_extendedprice-by-l_linestatus histogram behind the exact
+    percentile queries (quantiles.compute_stats, one Spark job),
+    memoized on lineitem's listing: a lineitem rewritten at the same
+    path gets fresh stats, so a re-planned query never locates its
+    percentiles in the old table's bins. Small dicts, 32 at most."""
+    return memo(
+        "price_stats",
+        f"{sf_dir}/lineitem.parquet",
+        lambda: quantiles.compute_stats(
+            t(spark, sf_dir, "lineitem"), "l_extendedprice", "l_linestatus"
+        ),
+        spark=spark,
+        maxsize=32,
+    )
 
 
 @register("agg_approx_percentile", oracle=None, memoize=True, section=SECTION)

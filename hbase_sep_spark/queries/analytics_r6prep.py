@@ -29,7 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from hbase_sep_spark.functions.portable import fin, knuth_hash
-from hbase_sep_spark.io import t
+from hbase_sep_spark.io import listing, t
 from hbase_sep_spark.registry import register
 
 
@@ -253,9 +253,6 @@ def scan_rowgroup_stats_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the audit parallelizes per file on a cluster via mapInPandas over
     file paths; the fixture has one file, so the driver path is the
     honest local form)."""
-    import glob
-    import os
-
     import pyarrow.parquet as pq
 
     schema_str = (
@@ -263,14 +260,10 @@ def scan_rowgroup_stats_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     table_path = f"{sf_dir}/lineitem.parquet"
     # A table can be one file or a DIRECTORY of part files (round-9
-    # layout sweep); audit every file's row groups in sorted-filename
-    # order with a global running index, so the report is
-    # deterministic for either layout.
-    files = (
-        sorted(glob.glob(os.path.join(table_path, "*.parquet")))
-        if os.path.isdir(table_path)
-        else [table_path]
-    )
+    # layout sweep); audit the files the scan reads (io.listing) in
+    # sorted-filename order with a global running index, so the report
+    # is deterministic for either layout.
+    files = listing(table_path)[0]
     rows = []
     g_global = 0
     for fp in files:
@@ -433,9 +426,9 @@ def scan_incremental_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from hbase_sep_spark.io import fixture_key, scratch_dir
 
-    # Keyed by the full-path digest so two sf_dirs in one session get
-    # distinct landings even with equal basenames (ADVICE-r12; the
-    # memo is per (appId, sf_dir) — the fixture must be too).
+    # Keyed like the plan memo, on the fixture's path and listing: two
+    # sf_dirs with equal basenames get distinct landings (ADVICE-r12),
+    # and an events table rewritten at the same path lands afresh.
     landing = scratch_dir(spark, "incremental_landing", fixture_key(sf_dir))
 
     done_flag = os.path.join(landing, "_written")
@@ -500,22 +493,17 @@ def agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver state, no per-group sort buffer); the mean is one
     map-side-combinable aggregate over the filtered scan with the
     1-row-per-group thresholds joined back by broadcast."""
-    from hbase_sep_spark.queries.aggregates import _PCTL_STATS_CACHE
     from hbase_sep_spark.operators import quantiles as _q
+    from hbase_sep_spark.queries.aggregates import price_stats
 
     li = t(spark, sf_dir, "lineitem")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    st = _PCTL_STATS_CACHE.get(key)
-    if st is None:
-        st = _q.compute_stats(li, "l_extendedprice", "l_linestatus")
-        _PCTL_STATS_CACHE.put(key, st)
     pq = _q.exact_percentiles(
         spark,
         li,
         "l_extendedprice",
         "l_linestatus",
         {"p05": 0.05, "p95": 0.95},
-        stats=st,
+        stats=price_stats(spark, sf_dir),
     )
     thresholds = pq.groupBy("l_linestatus").agg(
         F.max(F.when(F.col("qname") == "p05", F.col("value"))).alias("p05"),
@@ -751,17 +739,17 @@ def agg_median_abs_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(bins) driver state, no per-group sort buffer; the deviation
     frame adds one broadcast join over the scan."""
     from hbase_sep_spark.operators import quantiles as _q
-    from hbase_sep_spark.queries.aggregates import _PCTL_STATS_CACHE
+    from hbase_sep_spark.queries.aggregates import price_stats
 
     li = t(spark, sf_dir, "lineitem")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    st = _PCTL_STATS_CACHE.get(key)
-    if st is None:
-        st = _q.compute_stats(li, "l_extendedprice", "l_linestatus")
-        _PCTL_STATS_CACHE.put(key, st)
     med = (
         _q.exact_percentiles(
-            spark, li, "l_extendedprice", "l_linestatus", {"med": 0.5}, stats=st
+            spark,
+            li,
+            "l_extendedprice",
+            "l_linestatus",
+            {"med": 0.5},
+            stats=price_stats(spark, sf_dir),
         )
         .groupBy("l_linestatus")
         .agg(F.max("value").alias("med"))

@@ -17,7 +17,7 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hbase_sep_spark.io import LruCache, fixture_signature
+from hbase_sep_spark.io import fixture_paths, memo
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -37,25 +37,22 @@ class Query:
 REGISTRY: dict[str, Query] = {}
 
 
-def _memoized(fn: QueryFn) -> QueryFn:
+def _memoized(name: str, fn: QueryFn) -> QueryFn:
     """Per-(session, fixture listing) DataFrame memo for deterministic
     batch queries: the builders are pure, so the analyzed/optimized
     plan (and its codegen) is reusable — repeat invocations pay
     execution only, not re-planning. Mirrors a production engine's
     plan cache. A plan's scans are fixed to the files listed when it
-    was built, so the key carries io.fixture_signature: a table that
-    grows (a segment appended to a directory feed) or is rewritten
-    re-plans instead of serving the old files. LRU-bounded, so a
-    growing feed cannot grow the memo without bound."""
-    cache: LruCache[DataFrame] = LruCache(maxsize=64)
+    was built, so it is memoized on every registry table's listing
+    (io.memo): a table that grows (a segment appended to a directory
+    feed) or is rewritten re-plans instead of serving the old files.
+    One LRU per query, so a growing feed cannot grow the memo without
+    bound."""
 
     def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (spark.sparkContext.applicationId, sf_dir, fixture_signature(sf_dir))
-        df = cache.get(key)
-        if df is None:
-            df = fn(spark, sf_dir)
-            cache.put(key, df)
-        return df
+        return memo(
+            f"plan:{name}", fixture_paths(sf_dir), lambda: fn(spark, sf_dir), spark=spark
+        )
 
     wrapper.__name__ = fn.__name__
     wrapper.__doc__ = fn.__doc__
@@ -82,7 +79,7 @@ def register(
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
         do_memo = (oracle is not None) if memoize is None else memoize
-        wrapped = _memoized(fn) if do_memo else fn
+        wrapped = _memoized(name, fn) if do_memo else fn
         REGISTRY[name] = Query(
             name=name, fn=wrapped, oracle=oracle, section=section, raw=fn
         )

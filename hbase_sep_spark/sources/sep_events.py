@@ -50,7 +50,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from hbase_sep_spark.io import LruCache, listing
+from hbase_sep_spark.io import listing, memo
 
 EVENT_SCHEMA = StructType(
     [
@@ -75,6 +75,20 @@ class SepRange(InputPartition):
     step: int = 1
 
 
+# Per-segment footer facts are memoized one file each, so an append
+# reads one new footer, not every footer. The bound holds four
+# 1,000-segment feeds (an entry is a path and three small values).
+_FOOTER_MEMO_SIZE = 4096
+
+
+def _footer_facts(fp: str) -> tuple:
+    """(rows, ts min, ts max) of one segment, from its footer alone."""
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(fp).metadata
+    return (md.num_rows, *_ts_stats_range(md))
+
+
 def _feed_segments(path: str) -> tuple[tuple[str, int, int], ...]:
     """The feed as an ordered list of (file, base_offset, n_rows)
     segments. A single parquet file is the one-segment case; a
@@ -86,32 +100,28 @@ def _feed_segments(path: str) -> tuple[tuple[str, int, int], ...]:
     segment order is (ts, event_id)-sorted (asserted in tests for the
     fixture generator).
 
-    Footer-only: per segment, one metadata read. Memoized per
-    (path, listing-signature) — the signature is each file's
-    (name, size, mtime_ns), so a feed regenerated or rewritten AT THE
-    SAME PATH inside a live process (the driver's testdata-regeneration
-    precedent) misses the memo and re-reads footers instead of serving
-    stale offsets — wrong replay slices and feed_total otherwise.
-    Signature cost is one listdir + one stat per segment, paid every
-    call; only the footer reads are memoized. (At cluster scale the
-    same information would come from the table format's manifest
+    Footer-only: each segment's footer facts are read once per
+    listing of that one file (io.memo), so a segment appended to a
+    live feed costs one footer read, and a feed regenerated or
+    rewritten AT THE SAME PATH inside a live process (the driver's
+    testdata-regeneration precedent) re-reads the changed files
+    instead of serving stale offsets — wrong replay slices and
+    feed_total otherwise. Every call pays the listing (one listdir
+    and a stat per segment) and the order check. (At cluster scale
+    the same information would come from the table format's manifest
     instead of footers; the memo is the single-process stand-in.)
     """
-    files, sig = listing(path)
+    files = listing(path)[0]
     if not files:
         raise FileNotFoundError(f"no *.parquet segments under {path}")
-    cached = _SEGMENT_CACHE.get((path, sig))
-    if cached is not None:
-        return cached
-    import pyarrow.parquet as pq
-
     segs = []
     base = 0
     prev_max_ts = None
     prev_fp = None
     for fp in files:
-        md = pq.ParquetFile(fp).metadata
-        n = md.num_rows
+        n, mn, mx = memo(
+            "segment_footer", fp, lambda: _footer_facts(fp), maxsize=_FOOTER_MEMO_SIZE
+        )
         # Feed-contract check (footer-only): sorted-filename order must
         # be ts-order. A regenerated feed named data_9/data_10 sorts
         # 10-before-9 LEXICALLY and would silently corrupt every replay
@@ -127,7 +137,6 @@ def _feed_segments(path: str) -> tuple[tuple[str, int, int], ...]:
         # verified footer-only, and doesn't need to be: every consumer
         # tie-breaks on event_id). Stats min/max exclude NULL ts rows,
         # which the transport dead-letters anyway.
-        mn, mx = _ts_stats_range(md)
         if (
             mn is not None
             and prev_max_ts is not None
@@ -145,9 +154,7 @@ def _feed_segments(path: str) -> tuple[tuple[str, int, int], ...]:
             prev_max_ts, prev_fp = mx, fp
         segs.append((fp, base, n))
         base += n
-    out = tuple(segs)
-    _SEGMENT_CACHE.put((path, sig), out)
-    return out
+    return tuple(segs)
 
 
 def _ts_stats_range(md) -> tuple:
@@ -172,9 +179,6 @@ def _ts_stats_range(md) -> tuple:
         mn = st.min if mn is None else min(mn, st.min)
         mx = st.max if mx is None else max(mx, st.max)
     return mn, mx
-
-
-_SEGMENT_CACHE: LruCache[tuple[tuple[str, int, int], ...]] = LruCache(maxsize=64)
 
 
 def feed_total(path: str) -> int:
@@ -518,14 +522,18 @@ def register_sep_source(spark) -> None:
     The DataSource is unpickled inside Spark's
     python_streaming_source_runner subprocess, which does NOT see
     addPyFile-shipped modules (that mechanism only wraps task
-    execution). Registering this module for pickle-BY-VALUE makes the
-    class fully self-contained on the wire, so registration works no
-    matter what the launching process's cwd or sys.path is."""
+    execution). Registering this module, and `hbase_sep_spark.io`
+    that it imports, for pickle-BY-VALUE makes the class fully
+    self-contained on the wire, so registration works no matter what
+    the launching process's cwd or sys.path is."""
     import sys
 
     from pyspark import cloudpickle
 
+    from hbase_sep_spark import io
+
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    cloudpickle.register_pickle_by_value(io)
     _ensure_package_on_workers(spark)
     spark.dataSource.register(SepEventsDataSource)
 
@@ -547,12 +555,6 @@ def read_stream(spark, path: str, **options):
 # cursor resumed after a week, would lose segments. The seen-files map
 # then never purges, so it holds one entry per segment of the feed.
 _NEVER_AGE_OUT = "1000000d"
-
-
-# (applicationId, first segment's listing entry) → its Spark schema.
-# Inferring it runs a Spark job (~0.12 s warm), once per start();
-# a live feed's first segment never changes.
-_SCHEMA_CACHE: LruCache = LruCache(maxsize=64)
 
 
 def _check_landing_order(sig: tuple) -> None:
@@ -606,11 +608,10 @@ def read_segments(spark, path: str, batch_size: int | str = "auto"):
     per_trigger = max(1, -(-rows * len(segs) // total)) if total else len(segs)
     # TIMESTAMP(NANOS) segments scan as int64 (io.events_raw's setting).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (spark.sparkContext.applicationId, sig[0])
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(segs[0][0]).schema
-        _SCHEMA_CACHE.put(key, schema)
+    # Inferring the schema runs a Spark job (~0.12 s warm), so it is
+    # memoized on the first segment, which a live feed never changes.
+    first = segs[0][0]
+    schema = memo("segment_schema", first, lambda: spark.read.parquet(first).schema, spark=spark)
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", per_trigger)

@@ -11,10 +11,15 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import shutil
+from collections import Counter
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+
+from hbase_sep_spark import io
+from hbase_sep_spark.sources.sep_events import feed_total
 
 TS = [
     dt.datetime(2024, 1, 1, 0, 0, 0, 123456),
@@ -78,9 +83,10 @@ def test_events_raw_is_filterable_both_encodings(spark, tmp_path):
 
 
 def test_lru_cache_bounds_and_recency():
-    """The session caches (io._SCAN_CACHE, aggregates._PCTL_STATS_CACHE)
-    are LRU-bounded: size never exceeds maxsize, eviction is
-    oldest-first, and a get() refreshes recency (judge nit r3/r4)."""
+    """The store behind io.memo (one LruCache per tag: scans, plans,
+    price stats, footer facts) is LRU-bounded: size never exceeds
+    maxsize, eviction is oldest-first, and a get() refreshes recency
+    (judge nit r3/r4)."""
     from hbase_sep_spark.io import LruCache
 
     c: LruCache[int] = LruCache(maxsize=3)
@@ -96,14 +102,17 @@ def test_lru_cache_bounds_and_recency():
     assert len(c) == 3 and c.get("k3") == 33
 
 
-def test_scan_cache_is_bounded_type():
-    """The live module-level caches actually ARE the bounded type."""
-    from hbase_sep_spark import io
+def test_scan_cache_is_bounded_type(spark):
+    """The live memo stores behind the scan and the price stats
+    actually ARE the bounded type."""
     from hbase_sep_spark.queries import aggregates
+    from tests.conftest import SF_UNIT
 
-    assert isinstance(io._SCAN_CACHE, io.LruCache)
-    assert isinstance(aggregates._PCTL_STATS_CACHE, io.LruCache)
-    assert io._SCAN_CACHE.maxsize >= 16  # ample for 10 tables × few sf dirs
+    io.t(spark, SF_UNIT, "lineitem")
+    aggregates.price_stats(spark, SF_UNIT)
+    assert isinstance(io._MEMOS["scan"], io.LruCache)
+    assert isinstance(io._MEMOS["price_stats"], io.LruCache)
+    assert io._MEMOS["scan"].maxsize >= 16  # ample for 10 tables × few sf dirs
 
 
 def test_listing_skips_hidden_files_like_spark(spark, tmp_path):
@@ -146,3 +155,155 @@ def test_memoized_query_sees_appended_segment(spark, tmp_path):
     assert q(spark, str(tmp_path)) is first  # an unchanged feed hits the memo
     pq.write_table(src.slice(600), str(feed / "part-001.parquet"))
     assert q(spark, str(tmp_path)).count() == src.num_rows
+
+
+def _write_int_ts_events(sf_dir, n: int, unit: str) -> None:
+    """The first `n` sf0.001 events as events.parquet under `sf_dir`,
+    ts an unannotated int64 epoch in `unit` (the CDC wire shape)."""
+    from tests.conftest import SF_UNIT
+
+    src = pq.read_table(f"{SF_UNIT}/events.parquet").slice(0, n)
+    us = src.column("ts").cast(pa.timestamp("us")).cast(pa.int64())
+    per = {"s": 10**6, "ms": 10**3}[unit]
+    ts = pa.array([v // per for v in us.to_pylist()], pa.int64())
+    pq.write_table(src.set_column(1, "ts", ts), os.path.join(sf_dir, "events.parquet"))
+
+
+_MEMO_KINDS = {
+    "scan": lambda spark, sf: io.t(spark, sf, "events").count(),
+    "events_raw": lambda spark, sf: io.events_raw(spark, sf).count(),
+    "table_rows": lambda spark, sf: io.table_rows(sf, "events"),
+    "feed_segments": lambda spark, sf: feed_total(f"{sf}/events.parquet"),
+    "int_ts_unit": lambda spark, sf: io.int_ts_unit(f"{sf}/events.parquet"),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_MEMO_KINDS))
+def test_memo_sees_same_path_rewrite(spark, tmp_path, kind):
+    """Each memoized kind, read, then its file rewritten at the same
+    path (fewer rows, int ts in another unit) and read again in the
+    same process: the second read sees the new file (io.memo keys on
+    the listing signature, never on the path alone)."""
+    read = _MEMO_KINDS[kind]
+    for n, unit in ((600, "ms"), (400, "s")):
+        _write_int_ts_events(str(tmp_path), n, unit)
+        assert read(spark, str(tmp_path)) == (unit if kind == "int_ts_unit" else n)
+
+
+def _copy_fixture(dst) -> str:
+    """A writable copy of the sf0.001 tables (the source is read-only)."""
+    from tests.conftest import SF_UNIT
+
+    os.makedirs(dst)
+    for f in os.listdir(SF_UNIT):
+        shutil.copyfile(os.path.join(SF_UNIT, f), os.path.join(dst, f))
+    return str(dst)
+
+
+def test_percentile_queries_follow_a_lineitem_rewrite(spark, tmp_path):
+    """In one session, lineitem rewritten at the same path (every other
+    row, prices moved above the old maximum): the three exact-percentile
+    queries must still equal their DuckDB oracles. Their shared price
+    histogram is memoized on lineitem's listing; keyed on the fixture
+    path alone it located the new table's percentiles in the old bins
+    (NULL medians, zero rows)."""
+    import pyarrow.compute as pc
+
+    from hbase_sep_spark.registry import load_all
+    from tests.harness import check_query, duck_connection
+
+    reg = load_all()
+    names = ("agg_median_percentile", "agg_trimmed_mean", "agg_median_abs_deviation")
+    sf = _copy_fixture(tmp_path / "sf")
+    path = os.path.join(sf, "lineitem.parquet")
+    for rewrite in (False, True):
+        if rewrite:
+            li = pq.read_table(path)
+            li = li.take(pa.array(range(0, li.num_rows, 2)))
+            i = li.schema.get_field_index("l_extendedprice")
+            price = pc.add(pc.multiply(li.column(i), 3.0), 200000.0)
+            pq.write_table(li.set_column(i, "l_extendedprice", price), path)
+        con = duck_connection(sf)
+        try:
+            for name in names:
+                res = check_query(name, reg[name], spark, con, sf)
+                assert res["status"] == "ok", (rewrite, name, res)
+        finally:
+            con.close()
+
+
+def test_incremental_manifest_follows_an_events_rewrite(spark, tmp_path):
+    """In one session, events rewritten at the same path with half its
+    rows: scan_incremental_manifest must then count the new feed's
+    unprocessed bucket (event_id % 3 == 2). Its persisted landing is
+    keyed by io.fixture_key, which now digests the listing; keyed on
+    the path alone the old landing was served (click 76 where 34 is
+    right)."""
+    from hbase_sep_spark.registry import load_all
+
+    q = load_all()["scan_incremental_manifest"].fn
+    sf = _copy_fixture(tmp_path / "sf")
+    path = os.path.join(sf, "events.parquet")
+    for rewrite in (False, True):
+        if rewrite:
+            ev = pq.read_table(path)
+            pq.write_table(ev.slice(0, ev.num_rows // 2), path)
+        ev = pq.read_table(path).to_pydict()
+        want = Counter(
+            et for eid, et in zip(ev["event_id"], ev["event_type"]) if eid % 3 == 2
+        )
+        got = {r.event_type: r.n_new_rows for r in q(spark, sf).collect()}
+        assert got == dict(want) and got, rewrite
+
+
+def test_appended_segment_reads_one_footer(tmp_path, monkeypatch):
+    """Footer facts are memoized per segment file: after a three-segment
+    feed is indexed, appending a fourth segment opens exactly one
+    footer (the whole-listing memo re-read all four)."""
+    from tests.conftest import SF_UNIT, land_segment, write_segments
+
+    src = pq.read_table(f"{SF_UNIT}/events.parquet")
+    feed = write_segments(src.slice(0, 750), tmp_path / "feed", 3)
+    assert feed_total(feed) == 750
+    land_segment(src.slice(750), feed, 3)
+    opened = []
+    real = pq.ParquetFile
+    monkeypatch.setattr(pq, "ParquetFile", lambda fp, *a, **k: opened.append(fp) or real(fp, *a, **k))
+    assert feed_total(feed) == src.num_rows
+    assert len(opened) == 1, opened
+
+
+def test_rowgroup_audit_reads_the_files_spark_reads(spark, tmp_path):
+    """A directory lineitem holding a writer's `_tmp.parquet`: the
+    row-group audit lists the table through io.listing, so its row
+    counts sum to what Spark's scan reads (a `*.parquet` glob counted
+    the hidden file too)."""
+    from hbase_sep_spark.registry import load_all
+    from tests.conftest import SF_UNIT
+
+    src = pq.read_table(f"{SF_UNIT}/lineitem.parquet")
+    d = tmp_path / "lineitem.parquet"
+    d.mkdir()
+    pq.write_table(src.slice(0, 2000), str(d / "part-000.parquet"))
+    pq.write_table(src.slice(2000), str(d / "part-001.parquet"))
+    pq.write_table(src.slice(0, 500), str(d / "_tmp.parquet"))
+    rows = load_all()["scan_rowgroup_stats_audit"].fn(spark, str(tmp_path)).collect()
+    assert sum(r.n_rows for r in rows) == spark.read.parquet(str(d)).count()
+
+
+def test_only_io_builds_cache_keys():
+    """`LruCache(` and `sparkContext.applicationId` appear in io.py
+    alone across the package: every memo keys on the file listing
+    through io.memo, so no module can hand-roll a path-only key."""
+    import pathlib
+
+    import hbase_sep_spark
+
+    root = pathlib.Path(hbase_sep_spark.__file__).parent
+    offenders = [
+        str(p.relative_to(root))
+        for p in sorted(root.rglob("*.py"))
+        if p != root / "io.py"
+        and any(s in p.read_text() for s in ("LruCache(", "sparkContext.applicationId"))
+    ]
+    assert offenders == []

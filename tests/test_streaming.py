@@ -26,6 +26,48 @@ def test_stream_replay_equals_batch(spark):
     assert diff.count() == 0
 
 
+def test_sep_source_runs_from_outside_the_checkout(tmp_path):
+    """The verify recipe's driver simulation: a plain session in a
+    process whose working directory is outside the checkout and whose
+    PYTHONPATH is unset, the repo only on sys.path. The Python source
+    runner unpickles the DataSource without the package importable, so
+    every module the source uses must be pickled by value (it failed
+    with "No module named 'hbase_sep_spark'" when io was not)."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        f"import sys; sys.path.insert(0, {repo!r})\n"
+        "from pyspark.sql import SparkSession\n"
+        "import __spark_entry__ as m\n"
+        "spark = SparkSession.builder.master('local[2]').getOrCreate()\n"
+        f"print('rows', m.queries()['stream_sep_source'](spark, {SF_UNIT!r}).count())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    assert "rows 1000" in out.stdout
+
+
+def test_source_pickles_without_memoized_values(spark):
+    """io is pickled by value with the source, and io.memo's store
+    with it: the store pickles empty, so the session's memoized
+    DataFrames (which do not pickle) never ride along to the runner."""
+    from pyspark import cloudpickle
+
+    from hbase_sep_spark.sources.sep_events import SepEventsDataSource, register_sep_source
+
+    register_sep_source(spark)
+    t(spark, SF_UNIT, "events")
+    assert cloudpickle.loads(cloudpickle.dumps(SepEventsDataSource)).name() == "sep_events"
+
+
 def test_stream_dedup_is_exactly_once(spark):
     """At-least-once feed (redeliveries injected) + watermark dedup ==
     the clean feed's per-type counts."""

@@ -157,6 +157,29 @@ EVENTS_CLASSES = (
     "nonfinite", "null", "nullts", "nullkeys", "tie", "uninames", "unsigned",
     "zerorow", "zerorow_events",
 )
+def test_directory_subscription_follows_a_rewritten_first_segment(spark, tmp_path):
+    """The scan schema comes from the first segment, memoized on that
+    file's listing: after the feed is rewritten at the same path with
+    an int64 epoch-ms ts (the Debezium wire shape), the next start
+    reads it with the new schema and delivers the same instants."""
+    from pyspark.sql import functions as F
+
+    events = _events().slice(0, 500)
+    us = events.column("ts").cast(pa.timestamp("us")).cast(pa.int64())
+    ms = pa.array([v // 1000 for v in us.to_pylist()], pa.int64())
+    feed = str(tmp_path / "feed")
+    for i, tbl in enumerate((events, events.set_column(1, "ts", ms).slice(0, 400))):
+        land_segment(tbl, feed, 0)
+        want = dict(zip(tbl.column("event_id").to_pylist(), ms.to_pylist()))
+        got: dict = {}
+
+        def listener(batch_df, epoch_id):
+            got.update(tuple(r) for r in batch_df.select("event_id", F.unix_millis("ts")).collect())
+
+        _drain(SepSubscription(spark, f"rewrite{i}", feed, root=str(tmp_path / "subs")).start(listener))
+        assert got == want, i
+
+
 _EPOCH = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
 
 
