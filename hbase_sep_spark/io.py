@@ -49,12 +49,6 @@ class LruCache(Generic[_V]):
     def __contains__(self, key: Hashable) -> bool:
         return key in self._d
 
-    def __reduce__(self):
-        # A cache is process-local: a function that uses one is pickled
-        # to a worker (sep_events is pickled by value) with an empty
-        # copy, never with its values — DataFrames do not pickle.
-        return (LruCache, (self.maxsize,))
-
 
 TABLES = (
     "region",
@@ -70,20 +64,32 @@ TABLES = (
 )
 
 
+# Session scratch roots this process has made; each is removed when
+# the process exits.
+_SCRATCH_ROOTS: set[str] = set()
+
+
 def scratch_dir(spark: SparkSession, *parts: str) -> str:
-    """Session-scoped scratch path for sink/roundtrip artifacts:
-    <tmp>/hbase_sep_spark/<applicationId>/<parts...>.
+    """Session-scoped scratch path for sink/roundtrip artifacts and
+    replay slices: <tmp>/hbase_sep_spark/<applicationId>/<parts...>.
 
     Scoping by applicationId keeps concurrent harness/driver runs (or
     other users on a shared machine) from clobbering each other's
     files between an eager write and a lazy read-back — the same
-    reason the streaming checkpoints already use mkdtemp."""
+    reason the streaming checkpoints already use mkdtemp. The
+    session's root is removed at interpreter exit (an atexit hook
+    registered the first time it is used), so runs do not leave their
+    scratch behind."""
+    import atexit
     import os
+    import shutil
     import tempfile
 
-    path = os.path.join(
-        tempfile.gettempdir(), "hbase_sep_spark", spark.sparkContext.applicationId, *parts
-    )
+    root = os.path.join(tempfile.gettempdir(), "hbase_sep_spark", spark.sparkContext.applicationId)
+    if root not in _SCRATCH_ROOTS:
+        _SCRATCH_ROOTS.add(root)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    path = os.path.join(root, *parts)
     os.makedirs(path, exist_ok=True)
     return path
 
@@ -156,6 +162,7 @@ def memo(
     build: Callable[[], _V],
     *,
     spark: SparkSession | None = None,
+    args: tuple = (),
     maxsize: int = 64,
 ) -> _V:
     """The one cache-key rule: `build()`'s value for `paths` as they are
@@ -165,15 +172,17 @@ def memo(
     The key is built here and nowhere else: each path with its listing
     signature — a table that grows, is rewritten at the same path or
     disappears misses and is rebuilt, never served stale — plus the
-    session's applicationId when `spark` is given. Pass `spark` when
-    the value is bound to the session (a DataFrame, or anything a
-    Spark job computed under its conf). Every call pays the listing
-    (a stat or two per file); only `build()` is saved."""
+    session's applicationId when `spark` is given, plus `args`, the
+    parameters other than the files that `build()` depends on. Pass
+    `spark` when the value is bound to the session (a DataFrame, or
+    anything a Spark job computed under its conf). Every call pays the
+    listing (a stat or two per file); only `build()` is saved."""
     if isinstance(paths, str):
         paths = (paths,)
     key = (
         spark.sparkContext.applicationId if spark is not None else None,
         tuple((p, _signature(p)) for p in paths),
+        args,
     )
     cache = _MEMOS.get(tag)
     if cache is None:

@@ -15,32 +15,26 @@ SepModelImpl.java — UNVERIFIED], SURVEY §1.1):
   recovery that SEP demands of its listeners
   ([R: sep-api/.../EventListener.java — UNVERIFIED]).
 
-Implementation: Spark 4 Python DataSource (pyspark.sql.datasource)
-with a partition-based DataSourceStreamReader — the 100 TB shape:
-- offsets are row positions in the ts-ordered feed; the DRIVER only
-  ever touches the parquet FOOTER (row count) and arithmetic — the
-  feed itself is never materialized driver-side;
-- `partitions(start, end)` splits each micro-batch into row ranges;
-- `read(partition)` runs on the WORKERS, reading only the parquet
-  row groups overlapping its range (row-group pruning + slicing).
-A 100 TB feed replays with driver state = one integer per batch and
-per-worker IO = its own row-group slice. (The previous implementation
-used SimpleDataSourceStreamReader, which is driver-side by contract —
-it loaded the whole feed into a Python list on the driver.)
-
-A SepSubscription over a segment DIRECTORY does not use this reader:
-`read_segments` serves it from Spark's built-in parquet file source
-with the same transport contract in Spark expressions, which avoids
-the per-start Python source runner and sees segments that land while
-the query runs. Single-file feeds and `read_stream` (the 18 stream_*
-queries) stay on the reader below.
+Implementation: one transport, Spark's parquet file source. A
+streaming source only has to be replayable and paired with the offset
+log, and a set of immutable parquet files is exactly that; offsets are
+the file source's own (`{"logOffset": N}` plus its seen-files log).
+- A segment DIRECTORY, the shape a real feed has, is read in place by
+  `read_segments`, with `_read_table`'s edge rules as Spark
+  expressions and pacing in whole segments. It is never copied.
+- Any other replay (`read_stream`: the 18 stream_* queries and a
+  single-file SepSubscription) is first cut by `cut_slices` into one
+  parquet SLICE per micro-batch, each one `_read_table` range (plus
+  the redelivered sample of the previous batch), and the file source
+  reads the slices one per trigger (`read_slices`). The driver holds
+  one slice at a time, never the feed.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import os
+import tempfile
 
-from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -50,7 +44,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from hbase_sep_spark.io import listing, memo
+from hbase_sep_spark.io import listing, memo, scratch_dir
 
 EVENT_SCHEMA = StructType(
     [
@@ -62,17 +56,6 @@ EVENT_SCHEMA = StructType(
         StructField("props", StringType()),
     ]
 )
-
-
-@dataclass
-class SepRange(InputPartition):
-    """One worker's slice of a micro-batch: feed rows [lo, hi),
-    optionally strided (redelivery partitions re-emit every `step`-th
-    row of the previous batch)."""
-
-    lo: int
-    hi: int
-    step: int = 1
 
 
 # Per-segment footer facts are memoized one file each, so an append
@@ -198,6 +181,12 @@ def feed_batch_size(path: str, floor: int, n_batches: int) -> int:
     return max(floor, feed_total(path) // n_batches)
 
 
+def batch_rows(path: str, batch_size: int | str) -> int:
+    """Rows per micro-batch: an explicit `batch_size`, or for "auto"
+    `feed_batch_size`'s (2500, 4) rule."""
+    return feed_batch_size(path, 2500, 4) if batch_size == "auto" else int(batch_size)
+
+
 def _file_chunks(fp: str, lo: int, hi: int):
     """Row-group-sliced read of file-local rows [lo, hi): only row
     groups overlapping the range are fetched; the slice is exact
@@ -221,15 +210,14 @@ def _file_chunks(fp: str, lo: int, hi: int):
 
 
 def _read_table(path: str, lo: int, hi: int, step: int = 1):
-    """Worker-side range read of GLOBAL feed rows [lo, hi) as a
-    NORMALIZED arrow table: segments overlapping the range are visited
-    in feed order, and within each only the overlapping row groups are
-    fetched. Returns None for an empty range.
+    """Range read of GLOBAL feed rows [lo, hi) as a NORMALIZED arrow
+    table: segments overlapping the range are visited in feed order,
+    and within each only the overlapping row groups are fetched.
+    Returns None for an empty range.
 
-    All feed-edge contracts live here (round 13 — hoisted from the old
-    row-at-a-time `_read_rows` so the streaming `read()` can hand the
-    same table to Spark as arrow RecordBatches with zero per-row
-    Python work):
+    All feed-edge contracts live here; `cut_slices` writes these tables
+    as the replay's slices and `read_segments` mirrors the same rules
+    as Spark expressions:
 
     - Physical-type normalization, mirroring io._normalize_unsigned's
       scan-edge rule: DECIMAL columns (decimal-money regeneration of
@@ -327,8 +315,7 @@ def _read_table(path: str, lo: int, hi: int, step: int = 1):
 def _read_rows(path: str, lo: int, hi: int, step: int = 1):
     """Row-tuple view of `_read_table` (EVENT_SCHEMA order, tz-aware
     UTC timestamps) — the batch seam consumers and the test pins use
-    this; the streaming hot path hands the arrow table to Spark
-    directly via `read()`."""
+    this; the slicer writes the arrow table itself."""
     tbl = _read_table(path, lo, hi, step)
     if tbl is None or tbl.num_rows == 0:
         return iter(())
@@ -336,225 +323,84 @@ def _read_rows(path: str, lo: int, hi: int, step: int = 1):
     return iter(tuple(r[n] for n in names) for r in tbl.to_pylist())
 
 
-class SepEventsStreamReader(DataSourceStreamReader):
-    def __init__(self, options: dict):
-        self.path = options["path"]
-        # The rate limit (rows per trigger). Explicit option values are
-        # honored verbatim; the DEFAULT is feed_batch_size's 2500-row
-        # floor over ~4 batches, so a 100 TB feed is not billions of
-        # micro-batches (production sources tune maxOffsetsPerTrigger
-        # to throughput the same way).
-        raw_bs = options.get("batch_size", "auto")
-        self.batch_size = (
-            feed_batch_size(self.path, 2500, 4) if raw_bs == "auto" else int(raw_bs)
-        )
-        self.redeliver_every = int(options.get("redeliver_every", "0"))
-        # Rows per worker partition within one micro-batch (the
-        # parallelism knob; at cluster scale this tracks row-group
-        # granularity instead). Default keeps ~20 partitions per
-        # batch once the adaptive rate limit kicks in.
-        raw_rpp = options.get("rows_per_partition", "auto")
-        self.rows_per_partition = (
-            max(1250, self.batch_size // 20) if raw_rpp == "auto" else int(raw_rpp)
-        )
-        # Non-zero start_row = the late-subscriber bootstrap seam: a
-        # batch snapshot covers [0, start_row), the stream tails from
-        # there (see stream_bootstrap_then_tail).
-        self.start_row = int(options.get("start_row", "0"))
-        self._n_rows: int | None = None
-        self._pos = self.start_row
-        # Delivered high-water mark: the max feed position ever seen in
-        # a planned batch or commit. Guards the restart edge where a
-        # fresh reader's first latestOffset() trails the restored
-        # committed offset (Spark compares offsets as opaque JSON, so a
-        # trailing offset still gets logged as a batch END and the
-        # next batch would otherwise re-emit acked rows).
-        self._hwm = self.start_row
-
-    # -- driver-side: offset arithmetic only ---------------------------
-    def _total(self) -> int:
-        if self._n_rows is None:
-            # Footer-only reads: no feed data touches the driver
-            # (handles both a single feed file and a segment dir).
-            self._n_rows = feed_total(self.path)
-        return self._n_rows
-
-    def initialOffset(self) -> dict:
-        return {"row": self.start_row}
-
-    def latestOffset(self) -> dict:
-        # Advance at most one batch per trigger (the rate limit that
-        # makes the finite replay multi-batch, which the watermark /
-        # late-data queries depend on).
-        #
-        # Restart semantics: a restarted query constructs a FRESH
-        # reader (_pos = start_row) and Spark offers no restore
-        # callback before the first latestOffset(), so the first
-        # returned offset after a restart can trail the restored
-        # committed offset. Spark compares offsets as opaque JSON, so
-        # it plans one (committed -> trailing) batch; partitions()
-        # clamps that to an EMPTY range (hi < lo emits nothing) and
-        # re-syncs _pos from the batch START — the restored committed
-        # position — so the very next trigger resumes exactly at the
-        # checkpoint with no redelivery of acked rows.
-        self._pos = min(self._pos + self.batch_size, self._total())
-        return {"row": self._pos}
-
-    def partitions(self, start: dict, end: dict):
-        lo, hi = start["row"], end["row"]
-        hwm = self._hwm
-        # Re-sync the rate limiter and high-water mark from BOTH ends:
-        # `lo` carries the restored checkpoint position on the first
-        # post-restart batch (where hi may trail it — see
-        # latestOffset()).
-        self._hwm = max(hwm, lo, hi)
-        self._pos = max(self._pos, lo, hi)
-        # Suppress rows this reader instance already planned: after a
-        # backward-offset episode the engine's next batch start is the
-        # trailing END, so [lo, hwm) duplicates acked rows. In healthy
-        # operation hwm == lo (each batch starts where the last ended)
-        # and this is the identity. An uncommitted last batch replayed
-        # on restart has hwm == start_row <= lo, so replay (the
-        # at-least-once path Spark itself drives) is unaffected.
-        lo_eff = max(lo, hwm)
-        if hi <= lo_eff:
-            # Post-restart trailing batch (hi < lo) or fully-acked
-            # range: nothing new to read.
-            return [SepRange(lo=hi, hi=hi)]
-        parts = [
-            SepRange(lo=p, hi=min(p + self.rows_per_partition, hi))
-            for p in range(lo_eff, hi, self.rows_per_partition)
-        ]
-        if self.redeliver_every and lo_eff > 0:
-            # At-least-once: one extra partition re-emitting a sample
-            # of the PREVIOUS batch.
-            parts.append(
-                SepRange(
-                    lo=max(0, lo_eff - self.batch_size),
-                    hi=lo_eff,
-                    step=self.redeliver_every,
-                )
-            )
-        return parts
-
-    def commit(self, end: dict) -> None:
-        # The durable position lives in the query checkpoint (Spark
-        # persists offsets); re-sync the rate limiter on restart.
-        self._pos = max(self._pos, end["row"])
-        self._hwm = max(self._hwm, end["row"])
-
-    # -- worker-side ----------------------------------------------------
-    def read(self, partition: SepRange):
-        # Hand Spark arrow RecordBatches, not Python rows: the worker
-        # forwards them to the JVM wholesale instead of converting and
-        # pickling row-by-row (round 13 — the normalized table already
-        # matches the declared schema exactly, tz-aware µs timestamps
-        # included).
-        tbl = _read_table(self.path, partition.lo, partition.hi, partition.step)
-        if tbl is None or tbl.num_rows == 0:
-            return iter(())
-        return iter(tbl.to_batches())
-
-
-class SepEventsDataSource(DataSource):
-    """spark.readStream.format("sep_events").option("path", ...)"""
-
-    @classmethod
-    def name(cls) -> str:
-        return "sep_events"
-
-    def schema(self):
-        return EVENT_SCHEMA
-
-    def streamReader(self, schema):
-        return SepEventsStreamReader(self.options)
-
-
-def _ensure_package_on_workers(spark) -> None:
-    """Ship the hbase_sep_spark package to Spark's Python workers.
-
-    The DataSource class is pickled by reference; the worker (and the
-    driver-side python_streaming_source_runner subprocess) must be
-    able to import the module — which fails whenever the launching
-    process's cwd isn't the repo root. addPyFile of a package zip is
-    the standard fix and covers every future task."""
-    flag = "spark.hbase_sep_spark.pyfiles.added"
-    try:
-        if spark.conf.get(flag, "no") == "yes":
-            return
-    except Exception:  # noqa: BLE001 - conf.get w/ default varies by version
-        pass
-    import atexit
-    import os
-    import tempfile
-    import zipfile
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    pkg_root = os.path.join(repo_root, "hbase_sep_spark")
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"hbase_sep_spark_pkg_{os.getpid()}.zip"
-    )
-    with zipfile.ZipFile(zpath, "w") as z:
-        for root, _dirs, files in os.walk(pkg_root):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    z.write(full, os.path.relpath(full, repo_root))
-    spark.sparkContext.addPyFile(zpath)
-    # addPyFile copies the zip into Spark's own file-server dir, so the
-    # temp copy is disposable — reap it at interpreter exit rather than
-    # leaking one zip per process (they accumulate across runs).
-    atexit.register(_rm, zpath)
-    spark.conf.set(flag, "yes")
-
-
-def _rm(path: str) -> None:
-    import contextlib
-    import os
-
-    with contextlib.suppress(OSError):
-        os.remove(path)
-
-
-def register_sep_source(spark) -> None:
-    """Idempotent registration of the sep_events format.
-
-    The DataSource is unpickled inside Spark's
-    python_streaming_source_runner subprocess, which does NOT see
-    addPyFile-shipped modules (that mechanism only wraps task
-    execution). Registering this module, and `hbase_sep_spark.io`
-    that it imports, for pickle-BY-VALUE makes the class fully
-    self-contained on the wire, so registration works no matter what
-    the launching process's cwd or sys.path is."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from hbase_sep_spark import io
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    cloudpickle.register_pickle_by_value(io)
-    _ensure_package_on_workers(spark)
-    spark.dataSource.register(SepEventsDataSource)
-
-
-def read_stream(spark, path: str, **options):
-    """The subscription's readStream: the sep_events source over the
-    feed at `path` (a file or a segment directory), each keyword one
-    source option (batch_size, redeliver_every, rows_per_partition,
-    start_row)."""
-    register_sep_source(spark)
-    reader = spark.readStream.format("sep_events").option("path", path)
-    for k, v in options.items():
-        reader = reader.option(k, str(v))
-    return reader.load()
-
-
 # FileStreamSource ignores a file older than its newest seen file minus
 # maxFileAge (default 7 days): a feed copied in with old mtimes, or a
 # cursor resumed after a week, would lose segments. The seen-files map
 # then never purges, so it holds one entry per segment of the feed.
 _NEVER_AGE_OUT = "1000000d"
+
+
+def _file_source(spark, path: str, schema, per_trigger: int):
+    """The parquet files of the directory `path` as a stream, oldest
+    modification time first, `per_trigger` files per micro-batch.
+
+    The glob, not the directory, is the source path: it applies the
+    listing rule (`*.parquet`, hidden names skipped) and lists in name
+    order, which the mtime sort keeps for ties."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", per_trigger)
+        .option("maxFileAge", _NEVER_AGE_OUT)
+        .parquet(os.path.join(path, "*.parquet"))
+    )
+
+
+def cut_slices(
+    path: str, out_dir: str, batch_size: int, redeliver_every: int = 0, start_row: int = 0
+) -> str:
+    """Write the feed at `path` into `out_dir` as one parquet slice per
+    micro-batch and return `out_dir`. Slice i holds feed rows [lo, hi),
+    lo = start_row + i * batch_size; with `redeliver_every`, it also
+    holds every `redeliver_every`-th row of [lo - batch_size, lo), the
+    at-least-once redelivery of the previous batch (from the second
+    slice on, or from the first when `start_row` > 0).
+
+    Each part is one `_read_table` range, so the slices carry the
+    transport's edge rules and the driver holds one slice at a time.
+    The footer ts-order check runs on the source feed (`feed_total`),
+    not on the slices, whose redelivered rows are out of ts order.
+    Slices are written in name order and only once, so their
+    modification times never decrease and the file source replays
+    them in order."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(out_dir, exist_ok=True)
+    total = feed_total(path)
+    for i, lo in enumerate(range(start_row, total, batch_size)):
+        parts = [_read_table(path, lo, min(lo + batch_size, total))]
+        if redeliver_every and lo > 0:
+            parts.append(_read_table(path, max(0, lo - batch_size), lo, redeliver_every))
+        pq.write_table(pa.concat_tables(parts), os.path.join(out_dir, f"slice-{i:09d}.parquet"))
+    return out_dir
+
+
+def read_slices(spark, out_dir: str):
+    """The slices `cut_slices` wrote to `out_dir`, one per trigger."""
+    return _file_source(spark, out_dir, EVENT_SCHEMA, 1)
+
+
+def read_stream(
+    spark, path: str, batch_size: int | str = "auto", redeliver_every: int = 0, start_row: int = 0
+):
+    """The replay of the feed at `path` (a file or a segment directory):
+    `batch_rows(path, batch_size)` rows per micro-batch, with the
+    `redeliver_every` at-least-once sample and from feed row
+    `start_row` (the late-subscriber bootstrap seam), as `cut_slices`
+    defines them.
+
+    The slices are cut once per session, feed listing and parameters
+    (io.memo), into a fresh dir under the session's scratch dir."""
+    rows = batch_rows(path, batch_size)
+
+    def cut() -> str:
+        out = tempfile.mkdtemp(prefix="slices_", dir=scratch_dir(spark, "slices"))
+        return cut_slices(path, out, rows, redeliver_every, start_row)
+
+    out_dir = memo(
+        "stream_slices", path, cut, spark=spark, args=(rows, redeliver_every, start_row)
+    )
+    return read_slices(spark, out_dir)
 
 
 def _check_landing_order(sig: tuple) -> None:
@@ -587,15 +433,8 @@ def read_segments(spark, path: str, batch_size: int | str = "auto"):
     - at start: the footer ts-order check (`_feed_segments`) and the
       landing-order check (`_check_landing_order`);
     - pacing in whole segments: `maxFilesPerTrigger` is the rows per
-      batch (`feed_batch_size`'s (2500, 4) rule, or an explicit int)
-      over the mean rows per segment, rounded up, at least 1.
-
-    The glob, not the directory, is the source path: it applies the
-    listing rule (`*.parquet`, hidden names skipped) and lists in name
-    order, which the mtime sort keeps for ties. Offsets are the file
-    source's own (`{"logOffset": N}` plus its seen-files log)."""
-    import os
-
+      batch (`batch_rows`) over the mean rows per segment, rounded up,
+      at least 1."""
     from pyspark.sql import functions as F
 
     from hbase_sep_spark.io import int_ts_to_session_expr, int_ts_unit
@@ -604,7 +443,7 @@ def read_segments(spark, path: str, batch_size: int | str = "auto"):
     _files, sig = listing(path)
     _check_landing_order(sig)
     total = segs[-1][1] + segs[-1][2]
-    rows = feed_batch_size(path, 2500, 4) if batch_size == "auto" else int(batch_size)
+    rows = batch_rows(path, batch_size)
     per_trigger = max(1, -(-rows * len(segs) // total)) if total else len(segs)
     # TIMESTAMP(NANOS) segments scan as int64 (io.events_raw's setting).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -612,12 +451,7 @@ def read_segments(spark, path: str, batch_size: int | str = "auto"):
     # memoized on the first segment, which a live feed never changes.
     first = segs[0][0]
     schema = memo("segment_schema", first, lambda: spark.read.parquet(first).schema, spark=spark)
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", per_trigger)
-        .option("maxFileAge", _NEVER_AGE_OUT)
-        .parquet(os.path.join(path, "*.parquet"))
-    )
+    raw = _file_source(spark, path, schema, per_trigger)
     if dict(raw.dtypes)["ts"] in ("decimal(20,0)", "int", "smallint", "tinyint", "bigint"):
         raw = raw.withColumn("ts", F.col("ts").cast("bigint"))
         ts = int_ts_to_session_expr(int_ts_unit(path))

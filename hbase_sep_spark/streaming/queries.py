@@ -1,10 +1,11 @@
 """§2.10 Streaming queries + §2.1 stream_sep_source.
 
 Each callable runs a REAL Structured Streaming query over the events
-feed (via the sep_events Python DataSource or the parquet file
-source), drives it to completion with processAllAvailable() — the
-deterministic finite-replay form of a subscription — and returns the
-materialized result. All are rows-only checks by design
+feed (`sep_events.read_stream`: the feed cut into per-batch parquet
+slices, read by Spark's file source one slice per trigger), drives it
+to completion with processAllAvailable() — the deterministic
+finite-replay form of a subscription — and returns the materialized
+result. All are rows-only checks by design
 (SURVEY §2.10): DuckDB has no streaming semantics to oracle against.
 
 Watermarks/windows follow the events fixture (30 days of data,
@@ -50,46 +51,31 @@ def _drive(spark: SparkSession, *writers: DataStreamWriter) -> list[str]:
     all, and return their checkpoint dirs in writer order.
 
     All writers are live before any drains — concurrent consumers, not
-    sequential replays. If the Python worker for the datasource fails
-    to spawn (a transient environment failure under heavy session
-    load, not a query error: "failed to connect back"), the writers
-    that did not finish are restarted on new checkpoints, up to three
-    attempts in all; any other error is raised.
+    sequential replays.
 
     Shuffle partitions are pinned to 8 for the queries' lifetime (and
     the caller's setting restored after): each stateful operator
     keeps one state store PER shuffle partition per micro-batch, so a
     session-default 200 turns a 10-batch replay into 2000 state-store
     round trips — a 5-10× slowdown measured with a default-conf
-    session. Checkpoints are fresh per attempt, so the pinned value
-    never conflicts with a prior run's state layout.
+    session. Checkpoints are fresh per run, under the session's scratch
+    dir, so the pinned value never conflicts with a prior run's state
+    layout.
     """
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     spark.conf.set(key, "8")
-    done: dict[int, str] = {}
+    ckpts = [tempfile.mkdtemp(dir=scratch_dir(spark, "checkpoints")) for _ in writers]
+    live = []
     try:
-        for _attempt in range(3):
-            live = []
-            try:
-                for i, w in enumerate(writers):
-                    if i not in done:
-                        ckpt = tempfile.mkdtemp(prefix="sep_ckpt_")
-                        live.append((i, ckpt, w.option("checkpointLocation", ckpt).start()))
-                for i, ckpt, q in live:
-                    q.processAllAvailable()
-                    done[i] = ckpt
-            except Exception as e:  # noqa: BLE001
-                if "failed to connect back" not in str(e):
-                    raise
-                last_exc = e
-            finally:
-                for _i, _ckpt, q in live:
-                    q.stop()
-            if len(done) == len(writers):
-                return [done[i] for i in range(len(writers))]
-        raise last_exc
+        for w, ckpt in zip(writers, ckpts):
+            live.append(w.option("checkpointLocation", ckpt).start())
+        for q in live:
+            q.processAllAvailable()
+        return ckpts
     finally:
+        for q in live:
+            q.stop()
         spark.conf.set(key, old)
 
 
@@ -248,7 +234,7 @@ def _latest_per_key(ev: DataFrame, carried: tuple[tuple[str, str], ...]) -> Data
 @register("stream_sep_source", oracle=None, section="2.1")
 def stream_sep_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SEP subscription itself: replay the full feed through the
-    sep_events source in offset-tracked micro-batches; the result is
+    sep_events transport in offset-tracked micro-batches; the result is
     exactly the batch events table (stream/batch duality)."""
     return _run_to_memory(read_stream(spark, _feed(sf_dir)))
 
@@ -366,9 +352,8 @@ def stream_bootstrap_then_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """New-subscriber bootstrap — the CDC pattern every late joiner
     needs: a BATCH snapshot of the feed up to position K (cheap bulk
     parquet read, no replay) plus a STREAMING tail from offset K
-    onward (the sep_events source started at a non-zero initial
-    offset). The union must equal the full TIMED feed exactly — no
-    gap, no overlap at the seam (NULL event-times are dead-lettered
+    onward (the replay started at feed row K). The union must equal
+    the full TIMED feed exactly — no gap, no overlap at the seam (NULL event-times are dead-lettered
     by the transport on both phases, round-8 null-ts sweep).
     Asserted against the batch table here (the returned frame
     aggregates both phases with a phase tag).

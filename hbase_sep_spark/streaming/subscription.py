@@ -15,14 +15,17 @@ query over the event feed —
 - the listener is a foreachBatch callable (the
   EventListener.processEvents analog) or any writeStream sink.
 
-Which transport serves the feed:
-- a segment DIRECTORY is read by Spark's parquet file source
-  (`sep_events.read_segments`). A running subscription sees segments
-  that land after it started (the live tail), and each trigger
-  delivers whole segments, oldest first;
-- a single parquet FILE is read by the `sep_events` Python source
-  (`sep_events.read_stream`), paced in rows; its size is read once
-  per start, so a running query stops at its start-time size.
+One transport serves the feed, Spark's parquet file source:
+- a segment DIRECTORY is read in place (`sep_events.read_segments`).
+  A running subscription sees segments that land after it started
+  (the live tail), and each trigger delivers whole segments, oldest
+  first;
+- a single parquet FILE is cut once into per-batch slices under the
+  subscription's own directory (`sep_events.cut_slices`), paced in
+  rows. The slices are as durable as the cursor: a resume in a new
+  process reads the same files, and `unsubscribe()` removes both. A
+  file that changes after its slices were cut fails the next
+  `start()`.
 """
 
 from __future__ import annotations
@@ -37,21 +40,27 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hbase_sep_spark.sources.sep_events import read_segments, read_stream
+from hbase_sep_spark.io import listing
+from hbase_sep_spark.sources.sep_events import (
+    batch_rows,
+    cut_slices,
+    read_segments,
+    read_slices,
+)
 
 
 @dataclass
 class SepSubscription:
     """One durable subscription to the event feed.
 
-    Cursor format: a directory feed's checkpoint holds the file
-    source's offsets (`{"logOffset": N}` and a seen-files log), a file
-    feed's holds `sep_events` row positions (`{"row": N}`). The two do
-    not convert. A directory subscription whose checkpoint holds a row
-    cursor — one written before directory feeds moved to the file
-    source — fails at `start()` with an error naming the subscription;
-    `unsubscribe()` drops that cursor, and the next `start()` replays
-    the retained feed from its first segment."""
+    Cursor format: the checkpoint holds the file source's offsets
+    (`{"logOffset": N}` and a seen-files log). A checkpoint holding a
+    `{"row": N}` cursor — one written by the retired `sep_events`
+    Python source — fails at `start()` with an error naming the
+    subscription; so does a file feed whose listing changed since its
+    slices were cut. `unsubscribe()` drops the cursor and the slices,
+    and the next `start()` replays the retained feed from its
+    beginning."""
 
     spark: SparkSession
     name: str
@@ -64,20 +73,49 @@ class SepSubscription:
             tempfile.gettempdir(), f"sep_subscriptions-{getpass.getuser()}"
         )
     )
-    # Rows per micro-batch; "auto" = sep_events.feed_batch_size with
-    # floor 2500 over 4 batches. A directory feed rounds it up to whole
-    # segments (at least one per trigger); a file feed cuts it exactly.
-    # The cursor contract is independent of the pacing.
+    # Rows per micro-batch (sep_events.batch_rows; "auto" = floor 2500
+    # over 4 batches). A directory feed rounds it up to whole segments
+    # (at least one per trigger); a file feed cuts it exactly.
     batch_size: int | str = "auto"
 
     @property
     def checkpoint_dir(self) -> str:
         return os.path.join(self.root, self.name, "checkpoint")
 
+    @property
+    def slices_dir(self) -> str:
+        return os.path.join(self.root, self.name, "slices")
+
     def stream(self) -> DataFrame:
         if os.path.isdir(self.feed_path):
             return read_segments(self.spark, self.feed_path, self.batch_size)
-        return read_stream(self.spark, self.feed_path, batch_size=self.batch_size)
+        return read_slices(self.spark, self._slices())
+
+    def _slices(self) -> str:
+        """The file feed's slices, cut on the first start and reused by
+        every resume. The `_cut` record (a name the file source skips)
+        holds the feed's listing signature and the batch size; a
+        resume against a different record would replay the wrong
+        rows, so it fails loudly instead."""
+        rows = batch_rows(self.feed_path, self.batch_size)
+        record = json.dumps([listing(self.feed_path)[1], rows])
+        marker = os.path.join(self.slices_dir, "_cut")
+        if os.path.exists(marker):
+            with open(marker) as f:
+                if f.read() != record:
+                    raise ValueError(
+                        f"subscription {self.name!r} was cut from {self.feed_path} "
+                        f"before the file or the batch size changed: call "
+                        f"unsubscribe() to drop its cursor and slices, and the next "
+                        f"start() replays the feed as it is now"
+                    )
+            return self.slices_dir
+        # Slices without a record are a cut that did not finish.
+        shutil.rmtree(self.slices_dir, ignore_errors=True)
+        cut_slices(self.feed_path, self.slices_dir, rows)
+        with open(marker, "w") as f:
+            f.write(record)
+        return self.slices_dir
 
     def start(
         self,
@@ -93,12 +131,12 @@ class SepSubscription:
         batches, none skipped.
         """
         os.makedirs(self.checkpoint_dir, exist_ok=True)
-        if os.path.isdir(self.feed_path) and self._holds_row_cursor():
+        if self._holds_row_cursor():
             raise ValueError(
                 f"subscription {self.name!r} holds a sep_events row cursor "
-                f"({self.checkpoint_dir}), which a segment-directory feed cannot "
+                f"({self.checkpoint_dir}), which the file source cannot "
                 f"resume: call unsubscribe() to drop it, and the next start() "
-                f"replays the feed from its first segment"
+                f"replays the feed from its beginning"
             )
         df = self.stream()
         if transform is not None:
@@ -128,6 +166,7 @@ class SepSubscription:
         return False
 
     def unsubscribe(self) -> None:
-        """Drop the durable position (the removePeer analog). The next
-        start() replays from the beginning of the retained feed."""
+        """Drop the durable position and a file feed's slices (the
+        removePeer analog). The next start() replays from the beginning
+        of the retained feed."""
         shutil.rmtree(os.path.join(self.root, self.name), ignore_errors=True)

@@ -307,3 +307,28 @@ def test_only_io_builds_cache_keys():
         and any(s in p.read_text() for s in ("LruCache(", "sparkContext.applicationId"))
     ]
     assert offenders == []
+
+
+def test_scratch_dir_is_removed_at_exit(tmp_path):
+    """A session's scratch root (sinks, replay slices, checkpoints) is
+    removed when the process that made it exits."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        f"import sys; sys.path.insert(0, {repo!r})\n"
+        "from types import SimpleNamespace\n"
+        "from hbase_sep_spark.io import scratch_dir\n"
+        "spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId='app-exit-test'))\n"
+        "d = scratch_dir(spark, 'slices')\n"
+        "open(d + '/slice-0.parquet', 'w').close()\n"
+        "print(d)\n"
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    out = subprocess.run([sys.executable, "-c", code], env=env, capture_output=True, text=True)
+    assert out.returncode == 0, out.stderr
+    made = out.stdout.strip()
+    assert made.startswith(str(tmp_path))
+    assert not os.path.exists(os.path.dirname(made))
+    assert os.path.isdir(os.path.join(tmp_path, "hbase_sep_spark"))

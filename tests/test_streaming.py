@@ -1,7 +1,9 @@
 """Streaming semantics tests (SURVEY §5.5): the SEP delivery
 invariants — replay equals batch, redelivery collapses to
-exactly-once — verified end-to-end through the sep_events source.
-Runs at sf0.001 for speed.
+exactly-once, a restart neither skips nor redelivers acked rows —
+verified end-to-end through the sep_events transport (the feed cut
+into per-batch slices for Spark's file source). Runs at sf0.001 for
+speed.
 """
 
 from __future__ import annotations
@@ -29,10 +31,11 @@ def test_stream_replay_equals_batch(spark):
 def test_sep_source_runs_from_outside_the_checkout(tmp_path):
     """The verify recipe's driver simulation: a plain session in a
     process whose working directory is outside the checkout and whose
-    PYTHONPATH is unset, the repo only on sys.path. The Python source
-    runner unpickles the DataSource without the package importable, so
-    every module the source uses must be pickled by value (it failed
-    with "No module named 'hbase_sep_spark'" when io was not)."""
+    PYTHONPATH is unset, the repo only on sys.path. The replay and an
+    applyInPandasWithState consumer must run there: the state function
+    runs in Python workers, which start in that working directory and
+    cannot import the package unless it is shipped or the function
+    pickles without it."""
     import os
     import subprocess
     import sys
@@ -43,7 +46,9 @@ def test_sep_source_runs_from_outside_the_checkout(tmp_path):
         "from pyspark.sql import SparkSession\n"
         "import __spark_entry__ as m\n"
         "spark = SparkSession.builder.master('local[2]').getOrCreate()\n"
-        f"print('rows', m.queries()['stream_sep_source'](spark, {SF_UNIT!r}).count())\n"
+        "qs = m.queries()\n"
+        f"print('rows', qs['stream_sep_source'](spark, {SF_UNIT!r}).count())\n"
+        f"print('keys', qs['stream_stateful_latest'](spark, {SF_UNIT!r}).count())\n"
         "spark.stop()\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
@@ -51,21 +56,34 @@ def test_sep_source_runs_from_outside_the_checkout(tmp_path):
         [sys.executable, "-c", code], cwd=tmp_path, env=env,
         capture_output=True, text=True, timeout=600,
     )
+    from hbase_sep_spark.sources.sep_events import _read_rows
+
+    n_users = len({r[2] for r in _read_rows(f"{SF_UNIT}/events.parquet", 0, 10**9)})
     assert out.returncode == 0, out.stderr[-4000:]
     assert "rows 1000" in out.stdout
+    assert f"keys {n_users}" in out.stdout
 
 
-def test_source_pickles_without_memoized_values(spark):
-    """io is pickled by value with the source, and io.memo's store
-    with it: the store pickles empty, so the session's memoized
-    DataFrames (which do not pickle) never ride along to the runner."""
-    from pyspark import cloudpickle
+def test_one_streaming_transport():
+    """Every stream runs on Spark's file source: no Python DataSource,
+    no pickling of package modules by value and no `sep_events`
+    format appear anywhere in the package."""
+    import pathlib
 
-    from hbase_sep_spark.sources.sep_events import SepEventsDataSource, register_sep_source
+    import hbase_sep_spark
 
-    register_sep_source(spark)
-    t(spark, SF_UNIT, "events")
-    assert cloudpickle.loads(cloudpickle.dumps(SepEventsDataSource)).name() == "sep_events"
+    root = pathlib.Path(hbase_sep_spark.__file__).parent
+    banned = (
+        "pyspark.sql.datasource",
+        "register_pickle_by_value",
+        'readStream.format("sep_events")',
+    )
+    offenders = [
+        str(p.relative_to(root))
+        for p in sorted(root.rglob("*.py"))
+        if any(s in p.read_text() for s in banned)
+    ]
+    assert offenders == []
 
 
 def test_stream_dedup_is_exactly_once(spark):
@@ -190,181 +208,161 @@ def test_source_range_read_prunes_and_strides():
     assert list(_read_rows(path, 500, 500)) == []
 
 
-def test_source_offsets_are_driver_light():
-    """The reader's driver half never materializes the feed: offset
-    arithmetic needs only the footer row count, and each batch's
-    partitions tile [start, end) exactly."""
-    from hbase_sep_spark.sources.sep_events import SepEventsStreamReader
-
-    r = SepEventsStreamReader({"path": f"{SF_UNIT}/events.parquet", "batch_size": "300"})
-    assert r.initialOffset() == {"row": 0}
-    ends = [r.latestOffset()["row"] for _ in range(5)]
-    assert ends == [300, 600, 900, 1000, 1000]
-    parts = r.partitions({"row": 300}, {"row": 600})
-    spans = sorted((p.lo, p.hi) for p in parts if p.step == 1)
-    assert spans[0][0] == 300 and spans[-1][1] == 600
-    assert all(a[1] == b[0] for a, b in zip(spans, spans[1:]))
-
-
-def _emitted(reader, parts):
-    """Rows a set of planned partitions would deliver (worker-side)."""
-    from hbase_sep_spark.sources.sep_events import _read_rows
-
-    out = []
-    for p in parts:
-        out.extend(_read_rows(reader.path, p.lo, p.hi, p.step))
-    return out
-
-
-def test_source_restart_no_redelivery_of_acked():
-    """ADVICE r2 (medium): a restarted query builds a FRESH reader, so
-    its first latestOffset() can trail the restored committed offset;
-    the engine (comparing offsets as opaque JSON) logs the trailing
-    offset as a batch END and derives the NEXT batch's start from it.
-    The delivered high-water mark must suppress re-emission of every
-    row acked before the restart."""
-    from hbase_sep_spark.sources.sep_events import SepEventsStreamReader
-
-    path = f"{SF_UNIT}/events.parquet"
-    opts = {"path": path, "batch_size": "400"}
-
-    # Session 1: deliver the full 1000-row feed, all batches committed.
-    r1 = SepEventsStreamReader(opts)
-    prev = r1.initialOffset()
-    seen = 0
-    while True:
-        end = r1.latestOffset()
-        if end == prev:
-            break
-        seen += len(_emitted(r1, r1.partitions(prev, end)))
-        r1.commit(end)
-        prev = end
-    assert seen == 1000 and prev == {"row": 1000}
-
-    # Session 2 (restart, last batch committed at row=1000): fresh
-    # reader, engine's first poll trails the checkpoint.
-    r2 = SepEventsStreamReader(opts)
-    trailing = r2.latestOffset()  # {"row": 400} — behind committed
-    assert trailing["row"] < 1000
-    # Engine plans (committed -> trailing): must emit nothing.
-    assert _emitted(r2, r2.partitions({"row": 1000}, trailing)) == []
-    # Engine's next batch starts at the trailing END: still nothing —
-    # rows [400, 1000) were acked pre-restart.
-    nxt = r2.latestOffset()
-    redelivered = _emitted(r2, r2.partitions(trailing, nxt))
-    assert redelivered == []
-    # And the stream stays live past the checkpoint: append rows would
-    # flow (here the feed is finite, so it simply parks at the end).
-    assert r2.latestOffset() == {"row": 1000}
-
-
-def test_source_restart_replays_uncommitted_batch():
-    """The at-least-once path Spark itself drives: an UNCOMMITTED last
-    batch is re-planned verbatim on restart and must re-emit exactly
-    its own rows (the hwm guard must not swallow it)."""
-    from hbase_sep_spark.sources.sep_events import SepEventsStreamReader, _read_rows
-
-    path = f"{SF_UNIT}/events.parquet"
-    r = SepEventsStreamReader({"path": path, "batch_size": "400"})
-    replay = _emitted(r, r.partitions({"row": 400}, {"row": 800}))
-    assert replay == list(_read_rows(path, 400, 800))
-    # After the replay the reader resumes forward without a gap.
-    end = r.latestOffset()
-    assert end == {"row": 1000}
-    tail = _emitted(r, r.partitions({"row": 800}, end))
-    assert tail == list(_read_rows(path, 800, 1000))
-
-
-def test_source_batches_bounded_at_bench_sf():
-    """Offset math at the bench scale factor: every planned batch's
-    partitions tile [start, end) with per-partition row counts bounded
-    by rows_per_partition — the per-worker memory contract that makes
-    the replay safe at 100 TB."""
+def test_slices_cut_batches_and_redelivery(tmp_path):
+    """The slicer's batch contract: slice i holds feed rows [lo, hi),
+    lo = start_row + i * batch_size, followed under redelivery by every
+    Nth row of the previous batch's range (from the first slice when
+    the replay starts past row 0)."""
     import os
 
-    from hbase_sep_spark.sources.sep_events import SepEventsStreamReader
+    import pyarrow.parquet as pq
+
+    from hbase_sep_spark.sources.sep_events import _read_rows, cut_slices
+
+    path = f"{SF_UNIT}/events.parquet"
+
+    def rows(out_dir):
+        names = sorted(os.listdir(out_dir))
+        return [
+            [tuple(r.values()) for r in pq.read_table(os.path.join(out_dir, n)).to_pylist()]
+            for n in names
+        ]
+
+    full = list(_read_rows(path, 0, 1000))
+    assert rows(cut_slices(path, str(tmp_path / "plain"), 400)) == [
+        full[0:400], full[400:800], full[800:1000],
+    ]
+    assert rows(cut_slices(path, str(tmp_path / "redeliver"), 400, redeliver_every=3)) == [
+        full[0:400],
+        full[400:800] + full[0:400:3],
+        full[800:1000] + full[400:800:3],
+    ]
+    tail = cut_slices(path, str(tmp_path / "tail"), 400, redeliver_every=5, start_row=700)
+    assert rows(tail) == [full[700:1000] + full[300:700:5]]
+
+
+def _replay(spark, ckpt: str, sink: list) -> None:
+    """Drain the 1000-row sf0.001 feed at 400 rows per batch on the
+    checkpoint `ckpt`, appending (epoch, event_id) to `sink`."""
+    from hbase_sep_spark.sources.sep_events import read_stream
+
+    def listener(batch_df, epoch_id):
+        sink.extend((epoch_id, r["event_id"]) for r in batch_df.select("event_id").collect())
+
+    q = (
+        read_stream(spark, f"{SF_UNIT}/events.parquet", batch_size=400)
+        .writeStream.foreachBatch(listener)
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def _forget_batches(ckpt: str, logs: tuple[str, ...], batches: range) -> None:
+    """Delete `batches`' entries from the checkpoint's `logs`: the
+    state a crash leaves before those entries were written."""
+    import os
+
+    for log in logs:
+        for b in batches:
+            for name in (str(b), f".{b}.crc"):
+                path = os.path.join(ckpt, log, name)
+                if os.path.exists(path):
+                    os.remove(path)
+
+
+def test_source_restart_no_redelivery_of_acked(spark, tmp_path):
+    """A query restarted on its checkpoint resumes after the last
+    committed batch: rows acked before the restart are not delivered
+    again, and none after it are skipped. The restart point is batch 0
+    (its offsets, source log and commit kept; later batches' entries
+    gone), then the end of the feed."""
+    from hbase_sep_spark.sources.sep_events import _read_rows
+
+    ids = [r[0] for r in _read_rows(f"{SF_UNIT}/events.parquet", 0, 1000)]
+    ckpt = str(tmp_path / "ckpt")
+    first: list = []
+    _replay(spark, ckpt, first)
+    assert [eid for _, eid in first] == ids
+    _forget_batches(ckpt, ("offsets", "commits", "sources/0"), range(1, 3))
+    resumed: list = []
+    _replay(spark, ckpt, resumed)
+    assert [eid for _, eid in resumed] == ids[400:]
+    assert {epoch for epoch, _ in resumed} == {1, 2}
+    again: list = []
+    _replay(spark, ckpt, again)
+    assert again == []
+
+
+def test_source_restart_replays_uncommitted_batch(spark, tmp_path):
+    """The at-least-once path Spark itself drives: a batch whose
+    offsets were logged but whose commit was not is re-run on restart
+    under the same epoch with exactly its own rows, and the replay
+    resumes without a gap."""
+    from hbase_sep_spark.sources.sep_events import _read_rows
+
+    ids = [r[0] for r in _read_rows(f"{SF_UNIT}/events.parquet", 0, 1000)]
+    ckpt = str(tmp_path / "ckpt")
+    _replay(spark, ckpt, [])
+    # Batch 1 logged but not committed; batch 2 not yet planned.
+    _forget_batches(ckpt, ("offsets", "commits", "sources/0"), range(2, 3))
+    _forget_batches(ckpt, ("commits",), range(1, 2))
+    replayed: list = []
+    _replay(spark, ckpt, replayed)
+    assert replayed == [(1, eid) for eid in ids[400:800]] + [(2, eid) for eid in ids[800:]]
+
+
+def test_source_batches_bounded_at_bench_sf(tmp_path):
+    """At the bench scale factor every slice holds at most one batch of
+    rows, in the normalized transport schema, and the slices in name
+    order tile the feed exactly — the driver-memory contract of the
+    slicer."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hbase_sep_spark.sources.sep_events import _read_table, cut_slices, feed_total
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    r = SepEventsStreamReader(
-        {"path": f"{sf_dir}/events.parquet", "batch_size": "40000", "rows_per_partition": "5000"}
-    )
-    total = r._total()
-    prev = r.initialOffset()
-    covered = 0
-    while True:
-        end = r.latestOffset()
-        if end == prev:
-            break
-        parts = r.partitions(prev, end)
-        assert all(p.hi - p.lo <= 5000 for p in parts)
-        spans = sorted((p.lo, p.hi) for p in parts)
-        assert spans[0][0] == prev["row"] and spans[-1][1] == end["row"]
-        assert all(a[1] == b[0] for a, b in zip(spans, spans[1:]))
-        covered += sum(p.hi - p.lo for p in parts)
-        r.commit(end)
-        prev = end
-    assert covered == total
+    path = f"{sf_dir}/events.parquet"
+    out = cut_slices(path, str(tmp_path / "slices"), 40000)
+    slices = [pq.read_table(os.path.join(out, n)) for n in sorted(os.listdir(out))]
+    assert len(slices) == -(-feed_total(path) // 40000)
+    assert all(s.num_rows <= 40000 for s in slices)
+    assert slices[0].schema.field("ts").type == pa.timestamp("us", "UTC")
+    assert pa.concat_tables(slices).equals(_read_table(path, 0, feed_total(path)))
 
 
-def test_source_rate_limit_scales_with_feed():
+def test_source_rate_limit_scales_with_feed(spark):
     """Round-13 pacing contract: the DEFAULT rate limit is
     feed-proportional — max(2500, feed/4) — so the micro-batch count
     is scale-invariant instead of O(feed), while every graded SF
     (feeds <= 10k rows) keeps the historical fixed-2500 pacing
-    bit-identically. feed_batch_size applies the same rule to queries
-    that pin a specific graded-SF batch structure."""
-    from hbase_sep_spark.sources.sep_events import (
-        SepEventsStreamReader,
-        feed_batch_size,
-        feed_total,
-    )
+    bit-identically. An explicit batch size is honored verbatim, and
+    feed_batch_size applies the same rule to queries that pin a
+    specific graded-SF batch structure."""
+    from hbase_sep_spark.sources.sep_events import feed_batch_size, feed_total, read_stream
+    from hbase_sep_spark.streaming.queries import _drive
 
     path = f"{SF_UNIT}/events.parquet"
-    total = feed_total(path)
-    assert total == 1000
+    assert feed_total(path) == 1000
 
-    # auto default at a graded-SF-sized feed = the historical 2500
-    r = SepEventsStreamReader({"path": path})
-    assert r.batch_size == 2500
-    assert r.rows_per_partition == 1250
-    # explicit values are honored verbatim
-    r = SepEventsStreamReader({"path": path, "batch_size": "400"})
-    assert r.batch_size == 400
+    def batch_sizes(**options):
+        sizes: list[int] = []
+        stream = read_stream(spark, path, **options)
+        _drive(spark, stream.writeStream.foreachBatch(lambda df, epoch: sizes.append(df.count())))
+        return sizes
+
+    assert batch_sizes() == [1000]  # auto: one 2500-row batch
+    assert batch_sizes(batch_size=400) == [400, 400, 200]
     # feed_batch_size floors bind at graded SFs (unit feed: 1000 rows)
     assert feed_batch_size(path, 1000, 10) == 1000
     assert feed_batch_size(path, 2000, 5) == 2000
     assert feed_batch_size(path, 2500, 4) == 2500
-
-
-def test_source_read_yields_arrow_batches():
-    """Round-13 transport contract: read() hands Spark arrow
-    RecordBatches whose schema exactly matches EVENT_SCHEMA (int64
-    ids, timestamp[us, UTC], float64 value, strings) — the worker
-    forwards them wholesale instead of converting rows one by one.
-    The batch content must equal the _read_rows tuple view."""
-    import pyarrow as pa
-
-    from hbase_sep_spark.sources.sep_events import (
-        SepEventsStreamReader,
-        SepRange,
-        _read_rows,
-    )
-
-    path = f"{SF_UNIT}/events.parquet"
-    r = SepEventsStreamReader({"path": path})
-    batches = list(r.read(SepRange(lo=100, hi=250)))
-    assert batches and all(isinstance(b, pa.RecordBatch) for b in batches)
-    tbl = pa.Table.from_batches(batches)
-    assert [f.name for f in tbl.schema] == [
-        "event_id", "ts", "user_id", "event_type", "value", "props",
-    ]
-    assert tbl.schema.field("ts").type == pa.timestamp("us", "UTC")
-    assert tbl.schema.field("event_id").type == pa.int64()
-    assert tbl.schema.field("value").type == pa.float64()
-    rows = [tuple(rec[n] for n in tbl.schema.names) for rec in tbl.to_pylist()]
-    assert rows == list(_read_rows(path, 100, 250))
-    # empty range yields no batches
-    assert list(r.read(SepRange(lo=250, hi=250))) == []
 
 
 def test_bootstrap_then_tail_no_gap_no_overlap(spark):
@@ -480,31 +478,6 @@ def test_stateful_latest_converges_under_redelivery(spark):
     got = {r["user_id"]: (r["last_event_id"], r["last_value"]) for r in stream.collect()}
     want = {r["user_id"]: (r["event_id"], r["value"]) for r in batch.collect()}
     assert got == want
-
-
-def test_drive_retries_only_unfinished_writers(spark):
-    """The one start/drain/retry driver: when a stream fails with the
-    transient worker-spawn error ("failed to connect back"), only the
-    writers that had not finished restart, each on a fresh
-    checkpoint; a writer that drained is not replayed."""
-    from hbase_sep_spark.sources.sep_events import read_stream
-    from hbase_sep_spark.streaming.queries import _drive
-
-    calls = {"steady": 0, "flaky": 0}
-
-    def steady(batch_df, epoch_id):
-        calls["steady"] += 1
-
-    def flaky(batch_df, epoch_id):
-        calls["flaky"] += 1
-        if calls["flaky"] == 1:
-            raise RuntimeError("failed to connect back (injected)")
-
-    feed = f"{SF_UNIT}/events.parquet"
-    writers = [read_stream(spark, feed).writeStream.foreachBatch(fn) for fn in (steady, flaky)]
-    ckpts = _drive(spark, *writers)
-    assert calls == {"steady": 1, "flaky": 2}
-    assert len(set(ckpts)) == 2
 
 
 def test_sink_exactly_once_audit_all_flags_true(spark):

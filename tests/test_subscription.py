@@ -2,10 +2,12 @@
 contract): a named subscription resumes from its checkpoint — stop +
 restart delivers nothing twice and nothing is skipped; unsubscribe
 drops the cursor and the next start replays from the beginning.
-Segment-directory feeds (served by Spark's file source): the live
-tail, the delivery-order checks at start(), the refusal of an old row
-cursor, and transport-rule parity with the `sep_events` reader over
-every hostile events class.
+Both feed shapes run on Spark's file source: a segment directory read
+in place (the live tail, the delivery-order checks at start()) and a
+single file cut into durable slices (refused once the file changes).
+Both refuse an old row cursor, and both deliver the rows the
+transport's edge rules (`_read_rows`) produce over every hostile
+events class.
 """
 
 from __future__ import annotations
@@ -20,7 +22,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
-from hbase_sep_spark.sources.sep_events import _read_rows, feed_total, read_stream
+from hbase_sep_spark.sources.sep_events import _read_rows, feed_total
 from hbase_sep_spark.streaming.subscription import SepSubscription
 from tests.conftest import SF_UNIT, land_segment, write_segments
 
@@ -106,20 +108,48 @@ def test_directory_subscription_reads_through_the_file_source(spark, tmp_path):
 
 
 def test_directory_subscription_refuses_a_row_cursor(spark, tmp_path):
-    """A checkpoint holding a `sep_events` row offset fails at start()
-    with an error naming the subscription and unsubscribe(); after
-    unsubscribe() the feed replays in full."""
-    feed = write_segments(_events(), tmp_path / "feed", 2)
-    sub = SepSubscription(spark, "old-cursor", feed, root=str(tmp_path / "subs"))
-    os.makedirs(sub.checkpoint_dir)
-    writer = read_stream(spark, feed, batch_size=400).writeStream.foreachBatch(_ids([]))
-    _drain(writer.option("checkpointLocation", sub.checkpoint_dir).start())
-    with pytest.raises(ValueError, match=r"'old-cursor'.*unsubscribe\(\)"):
+    """A checkpoint whose offsets log holds a `sep_events` row offset
+    (written by the retired Python source) fails at start() with an
+    error naming the subscription and unsubscribe(), for a segment
+    directory and a single-file feed alike; after unsubscribe() the
+    feed replays in full."""
+    events = _events()
+    file_feed = str(tmp_path / "events.parquet")
+    pq.write_table(events, file_feed)
+    for feed in (write_segments(events, tmp_path / "feed", 2), file_feed):
+        sub = SepSubscription(spark, "old-cursor", feed, root=str(tmp_path / "subs"))
+        os.makedirs(os.path.join(sub.checkpoint_dir, "offsets"))
+        with open(os.path.join(sub.checkpoint_dir, "offsets", "0"), "w") as f:
+            f.write('v1\n{"batchWatermarkMs":0,"batchTimestampMs":0}\n{"row":400}\n')
+        with pytest.raises(ValueError, match=r"'old-cursor'.*unsubscribe\(\)"):
+            sub.start(_ids([]))
+        sub.unsubscribe()
+        delivered: list[int] = []
+        _drain(sub.start(_ids(delivered)))
+        assert len(delivered) == 1000
+        sub.unsubscribe()
+
+
+def test_file_subscription_refuses_a_changed_feed(spark, tmp_path):
+    """A single-file subscription's slices are cut once; a feed file
+    rewritten after the cut fails the next start() loudly, naming
+    unsubscribe(), which drops cursor and slices so the next start()
+    replays the file as it is now."""
+    events = _events()
+    feed = str(tmp_path / "events.parquet")
+    pq.write_table(events.slice(0, 600), feed)
+    sub = SepSubscription(spark, "changed", feed, root=str(tmp_path / "subs"), batch_size=400)
+    first: list[int] = []
+    _drain(sub.start(_ids(first)))
+    assert len(first) == 600
+    pq.write_table(events, feed)
+    with pytest.raises(ValueError, match=r"'changed'.*unsubscribe\(\)"):
         sub.start(_ids([]))
     sub.unsubscribe()
-    delivered: list[int] = []
-    _drain(sub.start(_ids(delivered)))
-    assert len(delivered) == 1000
+    assert not os.path.exists(sub.slices_dir)
+    again: list[int] = []
+    _drain(sub.start(_ids(again)))
+    assert sorted(again) == sorted(events.column("event_id").to_pylist())
 
 
 def test_directory_subscription_fails_on_segments_out_of_ts_order(spark, tmp_path):
@@ -217,9 +247,12 @@ _ENCODINGS = {
 
 @pytest.mark.parametrize("cls", [*EVENTS_CLASSES, *_ENCODINGS])
 def test_segment_transport_matches_python_reader(spark, mutated, tmp_path, cls):
-    """Each hostile events class, split into three ts-ordered segments
-    and drained by a directory subscription, delivers exactly the
-    multiset the `sep_events` reader's edge rules produce."""
+    """Each hostile events class, in both feed shapes, delivers exactly
+    the multiset `_read_rows` (the transport's edge rules in arrow)
+    produces: split into three ts-ordered segments and drained by a
+    directory subscription (the edge rules as Spark expressions), and
+    as one file drained by a single-file subscription through its
+    slices."""
     from pyspark.sql import functions as F
 
     if cls in _ENCODINGS:
@@ -227,14 +260,16 @@ def test_segment_transport_matches_python_reader(spark, mutated, tmp_path, cls):
     else:
         tbl = pq.read_table(f"{mutated(cls)}/events.parquet")
     tbl = tbl.sort_by([("ts", "ascending"), ("event_id", "ascending")])
-    feed = write_segments(tbl, tmp_path / "feed", 3)
-    want = Counter(map(_canon, _read_rows(feed, 0, feed_total(feed))))
+    file_feed = str(tmp_path / "events.parquet")
+    pq.write_table(tbl, file_feed)
+    for shape, feed in (("dir", write_segments(tbl, tmp_path / "feed", 3)), ("file", file_feed)):
+        want = Counter(map(_canon, _read_rows(feed, 0, feed_total(feed))))
+        got: Counter = Counter()
 
-    got: Counter = Counter()
+        def listener(batch_df, epoch_id):
+            cols = [F.unix_micros("ts").alias("ts") if c == "ts" else c for c in batch_df.columns]
+            got.update(_canon(tuple(r)) for r in batch_df.select(cols).collect())
 
-    def listener(batch_df, epoch_id):
-        cols = [F.unix_micros("ts").alias("ts") if c == "ts" else c for c in batch_df.columns]
-        got.update(_canon(tuple(r)) for r in batch_df.select(cols).collect())
-
-    _drain(SepSubscription(spark, f"parity-{cls}", feed, root=str(tmp_path / "subs")).start(listener))
-    assert got == want
+        sub = SepSubscription(spark, f"parity-{cls}-{shape}", feed, root=str(tmp_path / "subs"))
+        _drain(sub.start(listener))
+        assert got == want, shape
