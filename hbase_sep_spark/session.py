@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def cpus() -> int:
     """Worker cores: $SPARK_GRAFT_CPUS, or every core of this host when
@@ -68,5 +70,12 @@ def get_spark(app_name: str = "hbase-sep-spark", shuffle_partitions: int | None 
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # pyspark's daemon, minus the zip re-read every task paid on
+        # CPython 3.11/3.12 (worker_daemon's docstring). The package's
+        # parent goes on the workers' PYTHONPATH, so the daemon starts
+        # from any working directory. Plans and answers are unchanged;
+        # a plain session keeps pyspark's daemon.
+        .config("spark.python.daemon.module", "hbase_sep_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     return builder.getOrCreate()

@@ -35,7 +35,9 @@ def test_sep_source_runs_from_outside_the_checkout(tmp_path):
     applyInPandasWithState consumer must run there: the state function
     runs in Python workers, which start in that working directory and
     cannot import the package unless it is shipped or the function
-    pickles without it."""
+    pickles without it. Then, in the same process, a get_spark()
+    session runs a pandas UDF and the same consumer on workers forked
+    from the package's worker daemon, which must start from there too."""
     import os
     import subprocess
     import sys
@@ -50,18 +52,31 @@ def test_sep_source_runs_from_outside_the_checkout(tmp_path):
         f"print('rows', qs['stream_sep_source'](spark, {SF_UNIT!r}).count())\n"
         f"print('keys', qs['stream_stateful_latest'](spark, {SF_UNIT!r}).count())\n"
         "spark.stop()\n"
+        # The same process, now on a get_spark() session: its workers
+        # start from the package's worker daemon.
+        "from hbase_sep_spark.session import get_spark\n"
+        "spark = get_spark('outside', shuffle_partitions=4)\n"
+        "print('daemon', spark.sparkContext.getConf().get('spark.python.daemon.module'))\n"
+        f"print('udf', qs['udf_pandas_vectorized'](spark, {SF_UNIT!r}).count())\n"
+        f"print('keys', qs['stream_stateful_latest'](spark, {SF_UNIT!r}).count())\n"
+        "spark.stop()\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     out = subprocess.run(
         [sys.executable, "-c", code], cwd=tmp_path, env=env,
         capture_output=True, text=True, timeout=600,
     )
+    import pyarrow.parquet as pq
+
     from hbase_sep_spark.sources.sep_events import _read_rows
 
     n_users = len({r[2] for r in _read_rows(f"{SF_UNIT}/events.parquet", 0, 10**9)})
+    n_orders = pq.ParquetFile(f"{SF_UNIT}/orders.parquet").metadata.num_rows
     assert out.returncode == 0, out.stderr[-4000:]
     assert "rows 1000" in out.stdout
-    assert f"keys {n_users}" in out.stdout
+    assert out.stdout.count(f"keys {n_users}\n") == 2
+    assert "daemon hbase_sep_spark.worker_daemon" in out.stdout
+    assert f"udf {n_orders}" in out.stdout
 
 
 def test_one_streaming_transport():
