@@ -108,76 +108,71 @@ def unit_normalize(a, ndigits: int = 4) -> Column:
     return F.transform(a, lambda x: F.round(x.cast("double") / norm, ndigits) + F.lit(0.0))
 
 
-def lsh_bucket(a, n_planes: int = 16, seed: int = 42) -> Column:
-    """Random-hyperplane LSH bucket id: sign pattern of n_planes
-    pseudo-random projections, packed into a long. Deterministic in
-    (seed, n_planes). Vectors in the same bucket are cosine-close
-    with high probability — the 100 TB path for kNN joins (equi-join
-    on bucket id instead of a cross join).
+def _bucket_sql(col: str, n_planes: int, seed: str) -> str:
+    """SQL for the sign pattern of n_planes pseudo-random projections
+    of array column `col`, packed into a long: one fold over the plane
+    index j, so the plane count adds no expression nodes. Plane j's
+    component i is xxhash64(i, j, seed) mapped to [-1, 1); each
+    projection is a left-to-right sum from 0.0. The lambda variables
+    whose scope holds `col` end in `_`, so a column named b, j or t
+    is not shadowed."""
+    a = f"`{col}`"
+    component = f"(CAST(xxhash64(i, j_, {seed}) % 1000000 AS DOUBLE) / 500000.0D - 1.0D)"
+    proj = (
+        f"aggregate(zip_with({a}, sequence(0, size({a}) - 1), (x, i) -> CAST(x AS DOUBLE) * "
+        f"{component}), 0.0D, (acc, x) -> acc + x)"
+    )
+    sign = f"CASE WHEN {proj} >= 0 THEN 1 ELSE 0 END"
+    return f"aggregate(sequence(0, {n_planes - 1}), 0L, (b_, j_) -> b_ * 2 + {sign})"
+
+
+def _tables_sql(col: str, n_tables: int, n_planes: int, seed: int) -> str:
+    bucket = _bucket_sql(col, n_planes, f"{seed} + 1000 * t_")
+    return f"transform(sequence(0, {n_tables - 1}), t_ -> named_struct('table', t_, 'bucket', {bucket}))"
+
+
+def lsh_bucket(col: str, n_planes: int = 16, seed: int = 42) -> Column:
+    """Random-hyperplane LSH bucket id of array column `col`: sign
+    pattern of n_planes pseudo-random projections, packed into a long.
+    Deterministic in (seed, n_planes). Vectors in the same bucket are
+    cosine-close with high probability — the 100 TB path for kNN
+    joins (equi-join on bucket id instead of a cross join).
 
     The 'random' plane p_j component i is derived from xxhash64(i, j,
     seed) mapped to [-1, 1) — no driver-side randomness, fully
-    plan-deterministic.
+    plan-deterministic. The keys are SQL strings: one expression,
+    parsed in one JVM call, whatever the plane count.
     """
-    a = F.col(a) if isinstance(a, str) else a
-
-    def plane_component(i: Column, j: int) -> Column:
-        h = F.xxhash64(i, F.lit(j), F.lit(seed))
-        return (h % 1000000).cast("double") / 500000.0 - 1.0
-
-    def projection_sign(j: int) -> Column:
-        proj = F.aggregate(
-            F.zip_with(
-                a,
-                F.sequence(F.lit(0), F.size(a) - 1),
-                lambda x, i: x.cast("double") * plane_component(i, j),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0))
-
-    bucket = F.lit(0).cast("long")
-    for j in range(n_planes):
-        bucket = bucket * 2 + projection_sign(j)
-    return bucket
+    return F.expr(_bucket_sql(col, n_planes, str(seed)))
 
 
-def lsh_tables(a, n_tables: int = 8, n_planes: int = 4, seed: int = 42) -> Column:
+def lsh_tables(col: str, n_tables: int = 8, n_planes: int = 4, seed: int = 42) -> Column:
     """Multi-table LSH: array of (table, bucket) structs, one bucket
-    per independent hash table (planes seeded per table).
+    per independent hash table (table t's planes seeded
+    seed + 1000·t).
 
     One k-plane table alone has near-zero recall on weakly-clustered
     vectors (P(collide) = p^k with p barely above 1/2); L independent
     tables lift it to 1-(1-p^k)^L — the standard LSH construction.
     Explode this array and equi-join on (table, bucket): candidates =
-    union over tables, still never all-pairs."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("table"),
-                lsh_bucket(a, n_planes=n_planes, seed=seed + 1000 * t).alias("bucket"),
-            )
-            for t in range(n_tables)
-        ]
-    )
+    union over tables, still never all-pairs. The tables are one
+    transform over the table index, so the plan holds one projection
+    expression whatever the table and plane counts."""
+    return F.expr(_tables_sql(col, n_tables, n_planes, seed))
 
 
-def lsh_multiprobe_tables(a, n_tables: int = 8, n_planes: int = 4, seed: int = 42) -> Column:
+def lsh_multiprobe_tables(col: str, n_tables: int = 8, n_planes: int = 4, seed: int = 42) -> Column:
     """PROBE-side multi-probe LSH keys: for each table, the exact
     bucket plus every Hamming-distance-1 neighbor (one plane's sign
-    flipped). A query vector near a plane boundary mostly misses its
-    true neighbors' bucket by exactly one sign — probing the flipped
-    buckets recovers those at (1 + n_planes)× probe keys and ZERO
-    index-side cost (the indexed corpus still stores one bucket per
-    table). Standard multi-probe LSH; recall gate in tests/test_ann.py.
+    flipped, planes in order). A query vector near a plane boundary
+    mostly misses its true neighbors' bucket by exactly one sign —
+    probing the flipped buckets recovers those at (1 + n_planes)×
+    probe keys and ZERO index-side cost (the indexed corpus still
+    stores one bucket per table). Each table's bucket is computed
+    once and XORed with 0 (the exact key) and each plane's bit.
+    Standard multi-probe LSH; recall gate in tests/test_ann.py.
     """
-    entries = []
-    for t in range(n_tables):
-        b = lsh_bucket(a, n_planes=n_planes, seed=seed + 1000 * t)
-        entries.append(F.struct(F.lit(t).alias("table"), b.alias("bucket")))
-        for p in range(n_planes):
-            entries.append(
-                F.struct(F.lit(t).alias("table"), b.bitwiseXOR(F.lit(1 << p)).alias("bucket"))
-            )
-    return F.array(*entries)
+    flips = ", ".join(str(m) for m in [0] + [1 << p for p in range(n_planes)])
+    probe = "named_struct('table', k.table, 'bucket', k.bucket ^ m)"
+    tables = _tables_sql(col, n_tables, n_planes, seed)
+    return F.expr(f"flatten(transform({tables}, k -> transform(array({flips}), m -> {probe})))")

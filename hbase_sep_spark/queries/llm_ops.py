@@ -713,67 +713,57 @@ def vec_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Projection, size-branched (round 14, guide §4.2 "keep batch
     # sizes large enough for vectorization to pay off"): below the
-    # fan-out threshold (≲50k vectors — every graded SF) the old
-    # 128-term JVM expression chain wins because the Python worker
-    # round-trip costs more than the whole projection (measured at
-    # sf0.1: 0.10 s JVM vs 0.15 s serial BLAS), so the graded-SF plan
-    # and timing stay bit-identical to round 13. At volume the
+    # fan-out threshold (≲50k vectors — every graded SF) the 128-term
+    # JVM expression chain (_project_jvm) wins because the Python
+    # worker round-trip costs more than the whole projection (measured
+    # at sf0.1: 0.10 s JVM vs 0.15 s serial BLAS). At volume the
     # projection is one BLAS matmul per Arrow batch ((X − mean) @ C,
     # 64×2) spread across _emb_fanout workers — 1.55 → 0.21 s solo at
     # sf10 with identical 4-dp output on all 200k rows. Only the
-    # three needed columns cross the boundary (§4.1). Schema care:
-    # vec_id keeps its scanned type; label crosses as DOUBLE (a
-    # pandas int column with NULLs widens to float64 — the round-8
-    # nullkeys crash class) and is cast back to its scanned type.
+    # three needed columns cross the boundary (§4.1), and mapInArrow
+    # hands vec_id and label back as the same Arrow arrays, so every
+    # id and label (NULLs and values beyond 2^53 included) comes back
+    # exactly, in its scanned type.
     if not fan:
+        return _project_jvm(e, mean, comps)
 
-        def proj(comp):
-            return sum(
-                (F.element_at("embedding", i + 1).cast("double") - F.lit(float(mean[i])))
-                * F.lit(float(comp[i]))
-                for i in range(DIM)
-            )
-
-        return e.select(
-            "vec_id",
-            "label",
-            F.round(proj(comps[0]), 4).alias("pc1"),
-            F.round(proj(comps[1]), 4).alias("pc2"),
-        )
-
-    C = __import__("numpy").stack(comps, axis=1)
-    mu = mean
-    vid_t = dict(e.dtypes)["vec_id"]
-    lbl_t = dict(e.dtypes)["label"]
+    C = np.stack(comps, axis=1)
 
     def project(batches):
-        import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            if len(pdf) == 0:  # a filtered-empty Arrow batch
+        for b in batches:
+            if b.num_rows == 0:  # a filtered-empty Arrow batch
                 continue
-            X = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            P = (X - mu) @ C
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "label": pdf["label"],
-                    "p1": P[:, 0],
-                    "p2": P[:, 1],
-                }
+            X = b.column("embedding").flatten().to_numpy(zero_copy_only=False)
+            P = (X.reshape(b.num_rows, -1).astype("float64") - mean) @ C
+            yield pa.RecordBatch.from_arrays(
+                [b.column("vec_id"), b.column("label"), pa.array(P[:, 0]), pa.array(P[:, 1])],
+                names=["vec_id", "label", "p1", "p2"],
             )
 
+    types = dict(e.dtypes)
     base = e.select("vec_id", "label", "embedding").repartition(fan)
-    return (
-        base.mapInPandas(
-            project,
-            schema=f"vec_id {vid_t}, label double, p1 double, p2 double",
-        )
-        .select(
-            "vec_id",
-            F.col("label").cast(lbl_t).alias("label"),
-            F.round("p1", 4).alias("pc1"),
-            F.round("p2", 4).alias("pc2"),
-        )
-    )
+    return base.mapInArrow(
+        project,
+        schema=f"vec_id {types['vec_id']}, label {types['label']}, p1 double, p2 double",
+    ).select("vec_id", "label", F.round("p1", 4).alias("pc1"), F.round("p2", 4).alias("pc2"))
+
+
+def _project_jvm(e: DataFrame, mean, comps) -> DataFrame:
+    """vec_pca_project's small-corpus projection: per component the
+    left-to-right sum Σ (embedding[i] − mean_i)·comp_i, rounded to 4
+    dp, written as one SQL string (one JVM call instead of a Column
+    per term). Double literals carry the `D` suffix and Python's
+    round-trip repr, so the optimized plan is the same expression
+    tree as the Column chain `sum(... for i in range(DIM))` built
+    (pinned by tests/test_vectors.py), the leading `+ 0` included."""
+
+    def proj(comp) -> str:
+        terms = [
+            f"(CAST(element_at(embedding, {i + 1}) AS DOUBLE) - ({float(m)!r}D)) * ({float(c)!r}D)"
+            for i, (m, c) in enumerate(zip(mean, comp))
+        ]
+        return f"round({terms[0]} + 0 + {' + '.join(terms[1:])}, 4)"
+
+    return e.selectExpr("vec_id", "label", f"{proj(comps[0])} AS pc1", f"{proj(comps[1])} AS pc2")

@@ -82,12 +82,15 @@ def udf_pandas_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     # production multi-split input parallelizes at the scan and
     # wouldn't need it — same mitigation as agg_median_percentile's
     # salted repartition. The fan-out COUNT is derived from the data
-    # (round 13): the measured-best sf0.1 value 8 is the floor —
-    # identical plan at every graded SF — growing one partition per
-    # 150k rows up to the session's cores, so a 100× feed is not
-    # pinned to 8 Python workers on 32 cores (footer-only count;
-    # the batch analog of the streaming sep_events.feed_batch_size rule).
-    fan = max(8, fanout(sf_dir, "orders", 150_000, spark.sparkContext.defaultParallelism))
+    # (round 13): one partition per 150k rows up to the session's
+    # cores, so a 100× feed is not pinned to 8 Python workers on 32
+    # cores (footer-only count; the batch analog of the streaming
+    # sep_events.feed_batch_size rule). The floor is 8 (the sf0.1
+    # optimum on 32 cores) capped at the cores: 8 tasks on 4 cores
+    # are two waves of Python tasks (nine-run medians at sf0.01 on 4
+    # cores: fan 8 0.29 s, fan 4 0.14 s).
+    cores = spark.sparkContext.defaultParallelism
+    fan = max(min(8, cores), fanout(sf_dir, "orders", 150_000, cores))
     o = t(spark, sf_dir, "orders").repartition(fan)
     return o.select("o_orderkey", F.round(sigmoid("o_totalprice"), 6).alias("price_sigmoid"))
 

@@ -11,6 +11,11 @@ grade no longer covers the code that will run.
 Usage:
     python scripts/ast_diff.py REF_A REF_B [--graded CORRECTNESS.json ...]
 
+Also lists the queries whose own segment is unchanged but which call a
+top-level function in hbase_sep_spark/operators/ whose source changed
+(directly, or through another operators/ function that calls it):
+those consumers change ast-invisibly and count as changed too.
+
 With --graded files, also prints the subset NOT re-graded since the
 change (the names that must lead the next round's prefix).
 """
@@ -23,13 +28,12 @@ import json
 import subprocess
 
 
-def register_segments(commit: str) -> dict[str, str]:
-    """name -> source segment for every register() site at `commit`."""
+def _modules(commit: str, prefix: str):
+    """(path, source, ast) for every parseable .py file under `prefix`."""
     files = subprocess.run(
-        ["git", "ls-tree", "-r", "--name-only", commit, "hbase_sep_spark/"],
+        ["git", "ls-tree", "-r", "--name-only", commit, prefix],
         capture_output=True, text=True, check=True,
     ).stdout.split()
-    out: dict[str, str] = {}
     for f in files:
         if not f.endswith(".py"):
             continue
@@ -37,9 +41,25 @@ def register_segments(commit: str) -> dict[str, str]:
             ["git", "show", f"{commit}:{f}"], capture_output=True, text=True
         ).stdout
         try:
-            tree = ast.parse(src)
+            yield f, src, ast.parse(src)
         except SyntaxError:
             continue
+
+
+def _called(node: ast.AST) -> set[str]:
+    """Names called inside `node`: `f(...)` and `mod.f(...)` alike."""
+    return {
+        getattr(c.func, "id", getattr(c.func, "attr", ""))
+        for c in ast.walk(node)
+        if isinstance(c, ast.Call)
+    }
+
+
+def register_segments(commit: str) -> dict[str, tuple[str, str, set[str]]]:
+    """name -> (file, source segment, called names) for every
+    register() site at `commit`."""
+    out: dict[str, tuple[str, str, set[str]]] = {}
+    for f, src, tree in _modules(commit, "hbase_sep_spark/"):
         for node in ast.walk(tree):
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
@@ -54,8 +74,29 @@ def register_segments(commit: str) -> dict[str, str]:
                     decs = "\n".join(
                         ast.get_source_segment(src, d) or "" for d in node.decorator_list
                     )
-                    out[qname] = (f, decs + "\n" + seg)  # type: ignore[assignment]
+                    out[qname] = (f, decs + "\n" + seg, _called(node))
     return out
+
+
+def operator_functions(commit: str) -> dict[str, tuple[str, set[str]]]:
+    """name -> (source, called names) for every top-level function in
+    hbase_sep_spark/operators/ at `commit`."""
+    out: dict[str, tuple[str, set[str]]] = {}
+    for _, src, tree in _modules(commit, "hbase_sep_spark/operators/"):
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                out[node.name] = (ast.get_source_segment(src, node) or "", _called(node))
+    return out
+
+
+def changed_operators(ref_a: str, ref_b: str) -> set[str]:
+    """operators/ functions whose source changed (or is new) between
+    the refs, plus every operators/ function that calls one of them."""
+    a, b = operator_functions(ref_a), operator_functions(ref_b)
+    changed = {n for n in b if n not in a or a[n][0] != b[n][0]}
+    while more := {n for n in b if n not in changed and b[n][1] & changed}:
+        changed |= more
+    return changed
 
 
 def main() -> None:
@@ -75,6 +116,16 @@ def main() -> None:
         print(f"  {n}  ({b[n][0]})")
     if removed:
         print(f"REMOVED (registry must never shrink!): {removed}")
+    # A helper change dirties its consumers with no change to their
+    # own segments: list the unchanged queries that call a changed
+    # operators/ function, and count them as changed.
+    ops = changed_operators(args.ref_a, args.ref_b)
+    consumers = sorted(n for n in b if n not in changed and b[n][2] & ops)
+    if consumers:
+        print(f"calling a changed operators/ function ({', '.join(sorted(ops))}): {len(consumers)}")
+        for n in consumers:
+            print(f"  {n}  ({b[n][0]}: {', '.join(sorted(b[n][2] & ops))})")
+        changed = sorted(changed + consumers)
     if args.graded:
         graded: set[str] = set()
         for path in args.graded:

@@ -178,7 +178,9 @@ def test_hll_sketch_union_matches_exact_within_bound(spark):
     import pyspark.sql.functions as F
 
     from hbase_sep_spark.io import t
-    from hbase_sep_spark.registry import REGISTRY
+    from hbase_sep_spark.registry import load_all
+
+    REGISTRY = load_all()
 
     est = {
         r["event_type"]: r["est_distinct_users"]
@@ -202,7 +204,9 @@ def test_pca_projection_statistics(spark):
     (orthogonal components ⇒ |corr| near 0)."""
     import pyspark.sql.functions as F
 
-    from hbase_sep_spark.registry import REGISTRY
+    from hbase_sep_spark.registry import load_all
+
+    REGISTRY = load_all()
 
     df = REGISTRY["vec_pca_project"].fn(spark, SF_UNIT)
     row = df.agg(
@@ -220,7 +224,9 @@ def test_pagerank_conserves_mass_and_positivity(spark):
     and every rank is strictly positive and bounded by 1."""
     import pyspark.sql.functions as F
 
-    from hbase_sep_spark.registry import REGISTRY
+    from hbase_sep_spark.registry import load_all
+
+    REGISTRY = load_all()
 
     df = REGISTRY["graph_pagerank"].fn(spark, SF_UNIT)
     row = df.agg(
@@ -241,7 +247,9 @@ def test_gapfill_covers_exact_span_no_null_fill(spark):
     import pyspark.sql.functions as F
 
     from hbase_sep_spark.io import t
-    from hbase_sep_spark.registry import REGISTRY
+    from hbase_sep_spark.registry import load_all
+
+    REGISTRY = load_all()
 
     df = REGISTRY["ts_daily_gapfill_ffill"].fn(spark, SF_UNIT)
     assert df.filter(F.col("value_filled").isNull()).count() == 0
@@ -263,7 +271,9 @@ def test_cms_never_underestimates(spark):
     """The count-min guarantee: est ≥ exact for every key."""
     import pyspark.sql.functions as F
 
-    from hbase_sep_spark.registry import REGISTRY
+    from hbase_sep_spark.registry import load_all
+
+    REGISTRY = load_all()
 
     df = REGISTRY["agg_cms_freq_sketch"].fn(spark, SF_UNIT)
     assert df.filter(F.col("overcount") < 0).count() == 0
@@ -275,7 +285,9 @@ def test_kmv_exact_below_k(spark):
     (est ≤ exact then) — and estimates are always positive."""
     import pyspark.sql.functions as F
 
-    from hbase_sep_spark.registry import REGISTRY
+    from hbase_sep_spark.registry import load_all
+
+    REGISTRY = load_all()
 
     df = REGISTRY["agg_kmv_distinct_sketch"].fn(spark, SF_UNIT)
     assert df.filter(F.col("kmv_est") <= 0).count() == 0
@@ -289,7 +301,9 @@ def test_asof_nearest_gap_nonnegative_and_tighter_than_backward(spark):
     with a gap never larger than the backward gap."""
     import pyspark.sql.functions as F
 
-    from hbase_sep_spark.registry import REGISTRY
+    from hbase_sep_spark.registry import load_all
+
+    REGISTRY = load_all()
 
     near = REGISTRY["join_asof_nearest"].fn(spark, SF_UNIT)
     assert near.filter(F.col("gap_us") < 0).count() == 0
@@ -315,7 +329,9 @@ def test_dataset_split_partitions_whole_corpus(spark):
     import pyspark.sql.functions as F
 
     from hbase_sep_spark.io import t
-    from hbase_sep_spark.registry import REGISTRY
+    from hbase_sep_spark.registry import load_all
+
+    REGISTRY = load_all()
 
     df = REGISTRY["pipeline_dataset_split"].fn(spark, SF_UNIT)
     total = t(spark, SF_UNIT, "documents").count()

@@ -1350,20 +1350,23 @@ def test_lsh_touching_join_is_equi_broadcast(spark):
 
 def test_udf_fanout_scales_with_table_and_floors_at_graded_sf(spark, tmp_path):
     """Round-13: udf_pandas_vectorized's Arrow fan-out repartition is
-    derived from the orders footer row count (floor 8 = the measured
-    sf0.1 optimum) instead of a pinned local constant. Two pins:
-    (1) at the graded SF the plan is BIT-IDENTICAL to the historical
-    repartition(8) — RoundRobinPartitioning(8); (2) the count grows
-    with the table (footer-only — io.table_rows must agree with a
-    real scan, including on a directory table), so a 100x feed is not
-    pinned to 8 Python workers."""
+    derived from the orders footer row count instead of a pinned local
+    constant, with a floor of 8 (the measured sf0.1 optimum on 32
+    cores) capped at the session's cores. Two pins: (1) at the graded
+    SF the plan is exactly RoundRobinPartitioning(min(8, cores)) — the
+    historical repartition(8) on 8+ cores, one wave of Python tasks
+    on fewer; (2) the count grows with the table (footer-only —
+    io.table_rows must agree with a real scan, including on a
+    directory table), so a 100x feed is not pinned to 8 Python
+    workers."""
     import pyarrow.parquet as pq
 
     from hbase_sep_spark.io import fanout, table_rows
 
     # (1) graded-SF plan floor
     plan = plan_of(spark, "udf_pandas_vectorized")
-    assert "RoundRobinPartitioning(8)" in plan
+    cores = spark.sparkContext.defaultParallelism
+    assert f"RoundRobinPartitioning({min(8, cores)})" in plan
 
     # (2) footer count == scan count, single file and directory forms
     assert table_rows(SF_UNIT, "orders") == spark.read.parquet(
@@ -1379,8 +1382,8 @@ def test_udf_fanout_scales_with_table_and_floors_at_graded_sf(spark, tmp_path):
 
     # (3) the derivation helper on controlled row counts (the 1500-row
     # directory table above) with a literal core cap: one worker per
-    # rows_per_worker rows, capped at the cores; the query's floor of 8
-    # covers the graded SF, where the quotient is 0
+    # rows_per_worker rows, capped at the cores; the query's floor of
+    # min(8, cores) covers the graded SF, where the quotient is 0
     assert fanout(SF_UNIT, "orders", 150_000, 32) == 0
     assert fanout(str(tmp_path), "orders", 100, 32) == len(src) // 100 == 15
     assert fanout(str(tmp_path), "orders", 10, 32) == 32
@@ -1396,14 +1399,15 @@ def test_pca_fanout_floors_at_graded_sf(spark, tmp_path):
     NO Python node and NO round-robin exchange; at a 200k-vector
     corpus the derivation spreads the BLAS matmul across 8 workers
     (measured 0.757 s serial -> 0.269 s at sf10; the sf10 plan
-    capture plans/r14/vec_pca_project_after_sf10.txt shows the
-    MapInPandas + RoundRobinPartitioning form)."""
+    capture plans/r14/vec_pca_project_after_sf10.txt shows that
+    Python + RoundRobinPartitioning form, whose Python node is now
+    MapInArrow)."""
     from hbase_sep_spark.queries.llm_ops import _emb_fanout
 
     assert _emb_fanout(spark, SF_UNIT) < 2
     plan = plan_of(spark, "vec_pca_project")
     assert "RoundRobinPartitioning" not in plan
-    assert "MapInPandas" not in plan
+    assert "MapInPandas" not in plan and "MapInArrow" not in plan
     # the 200k-vector derivation, footer-only, at a literal core cap
     import pyarrow as pa
     import pyarrow.parquet as pq
