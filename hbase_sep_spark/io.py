@@ -14,6 +14,14 @@ from collections import OrderedDict
 from typing import Callable, Generic, Hashable, Sequence, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 _V = TypeVar("_V")
 
@@ -256,35 +264,79 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
-        raw, session_ts, _unit = events_physical(spark, sf_dir)
+        path = f"{sf_dir}/events.parquet"
+        raw, session_ts, _unit = events_physical(events_raw(spark, sf_dir), path)
         return _normalize_unsigned(raw.withColumn("ts", session_ts))
     return _normalize_unsigned(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
 
 
-def events_physical(spark: SparkSession, sf_dir: str):
-    """The events scan in its physical form, plus how to read its ts:
+# The events of every stream: the feed's six columns, in these types.
+EVENT_SCHEMA = StructType(
+    [
+        StructField("event_id", LongType()),
+        StructField("ts", TimestampType()),
+        StructField("user_id", LongType()),
+        StructField("event_type", StringType()),
+        StructField("value", DoubleType()),
+        StructField("props", StringType()),
+    ]
+)
+
+
+def events_physical(raw: DataFrame, feed_path: str):
+    """An events scan in its physical form, plus how to read its ts:
     `(raw, session_ts, unit)`.
 
-    `raw` is events_raw with an integer-like ts widened to bigint — a
-    UINT64 epoch (a C++ writer's uint64_t) scans as decimal(20,0) and a
-    signed sub-64-bit epoch (32-bit time_t seconds) as int/smallint/
-    tinyint; UINT8/16/32 already widen to bigint natively. `unit` is
-    the classified epoch unit of a bigint ts (`int_ts_unit`), else
-    None. `session_ts` rebuilds the session TimestampType from `raw`'s
-    ts: the unit's constructor for an integer epoch, else a cast
+    `raw` is any scan of event rows — the batch table (events_raw), a
+    segment directory or a replay's slice directory — and `feed_path`
+    the feed whose footers classify an integer epoch. The returned
+    `raw` has an integer-like ts widened to bigint — a UINT64 epoch (a
+    C++ writer's uint64_t) scans as decimal(20,0) and a signed
+    sub-64-bit epoch (32-bit time_t seconds) as int/smallint/tinyint;
+    UINT8/16/32 already widen to bigint natively. `unit` is the
+    classified epoch unit of a bigint ts (`int_ts_unit`), else None.
+    `session_ts` rebuilds the session TimestampType from `raw`'s ts:
+    the unit's constructor for an integer epoch, else a cast
     (timestamp_ntz → timestamp, identity for timestamp). The one owner
-    of this rule: io.t() applies `session_ts` to the whole scan, and
-    stream_bootstrap_then_tail filters `raw` on the physical column
-    before applying it, so its seam predicate reaches parquet."""
+    of this rule: io.t() applies `session_ts` to the whole scan,
+    `events_stream` to every stream, and stream_bootstrap_then_tail
+    filters `raw` on the physical column before applying it, so its
+    seam predicate reaches parquet."""
     from pyspark.sql import functions as F
 
-    raw = events_raw(spark, sf_dir)
     if dict(raw.dtypes)["ts"] in ("decimal(20,0)", "int", "smallint", "tinyint"):
         raw = raw.withColumn("ts", F.col("ts").cast("bigint"))
     if dict(raw.dtypes)["ts"] == "bigint":
-        unit = int_ts_unit(f"{sf_dir}/events.parquet")
+        unit = int_ts_unit(feed_path)
         return raw, int_ts_to_session_expr(unit), unit
     return raw, F.col("ts").cast("timestamp"), None
+
+
+def events_stream(raw: DataFrame, feed_path: str) -> DataFrame:
+    """The feed edge of every stream: `raw` event rows (as
+    `events_physical` takes them) in EVENT_SCHEMA.
+
+    - ts through `events_physical`; naive timestamps are UTC wall
+      times (the feed contract), which the cast keeps unshifted under
+      the UTC session timezone;
+    - every other column cast to its EVENT_SCHEMA type: a DECIMAL
+      value to the nearest double, a decimal(20,0) (UINT64) or
+      narrower int id to bigint, loud on overflow under ANSI;
+    - NULL ts / event_id rows dead-lettered. Offsets are positions in
+      the (ts, event_id)-ordered feed, so a record with no event time
+      has no replay position (the watermark's own isnotnull filter,
+      at the edge), and a record with no event_id has no idempotency
+      key, so it cannot be safely redelivered."""
+    from pyspark.sql import functions as F
+
+    raw, session_ts, _unit = events_physical(raw, feed_path)
+    out = raw.select(
+        *(
+            session_ts.alias("ts") if f.name == "ts" else F.col(f.name).cast(f.dataType)
+            for f in EVENT_SCHEMA.fields
+        )
+    )
+    return out.where(F.col("ts").isNotNull() & F.col("event_id").isNotNull())
 
 
 # Integer-epoch unit classification (round-11 int64-ts hardening).
@@ -376,20 +428,6 @@ def int_ts_to_session_expr(unit: str):
     if unit == "ms":
         return F.timestamp_millis(F.col("ts"))
     return F.timestamp_seconds(F.col("ts"))
-
-
-def epoch_us_to_unit(epoch_us: int, unit: str) -> int:
-    """Convert a whole-microseconds epoch to the feed's integer unit
-    (for pushable literals against the PHYSICAL int column). The
-    ms/s floors are exact whenever the value came FROM the feed (a
-    whole-ms feed's epochs have zero sub-ms digits)."""
-    if unit == "ns":
-        return epoch_us * 1000
-    if unit == "us":
-        return epoch_us
-    if unit == "ms":
-        return epoch_us // 1000
-    return epoch_us // 10**6
 
 
 def _normalize_unsigned(df: DataFrame) -> DataFrame:

@@ -19,15 +19,19 @@ Implementation: one transport, Spark's parquet file source. A
 streaming source only has to be replayable and paired with the offset
 log, and a set of immutable parquet files is exactly that; offsets are
 the file source's own (`{"logOffset": N}` plus its seen-files log).
+The feed-edge rule (ts dispatch, EVENT_SCHEMA casts, NULL ts /
+event_id dead-letter) is io's, `io.events_stream`, applied in Spark on
+every path; this module only decides which raw rows each micro-batch
+holds.
 - A segment DIRECTORY, the shape a real feed has, is read in place by
-  `read_segments`, with `_read_table`'s edge rules as Spark
-  expressions and pacing in whole segments. It is never copied.
+  `read_segments`, paced in whole segments. It is never copied.
 - Any other replay (`read_stream`: the 18 stream_* queries and a
   single-file SepSubscription) is first cut by `cut_slices` into one
-  parquet SLICE per micro-batch, each one `_read_table` range (plus
-  the redelivered sample of the previous batch), and the file source
-  reads the slices one per trigger (`read_slices`). The driver holds
-  one slice at a time, never the feed.
+  parquet SLICE per micro-batch of raw feed rows, each one
+  `_read_table` range (plus the redelivered sample of the previous
+  batch), and the file source reads the slices one per trigger
+  (`read_slices`). The driver holds one slice at a time, never the
+  feed.
 """
 
 from __future__ import annotations
@@ -35,27 +39,7 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-from hbase_sep_spark.io import listing, memo, scratch_dir
-
-EVENT_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
+from hbase_sep_spark.io import EVENT_SCHEMA, events_stream, listing, memo, scratch_dir
 
 
 # Per-segment footer facts are memoized one file each, so an append
@@ -210,52 +194,13 @@ def _file_chunks(fp: str, lo: int, hi: int):
 
 
 def _read_table(path: str, lo: int, hi: int, step: int = 1):
-    """Range read of GLOBAL feed rows [lo, hi) as a NORMALIZED arrow
-    table: segments overlapping the range are visited in feed order,
-    and within each only the overlapping row groups are fetched.
-    Returns None for an empty range.
-
-    All feed-edge contracts live here; `cut_slices` writes these tables
-    as the replay's slices and `read_segments` mirrors the same rules
-    as Spark expressions:
-
-    - Physical-type normalization, mirroring io._normalize_unsigned's
-      scan-edge rule: DECIMAL columns (decimal-money regeneration of
-      events.value — the round-10 collapse probe crashed all 16
-      streaming queries on it) cast to the nearest float64, as
-      Spark's cast does; decimal(20,0) — the
-      UINT64 signature if a writer routed it through arrow — casts to
-      int64 (this also normalizes a decimal-encoded ts before the
-      unit dispatch below). Narrow/unsigned ints widen via the final
-      schema cast, loud on genuine overflow (ANSI spirit).
-    - Integer-epoch ts (a raw Kafka/Debezium int64 feed, no unit
-      annotation): classify the unit from footer stats exactly like
-      io.t() (round-11 — the bands are 1000× apart, unambiguous for
-      1973-5138 epochs) and rebuild timestamp[us] at the arrow level.
-      An int→timestamp arrow cast interprets the value in the TARGET
-      unit, so cast to the classified unit first, then normalize to
-      µs (safe=False floors sub-µs nanos — matching io.t()'s
-      `div 1000` under the whole-µs envelope).
-    - Redelivery striding (every `step`-th raw feed position, BEFORE
-      the dead-letter filter — sampling is by feed position).
-    - Dead-letter NULL event-times (round-8 null-ts sweep): offsets
-      are positions in the (ts, event_id)-ordered feed, so a NULL-ts
-      record has no replay position — and NaT/None event times crash
-      or diverge downstream. Dropping here is the SEP-transport
-      analog of the watermark's own isnotnull(event_time) filter. A
-      NULL event_id is dead-lettered too (round-8 null-id probe): the
-      id is the idempotency key, and a record without one cannot be
-      safely REDELIVERED — at-least-once delivery with no dedup
-      identity silently double-counts. (The reference's row keys are
-      HBase row keys, non-null by construction, so this is the
-      transport contract, not a workaround.)
-    - tz: naive timestamps are UTC wall times (the feed contract);
-      the final cast to timestamp[us, UTC] maps naive→UTC unshifted
-      and aware→UTC instant-preserving (probed), so every consumer
-      sees tz-aware UTC whatever the file's annotation was.
-    """
+    """Range read of GLOBAL feed rows [lo, hi) as they are stored,
+    projected to the six event columns: segments overlapping the range
+    are visited in feed order, and within each only the overlapping
+    row groups are fetched. With `step`, every `step`-th row of the
+    range: redelivery samples by raw feed position, before the stream
+    dead-letters any row. Returns None for a range past the feed's end."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     chunks = []
     for fp, base, n in _feed_segments(path):
@@ -265,62 +210,7 @@ def _read_table(path: str, lo: int, hi: int, step: int = 1):
             break
     if not chunks:
         return None
-    names = [fld.name for fld in EVENT_SCHEMA.fields]
-    tbl = pa.concat_tables(chunks).select(names)
-    for i, f in enumerate(tbl.schema):
-        if pa.types.is_decimal(f.type):
-            col = tbl.column(i)
-            if (f.type.precision, f.type.scale) == (20, 0):
-                col = col.cast(pa.int64())
-            else:
-                # Through the exact decimal text: arrow's direct
-                # decimal→float64 cast is not correctly rounded
-                # (37.66 → 37.660000000000004).
-                col = col.cast(pa.string()).cast(pa.float64())
-            tbl = tbl.set_column(i, pa.field(f.name, col.type, f.nullable), col)
-    ts_i = tbl.schema.get_field_index("ts")
-    if pa.types.is_integer(tbl.schema.field(ts_i).type):
-        from hbase_sep_spark.io import int_ts_unit
-
-        unit = int_ts_unit(path)
-        col = tbl.column("ts").cast(pa.int64()).cast(pa.timestamp(unit))
-        tbl = tbl.set_column(ts_i, pa.field("ts", pa.timestamp(unit), True), col)
-    if step > 1:
-        tbl = tbl.take(pa.array(range(0, tbl.num_rows, step), pa.int64()))
-    tbl = tbl.filter(
-        pc.and_kleene(pc.is_valid(tbl.column("ts")), pc.is_valid(tbl.column("event_id")))
-    )
-    target = pa.schema(
-        [
-            pa.field("event_id", pa.int64()),
-            pa.field("ts", pa.timestamp("us", "UTC")),
-            pa.field("user_id", pa.int64()),
-            pa.field("event_type", pa.string()),
-            pa.field("value", pa.float64()),
-            pa.field("props", pa.string()),
-        ]
-    )
-    # safe=False only for the ts unit truncation (ns→µs floors under
-    # the whole-µs envelope); integer widenings go through a safe
-    # per-column cast so genuine overflow stays loud.
-    out_cols = []
-    for f in target:
-        col = tbl.column(f.name)
-        if col.type != f.type:
-            col = col.cast(f.type, safe=False) if f.name == "ts" else col.cast(f.type)
-        out_cols.append(col)
-    return pa.Table.from_arrays(out_cols, schema=target).combine_chunks()
-
-
-def _read_rows(path: str, lo: int, hi: int, step: int = 1):
-    """Row-tuple view of `_read_table` (EVENT_SCHEMA order, tz-aware
-    UTC timestamps) — the batch seam consumers and the test pins use
-    this; the slicer writes the arrow table itself."""
-    tbl = _read_table(path, lo, hi, step)
-    if tbl is None or tbl.num_rows == 0:
-        return iter(())
-    names = [fld.name for fld in EVENT_SCHEMA.fields]
-    return iter(tuple(r[n] for n in names) for r in tbl.to_pylist())
+    return pa.concat_tables(chunks).select(EVENT_SCHEMA.fieldNames())[::step]
 
 
 # FileStreamSource ignores a file older than its newest seen file minus
@@ -330,19 +220,30 @@ def _read_rows(path: str, lo: int, hi: int, step: int = 1):
 _NEVER_AGE_OUT = "1000000d"
 
 
-def _file_source(spark, path: str, schema, per_trigger: int):
-    """The parquet files of the directory `path` as a stream, oldest
-    modification time first, `per_trigger` files per micro-batch.
+def _file_source(spark, path: str, schema_file: str, feed_path: str, per_trigger: int):
+    """The events in the parquet files of the directory `path` as a
+    stream through io's feed-edge rule, oldest modification time
+    first, `per_trigger` files per micro-batch. The scan schema is the
+    footer schema of `schema_file`; the ts unit of an integer epoch is
+    classified on `feed_path`.
 
     The glob, not the directory, is the source path: it applies the
     listing rule (`*.parquet`, hidden names skipped) and lists in name
     order, which the mtime sort keeps for ties."""
-    return (
+    # TIMESTAMP(NANOS) files scan as int64 (io.events_raw's setting).
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # Inferring the schema runs a Spark job (~0.12 s warm), so it is
+    # memoized on the file, which a live feed never changes.
+    schema = memo(
+        "segment_schema", schema_file, lambda: spark.read.parquet(schema_file).schema, spark=spark
+    )
+    raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", per_trigger)
         .option("maxFileAge", _NEVER_AGE_OUT)
         .parquet(os.path.join(path, "*.parquet"))
     )
+    return events_stream(raw, feed_path)
 
 
 def cut_slices(
@@ -355,13 +256,13 @@ def cut_slices(
     at-least-once redelivery of the previous batch (from the second
     slice on, or from the first when `start_row` > 0).
 
-    Each part is one `_read_table` range, so the slices carry the
-    transport's edge rules and the driver holds one slice at a time.
-    The footer ts-order check runs on the source feed (`feed_total`),
-    not on the slices, whose redelivered rows are out of ts order.
-    Slices are written in name order and only once, so their
-    modification times never decrease and the file source replays
-    them in order."""
+    Each part is one `_read_table` range of raw feed rows, so a slice
+    has the feed's physical types and `read_slices` applies the edge
+    rule; the driver holds one slice at a time. The footer ts-order
+    check runs on the source feed (`feed_total`), not on the slices,
+    whose redelivered rows are out of ts order. Slices are written in
+    name order and only once, so their modification times never
+    decrease and the file source replays them in order."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -375,9 +276,14 @@ def cut_slices(
     return out_dir
 
 
-def read_slices(spark, out_dir: str):
-    """The slices `cut_slices` wrote to `out_dir`, one per trigger."""
-    return _file_source(spark, out_dir, EVENT_SCHEMA, 1)
+def read_slices(spark, out_dir: str, feed_path: str):
+    """The slices `cut_slices` wrote to `out_dir` from the feed at
+    `feed_path`, one per trigger. The scan schema is the first
+    slice's, so slices cut in another physical form (a subscription's
+    durable slices from an older cut) still resume; an empty feed has
+    no slices, and its schema is the feed's first segment's."""
+    first = (listing(out_dir)[0] or listing(feed_path)[0])[0]
+    return _file_source(spark, out_dir, first, feed_path, 1)
 
 
 def read_stream(
@@ -400,7 +306,7 @@ def read_stream(
     out_dir = memo(
         "stream_slices", path, cut, spark=spark, args=(rows, redeliver_every, start_row)
     )
-    return read_slices(spark, out_dir)
+    return read_slices(spark, out_dir, path)
 
 
 def _check_landing_order(sig: tuple) -> None:
@@ -419,48 +325,19 @@ def _check_landing_order(sig: tuple) -> None:
 
 
 def read_segments(spark, path: str, batch_size: int | str = "auto"):
-    """A segment directory's events through Spark's parquet file source,
-    with the transport contract of `_read_table` as Spark expressions:
+    """A segment directory's events through Spark's parquet file source
+    and io's feed-edge rule (`io.events_stream`), with the scan schema
+    of the first segment's footer.
 
-    - schema from the first segment's footer; the ts rule of io
-      (`int_ts_unit` + `int_ts_to_session_expr` for an integer epoch,
-      widened to bigint first; otherwise a cast to the session
-      TimestampType, which maps naive wall times unshifted under the
-      UTC session timezone);
-    - decimal and narrow/unsigned ints cast to EVENT_SCHEMA's types,
-      loud on overflow under ANSI;
-    - NULL ts / event_id rows dead-lettered;
     - at start: the footer ts-order check (`_feed_segments`) and the
       landing-order check (`_check_landing_order`);
     - pacing in whole segments: `maxFilesPerTrigger` is the rows per
       batch (`batch_rows`) over the mean rows per segment, rounded up,
       at least 1."""
-    from pyspark.sql import functions as F
-
-    from hbase_sep_spark.io import int_ts_to_session_expr, int_ts_unit
-
     segs = _feed_segments(path)
     _files, sig = listing(path)
     _check_landing_order(sig)
     total = segs[-1][1] + segs[-1][2]
     rows = batch_rows(path, batch_size)
     per_trigger = max(1, -(-rows * len(segs) // total)) if total else len(segs)
-    # TIMESTAMP(NANOS) segments scan as int64 (io.events_raw's setting).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Inferring the schema runs a Spark job (~0.12 s warm), so it is
-    # memoized on the first segment, which a live feed never changes.
-    first = segs[0][0]
-    schema = memo("segment_schema", first, lambda: spark.read.parquet(first).schema, spark=spark)
-    raw = _file_source(spark, path, schema, per_trigger)
-    if dict(raw.dtypes)["ts"] in ("decimal(20,0)", "int", "smallint", "tinyint", "bigint"):
-        raw = raw.withColumn("ts", F.col("ts").cast("bigint"))
-        ts = int_ts_to_session_expr(int_ts_unit(path))
-    else:
-        ts = F.col("ts").cast("timestamp")
-    out = raw.select(
-        *(
-            ts.alias("ts") if f.name == "ts" else F.col(f.name).cast(f.dataType)
-            for f in EVENT_SCHEMA.fields
-        )
-    )
-    return out.where(F.col("ts").isNotNull() & F.col("event_id").isNotNull())
+    return _file_source(spark, path, segs[0][0], path, per_trigger)

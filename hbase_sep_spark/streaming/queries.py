@@ -15,7 +15,6 @@ microsecond ts): 1-day tumbling, 1-day/6-h sliding, 30-min sessions,
 
 from __future__ import annotations
 
-import datetime as _dt
 import itertools
 import os
 import shutil
@@ -27,14 +26,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.streaming import DataStreamWriter
 
-from hbase_sep_spark.io import scratch_dir, t
+from hbase_sep_spark.io import EVENT_SCHEMA, scratch_dir, t
 from hbase_sep_spark.registry import register
-from hbase_sep_spark.sources.sep_events import (
-    EVENT_SCHEMA,
-    feed_batch_size,
-    feed_total,
-    read_stream,
-)
+from hbase_sep_spark.sources.sep_events import feed_batch_size, feed_total, read_stream
 
 SECTION = "2.10"
 
@@ -374,8 +368,11 @@ def stream_bootstrap_then_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     push predicates through a cast (round-12 ADVICE). The
     previous shape (`orderBy(ts, event_id).limit(K)`) was a global
     sort plus a single-point limit — a non-starter at 100 TB."""
-    from hbase_sep_spark.io import epoch_us_to_unit, events_physical
-    from hbase_sep_spark.sources.sep_events import _read_rows
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from hbase_sep_spark.io import events_physical, events_raw
+    from hbase_sep_spark.sources.sep_events import _read_table
 
     path = _feed(sf_dir)
     total = feed_total(path)  # footer-only; segment-dir aware
@@ -386,21 +383,23 @@ def stream_bootstrap_then_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     # events_physical widens them to bigint and classifies the unit
     # from footer stats like io.t() does, so the seam literal and
     # predicate are 64-bit integers in the feed's own unit.
-    raw, to_session_ts, int_unit = events_physical(spark, sf_dir)
-    # Boundary = the first row the TAIL will deliver. The transport
-    # dead-letters NULL event-times (round-8 null-ts sweep — a record
+    raw, to_session_ts, int_unit = events_physical(events_raw(spark, sf_dir), path)
+    # Boundary = the first row the TAIL will deliver. The stream
+    # dead-letters NULL ts / event_id rows (io.events_stream — a record
     # with no time has no position in the (ts, event_id) replay
-    # order), so that is the first TIMED row at/after position k;
-    # scan forward in bounded slices until one is found. NULL-ts rows
-    # fall out of the snapshot too: the tuple predicate below is
-    # NULL (not true) for them, so seam and tail agree the
+    # order), so that is the first such complete raw row at/after
+    # position k; scan forward in bounded slices until one is found.
+    # NULL-ts rows fall out of the snapshot too: the tuple predicate
+    # below is NULL (not true) for them, so seam and tail agree the
     # dead-letter rows belong to neither phase.
     boundary = None
     lo = k
     while lo < total:
         hi = min(total, lo + 4096)
-        boundary = next(_read_rows(path, lo, hi), None)
-        if boundary is not None:
+        rows = _read_table(path, lo, hi)
+        rows = rows.filter(pc.and_(pc.is_valid(rows["ts"]), pc.is_valid(rows["event_id"])))
+        if rows.num_rows:
+            boundary = rows.slice(0, 1)
             break
         lo = hi
     if boundary is None:
@@ -411,32 +410,19 @@ def stream_bootstrap_then_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:
         # The feed is stored in (ts, event_id) order (asserted in
         # tests), so "position < K" is exactly the tuple predicate
-        # "(ts, event_id) < boundary".
-        b_eid, b_ts = boundary[:2]
-        # _read_rows emits tz-aware UTC datetimes (Python-native rows
-        # since the round-8 null-keys fix — not pandas Timestamps).
-        b_naive = b_ts.replace(tzinfo=None)
+        # "(ts, event_id) < boundary". The literal is the boundary's
+        # physical ts: an integer in the feed's unit, else its UTC wall
+        # time as a foldable timestamp_ntz, so the predicate is
+        # pushable.
+        b_ts = boundary["ts"]
         if int_unit:
-            # Integer-epoch file: physical column is int64 in
-            # `int_unit`. Exact integer epoch math (float .timestamp()
-            # would lose precision); the boundary row came FROM the
-            # feed, so converting its whole-µs epoch back to the
-            # feed's unit is lossless (whole-ms feeds have zero sub-ms
-            # digits, etc.).
-            delta = b_naive - _dt.datetime(1970, 1, 1)
-            b_lit = F.lit(
-                epoch_us_to_unit(
-                    (delta.days * 86400 + delta.seconds) * 10**6 + delta.microseconds,
-                    int_unit,
-                )
-            )
+            b_lit = F.lit(b_ts.cast(pa.int64())[0].as_py())
         else:
-            # TIMESTAMP(MICROS) file: physical column is timestamp_ntz;
-            # a foldable ntz literal keeps the tuple predicate pushable.
-            b_lit = F.lit(b_naive).cast("timestamp_ntz")
-        seam = (F.col("ts") < b_lit) | (
-            (F.col("ts") == b_lit) & (F.col("event_id") < F.lit(int(b_eid)))
-        )
+            b_lit = F.lit(b_ts.cast(pa.timestamp("us"), safe=False)[0].as_py()).cast(
+                "timestamp_ntz"
+            )
+        b_eid = F.lit(boundary["event_id"].cast(pa.int64())[0].as_py())
+        seam = (F.col("ts") < b_lit) | ((F.col("ts") == b_lit) & (F.col("event_id") < b_eid))
     snapshot = (
         raw.filter(seam)
         .withColumn("ts", to_session_ts)

@@ -15,17 +15,19 @@ query over the event feed —
 - the listener is a foreachBatch callable (the
   EventListener.processEvents analog) or any writeStream sink.
 
-One transport serves the feed, Spark's parquet file source:
+One transport serves the feed, Spark's parquet file source, and every
+batch passes io's feed-edge rule (`io.events_stream`):
 - a segment DIRECTORY is read in place (`sep_events.read_segments`).
   A running subscription sees segments that land after it started
   (the live tail), and each trigger delivers whole segments, oldest
   first;
-- a single parquet FILE is cut once into per-batch slices under the
-  subscription's own directory (`sep_events.cut_slices`), paced in
-  rows. The slices are as durable as the cursor: a resume in a new
-  process reads the same files, and `unsubscribe()` removes both. A
-  file that changes after its slices were cut fails the next
-  `start()`.
+- a single parquet FILE is cut once into per-batch slices of raw feed
+  rows under the subscription's own directory (`sep_events.cut_slices`),
+  paced in rows. The slices are as durable as the cursor: a resume in
+  a new process reads the same files, with the scan schema of the
+  first slice (slices an older version cut already normalized resume
+  too), and `unsubscribe()` removes both. A file that changes after
+  its slices were cut fails the next `start()`.
 """
 
 from __future__ import annotations
@@ -89,7 +91,7 @@ class SepSubscription:
     def stream(self) -> DataFrame:
         if os.path.isdir(self.feed_path):
             return read_segments(self.spark, self.feed_path, self.batch_size)
-        return read_slices(self.spark, self._slices())
+        return read_slices(self.spark, self._slices(), self.feed_path)
 
     def _slices(self) -> str:
         """The file feed's slices, cut on the first start and reused by

@@ -38,17 +38,6 @@ def test_classify_epoch_unit_bands():
     assert classify_epoch_unit(abs(e1920 * 10**3)) == "ms"
 
 
-def test_epoch_us_round_trip():
-    from hbase_sep_spark.io import epoch_us_to_unit
-
-    us = 1_704_067_200_123_456  # 2024-01-01 00:00:00.123456
-    assert epoch_us_to_unit(us, "us") == us
-    assert epoch_us_to_unit(us, "ns") == us * 1000
-    # Coarse units floor — exact when the value came from such a feed.
-    assert epoch_us_to_unit(1_704_067_200_123_000, "ms") == 1_704_067_200_123
-    assert epoch_us_to_unit(1_704_067_200_000_000, "s") == 1_704_067_200
-
-
 def test_annotated_nanos_still_dispatches_ns(spark, tmp_path):
     """The rounds-1-3 shape: an ANNOTATED TIMESTAMP(NANOS) file also
     scans as bigint under nanosAsLong, but pyarrow reads its footer

@@ -309,6 +309,25 @@ def test_only_io_builds_cache_keys():
     assert offenders == []
 
 
+def test_one_feed_edge_rule():
+    """The events edge rule is written once, in io.py: the integer-ts
+    dtype tuple and the EVENT_SCHEMA cast appear once across the
+    package, and the transport module casts no column and computes
+    nothing in arrow."""
+    import pathlib
+    import re
+
+    import hbase_sep_spark
+
+    root = pathlib.Path(hbase_sep_spark.__file__).parent
+    sources = {str(p.relative_to(root)): p.read_text() for p in sorted(root.rglob("*.py"))}
+    for pattern in (r'\("decimal\(20,0\)", "int", "smallint", "tinyint"\)', r"\.cast\(f\.dataType\)"):
+        hits = [name for name, text in sources.items() for _ in re.finditer(pattern, text)]
+        assert hits == ["io.py"], pattern
+    transport = sources["sources/sep_events.py"]
+    assert ".cast(" not in transport and "pyarrow.compute" not in transport
+
+
 def test_scratch_dir_is_removed_at_exit(tmp_path):
     """A session's scratch root (sinks, replay slices, checkpoints) is
     removed when the process that made it exits."""

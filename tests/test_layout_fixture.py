@@ -21,7 +21,7 @@ def test_segmented_feed_equals_single_file(mutated):
     """Transport equivalence: reading the segmented feed in arbitrary
     global-row slices yields exactly the single-file feed's rows, in
     feed order (the replay-offset contract)."""
-    from hbase_sep_spark.sources.sep_events import _read_rows, feed_total
+    from hbase_sep_spark.sources.sep_events import _read_table, feed_total
 
     single, seg = f"{SF_UNIT}/events.parquet", f"{mutated('layout')}/events.parquet"
     assert feed_total(seg) == feed_total(single)
@@ -30,16 +30,16 @@ def test_segmented_feed_equals_single_file(mutated):
     cuts = [0, 1, n // 5 - 1, n // 5 + 2, n // 2, n - 1, n]
     got, want = [], []
     for lo, hi in zip(cuts, cuts[1:]):
-        got.extend(_read_rows(seg, lo, hi))
-        want.extend(_read_rows(single, lo, hi))
+        got.extend(_read_table(seg, lo, hi).to_pylist())
+        want.extend(_read_table(single, lo, hi).to_pylist())
     assert got == want
-    assert list(_read_rows(seg, 0, n)) == got
+    assert _read_table(seg, 0, n).to_pylist() == got
 
 
 def test_empty_segment_is_transparent(tmp_path):
     """A zero-row segment file (a rotation that caught no events) must
     not shift offsets or break the range reader."""
-    from hbase_sep_spark.sources.sep_events import _read_rows, feed_total
+    from hbase_sep_spark.sources.sep_events import _read_table, feed_total
 
     single = f"{SF_UNIT}/events.parquet"
     seg_dir = tmp_path / "events.parquet"
@@ -50,9 +50,9 @@ def test_empty_segment_is_transparent(tmp_path):
     pq.write_table(tbl.slice(0, 0), str(seg_dir / "part-001.parquet"))
     pq.write_table(tbl.slice(n // 2), str(seg_dir / "part-002.parquet"))
     assert feed_total(str(seg_dir)) == n
-    assert list(_read_rows(str(seg_dir), 0, n)) == list(_read_rows(single, 0, n))
+    assert _read_table(str(seg_dir), 0, n).equals(_read_table(single, 0, n))
     # A range that starts exactly at the empty segment's base.
-    assert list(_read_rows(str(seg_dir), n // 2, n)) == list(_read_rows(single, n // 2, n))
+    assert _read_table(str(seg_dir), n // 2, n).equals(_read_table(single, n // 2, n))
 
 
 def test_out_of_order_segments_fail_loudly(tmp_path):

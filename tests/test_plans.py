@@ -1398,10 +1398,9 @@ def test_pca_fanout_floors_at_graded_sf(spark, tmp_path):
     returned plan must stay the historical JVM expression form with
     NO Python node and NO round-robin exchange; at a 200k-vector
     corpus the derivation spreads the BLAS matmul across 8 workers
-    (measured 0.757 s serial -> 0.269 s at sf10; the sf10 plan
-    capture plans/r14/vec_pca_project_after_sf10.txt shows that
-    Python + RoundRobinPartitioning form, whose Python node is now
-    MapInArrow)."""
+    (measured 0.757 s serial -> 0.269 s at sf10; that path, whose
+    Python node is now MapInArrow, runs in
+    tests/test_vectors.py::test_pca_blas_path_keeps_labels_exact)."""
     from hbase_sep_spark.queries.llm_ops import _emb_fanout
 
     assert _emb_fanout(spark, SF_UNIT) < 2

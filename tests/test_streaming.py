@@ -68,9 +68,9 @@ def test_sep_source_runs_from_outside_the_checkout(tmp_path):
     )
     import pyarrow.parquet as pq
 
-    from hbase_sep_spark.sources.sep_events import _read_rows
+    from hbase_sep_spark.sources.sep_events import _read_table
 
-    n_users = len({r[2] for r in _read_rows(f"{SF_UNIT}/events.parquet", 0, 10**9)})
+    n_users = len(set(_read_table(f"{SF_UNIT}/events.parquet", 0, 10**9)["user_id"].to_pylist()))
     n_orders = pq.ParquetFile(f"{SF_UNIT}/orders.parquet").metadata.num_rows
     assert out.returncode == 0, out.stderr[-4000:]
     assert "rows 1000" in out.stdout
@@ -211,16 +211,16 @@ def test_feed_is_ts_sorted_on_disk():
 def test_source_range_read_prunes_and_strides():
     """Worker-side range read: exact [lo, hi) slicing and redelivery
     striding, straight off the parquet file (no driver state)."""
-    from hbase_sep_spark.sources.sep_events import _read_rows
+    from hbase_sep_spark.sources.sep_events import _read_table
 
     path = f"{SF_UNIT}/events.parquet"
-    full = list(_read_rows(path, 0, 10**9))
+    full = _read_table(path, 0, 10**9).to_pylist()
     assert len(full) == 1000
-    mid = list(_read_rows(path, 100, 250))
+    mid = _read_table(path, 100, 250).to_pylist()
     assert mid == full[100:250]
-    strided = list(_read_rows(path, 100, 250, step=5))
+    strided = _read_table(path, 100, 250, step=5).to_pylist()
     assert strided == full[100:250:5]
-    assert list(_read_rows(path, 500, 500)) == []
+    assert _read_table(path, 500, 500).num_rows == 0
 
 
 def test_slices_cut_batches_and_redelivery(tmp_path):
@@ -232,18 +232,15 @@ def test_slices_cut_batches_and_redelivery(tmp_path):
 
     import pyarrow.parquet as pq
 
-    from hbase_sep_spark.sources.sep_events import _read_rows, cut_slices
+    from hbase_sep_spark.sources.sep_events import _read_table, cut_slices
 
     path = f"{SF_UNIT}/events.parquet"
 
     def rows(out_dir):
         names = sorted(os.listdir(out_dir))
-        return [
-            [tuple(r.values()) for r in pq.read_table(os.path.join(out_dir, n)).to_pylist()]
-            for n in names
-        ]
+        return [pq.read_table(os.path.join(out_dir, n)).to_pylist() for n in names]
 
-    full = list(_read_rows(path, 0, 1000))
+    full = _read_table(path, 0, 1000).to_pylist()
     assert rows(cut_slices(path, str(tmp_path / "plain"), 400)) == [
         full[0:400], full[400:800], full[800:1000],
     ]
@@ -295,9 +292,9 @@ def test_source_restart_no_redelivery_of_acked(spark, tmp_path):
     again, and none after it are skipped. The restart point is batch 0
     (its offsets, source log and commit kept; later batches' entries
     gone), then the end of the feed."""
-    from hbase_sep_spark.sources.sep_events import _read_rows
+    from hbase_sep_spark.sources.sep_events import _read_table
 
-    ids = [r[0] for r in _read_rows(f"{SF_UNIT}/events.parquet", 0, 1000)]
+    ids = _read_table(f"{SF_UNIT}/events.parquet", 0, 1000)["event_id"].to_pylist()
     ckpt = str(tmp_path / "ckpt")
     first: list = []
     _replay(spark, ckpt, first)
@@ -317,9 +314,9 @@ def test_source_restart_replays_uncommitted_batch(spark, tmp_path):
     offsets were logged but whose commit was not is re-run on restart
     under the same epoch with exactly its own rows, and the replay
     resumes without a gap."""
-    from hbase_sep_spark.sources.sep_events import _read_rows
+    from hbase_sep_spark.sources.sep_events import _read_table
 
-    ids = [r[0] for r in _read_rows(f"{SF_UNIT}/events.parquet", 0, 1000)]
+    ids = _read_table(f"{SF_UNIT}/events.parquet", 0, 1000)["event_id"].to_pylist()
     ckpt = str(tmp_path / "ckpt")
     _replay(spark, ckpt, [])
     # Batch 1 logged but not committed; batch 2 not yet planned.
@@ -332,9 +329,9 @@ def test_source_restart_replays_uncommitted_batch(spark, tmp_path):
 
 def test_source_batches_bounded_at_bench_sf(tmp_path):
     """At the bench scale factor every slice holds at most one batch of
-    rows, in the normalized transport schema, and the slices in name
-    order tile the feed exactly — the driver-memory contract of the
-    slicer."""
+    raw feed rows, in the feed's own ts encoding, and the slices in
+    name order tile the feed exactly — the driver-memory contract of
+    the slicer."""
     import os
 
     import pyarrow as pa
@@ -348,7 +345,7 @@ def test_source_batches_bounded_at_bench_sf(tmp_path):
     slices = [pq.read_table(os.path.join(out, n)) for n in sorted(os.listdir(out))]
     assert len(slices) == -(-feed_total(path) // 40000)
     assert all(s.num_rows <= 40000 for s in slices)
-    assert slices[0].schema.field("ts").type == pa.timestamp("us", "UTC")
+    assert slices[0].schema.field("ts").type == pq.read_schema(path).field("ts").type
     assert pa.concat_tables(slices).equals(_read_table(path, 0, feed_total(path)))
 
 

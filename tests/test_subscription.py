@@ -5,9 +5,9 @@ drops the cursor and the next start replays from the beginning.
 Both feed shapes run on Spark's file source: a segment directory read
 in place (the live tail, the delivery-order checks at start()) and a
 single file cut into durable slices (refused once the file changes).
-Both refuse an old row cursor, and both deliver the rows the
-transport's edge rules (`_read_rows`) produce over every hostile
-events class.
+Both refuse an old row cursor, and both deliver the rows the feed-edge
+rule's arrow reference (`tests.conftest.reference_rows`) produces over
+every hostile events class.
 """
 
 from __future__ import annotations
@@ -22,9 +22,14 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
-from hbase_sep_spark.sources.sep_events import _read_rows, feed_total
 from hbase_sep_spark.streaming.subscription import SepSubscription
-from tests.conftest import SF_UNIT, land_segment, write_segments
+from tests.conftest import (
+    SF_UNIT,
+    land_segment,
+    normalized_events,
+    reference_rows,
+    write_segments,
+)
 
 
 def _drain(q):
@@ -152,6 +157,52 @@ def test_file_subscription_refuses_a_changed_feed(spark, tmp_path):
     assert sorted(again) == sorted(events.column("event_id").to_pylist())
 
 
+def test_file_subscription_resumes_normalized_slices(spark, tmp_path):
+    """A single-file subscription whose slices dir holds slices cut
+    already normalized (EVENT_SCHEMA types, as earlier versions cut
+    them), with a matching `_cut` record, resumes on the scan schema of
+    its slices, not of the feed: over an int64-ms feed with DECIMAL
+    values it delivers the same rows, batch for batch, as a fresh cut
+    of raw feed rows."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from hbase_sep_spark.io import listing
+    from tests.mutations import int_epoch_events
+
+    events = int_epoch_events(_events(), "ms")
+    value = pc.round(events["value"], 2).cast(pa.decimal128(12, 2))
+    events = events.set_column(events.schema.get_field_index("value"), "value", value)
+    feed = str(tmp_path / "events.parquet")
+    pq.write_table(events, feed)
+
+    def deliver(sub) -> dict:
+        got: dict = {}
+
+        def listener(batch_df, epoch_id):
+            cols = [F.unix_micros("ts").alias("ts") if c == "ts" else c for c in batch_df.columns]
+            got[epoch_id] = sorted(map(_canon, batch_df.select(cols).collect()))
+
+        _drain(sub.start(listener))
+        return got
+
+    resumed = SepSubscription(spark, "normalized", feed, root=str(tmp_path / "subs"), batch_size=400)
+    os.makedirs(resumed.slices_dir)
+    for i, lo in enumerate(range(0, 1000, 400)):
+        tbl = normalized_events(feed, lo, min(lo + 400, 1000))
+        pq.write_table(tbl, os.path.join(resumed.slices_dir, f"slice-{i:09d}.parquet"))
+    with open(os.path.join(resumed.slices_dir, "_cut"), "w") as f:
+        f.write(json.dumps([listing(feed)[1], 400]))
+    fresh = SepSubscription(spark, "raw", feed, root=str(tmp_path / "subs"), batch_size=400)
+    want = deliver(fresh)
+    assert pq.read_schema(os.path.join(fresh.slices_dir, "slice-000000000.parquet")).field(
+        "ts"
+    ).type == pa.int64()
+    assert len(want) == 3
+    assert deliver(resumed) == want
+
+
 def test_directory_subscription_fails_on_segments_out_of_ts_order(spark, tmp_path):
     """Segment names must sort in ts order (the footer check)."""
     feed = write_segments(_events(), tmp_path / "feed", 3)
@@ -248,11 +299,11 @@ _ENCODINGS = {
 @pytest.mark.parametrize("cls", [*EVENTS_CLASSES, *_ENCODINGS])
 def test_segment_transport_matches_python_reader(spark, mutated, tmp_path, cls):
     """Each hostile events class, in both feed shapes, delivers exactly
-    the multiset `_read_rows` (the transport's edge rules in arrow)
-    produces: split into three ts-ordered segments and drained by a
-    directory subscription (the edge rules as Spark expressions), and
-    as one file drained by a single-file subscription through its
-    slices."""
+    the multiset the arrow reference of the feed-edge rule produces
+    (`reference_rows`): split into three ts-ordered segments and
+    drained by a directory subscription, and as one file drained by a
+    single-file subscription through its raw slices — both through
+    io.events_stream."""
     from pyspark.sql import functions as F
 
     if cls in _ENCODINGS:
@@ -263,7 +314,7 @@ def test_segment_transport_matches_python_reader(spark, mutated, tmp_path, cls):
     file_feed = str(tmp_path / "events.parquet")
     pq.write_table(tbl, file_feed)
     for shape, feed in (("dir", write_segments(tbl, tmp_path / "feed", 3)), ("file", file_feed)):
-        want = Counter(map(_canon, _read_rows(feed, 0, feed_total(feed))))
+        want = Counter(map(_canon, reference_rows(feed)))
         got: Counter = Counter()
 
         def listener(batch_df, epoch_id):
