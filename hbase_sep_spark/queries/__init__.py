@@ -1,4 +1,27 @@
-"""Graded query implementations, one module per SURVEY.md §2 block.
+"""Graded query implementations, one module per query family.
+
+A query lives in the module of its name's family prefix:
+
+| prefix | module |
+|---|---|
+| `events_` (the CDC mutation model) | mutations |
+| `win_` | windows |
+| `sort_` `limit_` `topk_` | sort_limit |
+| `set_` | sets |
+| `str_` `date_` `math_` `cond_` `cast_` `scalar_` | scalars |
+| `json_` `arr_` `map_` | semistructured |
+| `udf_` `udaf_` `udtf_` | udfs |
+| `text_` `dedup_` `pipeline_` `sample_` `vec_` `simsearch_` `multimodal_` | llm_extras, llm_ops (§2.11) |
+| `graph_` | graph |
+| `ts_` | timeseries |
+| `tpch_` | tpch_suite |
+| `reshape_` `subq_` `sql_`, `join_dpp_partition_prune` | relational_ext |
+| `source_` `layout_` | sources_formats |
+| `agg_` | aggregates |
+| `events_` `scan_` `sink_` | events |
+| `filter_` `project_` `select_` | filters |
+| `join_` | joins |
+| `stream_` | hbase_sep_spark/streaming/queries.py |
 
 Importing this package registers every batch query into
 `hbase_sep_spark.registry.REGISTRY`.
@@ -6,12 +29,14 @@ Importing this package registers every batch query into
 Registration order IS the driver's grading order, and the driver
 grades a bounded prefix (~50 entries per round).  The EXPLICIT
 `_GRADE_FIRST` list below — not module import order — determines the
-prefix.  Policy each round: never-graded names first, then any
-sql-hash query whose implementation or oracle changed since its last
-green grade, then the stalest old greens for regression
-re-confirmation.  New queries added mid-round move INSIDE the
-prefix before the round ends (round-4 precedent) so they are graded
-immediately; anything displaced rotates to the front next round.
+prefix; the rest follows the import order below (llm_ops imports
+llm_extras, so llm_extras registers first).  Policy each round:
+never-graded names first, then any sql-hash query whose
+implementation or oracle changed since its last green grade, then the
+stalest old greens for regression re-confirmation.  New queries added
+mid-round move INSIDE the prefix before the round ends (round-4
+precedent) so they are graded immediately; anything displaced rotates
+to the front next round.
 """
 
 from hbase_sep_spark.queries import (  # noqa: F401
@@ -22,33 +47,13 @@ from hbase_sep_spark.queries import (  # noqa: F401
     scalars,
     semistructured,
     udfs,
-    llm_ops,
     llm_extras,
-    advanced_analytics,
-    analytics_r5,
-    analytics_r5b,
-    analytics_r5c,
-    analytics_r5d,
-    analytics_r5e,
-    analytics_r6prep,
+    llm_ops,
+    graph,
+    timeseries,
     tpch_suite,
-    analytics_r6b,
-    analytics_r6c,
-    analytics_r6d,
-    analytics_r6e,
-    analytics_r6f,
-    analytics_r6g,
-    analytics_r6h,
-    analytics_r6i,
-    analytics_r6j,
-    analytics_r6k,
-    analytics_r6l,
-    tpch_suite2,
-    analytics_r6m,
-    analytics_r12,
     relational_ext,
     sources_formats,
-    analytics_ext,
     aggregates,
     events,
     filters,
@@ -85,8 +90,11 @@ from hbase_sep_spark import registry as _registry
 #         CORRECTNESS_r01..r13 last-graded rounds, not memory).
 # 47-50 = the first four r8°-evidence names.
 # --- bound ---
-# 51+   = round-16 queue: the remaining r8° names by registration
-#         order (simsearch_lsh_bucketed, text_token_count,
+# 51+   = registration order (the family modules' import order,
+#         which no longer encodes staleness). The round-16 queue is
+#         the remaining r8° names, stalest first by their last-graded
+#         round in CORRECTNESS_r*, ties in this order
+#         (simsearch_lsh_bucketed, text_token_count,
 #         text_fingerprint, ts_rolling_zscore, join_asof_nearest,
 #         join_pit_scd2, agg_skew_kurtosis_portable,
 #         win_running_distinct, agg_bitmap_distinct_users,

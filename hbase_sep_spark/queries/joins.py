@@ -663,3 +663,447 @@ def join_nullsafe_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sum_value"),
         )
     )
+
+
+@register(
+    "join_asof_nearest",
+    oracle="""
+    WITH clicks AS (
+        SELECT user_id, ts, max(event_id) AS click_id
+        FROM events WHERE event_type = 'click' AND ts IS NOT NULL
+              AND user_id IS NOT NULL
+        GROUP BY user_id, ts
+    ),
+    purchases AS (
+        SELECT user_id, ts, event_id AS purchase_id
+        FROM events WHERE event_type = 'purchase' AND ts IS NOT NULL
+              AND user_id IS NOT NULL
+    ),
+    b AS (
+        SELECT p.user_id, p.purchase_id, p.ts,
+               c.ts AS bts, c.click_id AS bid
+        FROM purchases p
+        ASOF LEFT JOIN clicks c ON p.user_id = c.user_id AND p.ts >= c.ts
+    ),
+    f AS (
+        SELECT p.user_id, p.purchase_id,
+               c.ts AS fts, c.click_id AS fid
+        FROM purchases p
+        ASOF LEFT JOIN clicks c ON p.user_id = c.user_id AND p.ts <= c.ts
+    )
+    SELECT b.user_id, b.purchase_id,
+           CASE WHEN bid IS NOT NULL AND (fid IS NULL
+                     OR epoch_us(b.ts) - epoch_us(bts)
+                        <= epoch_us(fts) - epoch_us(b.ts)) THEN bid
+                ELSE fid END AS nearest_click_id,
+           CASE WHEN bid IS NULL AND fid IS NULL THEN NULL
+                WHEN bid IS NOT NULL AND (fid IS NULL
+                     OR epoch_us(b.ts) - epoch_us(bts)
+                        <= epoch_us(fts) - epoch_us(b.ts)) THEN 'backward'
+                ELSE 'forward' END AS direction,
+           CAST(CASE WHEN bid IS NOT NULL AND (fid IS NULL
+                          OR epoch_us(b.ts) - epoch_us(bts)
+                             <= epoch_us(fts) - epoch_us(b.ts))
+                          THEN epoch_us(b.ts) - epoch_us(bts)
+                     WHEN fid IS NOT NULL
+                          THEN epoch_us(fts) - epoch_us(b.ts) END AS BIGINT)
+               AS gap_us
+    FROM b JOIN f ON b.user_id = f.user_id AND b.purchase_id = f.purchase_id
+    """,
+    section="2.3",
+)
+def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """As-of join, direction='nearest' (pandas merge_asof's third
+    mode, completing the backward / backward+tolerance family): each
+    purchase takes whichever click is closer in time — the latest at
+    or before, or the earliest strictly after — ties preferring
+    backward. Gap arithmetic is int64 microseconds end to end, so the
+    choice and the output are exact in both engines (no float
+    distance anywhere).
+
+    Scale shape: ONE union+window pass over the user_id partitioning
+    computes both candidates (last ignorenulls over the preceding
+    frame, first ignorenulls over the following frame — Catalyst
+    shares the sort); no join against the clicks table at all, while
+    the oracle needs two ASOF joins plus a re-join. Null-time and
+    null-key rows are dead-lettered on both sides (round-8
+    null-ts/null-keys sweeps — DuckDB ASOF drops NULL equi-keys)."""
+    ev = t(spark, sf_dir, "events").filter(
+        F.col("ts").isNotNull() & F.col("user_id").isNotNull()
+    )
+    clicks = (
+        ev.filter(F.col("event_type") == "click")
+        .groupBy("user_id", "ts")
+        .agg(F.max("event_id").alias("click_id"))
+        .select(
+            "user_id",
+            "ts",
+            F.lit(None).cast("long").alias("purchase_id"),
+            "click_id",
+            F.col("ts").alias("click_ts"),
+            F.lit(0).alias("marker"),
+        )
+    )
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id",
+        "ts",
+        F.col("event_id").alias("purchase_id"),
+        F.lit(None).cast("long").alias("click_id"),
+        F.lit(None).cast("timestamp").alias("click_ts"),
+        F.lit(1).alias("marker"),
+    )
+    order = ["ts", "marker", "purchase_id"]
+    wb = (
+        Window.partitionBy("user_id")
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    wf = (
+        Window.partitionBy("user_id")
+        .orderBy(*order)
+        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    )
+    u = clicks.unionByName(purchases).select(
+        "user_id",
+        "ts",
+        "purchase_id",
+        "marker",
+        F.last("click_id", ignorenulls=True).over(wb).alias("bid"),
+        F.last("click_ts", ignorenulls=True).over(wb).alias("bts"),
+        F.first("click_id", ignorenulls=True).over(wf).alias("fid"),
+        F.first("click_ts", ignorenulls=True).over(wf).alias("fts"),
+    ).filter(F.col("marker") == 1)
+    bgap = F.unix_micros("ts") - F.unix_micros("bts")
+    fgap = F.unix_micros("fts") - F.unix_micros("ts")
+    back_wins = F.col("bid").isNotNull() & (F.col("fid").isNull() | (bgap <= fgap))
+    return u.select(
+        "user_id",
+        "purchase_id",
+        F.when(back_wins, F.col("bid")).otherwise(F.col("fid")).alias(
+            "nearest_click_id"
+        ),
+        F.when(F.col("bid").isNull() & F.col("fid").isNull(), F.lit(None))
+        .when(back_wins, F.lit("backward"))
+        .otherwise(F.lit("forward"))
+        .alias("direction"),
+        F.when(back_wins, bgap)
+        .when(F.col("fid").isNotNull(), fgap)
+        .cast("bigint")
+        .alias("gap_us"),
+    )
+
+
+@register(
+    "join_pit_scd2",
+    oracle="""
+    WITH vsrc AS (
+        SELECT user_id, ts, max(event_id) AS version_event_id,
+               arg_max(value, event_id) AS version_value
+        FROM events WHERE event_type IN ('signup', 'click')
+              AND ts IS NOT NULL AND user_id IS NOT NULL
+        GROUP BY user_id, ts
+    ),
+    versions AS (
+        SELECT user_id, version_event_id, version_value,
+               ts AS valid_from_ts,
+               lead(ts) OVER (PARTITION BY user_id ORDER BY ts)
+                   AS valid_to_ts
+        FROM vsrc
+    ),
+    purchases AS (
+        SELECT user_id, event_id AS purchase_id, ts
+        FROM events WHERE event_type = 'purchase' AND ts IS NOT NULL
+              AND user_id IS NOT NULL
+    )
+    SELECT p.user_id, p.purchase_id,
+           v.version_event_id, v.version_value,
+           strftime(v.valid_from_ts, '%Y-%m-%d %H:%M:%S.%f') AS valid_from,
+           strftime(v.valid_to_ts, '%Y-%m-%d %H:%M:%S.%f') AS valid_to,
+           CAST(CASE WHEN v.version_event_id IS NULL THEN 0
+                     WHEN p.ts >= v.valid_from_ts
+                          AND (v.valid_to_ts IS NULL OR p.ts < v.valid_to_ts)
+                     THEN 1 ELSE 0 END AS INT) AS in_interval
+    FROM purchases p
+    ASOF LEFT JOIN versions v
+      ON p.user_id = v.user_id AND p.ts >= v.valid_from_ts
+    """,
+    section="2.3",
+)
+def join_pit_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Point-in-time join against an SCD2 dimension — the
+    feature-store correctness pattern: each fact (purchase) joins the
+    dimension VERSION that was valid at fact time (profile versions
+    derived from signup/click events), never a later one (no feature
+    leakage). `in_interval` is a self-validating witness: 1 for every
+    matched row iff the as-of pick landed inside its [valid_from,
+    valid_to) interval — contiguous versions make this provable, and
+    the driver hash re-proves it on every grade.
+
+    Scale shape: the same single union+window user_id pass as the
+    as-of family — version effectivity (lead) and the prevailing
+    version at each purchase come from one shared sort; no join
+    against the versions table (the oracle needs a window + an ASOF
+    join). At 100 TB this is the shape that replaces the O(facts ×
+    versions-per-key) range join a naive PIT implementation does.
+
+    Same-ts versions are collapsed to the max-event_id row per
+    (user_id, ts) BEFORE effectivity is derived — on both sides — so
+    valid_from is strictly increasing per user, the oracle's ASOF
+    pick is unambiguous, and the union-window last() has no
+    nondeterministic tie (ADVICE r4). The collapse rides the same
+    user_id window partitioning as the lead(), so it adds a sort but
+    no extra shuffle. Null-time and null-key rows are dead-lettered
+    on both sides (round-8 null-ts/null-keys sweeps): a version with
+    no effectivity start, a fact with no as-of time, and a keyless
+    record are all unroutable (DuckDB ASOF drops NULL equi-keys)."""
+    ev = t(spark, sf_dir, "events").filter(
+        F.col("ts").isNotNull() & F.col("user_id").isNotNull()
+    )
+    wdedup = Window.partitionBy("user_id").orderBy("ts", F.col("event_id").desc())
+    vsrc = (
+        ev.filter(F.col("event_type").isin("signup", "click"))
+        .withColumn("_prev_ts", F.lag("ts").over(wdedup))
+        .filter(F.col("_prev_ts").isNull() | (F.col("_prev_ts") != F.col("ts")))
+        .drop("_prev_ts")
+    )
+    wv = Window.partitionBy("user_id").orderBy("ts")
+    versions = vsrc.select(
+        "user_id",
+        F.col("ts").alias("vts"),
+        F.col("event_id").alias("version_event_id"),
+        F.col("value").alias("version_value"),
+        F.lead("ts").over(wv).alias("valid_to_ts"),
+    ).select(
+        "user_id",
+        F.col("vts").alias("ts"),
+        F.lit(None).cast("long").alias("purchase_id"),
+        "version_event_id",
+        "version_value",
+        F.col("vts").alias("valid_from_ts"),
+        "valid_to_ts",
+        F.lit(0).alias("marker"),
+    )
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id",
+        "ts",
+        F.col("event_id").alias("purchase_id"),
+        F.lit(None).cast("long").alias("version_event_id"),
+        F.lit(None).cast("double").alias("version_value"),
+        F.lit(None).cast("timestamp").alias("valid_from_ts"),
+        F.lit(None).cast("timestamp").alias("valid_to_ts"),
+        F.lit(1).alias("marker"),
+    )
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "marker", "purchase_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    # The prevailing version's fields are carried as ONE struct under
+    # a single last(ignorenulls): four independent last()s could mix
+    # fields from different version rows.
+    paired = versions.unionByName(purchases).select(
+        "user_id",
+        "ts",
+        "purchase_id",
+        "marker",
+        F.last(
+            F.when(
+                F.col("marker") == 0,
+                F.struct("version_event_id", "version_value", "valid_from_ts", "valid_to_ts"),
+            ),
+            ignorenulls=True,
+        ).over(w).alias("v"),
+    ).filter(F.col("marker") == 1)
+    in_interval = (
+        F.when(F.col("v").isNull(), 0)
+        .when(
+            (F.col("ts") >= F.col("v.valid_from_ts"))
+            & (F.col("v.valid_to_ts").isNull() | (F.col("ts") < F.col("v.valid_to_ts"))),
+            1,
+        )
+        .otherwise(0)
+    )
+    return paired.select(
+        "user_id",
+        "purchase_id",
+        F.col("v.version_event_id").alias("version_event_id"),
+        F.col("v.version_value").alias("version_value"),
+        F.date_format("v.valid_from_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("valid_from"),
+        F.date_format("v.valid_to_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("valid_to"),
+        in_interval.cast("int").alias("in_interval"),
+    )
+
+
+# Bloom geometry for join_bloom_prefilter: 2^16 bits in 1024 longs.
+_BLOOM_BITS = 1 << 16
+
+
+def _bloom_pos(key, seed: int):
+    """Bit position of `key` under hash-seed `seed`, in [0, 2^16)."""
+    return F.pmod(F.xxhash64(key, F.lit(seed)), F.lit(_BLOOM_BITS))
+
+
+def bloom_build(keys: DataFrame, key_col: str) -> DataFrame:
+    """1-row DataFrame with a `bloom` map<int,bigint> column: the
+    2-hash bloom bitmap of `key_col`, bit_or-merged map-side."""
+    pos = keys.select(
+        F.explode(
+            F.array(_bloom_pos(F.col(key_col), 1), _bloom_pos(F.col(key_col), 77))
+        ).alias("p")
+    )
+    words = pos.groupBy((F.col("p") / 64).cast("int").alias("idx")).agg(
+        F.expr("bit_or(shiftleft(1L, CAST(p % 64 AS INT)))").alias("bits")
+    )
+    return words.agg(
+        F.map_from_entries(F.collect_list(F.struct("idx", "bits"))).alias("bloom")
+    )
+
+
+def bloom_member(pname: str):
+    """Membership predicate for a position column `pname` against the
+    cross-joined `bloom` map column (missing word ⇒ empty word)."""
+    word = F.coalesce(
+        F.element_at(F.col("bloom"), (F.col(pname) / 64).cast("int")),
+        F.lit(0).cast("bigint"),
+    )
+    return word.bitwiseAND(F.expr(f"shiftleft(1L, CAST({pname} % 64 AS INT))")) != 0
+
+
+@register(
+    "join_bloom_prefilter",
+    oracle="""
+    SELECT o_orderpriority,
+           CAST(count(*) AS BIGINT) AS n_orders,
+           CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2)
+                AS DOUBLE) AS total_price
+    FROM orders
+    WHERE o_custkey IN (SELECT c_custkey FROM customer
+                        WHERE c_mktsegment = 'BUILDING')
+    GROUP BY o_orderpriority
+    """,
+    section="2.3",
+)
+def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bloom-prefiltered semi-join: build a 2^16-bit / 2-hash bloom
+    filter over the selective build side (BUILDING customers), push
+    it to the probe scan as a cheap bitmap membership test, then run
+    the exact semi-join only on survivors. Semantically identical to
+    the plain semi-join (the final exact join removes bloom false
+    positives), so the oracle is the plain IN-subquery aggregate.
+
+    Scale shape: this is the pattern that makes selective joins
+    viable at 100 TB — the bloom bitmap is 8 KiB regardless of build
+    cardinality bucketing (1024 longs, bit_or-merged map-side), ships
+    to every probe task as a 1-row broadcast, and eliminates most
+    non-matching probe rows BEFORE the join (here before the
+    broadcast-hash probe; on a cluster, before the shuffle). Bit math
+    is all codegen: xxhash64 → pmod → shiftleft/bitwise AND against a
+    map<int,bigint> lookup. Spark's own runtime bloom-join injection
+    does this invisibly; the explicit form makes the mechanics
+    gradeable and pinnable (tests/test_plans.py)."""
+    cust = (
+        t(spark, sf_dir, "customer")
+        .filter(F.col("c_mktsegment") == "BUILDING")
+        .select("c_custkey")
+    )
+    # Build: each key sets 2 bits; bits OR-combine per 64-bit word.
+    bloom = bloom_build(cust, "c_custkey")
+
+    orders = t(spark, sf_dir, "orders")
+    prefiltered = (
+        orders.crossJoin(F.broadcast(bloom))
+        .withColumn("p1", _bloom_pos(F.col("o_custkey"), 1))
+        .withColumn("p2", _bloom_pos(F.col("o_custkey"), 77))
+        .filter(bloom_member("p1") & bloom_member("p2"))
+        .drop("bloom", "p1", "p2")
+    )
+    exact = prefiltered.join(
+        F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"), "left_semi"
+    )
+    return exact.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+        dsum("o_totalprice").alias("total_price"),
+    )
+
+
+@register(
+    "join_shuffle_hash_hint",
+    oracle="""
+    SELECT o_orderpriority,
+           CAST(count(*) AS BIGINT) AS n_items,
+           CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,6))), 2)
+                AS DOUBLE) AS total_price
+    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+    GROUP BY o_orderpriority
+    """,
+    section="2.3",
+)
+def join_shuffle_hash_hint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shuffle-hash-join strategy selection via hint — the third
+    physical join strategy beside broadcast (join_inner_broadcast)
+    and sort-merge (join_inner_shuffle): when both sides are too big
+    to broadcast but one side's PER-PARTITION slice fits in memory,
+    hashing that side skips BOTH sort passes of sort-merge. The
+    SHUFFLE_HASH hint on orders forces it (pinned: the physical plan
+    must show ShuffledHashJoin, tests/test_plans.py); results are
+    strategy-independent, so the oracle is the plain join aggregate.
+
+    Scale shape: same single co-partitioning shuffle as sort-merge
+    on l_orderkey/o_orderkey, minus two sorts — the right pick at
+    100 TB when the build side partitions are bounded (AQE can also
+    pick it dynamically; the hint makes the choice explicit and
+    testable)."""
+    orders = t(spark, sf_dir, "orders").hint("shuffle_hash")
+    li = t(spark, sf_dir, "lineitem")
+    return (
+        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_items"),
+            dsum("l_extendedprice").alias("total_price"),
+        )
+    )
+
+
+@register(
+    "join_lateral_topk",
+    oracle="""
+    SELECT c.c_custkey, t.o_orderkey AS top_orderkey,
+           t.o_totalprice AS top_totalprice
+    FROM customer c,
+         LATERAL (SELECT o_orderkey, o_totalprice
+                  FROM orders o
+                  WHERE o.o_custkey = c.c_custkey
+                  ORDER BY o_totalprice DESC, o_orderkey
+                  LIMIT 1) t
+    WHERE c.c_mktsegment = 'MACHINERY'
+    """,
+    section="2.3",
+)
+def join_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SQL LATERAL correlated-subquery join: per customer, the top
+    order by price — the dependent-subquery form of topk_per_group,
+    exercised through the SQL surface (Spark 4's LATERAL support)
+    rather than the DataFrame window API. Deterministic: price ties
+    break on o_orderkey, per the repo-wide tie-break rule.
+
+    Scale shape: Catalyst DECORRELATES the lateral — the per-row
+    subquery becomes one orders-side partial top-1 per custkey
+    (window group-limit) joined back on the key; never a re-executed
+    subquery per probe row. The decorrelated plan shuffles each side
+    once — identical asymptotics to the window formulation."""
+    t(spark, sf_dir, "customer").createOrReplaceTempView("lateral_customer_v")
+    t(spark, sf_dir, "orders").createOrReplaceTempView("lateral_orders_v")
+    return spark.sql(
+        """
+        SELECT c.c_custkey, t.o_orderkey AS top_orderkey,
+               t.o_totalprice AS top_totalprice
+        FROM lateral_customer_v c,
+             LATERAL (SELECT o_orderkey, o_totalprice
+                      FROM lateral_orders_v o
+                      WHERE o.o_custkey = c.c_custkey
+                      ORDER BY o_totalprice DESC, o_orderkey
+                      LIMIT 1) t
+        WHERE c.c_mktsegment = 'MACHINERY'
+        """
+    )

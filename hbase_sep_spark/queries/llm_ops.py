@@ -9,13 +9,15 @@ buckets not all-pairs, kNN is blocked/broadcast not cross-joined.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 
-from hbase_sep_spark.functions import arr_str
-from hbase_sep_spark.io import t
+from hbase_sep_spark.functions import arr_str, ascii_lower
+from hbase_sep_spark.functions.portable import knuth_hash
+from hbase_sep_spark.io import scratch_dir, t
 from hbase_sep_spark.operators import dedup as D
 from hbase_sep_spark.operators import text as T
 from hbase_sep_spark.operators import vectors as V
+from hbase_sep_spark.queries.llm_extras import _DUCK_QUALITY as _QUALITY_SQL
 from hbase_sep_spark.registry import register
 
 SECTION = "2.11"
@@ -767,3 +769,1892 @@ def _project_jvm(e: DataFrame, mean, comps) -> DataFrame:
         return f"round({terms[0]} + 0 + {' + '.join(terms[1:])}, 4)"
 
     return e.selectExpr("vec_id", "label", f"{proj(comps[0])} AS pc1", f"{proj(comps[1])} AS pc2")
+
+
+@register(
+    "pipeline_dataset_split",
+    oracle="""
+    WITH s AS (
+        SELECT lang, n_chars, doc_id,
+               CASE WHEN ((CAST(doc_id AS BIGINT) % 2147483648) * 2654435761) % 4294967296
+                         % 100 < 80 THEN 'train'
+                    WHEN ((CAST(doc_id AS BIGINT) % 2147483648) * 2654435761) % 4294967296
+                         % 100 < 90 THEN 'val'
+                    ELSE 'test' END AS split
+        FROM documents
+    )
+    SELECT split, lang,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           round(avg(CAST(n_chars AS DOUBLE)), 2) AS avg_chars,
+           CAST(min(doc_id) AS BIGINT) AS min_doc_id,
+           CAST(max(doc_id) AS BIGINT) AS max_doc_id
+    FROM s GROUP BY split, lang
+    """,
+    section="2.11",
+)
+def pipeline_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic train/val/test split (80/10/10) by Knuth
+    multiplicative hash of the stable doc id — reproducible across
+    runs, engines, partitionings, and incremental re-ingestion (a doc
+    never migrates between splits when the corpus grows), which is the
+    property rand()-based splitting cannot give an auditable training
+    pipeline. Report = per (split, lang) composition audit.
+
+    Scale shape: the split label is a scan-side codegen expression (no
+    shuffle, no salt); the audit is one map-side-combinable aggregate
+    on a 15-cell key space."""
+    d = t(spark, sf_dir, "documents")
+    bucket = knuth_hash("doc_id") % 100
+    split = (
+        F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
+    )
+    return (
+        d.select(split.alias("split"), "lang", "n_chars", "doc_id")
+        .groupBy("split", "lang")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.round(F.avg(F.col("n_chars").cast("double")), 2).alias("avg_chars"),
+            F.min("doc_id").cast("bigint").alias("min_doc_id"),
+            F.max("doc_id").cast("bigint").alias("max_doc_id"),
+        )
+    )
+
+
+@register(
+    "dedup_containment_ngram",
+    oracle="""
+    WITH tok AS (
+        SELECT DISTINCT doc_id, source, unnest(string_split(text, ' ')) AS word
+        FROM documents WHERE doc_id <= 250
+    ),
+    sizes AS (SELECT doc_id, count(*) AS n_words FROM tok GROUP BY doc_id),
+    inter AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
+        FROM tok a JOIN tok b
+          ON a.word = b.word AND a.source = b.source AND a.doc_id <> b.doc_id
+        GROUP BY a.doc_id, b.doc_id
+    )
+    SELECT id_a, id_b, CAST(n_common AS BIGINT) AS n_common,
+           round(CAST(n_common AS DOUBLE) / sa.n_words, 4) AS containment
+    FROM inter JOIN sizes sa ON sa.doc_id = id_a
+    WHERE CAST(n_common AS DOUBLE) / sa.n_words >= 0.8
+    """,
+    section="2.11",
+)
+def dedup_containment_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Asymmetric n-gram containment |A∩B| / |A| ≥ 0.8 within source
+    blocks — the subset-duplication detector: a short doc wholly
+    quoted inside a long one scores containment ≈ 1 while symmetric
+    Jaccard (dedup_ngram_jaccard) divides by the union and misses it.
+    Ordered pairs, so each direction is scored by its own denominator.
+
+    Scale shape: identical to the Jaccard op — the source blocking key
+    bounds the candidate space (LSH buckets at full scale), the
+    intersection is a token-level equi-join carrying (doc_id, word)
+    pairs, and the sizes join is aggregate-sized. The `<>` (vs `<`)
+    pair predicate doubles candidates but stays within blocks."""
+    tok = (
+        t(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") <= 250)
+        .select("doc_id", "source", F.explode(F.array_distinct(T.words())).alias("word"))
+    )
+    sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_words"))
+    a = tok.alias("a")
+    b = tok.alias("b")
+    inter = (
+        a.join(
+            b,
+            (F.col("a.word") == F.col("b.word"))
+            & (F.col("a.source") == F.col("b.source"))
+            & (F.col("a.doc_id") != F.col("b.doc_id")),
+        )
+        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    cont = F.col("n_common").cast("double") / F.col("n_words")
+    return (
+        inter.join(sizes.withColumnRenamed("doc_id", "id_a"), "id_a")
+        .filter(cont >= 0.8)
+        .select(
+            "id_a",
+            "id_b",
+            F.col("n_common").cast("bigint").alias("n_common"),
+            F.round(cont, 4).alias("containment"),
+        )
+    )
+
+
+@register(
+    "vec_matryoshka_truncate",
+    oracle=f"""
+    SELECT vec_id, label,
+           round(sqrt(list_sum(list_transform(embedding,
+                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 6) AS norm_full,
+           round(sqrt(list_sum(list_transform(list_slice(embedding, 1, 16),
+                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 6) AS norm_16,
+           round(sqrt(list_sum(list_transform(list_slice(embedding, 1, 16),
+                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+                 / sqrt(list_sum(list_transform(embedding,
+                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 4) AS retention
+    FROM embeddings
+    WHERE {V.valid_sql('embedding')}
+    """,
+    section="2.11",
+)
+def vec_matryoshka_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Matryoshka-style embedding truncation audit: the norm retained
+    by the first 16 of 64 dimensions — the metric that decides
+    whether a prefix-truncated index (cheap ANN tier) is safe for a
+    given embedding model. MRL-trained models concentrate mass in the
+    prefix; this op measures that concentration per vector.
+
+    Scale shape: pure per-row codegen lambdas over the array column
+    (slice + fold), no shuffle at all — the audit aggregate a real
+    pipeline would add on top is map-side-combinable.
+
+    Scan applies the V.is_valid gate (round-7 hostile-embeddings
+    sweep): retention divides by the FULL norm, so the zero-norm /
+    ragged / non-finite rows a real feed carries must not reach the
+    division (a valid vector's all-zero PREFIX is fine — that's a
+    0/x retention of 0.0, a legitimate audit result)."""
+    from hbase_sep_spark.operators import vectors as V
+
+    e = t(spark, sf_dir, "embeddings").filter(V.is_valid("embedding"))
+    n_full = V.l2_norm("embedding")
+    n_16 = V.l2_norm(F.slice("embedding", 1, 16))
+    return e.select(
+        "vec_id",
+        "label",
+        F.round(n_full, 6).alias("norm_full"),
+        F.round(n_16, 6).alias("norm_16"),
+        F.round(n_16 / n_full, 4).alias("retention"),
+    )
+
+
+@register(
+    "dedup_clusters_exact",
+    oracle="""
+    WITH RECURSIVE tok AS (
+        SELECT DISTINCT doc_id, source, unnest(string_split(text, ' ')) AS word
+        FROM documents WHERE doc_id <= 200
+    ),
+    sizes AS (SELECT doc_id, count(*) AS n_words FROM tok GROUP BY doc_id),
+    pairs AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
+        FROM tok a JOIN tok b
+          ON a.word = b.word AND a.source = b.source AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id
+    ),
+    edges AS (
+        SELECT id_a AS src, id_b AS dst FROM pairs p
+        JOIN sizes sa ON sa.doc_id = p.id_a JOIN sizes sb ON sb.doc_id = p.id_b
+        WHERE CAST(n_common AS DOUBLE) / (sa.n_words + sb.n_words - n_common) >= 0.5
+        UNION ALL
+        SELECT id_b, id_a FROM pairs p
+        JOIN sizes sa ON sa.doc_id = p.id_a JOIN sizes sb ON sb.doc_id = p.id_b
+        WHERE CAST(n_common AS DOUBLE) / (sa.n_words + sb.n_words - n_common) >= 0.5
+    ),
+    nodes AS (SELECT DISTINCT doc_id FROM documents WHERE doc_id <= 200),
+    reach(node, lbl) AS (
+        SELECT doc_id, doc_id FROM nodes
+        UNION
+        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
+    ),
+    lab AS (SELECT node AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY node)
+    SELECT l.doc_id, l.cluster_id,
+           CAST(count(*) OVER (PARTITION BY l.cluster_id) AS BIGINT)
+               AS cluster_size
+    FROM lab l
+    """,
+    section="2.11",
+)
+def dedup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup clustering with an EXACT oracle: the iterative
+    min-label-propagation loop (operators/dedup.py
+    connected_components — per-round persist/materialize/convergence
+    probe, the 100 TB shape) cross-checked against DuckDB's recursive
+    transitive closure over the SAME edge set. The companion
+    dedup_clusters op is rows-only because its MinHash edges can't be
+    replayed by another engine; here the edges are exact unigram
+    Jaccard ≥ 0.5 within source blocks (deterministic, replayable),
+    which upgrades the whole cluster assignment — the iterative
+    algorithm included — to sql-hash grading. Singletons keep
+    themselves as cluster_id, so the output is a total partition of
+    the bounded slice.
+
+    Scale shape: edge generation is the blocked token equi-join of
+    dedup_ngram_jaccard; the CC loop shuffles (id, label) pairs keyed
+    on id per round with per-round materialization bounding plan
+    growth; the size column is one window over the final labels."""
+    from hbase_sep_spark.operators.dedup import connected_components
+
+    docs = t(spark, sf_dir, "documents").filter(F.col("doc_id") <= 200)
+    tok = docs.select(
+        "doc_id", "source", F.explode(F.array_distinct(T.words())).alias("word")
+    )
+    sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_words"))
+    a = tok.alias("a")
+    b = tok.alias("b")
+    inter = (
+        a.join(
+            b,
+            (F.col("a.word") == F.col("b.word"))
+            & (F.col("a.source") == F.col("b.source"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_words").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_words").alias("nb"))
+    jac = F.col("n_common").cast("double") / (
+        F.col("na") + F.col("nb") - F.col("n_common")
+    )
+    pairs = inter.join(sa, "id_a").join(sb, "id_b").filter(jac >= 0.5)
+    labels = connected_components(
+        pairs.select("id_a", "id_b"), docs.select("doc_id"), id_col="doc_id"
+    )
+    wsize = Window.partitionBy("cluster_id")
+    return labels.select(
+        "doc_id",
+        "cluster_id",
+        F.count(F.lit(1)).over(wsize).cast("bigint").alias("cluster_size"),
+    )
+
+
+@register(
+    "pipeline_vocab_coverage",
+    oracle="""
+    WITH tok AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
+    freq AS (SELECT w, count(*) AS c FROM tok GROUP BY w),
+    ranked AS (
+        SELECT w, c,
+               row_number() OVER (ORDER BY c DESC, w) AS rk,
+               sum(c) OVER (ORDER BY c DESC, w
+                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                   AS cum,
+               sum(c) OVER () AS total
+        FROM freq
+    ),
+    targets AS (SELECT CAST(unnest([0.5, 0.9, 0.95, 0.99]) AS DOUBLE) AS tgt)
+    SELECT tgt AS coverage_target,
+           CAST(min(rk) AS BIGINT) AS vocab_size,
+           CAST(max(total) AS BIGINT) AS total_tokens
+    FROM ranked JOIN targets ON CAST(cum AS DOUBLE) / total >= tgt
+    GROUP BY tgt
+    """,
+    section="2.11",
+)
+def pipeline_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Vocabulary coverage curve — the tokenizer-design metric: the
+    smallest frequency-ranked vocabulary covering 50/90/95/99 % of
+    corpus token occurrences. The answer decides vocab size and OOV
+    budget before any tokenizer training run.
+
+    Determinism: ranking orders by (count DESC, token) — a total
+    order, so ranks and cumulative sums are identical across engines;
+    the coverage ratio is an exact-integer quotient compared with the
+    same IEEE division on both sides.
+
+    Scale shape: the corpus-sized work is the map-side-combinable
+    (token → count) aggregate; the ranking window runs over the
+    VOCABULARY (≪ corpus — the token table shuffles once as (token,
+    count) pairs), single-partition by construction; at a vocabulary
+    too large for one task this becomes per-shard top-k + merge, the
+    same two-level shape as operators/quantiles.py. The 4-row target
+    table broadcasts into a bounded nested-loop join."""
+    d = t(spark, sf_dir, "documents")
+    tok = d.select(F.explode(T.words()).alias("w"))
+    freq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
+    wr = Window.orderBy(F.desc("c"), "w")
+    ranked = freq.select(
+        "c",
+        F.row_number().over(wr).alias("rk"),
+        F.sum("c")
+        .over(wr.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .alias("cum"),
+        F.sum("c").over(Window.partitionBy()).alias("total"),
+    )
+    targets = spark.createDataFrame(
+        [(0.5,), (0.9,), (0.95,), (0.99,)], "tgt double"
+    )
+    covered = ranked.join(
+        F.broadcast(targets),
+        (F.col("cum").cast("double") / F.col("total")) >= F.col("tgt"),
+    )
+    return covered.groupBy(F.col("tgt").alias("coverage_target")).agg(
+        F.min("rk").cast("bigint").alias("vocab_size"),
+        F.max("total").cast("bigint").alias("total_tokens"),
+    )
+
+
+@register(
+    "pipeline_quality_gate_report",
+    oracle="""
+    WITH flags AS (
+        SELECT doc_id,
+               CASE WHEN n_chars < 80 THEN 1 ELSE 0 END AS too_short,
+               CASE WHEN len(string_split(text, ' ')) < 25
+                    THEN 1 ELSE 0 END AS too_few_tokens,
+               CASE WHEN len(list_distinct(string_split(text, ' '))) * 1.0
+                         / len(string_split(text, ' ')) < 0.4
+                    THEN 1 ELSE 0 END AS low_diversity
+        FROM documents
+    ),
+    agg AS (
+        SELECT CAST(count(*) AS BIGINT) AS total,
+               CAST(sum(too_short) AS BIGINT) AS r1,
+               CAST(sum(too_few_tokens) AS BIGINT) AS r2,
+               CAST(sum(low_diversity) AS BIGINT) AS r3,
+               CAST(sum(CASE WHEN too_short = 0 AND too_few_tokens = 0
+                                  AND low_diversity = 0
+                             THEN 1 ELSE 0 END) AS BIGINT) AS passed
+        FROM flags
+    )
+    SELECT 'too_short' AS rule, r1 AS n_docs,
+           CAST(round(CAST(CAST(r1 * 100.0 / total AS VARCHAR) AS DECIMAL(38,18)), 3) AS DOUBLE) + 0.0 AS pct FROM agg
+    UNION ALL SELECT 'too_few_tokens', r2,
+           CAST(round(CAST(CAST(r2 * 100.0 / total AS VARCHAR) AS DECIMAL(38,18)), 3) AS DOUBLE) + 0.0 FROM agg
+    UNION ALL SELECT 'low_diversity', r3,
+           CAST(round(CAST(CAST(r3 * 100.0 / total AS VARCHAR) AS DECIMAL(38,18)), 3) AS DOUBLE) + 0.0 FROM agg
+    UNION ALL SELECT 'passed_all', passed,
+           CAST(round(CAST(CAST(passed * 100.0 / total AS VARCHAR) AS DECIMAL(38,18)), 3) AS DOUBLE) + 0.0 FROM agg
+    """,
+    section="2.11",
+)
+def pipeline_quality_gate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus quality-gate report — the per-rule rejection funnel a
+    training-data pipeline publishes with every snapshot: how many
+    documents each filter rule rejects (length floor, token floor,
+    lexical-diversity floor) and how many pass every gate. Rules are
+    evaluated independently (a doc can fail several), so the counts
+    diagnose WHICH gate dominates — the number the pipeline owner
+    actually tunes.
+
+    Scale shape: one pass over the corpus with per-row flag
+    expressions (pure codegen — split/array_distinct/size, no UDF),
+    one global map-side-combinable aggregate producing a 1-row
+    partial per mapper, then a 4-row stack() pivot of that single
+    row. Nothing after the aggregate is data-sized; at 100 TB the
+    whole report costs one scan."""
+    docs = t(spark, sf_dir, "documents")
+    words = F.split(F.col("text"), " ")
+    flags = docs.select(
+        F.when(F.col("n_chars") < 80, 1).otherwise(0).alias("too_short"),
+        F.when(F.size(words) < 25, 1).otherwise(0).alias("too_few_tokens"),
+        F.when(
+            F.size(F.array_distinct(words)) * 1.0 / F.size(words) < 0.4, 1
+        )
+        .otherwise(0)
+        .alias("low_diversity"),
+    )
+    agg = flags.agg(
+        F.count(F.lit(1)).cast("bigint").alias("total"),
+        F.sum("too_short").cast("bigint").alias("r1"),
+        F.sum("too_few_tokens").cast("bigint").alias("r2"),
+        F.sum("low_diversity").cast("bigint").alias("r3"),
+        F.sum(
+            F.when(
+                (F.col("too_short") == 0)
+                & (F.col("too_few_tokens") == 0)
+                & (F.col("low_diversity") == 0),
+                1,
+            ).otherwise(0)
+        )
+        .cast("bigint")
+        .alias("passed"),
+    )
+    return agg.select(
+        F.expr(
+            "stack(4, 'too_short', r1, 'too_few_tokens', r2, "
+            "'low_diversity', r3, 'passed_all', passed) AS (rule, n_docs)"
+        ),
+        "total",
+    ).select(
+        "rule",
+        "n_docs",
+        (F.round(F.col("n_docs") * 100.0 / F.col("total"), 3) + F.lit(0.0)).alias(
+            "pct"
+        ),
+    )
+
+
+@register("simsearch_quantized_rerank", oracle=None, memoize=True, section="2.11")
+def simsearch_quantized_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-stage ANN: int8-quantized shortlist → exact float rerank —
+    the production retrieval shape (FAISS/ScaNN style) missing
+    between the repo's one-stage searchers: candidates come from the
+    LSH bucket equi-join (sublinear, same machinery as
+    simsearch_lsh_bucketed), stage 1 scores them with the INTEGER
+    dot product of int8-quantized unit vectors (4 bytes/dim →
+    1 byte/dim moving through the shuffle; exact long arithmetic, no
+    float nondeterminism; proportional to cosine by construction)
+    and keeps a 20-deep shortlist, stage 2 reranks ONLY the
+    shortlist with full-precision cosine to top-5.
+    tests/test_ann.py gates two invariants: the rerank is consistent
+    (stage-2 top-5 ⊆ stage-1 shortlist, scores equal brute-force
+    cosine on those pairs) and recall@5 vs exact brute force stays
+    above the one-stage LSH searcher's floor. rows-only: xxhash64
+    plane family + quantization grid are not oracle-expressible.
+
+    Scale shape: quantization is a per-row expression (no stats
+    pass, no shuffle); candidate generation is the bucketed
+    equi-join, never all-pairs; the stage-2 rerank input is
+    probes × 20 rows — at 100 TB the full-precision arithmetic
+    touches a vanishing fraction of the corpus.
+
+    Scan applies the V.is_valid gate (round-7 hostile-embeddings
+    sweep: the symmetric int8 grid divides by the vector norm, so
+    zero-norm / ragged / non-finite rows must not reach
+    quantization)."""
+    from hbase_sep_spark.operators import vectors as V
+
+    e = t(spark, sf_dir, "embeddings").filter(V.is_valid("embedding"))
+
+    # Symmetric int8 grid over the UNIT-normalized vector: q_i =
+    # round(v_i / ||v|| × 127). The integer dot of two such vectors
+    # is then proportional to their cosine (an affine per-dim grid
+    # would rank by unnormalized offset dot and wreck the shortlist).
+    def quantize(vec_col):
+        norm = V.l2_norm(vec_col)
+        return F.transform(
+            vec_col,
+            lambda x: F.round(x.cast("double") / norm * 127.0, 0).cast("long"),
+        )
+
+    q = e.select("vec_id", "embedding", quantize(F.col("embedding")).alias("qvec"))
+
+    keys = V.lsh_tables("embedding", n_tables=8, n_planes=4)
+    probe_keys = V.lsh_multiprobe_tables("embedding", n_tables=8, n_planes=4)
+    bucketed = q.select("vec_id", "embedding", "qvec", F.explode(keys).alias("k")).select(
+        "vec_id", "embedding", "qvec",
+        F.col("k.table").alias("table"), F.col("k.bucket").alias("bucket"),
+    )
+    probes = (
+        q.filter(F.col("vec_id") < 20)
+        .select(
+            F.col("vec_id").alias("probe_id"),
+            F.col("embedding").alias("probe_emb"),
+            F.col("qvec").alias("probe_q"),
+            F.explode(probe_keys).alias("k"),
+        )
+        .select(
+            "probe_id", "probe_emb", "probe_q",
+            F.col("k.table").alias("table"), F.col("k.bucket").alias("bucket"),
+        )
+    )
+    candidates = (
+        bucketed.join(F.broadcast(probes), ["table", "bucket"])
+        .filter(F.col("vec_id") != F.col("probe_id"))
+        .select(
+            "probe_id", "probe_emb", "probe_q",
+            F.col("vec_id").alias("neighbor_id"), "embedding", "qvec",
+        )
+        .distinct()
+    )
+
+    # Stage 1: integer dot product of the quantized vectors (exact
+    # long arithmetic — deterministic shortlist), keep top 20.
+    qdot = F.aggregate(
+        F.zip_with("qvec", "probe_q", lambda a, b: a * b),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+    w1 = Window.partitionBy("probe_id").orderBy(F.desc("qscore"), "neighbor_id")
+    shortlist = (
+        candidates.select(
+            "probe_id", "probe_emb", "neighbor_id", "embedding", qdot.alias("qscore")
+        )
+        .withColumn("srank", F.row_number().over(w1))
+        .filter(F.col("srank") <= 20)
+    )
+
+    # Stage 2: exact cosine rerank of the 20-deep shortlist only.
+    cos = V.dot("embedding", "probe_emb") / (
+        V.l2_norm("embedding") * V.l2_norm("probe_emb")
+    )
+    w2 = Window.partitionBy("probe_id").orderBy(F.desc("cos_raw"), "neighbor_id")
+    return (
+        shortlist.select("probe_id", "neighbor_id", cos.alias("cos_raw"))
+        .withColumn("rank", F.row_number().over(w2))
+        .filter(F.col("rank") <= 5)
+        .select(
+            "probe_id", "neighbor_id",
+            (F.round("cos_raw", 4) + F.lit(0.0)).alias("cos_sim"), "rank",
+        )
+    )
+
+
+@register(
+    "pipeline_epoch_shuffle",
+    oracle="""
+    WITH keyed AS (
+        SELECT d.doc_id, e.epoch,
+               md5(CAST(d.doc_id AS VARCHAR) || ':'
+                   || CAST(e.epoch AS VARCHAR)) AS skey
+        FROM documents d
+        CROSS JOIN (SELECT unnest([0, 1]) AS epoch) e
+    )
+    SELECT doc_id, CAST(epoch AS INT) AS epoch,
+           CAST(doc_id % 8 AS INT) AS shard,
+           CAST(row_number() OVER (
+               PARTITION BY epoch, doc_id % 8 ORDER BY skey) AS INT) AS pos
+    FROM keyed
+    """,
+    section="2.11",
+)
+def pipeline_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic per-epoch training-data shuffle — the data-
+    loader contract a reproducible training run needs: every epoch
+    re-orders the corpus by a seeded hash (md5 of doc_id:epoch —
+    portable across engines, unlike xxhash), docs are routed to
+    fixed shards, and each doc gets its position in its (epoch,
+    shard) read order. Re-running the pipeline bit-reproduces every
+    epoch's order; no RNG state anywhere.
+
+    Scale shape: the epoch fan-out is a generated-column explode (no
+    join against an epoch table at scale — it's a constant array);
+    positions come from one (epoch, shard) window whose partition
+    count scales with shards × epochs, each sorted independently.
+    The md5 sort key is computed per row in codegen; at 100 TB the
+    only shuffle is the final per-shard ordering — exactly the write
+    pattern of sharded training files."""
+    docs = t(spark, sf_dir, "documents")
+    keyed = docs.select(
+        "doc_id",
+        F.explode(F.array(F.lit(0), F.lit(1))).alias("epoch"),
+    ).select(
+        "doc_id",
+        "epoch",
+        F.md5(
+            F.concat(
+                F.col("doc_id").cast("string"),
+                F.lit(":"),
+                F.col("epoch").cast("string"),
+            )
+        ).alias("skey"),
+        (F.col("doc_id") % 8).alias("shard"),
+    )
+    w = Window.partitionBy("epoch", "shard").orderBy("skey")
+    return keyed.select(
+        "doc_id",
+        F.col("epoch").cast("int").alias("epoch"),
+        F.col("shard").cast("int").alias("shard"),
+        F.row_number().over(w).cast("int").alias("pos"),
+    )
+
+
+@register("pipeline_neardup_prep", oracle=None, memoize=True, section="2.11")
+def pipeline_neardup_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """End-to-end NEAR-dup corpus prep — the fuzzy twin of
+    pipeline_training_prep's exact-digest pipeline, composing the
+    operator library the way a production corpus snapshot does:
+    MinHash+LSH candidate pairs (operators/dedup.py, threshold 0.5)
+    → connected components → quality-aware canonical selection (best
+    quality, doc_id tiebreak, per cluster) → per-language corpus
+    report: docs seen, docs kept, near-dups dropped, whitespace
+    tokens and mean quality of the KEPT corpus. rows-only: the
+    xxhash64 MinHash family is not oracle-expressible; invariants
+    (kept + dropped == total, one keeper per cluster, near-dup drops
+    ⊇ exact-dup drops) are gated in tests/test_operators.py.
+
+    Scale shape: every stage is the library's bucketed-equi-join /
+    per-round-persisted shape — signatures shuffle fixed-width longs,
+    LSH banding never goes all-pairs, CC materializes per round; the
+    final report aggregates doc-cardinality rows. The text column
+    never shuffles."""
+    from hbase_sep_spark.operators import dedup as D
+    from hbase_sep_spark.operators import text as T
+
+    docs = t(spark, sf_dir, "documents")
+    pairs = D.minhash_near_dup_pairs(docs, threshold=0.5)
+    comp = D.connected_components(pairs, docs.select("doc_id"))
+    scored = docs.select(
+        "doc_id",
+        "lang",
+        T.quality_score().alias("quality"),
+        T.token_count_ws().cast("long").alias("n_tokens"),
+    )
+    labeled = scored.join(comp.select("doc_id", "cluster_id"), "doc_id")
+    w = Window.partitionBy("cluster_id").orderBy(F.desc("quality"), "doc_id")
+    flagged = labeled.withColumn("rn", F.row_number().over(w))
+    return flagged.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.sum(F.when(F.col("rn") == 1, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_kept"),
+        F.sum(F.when(F.col("rn") > 1, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_neardups_dropped"),
+        F.sum(F.when(F.col("rn") == 1, F.col("n_tokens")).otherwise(F.lit(0)))
+        .cast("bigint")
+        .alias("total_tokens_kept"),
+        F.round(
+            F.sum(
+                F.when(F.col("rn") == 1, F.col("quality").cast("decimal(18,6)"))
+            ).cast("double")
+            / F.sum(F.when(F.col("rn") == 1, 1).otherwise(0)),
+            4,
+        ).alias("avg_quality_kept"),
+    )
+
+
+@register(
+    "text_zipf_fit",
+    oracle="""
+    WITH tok AS (
+        SELECT unnest(string_split(text, ' ')) AS word
+        FROM documents
+    ),
+    cnt AS (
+        SELECT word, CAST(count(*) AS BIGINT) AS n
+        FROM tok WHERE word <> '' GROUP BY word
+    ),
+    top AS (
+        SELECT word, n,
+               row_number() OVER (ORDER BY n DESC, word) AS rnk
+        FROM cnt ORDER BY n DESC, word LIMIT 1000
+    ),
+    fit AS (
+        SELECT round(regr_slope(ln(n), ln(rnk)), 4) + 0.0 AS zipf_slope,
+               CAST(count(*) AS BIGINT) AS n_top,
+               max(CASE WHEN rnk = 1 THEN word END) AS top_word,
+               max(CASE WHEN rnk = 1 THEN n END) AS top_count
+        FROM top
+    ),
+    tot AS (
+        SELECT CAST(count(*) AS BIGINT) AS n_vocab,
+               CAST(sum(n) AS BIGINT) AS n_tokens
+        FROM cnt
+    )
+    SELECT n_vocab, n_tokens, top_word, top_count, zipf_slope
+    FROM fit, tot
+    """,
+    section="2.11",
+)
+def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Zipf's-law fit over the corpus vocabulary: log-log slope of
+    word frequency vs frequency rank, plus vocabulary size, token
+    count, and the top word. The slope (~ -1 on natural text) is the
+    distribution-shape audit a tokenizer team runs on every corpus
+    snapshot — a big deviation means boilerplate or spam flooded the
+    crawl.
+
+    Scale shape: the word count is a map-side-combinable aggregate
+    (the only data-sized shuffle); ONLY the top-1000 words cross
+    into the single-partition rank window (orderBy+limit plans as
+    TakeOrderedAndProject, so the global sort never materializes),
+    and the regression runs over ≤1000 rows. Vocabulary totals come
+    from a separate 1-row aggregate (the word-count subtree appears
+    twice in the plan but executes once — ReusedExchange at
+    runtime, verified); both 1-row sides meet in a broadcast cross
+    join. Rounding regr_slope over the ≤1000 ln
+    pairs to 4 dp follows the agg_regr_slope portability precedent
+    (round-6 there) with extra margin."""
+    docs = t(spark, sf_dir, "documents")
+    cnt = (
+        docs.select(F.explode(F.split("text", " ")).alias("word"))
+        .filter(F.col("word") != "")
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    )
+    top = cnt.orderBy(F.col("n").desc(), "word").limit(1000)
+    wr = Window.orderBy(F.col("n").desc(), "word")
+    ranked = top.select("word", "n", F.row_number().over(wr).alias("rnk"))
+    fit = ranked.agg(
+        (F.round(F.regr_slope(F.log("n"), F.log("rnk")), 4) + F.lit(0.0)).alias(
+            "zipf_slope"
+        ),
+        F.count(F.lit(1)).cast("bigint").alias("n_top"),
+        F.max(F.when(F.col("rnk") == 1, F.col("word"))).alias("top_word"),
+        F.max(F.when(F.col("rnk") == 1, F.col("n"))).alias("top_count"),
+    )
+    glob = cnt.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_vocab"),
+        F.sum("n").cast("bigint").alias("n_tokens"),
+    )
+    return fit.crossJoin(F.broadcast(glob)).select(
+        "n_vocab", "n_tokens", "top_word", "top_count", "zipf_slope"
+    )
+
+
+@register(
+    "pipeline_domain_mix_report",
+    oracle="""
+    WITH per_src AS (
+        SELECT source,
+               CAST(count(*) AS BIGINT) AS n_docs,
+               CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
+        FROM documents GROUP BY source
+    )
+    SELECT source, n_docs, n_tokens,
+           round(n_tokens * 100.0 / sum(n_tokens) OVER (), 3) + 0.0
+               AS token_share_pct,
+           round(sum(n_tokens) OVER ()
+                 / (count(*) OVER () * 1.0 * n_tokens), 4) + 0.0
+               AS mix_weight
+    FROM per_src
+    """,
+    section="2.11",
+)
+def pipeline_domain_mix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Domain-mixture rebalancing report — the sampling-weight table
+    a training-data pipeline feeds its mixer: per source domain, the
+    document/token counts, the token share of the corpus, and the
+    up/down-sampling weight that would equalize the mixture across
+    domains (weight = uniform-target share / actual share; >1 means
+    upsample). Weights computed from exact integer token counts;
+    doubles appear only in the two final rounded projections.
+
+    Scale shape: one map-side-combinable aggregate keyed by source
+    (the only data-sized shuffle — token counting is a per-row
+    split+size expression, no explode), then window totals over the
+    per-domain rows (one row per domain — trivially small at any
+    corpus scale)."""
+    docs = t(spark, sf_dir, "documents")
+    per_src = docs.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.sum(F.size(F.split("text", " "))).cast("bigint").alias("n_tokens"),
+    )
+    wall = Window.partitionBy()
+    total = F.sum("n_tokens").over(wall)
+    n_src = F.count(F.lit(1)).over(wall)
+    return per_src.select(
+        "source",
+        "n_docs",
+        "n_tokens",
+        (F.round(F.col("n_tokens") * 100.0 / total, 3) + F.lit(0.0)).alias(
+            "token_share_pct"
+        ),
+        (F.round(total / (n_src * 1.0 * F.col("n_tokens")), 4) + F.lit(0.0)).alias(
+            "mix_weight"
+        ),
+    )
+
+
+@register(
+    "text_unigram_logprob",
+    oracle="""
+    WITH tok AS (
+        SELECT doc_id, unnest(string_split(text, ' ')) AS word
+        FROM documents
+    ),
+    tok2 AS (SELECT doc_id, word FROM tok WHERE word <> ''),
+    vocab AS (
+        SELECT word, CAST(count(*) AS BIGINT) AS n FROM tok2 GROUP BY word
+    ),
+    tot AS (SELECT CAST(sum(n) AS BIGINT) AS t FROM vocab),
+    scored AS (
+        SELECT tok2.doc_id,
+               CAST(round(ln(t * 1.0 / n), 6) AS DECIMAL(18,6)) AS surprisal
+        FROM tok2 JOIN vocab ON tok2.word = vocab.word CROSS JOIN tot
+    )
+    SELECT doc_id,
+           CAST(count(*) AS BIGINT) AS n_tokens,
+           CAST(round(CAST(CAST(CAST(sum(surprisal) AS DOUBLE) / count(*) AS VARCHAR) AS DECIMAL(38,18)), 4) AS DOUBLE) + 0.0
+               AS avg_surprisal
+    FROM scored
+    GROUP BY doc_id
+    """,
+    section="2.11",
+)
+def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unigram-LM surprisal scoring — the cheap perplexity proxy for
+    quality-ranking documents against a reference distribution: score
+    each document by the mean negative log-probability of its tokens
+    under the corpus unigram model, ln(T/count(word)). Common-word
+    documents score low, rare-word soup scores high; CCNet-style
+    pipelines bucket the corpus by exactly this number.
+
+    Portability: per-token surprisal is pre-rounded to 6 dp and cast
+    to DECIMAL(18,6) (the arr_str doubles pattern), so the per-doc
+    sum is EXACT and order-independent; only the final mean is a
+    rounded double.
+
+    Scale shape: token explode → word-count aggregate (map-side
+    combinable — the model fits in a dim table of vocab size; the
+    vocab subtree appears twice in the logical plan but executes
+    ONCE — ReusedExchange dedupes it at runtime, verified), then
+    tokens ⋈ vocab as a hash equi-join on word (broadcast here;
+    shuffle-hash co-partitioned at 100 TB vocab) + the 1-row total
+    broadcast, then a doc_id aggregate. No driver-side state."""
+    docs = t(spark, sf_dir, "documents")
+    tok = (
+        docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
+        .filter(F.col("word") != "")
+    )
+    vocab = tok.groupBy("word").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    tot = vocab.agg(F.sum("n").cast("bigint").alias("t"))
+    scored = (
+        tok.crossJoin(F.broadcast(tot))
+        .join(vocab.withColumnRenamed("word", "vword"), F.col("word") == F.col("vword"))
+        .select(
+            "doc_id",
+            F.round(F.log(F.col("t") * 1.0 / F.col("n")), 6)
+            .cast("decimal(18,6)")
+            .alias("surprisal"),
+        )
+    )
+    return scored.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_tokens"),
+        (
+            F.round(F.sum("surprisal").cast("double") / F.count(F.lit(1)), 4)
+            + F.lit(0.0)
+        ).alias("avg_surprisal"),
+    )
+
+
+@register("pipeline_split_leakage_audit", section="2.11", memoize=True)
+def pipeline_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Train/test split-leakage audit — the check a training-data
+    pipeline runs BEFORE shipping a split: how many near-duplicate
+    pairs straddle the split boundary (a test doc whose near-copy
+    sits in train leaks the answer key). Composes the deterministic
+    Knuth-hash split (pipeline_dataset_split's assignment, so the
+    audit grades the split actually shipped) with the MinHash+LSH
+    near-dup pair generator (operators/dedup.py), then buckets every
+    pair by its (split_a, split_b) edge. Rows-only (MinHash pair
+    estimates are hash-family, not SQL-oracle-able); the invariant
+    test pins that pair endpoints carry the same split labels the
+    split operator assigns and that all pairs are accounted for.
+
+    Scale shape: split labels are scan-side codegen; the pair
+    generator is the LSH band equi-join (never all-pairs); the final
+    audit is a map-side-combinable aggregate over a ≤9-cell key
+    space. At 100 TB this is exactly the dedup pipeline's cost plus
+    one cheap projection — the audit is free if you already dedup."""
+    from hbase_sep_spark.operators.dedup import minhash_near_dup_pairs
+
+    docs = t(spark, sf_dir, "documents")
+    bucket = knuth_hash("doc_id") % 100
+    split = (
+        F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
+    )
+    labeled = docs.select("doc_id", split.alias("split"))
+    pairs = minhash_near_dup_pairs(docs, threshold=0.5)
+    a = labeled.select(
+        F.col("doc_id").alias("id_a"), F.col("split").alias("split_a")
+    )
+    b = labeled.select(
+        F.col("doc_id").alias("id_b"), F.col("split").alias("split_b")
+    )
+    edged = pairs.join(F.broadcast(a), "id_a").join(F.broadcast(b), "id_b")
+    lo = F.least("split_a", "split_b")
+    hi = F.greatest("split_a", "split_b")
+    return (
+        edged.groupBy(lo.alias("split_lo"), hi.alias("split_hi"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+            (F.round(F.avg("est_jaccard"), 4) + F.lit(0.0)).alias("avg_similarity"),
+        )
+        .withColumn("leaks", F.col("split_lo") != F.col("split_hi"))
+        .orderBy("split_lo", "split_hi")
+    )
+
+
+@register(
+    "sample_reservoir_topk_hash",
+    oracle="""
+    SELECT event_type, event_id, CAST(rk AS INT) AS sample_rank
+    FROM (
+        SELECT event_type, event_id,
+               row_number() OVER (
+                   PARTITION BY event_type
+                   ORDER BY ((CAST(event_id AS BIGINT) % 2147483648) * 2654435761)
+                            % 4294967296, event_id
+               ) AS rk
+        FROM events
+    )
+    WHERE rk <= 20
+    """,
+    section="2.11",
+)
+def sample_reservoir_topk_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fixed-size-per-key deterministic sample: the 20 events per
+    type with the smallest Knuth-hash value — distributionally a
+    uniform without-replacement reservoir sample, but reproducible
+    across engines, runs, and repartitionings (rand()-based
+    reservoirs are none of these), so the sample is auditable and
+    re-joinable downstream. Overflow-safe exact integer hash
+    (portable.knuth_hash: id reduced mod 2^31 before the multiply,
+    so ANSI can never overflow at any id scale); hash ties break on
+    event_id.
+
+    Scale shape: one hash-partitioned window per key with the
+    rk ≤ 20 predicate — Spark plans WindowGroupLimit, so each map
+    partition keeps a 20-row heap per key BEFORE the shuffle;
+    per-key state is O(k), never the key's full row set."""
+    h = knuth_hash("event_id")
+    w = Window.partitionBy("event_type").orderBy(h.asc(), F.col("event_id").asc())
+    return (
+        t(spark, sf_dir, "events")
+        .select("event_type", "event_id", F.row_number().over(w).alias("rk"))
+        .filter(F.col("rk") <= 20)
+        .select("event_type", "event_id", F.col("rk").cast("int").alias("sample_rank"))
+    )
+
+
+@register(
+    "pipeline_token_budget_alloc",
+    oracle="""
+    WITH tok AS (
+        SELECT source,
+               CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS tokens
+        FROM documents GROUP BY source
+    ),
+    w AS (
+        SELECT source, tokens,
+               CAST(round(sqrt(tokens) * 1000000, 0) AS BIGINT) AS wm
+        FROM tok
+    ),
+    b AS (
+        SELECT source, tokens, wm,
+               (100000 * wm) // CAST(sum(wm) OVER () AS BIGINT) AS base,
+               (100000 * wm) %  CAST(sum(wm) OVER () AS BIGINT) AS rem
+        FROM w
+    ),
+    r AS (
+        SELECT source, tokens, base, rem,
+               CAST(100000 - sum(base) OVER () AS BIGINT) AS leftover,
+               row_number() OVER (ORDER BY rem DESC, source) AS rk
+        FROM b
+    )
+    SELECT source, tokens,
+           CAST(base + (CASE WHEN rk <= leftover THEN 1 ELSE 0 END)
+                AS BIGINT) AS alloc_tokens
+    FROM r
+    """,
+    section="2.11",
+)
+def pipeline_token_budget_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Largest-remainder apportionment of a 100k-token training
+    budget across sources, proportional to √tokens (the sub-linear
+    upweighting of small sources that corpus-mixing recipes use):
+    integer floor shares first, then the leftover tokens go to the
+    largest remainders (source-name tiebreak). Allocations sum to
+    EXACTLY the budget — guaranteed by construction, not rounding.
+
+    Portability: weights snap to a micros grid after an IEEE
+    correctly-rounded sqrt, and every subsequent op is int64
+    (floor-div, mod, compare) — no float crosses an engine boundary.
+
+    Scale shape: ONE scan — the only data-sized op is the per-source
+    token count (map-side-combined sum of per-doc split sizes); all
+    apportionment arithmetic (totals, floor shares, remainder rank)
+    runs in unbounded windows over the SOURCE-CARDINALITY frame — a
+    bounded domain, so the single-partition window is a no-op, and
+    it avoids the data re-scan per crossJoin'd derived total."""
+    tok = (
+        t(spark, sf_dir, "documents")
+        .select("source", T.token_count_ws().alias("nw"))
+        .groupBy("source")
+        .agg(F.sum("nw").cast("bigint").alias("tokens"))
+    )
+    wall = Window.partitionBy()
+    tw = F.sum("wm").over(wall).cast("bigint")
+    b = (
+        tok.withColumn(
+            "wm", F.round(F.sqrt(F.col("tokens")) * 1000000, 0).cast("bigint")
+        )
+        .withColumn("tw", tw)
+        .withColumn("base", F.expr("(100000 * wm) DIV tw"))
+        .withColumn("rem", (100000 * F.col("wm")) % F.col("tw"))
+    )
+    r = b.select(
+        "source",
+        "tokens",
+        "base",
+        (F.lit(100000) - F.sum("base").over(wall)).cast("bigint").alias("leftover"),
+        F.row_number()
+        .over(Window.orderBy(F.col("rem").desc(), F.col("source")))
+        .alias("rk"),
+    )
+    return r.select(
+        "source",
+        "tokens",
+        (
+            F.col("base")
+            + F.when(F.col("rk") <= F.col("leftover"), 1).otherwise(0)
+        )
+        .cast("bigint")
+        .alias("alloc_tokens"),
+    )
+
+
+@register(
+    "pipeline_dataset_card_report",
+    oracle="""
+    WITH base AS (
+        SELECT CAST(count(*) AS DOUBLE) AS n_docs,
+               CAST(sum(len(string_split(text, ' '))) AS DOUBLE)
+                   AS total_tokens,
+               CASE WHEN count(*) > 0 THEN
+                   CAST(round(CAST(CAST(CAST(sum(CAST(len(string_split(text, ' ')) AS BIGINT))
+                               AS DOUBLE) / count(*) AS VARCHAR) AS DECIMAL(38,18)), 2) AS DOUBLE) END AS mean_doc_tokens,
+               CASE WHEN count(*) > 0 THEN
+                   CAST(round(CAST(CAST(CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)
+                               AS DOUBLE) / count(*) AS VARCHAR) AS DECIMAL(38,18)), 4) AS DOUBLE) + 0.0 END AS en_share,
+               round(quantile_cont(n_chars, 0.5), 2) AS p50_chars,
+               round(quantile_cont(n_chars, 0.9), 2) AS p90_chars
+        FROM documents
+    ),
+    dup AS (
+        SELECT CASE WHEN count(*) > 0 THEN
+                   CAST(round(CAST(CAST(CAST(count(*) - count(DISTINCT sha256(
+                               translate(trim(text), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ',
+                                         'abcdefghijklmnopqrstuvwxyz')))
+                               AS DOUBLE) / count(*) AS VARCHAR) AS DECIMAL(38,18)), 4) AS DOUBLE) + 0.0 END AS dup_rate
+        FROM documents
+    ),
+    vocab AS (
+        SELECT CAST(count(DISTINCT w) AS DOUBLE) AS vocab_size
+        FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
+    )
+    SELECT 'n_docs' AS metric, n_docs AS value FROM base
+    UNION ALL SELECT 'total_tokens', total_tokens FROM base
+    UNION ALL SELECT 'mean_doc_tokens', mean_doc_tokens FROM base
+    UNION ALL SELECT 'en_share', en_share FROM base
+    UNION ALL SELECT 'p50_chars', p50_chars FROM base
+    UNION ALL SELECT 'p90_chars', p90_chars FROM base
+    UNION ALL SELECT 'exact_dup_rate', dup_rate FROM dup
+    UNION ALL SELECT 'vocab_size', vocab_size FROM vocab
+    """,
+    section="2.11",
+)
+def pipeline_dataset_card_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The one-query dataset card: the (metric, value) table a corpus
+    release publishes — document/token counts, mean length, English
+    share, exact-duplicate rate, vocabulary size, and length
+    percentiles. Percentiles use the position-(n−1)·p linear
+    interpolation both engines define identically; integer inputs
+    make the interpolated values ≤1-decimal, so the 2-dp round never
+    ties. Values widen to double so one narrow (metric, value)
+    schema carries every row. Every ratio is guarded on count(*)>0
+    on BOTH sides (round-7 empty-feed sweep: a day-1/empty corpus is
+    0/0 — ANSI DIVIDE_BY_ZERO on Spark, engine-specific NaN/NULL in
+    DuckDB; the card publishes NULL for undefined ratios instead).
+
+    Scale shape: THREE scans total, each aggregating to a scalar —
+    the six base metrics share ONE pass (single aggregate, map-side
+    combined); the dup rate is a digest distinct-count; the vocab
+    size is an explode + distinct-count (the only shuffle-heavy leg,
+    and exactly pipeline_vocab_coverage's proven shape). No per-doc
+    rows survive to the union."""
+    d = t(spark, sf_dir, "documents")
+    base = d.agg(
+        F.count(F.lit(1)).cast("double").alias("n_docs"),
+        F.sum(T.token_count_ws()).cast("double").alias("total_tokens"),
+        F.when(
+            F.count(F.lit(1)) > 0,
+            F.round(
+                F.sum(T.token_count_ws().cast("bigint")).cast("double")
+                / F.count(F.lit(1)),
+                2,
+            ),
+        ).alias("mean_doc_tokens"),
+        F.when(
+            F.count(F.lit(1)) > 0,
+            F.round(
+                F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).cast(
+                    "double"
+                )
+                / F.count(F.lit(1)),
+                4,
+            )
+            + F.lit(0.0),
+        ).alias("en_share"),
+        F.round(F.expr("percentile(n_chars, 0.5)"), 2).alias("p50_chars"),
+        F.round(F.expr("percentile(n_chars, 0.9)"), 2).alias("p90_chars"),
+    )
+    dup = d.agg(
+        F.when(
+            F.count(F.lit(1)) > 0,
+            F.round(
+                (
+                    F.count(F.lit(1))
+                    - F.count_distinct(F.sha2(ascii_lower(F.trim(F.col("text"))), 256))
+                ).cast("double")
+                / F.count(F.lit(1)),
+                4,
+            )
+            + F.lit(0.0),
+        ).alias("dup_rate")
+    )
+    vocab = (
+        d.select(F.explode(F.split(F.col("text"), " ")).alias("w"))
+        .agg(F.count_distinct(F.col("w")).cast("double").alias("vocab_size"))
+    )
+    card = base.select(
+        F.expr(
+            "stack(6, 'n_docs', n_docs, 'total_tokens', total_tokens, "
+            "'mean_doc_tokens', mean_doc_tokens, 'en_share', en_share, "
+            "'p50_chars', p50_chars, 'p90_chars', p90_chars) "
+            "AS (metric, value)"
+        )
+    )
+    return card.unionByName(
+        dup.select(F.lit("exact_dup_rate").alias("metric"), F.col("dup_rate").alias("value"))
+    ).unionByName(
+        vocab.select(F.lit("vocab_size").alias("metric"), F.col("vocab_size").alias("value"))
+    )
+
+
+@register(
+    "text_source_similarity_matrix",
+    oracle="""
+    WITH wc AS (
+        SELECT source, w, CAST(count(*) AS BIGINT) AS c
+        FROM (SELECT source, unnest(string_split(text, ' ')) AS w
+              FROM documents)
+        GROUP BY source, w
+    ),
+    norms AS (
+        SELECT source, CAST(sum(c * c) AS BIGINT) AS n2
+        FROM wc GROUP BY source
+    ),
+    dots AS (
+        SELECT x.source AS s1, y.source AS s2,
+               CAST(sum(x.c * y.c) AS BIGINT) AS dot
+        FROM wc x JOIN wc y ON x.w = y.w AND x.source < y.source
+        GROUP BY x.source, y.source
+    )
+    SELECT s1, s2,
+           round(CAST(dot AS DOUBLE)
+                 / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))),
+                 4) + 0.0 AS cosine
+    FROM dots
+    JOIN norms a ON s1 = a.source
+    JOIN norms b ON s2 = b.source
+    """,
+    section="2.11",
+)
+def text_source_similarity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pairwise cosine similarity between sources' unigram count
+    vectors — the corpus-overlap matrix that decides which sources a
+    mixture can treat as near-interchangeable. Computed SPARSE: the
+    postings (source, word, count) join on the word key, so only
+    co-occurring words generate work and nothing |vocab|-wide ever
+    materializes. Dots and squared norms are exact int64; the final
+    cosine divides identically-derived doubles (IEEE-exact sqrt)
+    and rounds at 4 dp. The s1 < s2 triangle keeps each pair once.
+
+    Scale shape: one explode + (source, word) aggregate; the
+    self-join is hash equi on word — fan-out per word is bounded by
+    sources sharing it (≤ source count), never document count; the
+    20-row norms broadcast onto the 190-row triangle. The postings
+    subtree plans four times (x, y, both norm sides) but EXECUTES
+    once — 3 ReusedExchanges in the adaptive plan, verified."""
+    wc = (
+        t(spark, sf_dir, "documents")
+        .select("source", F.explode(F.split(F.col("text"), " ")).alias("w"))
+        .groupBy("source", "w")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    )
+    norms = wc.groupBy("source").agg(
+        F.sum(F.col("c") * F.col("c")).cast("bigint").alias("n2")
+    )
+    x, y = wc.alias("x"), wc.alias("y")
+    dots = (
+        x.join(
+            y,
+            (F.col("x.w") == F.col("y.w"))
+            & (F.col("x.source") < F.col("y.source")),
+        )
+        .groupBy(
+            F.col("x.source").alias("s1"), F.col("y.source").alias("s2")
+        )
+        .agg(F.sum(F.col("x.c") * F.col("y.c")).cast("bigint").alias("dot"))
+    )
+    na = norms.select(F.col("source").alias("sa"), F.col("n2").alias("na2"))
+    nb = norms.select(F.col("source").alias("sb"), F.col("n2").alias("nb2"))
+    return (
+        dots.join(F.broadcast(na), F.col("s1") == F.col("sa"))
+        .join(F.broadcast(nb), F.col("s2") == F.col("sb"))
+        .select(
+            "s1",
+            "s2",
+            (
+                F.round(
+                    F.col("dot").cast("double")
+                    / (
+                        F.sqrt(F.col("na2").cast("double"))
+                        * F.sqrt(F.col("nb2").cast("double"))
+                    ),
+                    4,
+                )
+                + F.lit(0.0)
+            ).alias("cosine"),
+        )
+    )
+
+
+@register(
+    "text_bpe_pair_stats",
+    oracle="""
+    WITH wf AS (
+        SELECT w, CAST(count(*) AS BIGINT) AS f
+        FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
+        WHERE len(w) >= 2
+        GROUP BY w
+    ),
+    pairs AS (
+        SELECT unnest(list_transform(range(1, len(w)),
+                                     i -> substr(w, CAST(i AS INT), 2)))
+                   AS pair,
+               f
+        FROM wf
+    )
+    SELECT pair, CAST(sum(f) AS BIGINT) AS cnt
+    FROM pairs
+    GROUP BY pair
+    ORDER BY cnt DESC, pair
+    LIMIT 20
+    """,
+    section="2.11",
+)
+def text_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BPE merge-candidate statistics: the 20 most frequent adjacent
+    character pairs across the corpus, weighted by word frequency —
+    byte-pair-encoding training's first merge decision. Computed on
+    the VOCABULARY (distinct words × frequency), the real trainer's
+    trick: the bigram explode runs over ~|vocab| rows however large
+    the corpus is, because the corpus collapses to word counts
+    first. Deterministic top-k: count DESC, pair ASC.
+
+    Scale shape: corpus → word-frequency aggregate (map-side
+    combined, the only data-sized op), then a bounded explode of
+    ≤(word length) bigrams per vocab entry, a pair aggregate, and
+    TakeOrderedAndProject for the top-20."""
+    wf = (
+        t(spark, sf_dir, "documents")
+        .select(F.explode(F.split(F.col("text"), " ")).alias("w"))
+        .filter(F.length("w") >= 2)
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("f"))
+    )
+    pairs = wf.select(
+        F.explode(
+            F.expr("transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")
+        ).alias("pair"),
+        "f",
+    )
+    return (
+        pairs.groupBy("pair")
+        .agg(F.sum("f").cast("bigint").alias("cnt"))
+        .orderBy(F.col("cnt").desc(), "pair")
+        .limit(20)
+    )
+
+
+_K = 8
+_ITERS = 3
+
+
+@register("vec_kmeans_lloyd", oracle=None, section="2.11")
+def vec_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Lloyd's k-means (k = 8, 3 iterations) over the embedding
+    table, reporting the inertia trajectory — one row per iteration
+    with the post-assignment total squared distance and the largest
+    cluster's size. Deterministic: centroids initialize to the
+    first k vectors by vec_id; distance ties assign to the lowest
+    centroid id; means and inertia come from decimal-cast sums
+    (order-independent across partitionings), summed driver-side in
+    cid order and rounded at 4 dp.
+
+    Scale shape: the E-step is a broadcast of k·d floats against
+    the point table (constant ×k fan-out, never a shuffled
+    pairwise join — the same broadcast-centroid discipline as
+    simsearch_ivf_coarse); the M-step is a posexplode +
+    (cluster, dim) aggregate — map-side combined, k·d output rows.
+    Driver state per round is the k×d centroid matrix (bounded, the
+    PCA-moment precedent); no data-sized collect anywhere.
+
+    Scan applies the V.is_valid gate without the nonzero requirement
+    (L2 distance needs no division; the zero vector is a legitimate
+    point) — a NULL embedding among the first k rows crashed the
+    seed collect, and ragged arrays NULL-poison zip_with distances
+    (round-7 hostile-embeddings sweep)."""
+    from hbase_sep_spark.operators import vectors as V
+
+    emb = (
+        t(spark, sf_dir, "embeddings")
+        .filter(V.is_valid("embedding", require_nonzero=False))
+        .select("vec_id", "embedding")
+    )
+    cents = [
+        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
+        for r in emb.orderBy("vec_id").limit(_K).collect()
+    ]
+    if not cents:  # day-1/empty feed: nothing to cluster, no trajectory
+        return spark.createDataFrame(
+            [], "iteration int, inertia double, largest_cluster bigint"
+        )
+    out_rows = []
+    for it in range(_ITERS):
+        # cid is the seeding vec_id — BIGINT, not int: a 100 TB
+        # embedding table has ids past 2^31 (the big-id sweep caught
+        # the int schema overflowing at vec_id = 5e9).
+        cdf = F.broadcast(
+            spark.createDataFrame(
+                [Row(cid=c, cvec=v) for c, v in cents],
+                "cid bigint, cvec array<double>",
+            )
+        )
+        d2 = F.aggregate(
+            F.zip_with(
+                F.col("embedding"),
+                F.col("cvec"),
+                lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+        scored = emb.crossJoin(cdf).select(
+            "vec_id", "embedding", "cid", d2.alias("d2")
+        )
+        # min_by aggregation instead of a per-point window: the
+        # argmin combines MAP-SIDE (each mapper emits one candidate
+        # per point), so the shuffle carries one row per point, not
+        # k — and there's no per-key sort. Ties break on (d2, cid).
+        # Persist: both the stats fold and the M-step read the
+        # assignment; without the cache the E-step executes twice
+        # per round.
+        assigned = (
+            scored.groupBy("vec_id")
+            .agg(
+                F.min_by(
+                    F.struct("cid", "embedding", "d2"),
+                    F.struct("d2", "cid"),
+                ).alias("s")
+            )
+            .select(
+                "vec_id",
+                F.col("s.embedding").alias("embedding"),
+                F.col("s.cid").alias("cid"),
+                F.col("s.d2").alias("d2"),
+            )
+            .persist()
+        )
+        # One action per round: the per-cluster stats (size, inertia)
+        # and the M-step centroid join before a single collect of
+        # k bounded rows.
+        # Decimal-cast sums (the portable.dsum discipline): each d2 /
+        # coordinate snaps to a fixed decimal grid before summing, so
+        # the aggregates are order-independent across shuffle configs
+        # and partitionings (ADVICE r5: raw double F.sum/F.avg leak
+        # combine-order low bits into the emitted inertia and the next
+        # round's centroids).
+        stats = assigned.groupBy("cid").agg(
+            F.count(F.lit(1)).cast("bigint").alias("sz"),
+            F.sum(F.col("d2").cast("decimal(38,8)")).cast("double").alias("inertia"),
+        )
+        newc = (
+            assigned.select("cid", F.posexplode("embedding").alias("pos", "x"))
+            .groupBy("cid", "pos")
+            .agg(
+                (
+                    F.sum(F.col("x").cast("decimal(38,12)"))
+                    / F.count(F.lit(1))
+                )
+                .cast("double")
+                .alias("m")
+            )
+            .groupBy("cid")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                    lambda s: s["m"],
+                ).alias("cvec")
+            )
+        )
+        rows = stats.join(newc, "cid").collect()
+        # Sum in fixed cid order and round at 4 dp: collect() row
+        # order is nondeterministic, and the emitted inertia must be
+        # stable if rows-only outputs are ever diffed across runs.
+        out_rows.append(
+            (
+                it,
+                round(
+                    float(
+                        sum(
+                            r["inertia"]
+                            for r in sorted(rows, key=lambda r: int(r["cid"]))
+                        )
+                    ),
+                    4,
+                ),
+                int(max(r["sz"] for r in rows)),
+            )
+        )
+        # Lloyd's empty-cluster rule: a centroid that captured no
+        # points keeps its previous position (dropping it would
+        # silently shrink k for every later round).
+        new_by_cid = {int(r["cid"]): [float(x) for x in r["cvec"]] for r in rows}
+        cents = [(c, new_by_cid.get(c, v)) for c, v in cents]
+        assigned.unpersist()
+    return spark.createDataFrame(
+        out_rows, "iteration int, inertia double, largest_cluster bigint"
+    )
+
+
+@register(
+    "sample_quality_weighted",
+    oracle=f"""
+    WITH scored AS (
+        SELECT doc_id, lang, {_QUALITY_SQL} AS quality
+        FROM documents
+    )
+    SELECT doc_id, lang, quality
+    FROM scored
+    WHERE CAST(((CAST(doc_id AS BIGINT) % 2147483648) * 2654435761) % 4294967296
+               AS DOUBLE)
+          < quality * 0.5 * 4294967296
+    """,
+    section="2.11",
+)
+def sample_quality_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quality-weighted deterministic sampling: accept each document
+    with probability quality/2 by comparing its Knuth hash to a
+    quality-scaled threshold — high-quality docs survive at ~2× the
+    rate of low-quality ones, and the decision is a pure function of
+    (doc_id, text), so the sample is reproducible anywhere and
+    re-joinable downstream. The hash is exact integer arithmetic;
+    the threshold multiplies a 4-dp-exact band score identically on
+    both engines.
+
+    Scale shape: one scan, one filter — the quality expression and
+    the hash are both scan-level codegen; no shuffle, no state."""
+    d = t(spark, sf_dir, "documents")
+    h = knuth_hash("doc_id").cast("double")
+    q = T.quality_score()
+    return (
+        d.select("doc_id", "lang", q.alias("quality"))
+        .withColumn("h", h)
+        .filter(F.col("h") < F.col("quality") * 0.5 * 4294967296)
+        .select("doc_id", "lang", "quality")
+    )
+
+
+def _corpus_v1(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The bootstrap corpus: the documents table as ingested."""
+    return t(spark, sf_dir, "documents")
+
+
+def _fresh_id_offset(spark: SparkSession, sf_dir: str) -> int:
+    """Shift distance for minting fresh doc ids, derived from the
+    data (ADVICE-r12): `max - min + 1` guarantees every shifted id
+    exceeds max(doc_id), so fresh ids never collide with existing
+    ones regardless of the fixture's id domain (dense sf10 ids,
+    bigid-class regens, negative ids). One footer-cheap aggregate on
+    a dimension-sized table; falls back to a literal on an empty
+    corpus, where no delta rows exist anyway."""
+    row = (
+        t(spark, sf_dir, "documents")
+        .agg(F.max("doc_id").alias("mx"), F.min("doc_id").alias("mn"))
+        .first()
+    )
+    if row is None or row["mx"] is None:
+        return 100000
+    return int(row["mx"]) - int(row["mn"]) + 1
+
+
+def _delta(spark: SparkSession, sf_dir: str, offset: int) -> DataFrame:
+    """The feed slice that arrives AFTER bootstrap: updated versions
+    of every 11th doc (same doc_id, revised text — the CDC update
+    shape) plus brand-new docs that are exact copies of every 7th doc
+    under fresh ids (guaranteed est_jaccard = 1.0 pairs, the
+    dedup_minhash_near injection pattern)."""
+    d = t(spark, sf_dir, "documents")
+    updated = d.filter(F.col("doc_id") % 11 == 0).withColumn(
+        "text", F.concat(F.col("text"), F.lit(" revision two"))
+    )
+    new = d.filter(F.col("doc_id") % 7 == 0).withColumn(
+        "doc_id", F.col("doc_id") + F.lit(offset)
+    )
+    return updated.unionByName(new)
+
+
+def _corpus_v2(spark: SparkSession, sf_dir: str, offset: int) -> DataFrame:
+    """Post-delta corpus state: v1 with the updated rows replaced and
+    the new rows appended — what a from-scratch run sees."""
+    d = t(spark, sf_dir, "documents")
+    base_kept = d.filter(F.col("doc_id") % 11 != 0)
+    return base_kept.unionByName(_delta(spark, sf_dir, offset))
+
+
+@register("dedup_minhash_incremental_upsert", oracle=None, memoize=True, section=SECTION)
+def dedup_minhash_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental MinHash-signature upsert (VERDICT-r11 item 1b): a
+    growing corpus must NOT recompute all signatures when a feed
+    slice lands — signature computation (shingling + string hashing)
+    dominates the operator's cost and is O(corpus) from scratch but
+    O(delta) maintained.
+
+    Pipeline, the production shape at 100 TB:
+      1. bootstrap: signatures for corpus v1 persisted to a parquet
+         signature store (32 longs/doc — tiny beside the text), and
+         the verified near-dup pair list persisted with it;
+      2. a delta arrives (updated docs + new docs). Signatures are
+         computed ONLY for delta rows, then MERGEd into the store:
+         anti-join out replaced doc_ids, append the delta signatures
+         (MERGE INTO with Delta/Iceberg; staged overwrite here);
+      3. pair maintenance: pairs not touching a delta id are carried
+         forward from the stored pair list unchanged; pairs touching
+         the delta are (re)derived with a delta-bands × all-bands
+         LSH join (operators/dedup.lsh_candidate_pairs_touching) and
+         verified against the merged store — candidate generation
+         and verification both scale with the delta, never the
+         corpus.
+
+    The returned frame is the AUDIT the judge asked for: a full outer
+    join of the incrementally-maintained pair set against a
+    from-scratch run over corpus v2 — `consistent` must be true on
+    every row (pair present in both with the same est_jaccard).
+    Equality holds by construction: untouched docs keep bit-identical
+    signatures (the xxhash64 family is deterministic), so non-delta
+    pairs and their estimates are unchanged, and every pair whose
+    bucket membership could have changed touches a delta id by
+    definition. The scratch recomputation exists only to audit;
+    the maintained path never runs it.
+
+    rows-only: the xxhash64 hash family isn't reproducible in the
+    oracle engine (same as dedup_minhash_near). Output is ordered by
+    a range-partitioned sort — no single-task stage at any pair
+    count (the round-10 dedup output rule)."""
+    import os
+
+    from hbase_sep_spark.io import fixture_key
+
+    v1 = _corpus_v1(spark, sf_dir)
+    offset = _fresh_id_offset(spark, sf_dir)
+    delta = _delta(spark, sf_dir, offset)
+
+    # Scratch keyed by a digest of the FULL fixture path (ADVICE-r12):
+    # two fixtures sharing a basename in one session must not clobber
+    # each other's persisted stores under the memoize cache's
+    # full-path key.
+    store_dir = scratch_dir(spark, "minhash_store", fixture_key(sf_dir))
+    sig_path = os.path.join(store_dir, "signatures")
+    pairs_path = os.path.join(store_dir, "pairs")
+
+    # --- bootstrap: persist the v1 signature store + pair list ---
+    sig_v1 = D.minhash_signatures(v1)
+    sig_v1.write.mode("overwrite").parquet(sig_path)
+    sig_store = spark.read.parquet(sig_path)
+    D.verify_candidate_pairs(
+        sig_store, D.lsh_candidate_pairs(sig_store)
+    ).write.mode("overwrite").parquet(pairs_path)
+
+    # --- delta lands: signatures for DELTA DOCS ONLY, then upsert ---
+    delta_ids = delta.select("doc_id")
+    sig_delta = D.minhash_signatures(delta)
+    merged = sig_store.join(
+        F.broadcast(delta_ids), "doc_id", "left_anti"
+    ).unionByName(sig_delta)
+    merged_path = os.path.join(store_dir, "signatures_v2")
+    merged.write.mode("overwrite").parquet(merged_path)
+    sig_v2 = spark.read.parquet(merged_path)
+
+    # --- pair maintenance: carry forward + delta-touching rederive ---
+    stored_pairs = spark.read.parquet(pairs_path)
+    ids_a = delta_ids.withColumnRenamed("doc_id", "id_a")
+    ids_b = delta_ids.withColumnRenamed("doc_id", "id_b")
+    carried = stored_pairs.join(F.broadcast(ids_a), "id_a", "left_anti").join(
+        F.broadcast(ids_b), "id_b", "left_anti"
+    )
+    touched = D.verify_candidate_pairs(
+        sig_v2, D.lsh_candidate_pairs_touching(sig_v2, delta_ids)
+    )
+    incremental = carried.select("id_a", "id_b", "est_jaccard").unionByName(
+        touched.select("id_a", "id_b", "est_jaccard")
+    )
+
+    # --- audit: from-scratch run over corpus v2 must agree exactly ---
+    scratch = D.minhash_near_dup_pairs(_corpus_v2(spark, sf_dir, offset))
+    inc = incremental.alias("inc")
+    scr = scratch.alias("scr")
+    joined = inc.join(
+        scr,
+        (F.col("inc.id_a") == F.col("scr.id_a"))
+        & (F.col("inc.id_b") == F.col("scr.id_b")),
+        "full_outer",
+    )
+    return joined.select(
+        F.coalesce(F.col("inc.id_a"), F.col("scr.id_a")).alias("id_a"),
+        F.coalesce(F.col("inc.id_b"), F.col("scr.id_b")).alias("id_b"),
+        F.coalesce(F.col("inc.est_jaccard"), F.lit(-1.0)).alias("est_jaccard"),
+        (
+            F.col("inc.id_a").isNotNull()
+            & F.col("scr.id_a").isNotNull()
+            & (F.col("inc.est_jaccard") == F.col("scr.est_jaccard"))
+        ).alias("consistent"),
+    ).orderBy("id_a", "id_b")
+
+
+@register(
+    "text_entropy_score",
+    oracle="""
+    WITH tok AS (
+        SELECT doc_id,
+               unnest(regexp_extract_all(
+                   translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ',
+                                   'abcdefghijklmnopqrstuvwxyz'),
+                   '[a-z0-9]+')) AS w
+        FROM documents
+    ),
+    freq AS (SELECT doc_id, w, count(*) AS c FROM tok GROUP BY doc_id, w)
+    SELECT doc_id,
+           CAST(sum(c) AS BIGINT) AS n_tokens,
+           CAST(count(*) AS BIGINT) AS n_unique,
+           round(log2(CAST(sum(c) AS DOUBLE))
+                 - sum(c * log2(CAST(c AS DOUBLE))) / CAST(sum(c) AS DOUBLE),
+                 4) + 0.0 AS token_entropy
+    FROM freq GROUP BY doc_id
+    """,
+    section="2.11",
+)
+def text_entropy_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token-distribution Shannon entropy per document — the quality
+    signal that separates natural prose (high entropy) from boilerplate
+    and keyword-stuffed spam (low entropy); a standard pre-training
+    corpus filter alongside length/stopword heuristics.
+
+    Computed in the integer-weighted form H = log2(n) − Σ c·log2(c)/n
+    so the per-token work is exact integer counting; only the final
+    O(unique-tokens) reduction touches floats (rounded, aggregate-side
+    per the portability rules).  Scale shape: explode + two
+    map-side-combinable hash aggregates keyed on doc_id — text itself
+    never shuffles, only (doc_id, token) pairs."""
+    d = t(spark, sf_dir, "documents")
+    # ascii_lower, not lower(): full-Unicode lowering diverges between
+    # engines on full-vs-simple case mappings (İ → "i̇" vs "i", round-6
+    # unicode sweep); the A-Z fold is engine-identical and equivalent
+    # here since the token class is ASCII anyway.
+    tok = d.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "regexp_extract_all(translate(text,"
+                " 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'),"
+                " '[a-z0-9]+', 0)"
+            )
+        ).alias("w"),
+    )
+    freq = tok.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("c"))
+    n = F.sum("c").cast("double")
+    ent = F.log2(n) - F.sum(F.col("c") * F.log2(F.col("c").cast("double"))) / n
+    return freq.groupBy("doc_id").agg(
+        F.sum("c").cast("bigint").alias("n_tokens"),
+        F.count(F.lit(1)).cast("bigint").alias("n_unique"),
+        (F.round(ent, 4) + F.lit(0.0)).alias("token_entropy"),
+    )
+
+
+@register(
+    "text_repetition_ratio",
+    oracle="""
+    WITH w AS (
+        SELECT doc_id, string_split(coalesce(text, ''), ' ') AS ws
+        FROM documents
+    ),
+    sh AS (
+        SELECT doc_id,
+               unnest(CASE WHEN len(ws) >= 5
+                           THEN list_transform(range(1, len(ws) - 3),
+                                i -> array_to_string(list_slice(ws, i, i + 4), ' '))
+                           ELSE [array_to_string(ws, ' ')] END) AS shingle
+        FROM w
+    )
+    SELECT doc_id,
+           CAST(count(*) AS BIGINT) AS n_shingles,
+           CAST(count(DISTINCT shingle) AS BIGINT) AS n_unique,
+           CAST(round(CAST(CAST(1.0 - CAST(count(DISTINCT shingle) AS DOUBLE) / count(*) AS VARCHAR) AS DECIMAL(38,18)), 4) AS DOUBLE) + 0.0
+               AS rep_ratio
+    FROM sh GROUP BY doc_id
+    """,
+    section="2.11",
+)
+def text_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Intra-document repetition ratio over word 5-shingles — the
+    Gopher-style duplicate-n-gram fraction that flags looping or
+    template-generated text: 1 − unique/total shingles.
+
+    Scale shape: shingling is a per-row lambda (codegen, no shuffle);
+    the count + count-distinct aggregate keys on doc_id so partial
+    aggregation collapses each document locally — at 100 TB the
+    shuffle carries one row per (doc, distinct-shingle) at worst, and
+    the distinct would run on xxhash64(shingle) digests (kept as
+    strings here so the oracle replays equality exactly)."""
+    d = t(spark, sf_dir, "documents")
+    # NULL text → '' on BOTH sides (round-6 null sweep: a NULL doc
+    # otherwise yields a NULL shingle in DuckDB but '' in Spark).
+    sh = d.select(
+        "doc_id",
+        F.explode(T.shingles(F.coalesce(F.col("text"), F.lit("")), 5)).alias(
+            "shingle"
+        ),
+    )
+    ratio = 1.0 - F.count_distinct("shingle").cast("double") / F.count(F.lit(1))
+    return sh.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_shingles"),
+        F.count_distinct("shingle").cast("bigint").alias("n_unique"),
+        (F.round(ratio, 4) + F.lit(0.0)).alias("rep_ratio"),
+    )
+
+
+_MIX_RATE_SQL = "CASE lang WHEN 'en' THEN 0.3 WHEN 'zh' THEN 0.8 ELSE 1.0 END"
+
+
+@register(
+    "pipeline_mixture_sample",
+    oracle=f"""
+    WITH flagged AS (
+        SELECT lang,
+               ((CAST(doc_id AS BIGINT) % 2147483648) * 2654435761) % 4294967296
+                   < ({_MIX_RATE_SQL}) * 4294967296 AS kept
+        FROM documents
+    )
+    SELECT lang,
+           CAST(count(*) AS BIGINT) AS n_total,
+           CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled,
+           CAST(round(CAST(CAST(CAST(sum(CASE WHEN kept THEN 1 ELSE 0 END) AS DOUBLE)
+                      / count(*) AS VARCHAR) AS DECIMAL(38,18)), 4) AS DOUBLE) AS achieved_rate
+    FROM flagged GROUP BY lang
+    """,
+    section="2.11",
+)
+def pipeline_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Curriculum mixture sampling — hit a per-language target mix by
+    deterministically downsampling over-represented sources (en→30 %,
+    zh→80 %, rest kept whole) with a Knuth multiplicative hash
+    threshold on the stable id, and report achieved vs target rates.
+
+    Unlike rand()-based sampling the mixture is reproducible across
+    runs, engines, and repartitionings — the property that makes a
+    training-data mix auditable.  Overflow-safe exact integer
+    arithmetic throughout (portable.knuth_hash: id reduced mod 2^31
+    before the multiply).  Scale shape: the keep decision is a scan
+    predicate (no shuffle); the report is one tiny hash aggregate."""
+    d = t(spark, sf_dir, "documents")
+    rate = (
+        F.when(F.col("lang") == "en", 0.3)
+        .when(F.col("lang") == "zh", 0.8)
+        .otherwise(1.0)
+    )
+    kept = knuth_hash("doc_id") < rate * 4294967296
+    return (
+        d.select("lang", kept.alias("kept"))
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_total"),
+            F.sum(F.when(F.col("kept"), 1).otherwise(0)).cast("bigint").alias("n_sampled"),
+            F.round(
+                F.sum(F.when(F.col("kept"), 1).otherwise(0)).cast("double")
+                / F.count(F.lit(1)),
+                4,
+            ).alias("achieved_rate"),
+        )
+    )
+
+
+@register(
+    "vec_centroid_distance",
+    oracle=f"""
+    WITH x AS (
+        SELECT vec_id, label, i AS pos, CAST(embedding[i] AS DOUBLE) AS x
+        FROM embeddings CROSS JOIN generate_series(1, 64) t(i)
+        WHERE {V.valid_sql('embedding', require_nonzero=False)}
+    ),
+    cent AS (SELECT label, pos, avg(x) AS cx FROM x GROUP BY label, pos)
+    SELECT x.vec_id, x.label,
+           round(sqrt(sum((x.x - c.cx) * (x.x - c.cx))), 4) + 0.0 AS centroid_dist
+    FROM x JOIN cent c ON x.label = c.label AND x.pos = c.pos
+    GROUP BY x.vec_id, x.label
+    """,
+    section="2.11",
+)
+def vec_centroid_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-means E-step: per-label centroid, then each vector's L2
+    distance to its label's centroid — the building block of IVF
+    training, cluster-quality audits, and outlier mining over
+    embedding corpora.
+
+    Scale shape (two-phase, no big-side shuffle): (1) the centroid
+    pass posexplodes to (label, pos, x) — a map-side-combinable avg
+    whose shuffle carries only labels × dim partial sums per task;
+    (2) centroids fold back to one array row per label (tiny) and
+    BROADCAST against the corpus, where zip_with + aggregate compute
+    the distance inside codegen — the embedding array itself never
+    shuffles.  The oracle replays the same math relationally.
+
+    Scan applies the V.is_valid gate without the nonzero requirement
+    (distance needs no division; zero vectors are legitimate
+    outliers) — NULL/ragged arrays would skew the per-position
+    centroid and NaN components poison every distance in the label
+    (round-7 hostile-embeddings sweep)."""
+    e = t(spark, sf_dir, "embeddings").filter(
+        V.is_valid("embedding", require_nonzero=False)
+    )
+    x = e.select(
+        "vec_id", "label", F.posexplode("embedding").alias("pos", "x")
+    ).withColumn("x", F.col("x").cast("double"))
+    cent = x.groupBy("label", "pos").agg(F.avg("x").alias("cx"))
+    cent_arr = cent.groupBy("label").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "cx"))), lambda s: s.cx
+        ).alias("centroid")
+    )
+    diff2 = F.zip_with(
+        F.col("embedding").cast("array<double>"),
+        "centroid",
+        lambda a, b: (a - b) * (a - b),
+    )
+    dist = F.sqrt(F.aggregate(diff2, F.lit(0.0), lambda acc, v: acc + v))
+    return (
+        e.join(F.broadcast(cent_arr), "label")
+        .select(
+            "vec_id",
+            "label",
+            (F.round(dist, 4) + F.lit(0.0)).alias("centroid_dist"),
+        )
+    )
+
+
+@register(
+    "dedup_keep_best",
+    oracle="""
+    WITH g AS (
+        SELECT doc_id, lang, n_chars, sha256(text) AS h,
+               count(*) OVER (PARTITION BY sha256(text)) AS n_copies,
+               row_number() OVER (PARTITION BY sha256(text)
+                                  ORDER BY n_chars DESC, doc_id) AS rk
+        FROM documents
+    )
+    SELECT doc_id, lang, CAST(n_copies AS BIGINT) AS n_copies
+    FROM g WHERE rk = 1
+    """,
+    section="2.11",
+)
+def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quality-aware canonical selection for exact-duplicate groups:
+    within each sha256(text) group keep the highest-quality copy
+    (longest, then lowest id — in production: quality score, source
+    priority), not an arbitrary first-seen row.  The difference
+    matters: exact dedup that keeps a random copy loses metadata of
+    the better-provenanced duplicate.
+
+    Scale shape: one shuffle on the 32-byte digest (text never
+    moves — n_chars rides as a tiny payload); both window functions
+    share the digest partitioning, and the winner filter is a
+    group-local top-1, no second pass."""
+    d = t(spark, sf_dir, "documents")
+    h = F.sha2(F.col("text"), 256)
+    wh = Window.partitionBy("h")
+    rk = F.row_number().over(wh.orderBy(F.desc("n_chars"), "doc_id"))
+    return (
+        d.select("doc_id", "lang", "n_chars", h.alias("h"))
+        .withColumn("n_copies", F.count(F.lit(1)).over(wh).cast("bigint"))
+        .withColumn("rk", rk)
+        .filter(F.col("rk") == 1)
+        .select("doc_id", "lang", "n_copies")
+    )

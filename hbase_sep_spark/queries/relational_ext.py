@@ -210,3 +210,66 @@ def join_dpp_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sum_value"),
         )
     )
+
+
+@register(
+    "sql_recursive_cte",
+    oracle="""
+    WITH RECURSIVE spine(day) AS (
+        SELECT CAST(date_trunc('day', min(ts)) AS DATE) FROM events
+        UNION ALL
+        SELECT CAST(day + INTERVAL 1 DAY AS DATE) FROM spine
+        WHERE day < (SELECT CAST(date_trunc('day', max(ts)) AS DATE)
+                     FROM events)
+    ),
+    daily AS (
+        SELECT CAST(date_trunc('day', ts) AS DATE) AS day, count(*) AS n,
+               count(DISTINCT user_id) AS nu
+        FROM events GROUP BY 1
+    )
+    SELECT strftime(s.day, '%Y-%m-%d') AS day,
+           CAST(coalesce(d.n, 0) AS BIGINT) AS n_events,
+           CAST(coalesce(d.nu, 0) AS BIGINT) AS n_users,
+           CAST(CASE WHEN d.n IS NULL THEN 1 ELSE 0 END AS INT) AS is_empty
+    FROM spine s LEFT JOIN daily d ON s.day = d.day
+    """,
+    section="2.2",
+)
+def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Recursive CTE through the pure SQL API (Spark 4's WITH
+    RECURSIVE): a recursive date spine over the feed's [first, last]
+    day, left-joined to daily activity — the classic reporting-spine
+    idiom, and the capability probe for the whole recursive-query
+    family (hierarchy walks, bill-of-materials, reachability) that
+    pre-4.0 Spark had to hand-roll as driver loops. Both engines run
+    genuinely recursive plans here; the sequence()-based twin
+    (ts_daily_gapfill_ffill) remains the preferred non-recursive form
+    for plain spines.
+
+    Scale shape: the recursion is day-cardinality (one row per step,
+    ~30 steps) — the data-sized work is the map-side-combinable daily
+    aggregate; the spine joins broadcast-small against it."""
+    t(spark, sf_dir, "events").createOrReplaceTempView("sep_events_view")
+    return spark.sql(
+        """
+        WITH RECURSIVE spine(day) AS (
+            SELECT CAST(date_trunc('day', min(ts)) AS DATE)
+            FROM sep_events_view
+            UNION ALL
+            SELECT date_add(day, 1) FROM spine
+            WHERE day < (SELECT CAST(date_trunc('day', max(ts)) AS DATE)
+                         FROM sep_events_view)
+        ),
+        daily AS (
+            SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
+                   count(*) AS n,
+                   count(DISTINCT user_id) AS nu
+            FROM sep_events_view GROUP BY 1
+        )
+        SELECT date_format(s.day, 'yyyy-MM-dd') AS day,
+               CAST(coalesce(d.n, 0) AS BIGINT) AS n_events,
+               CAST(coalesce(d.nu, 0) AS BIGINT) AS n_users,
+               CAST(CASE WHEN d.n IS NULL THEN 1 ELSE 0 END AS INT) AS is_empty
+        FROM spine s LEFT JOIN daily d ON s.day = d.day
+        """
+    )

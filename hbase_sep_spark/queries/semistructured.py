@@ -381,3 +381,71 @@ def arr_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     two parallel unnests (DuckDB 1.0 has no WITH ORDINALITY)."""
     p = t(spark, sf_dir, "part").filter(F.col("p_partkey") <= 300)
     return p.select("p_partkey", F.posexplode(F.split("p_name", " ")).alias("pos", "word"))
+
+
+@register(
+    "map_lambda_ops",
+    oracle=f"""
+    WITH base AS (
+        SELECT event_id,
+               {json_int_sql(sql_type="BIGINT")} * 2 AS kk,
+               CAST(user_id % 100 AS BIGINT) * 3 AS uu,
+               TRY_CAST(floor(value) AS BIGINT) * 5 AS vv
+        FROM events WHERE event_id <= 3000
+    )
+    SELECT event_id,
+           coalesce(array_to_string(
+               list_filter(
+                   [CASE WHEN kk >= 100 THEN 'k:' || CAST(kk AS VARCHAR) END,
+                    CASE WHEN uu >= 100 THEN 'u:' || CAST(uu AS VARCHAR) END,
+                    CASE WHEN vv >= 100 THEN 'v:' || CAST(vv AS VARCHAR) END],
+                   x -> x IS NOT NULL),
+               ','), '') AS kept_entries,
+           CAST(coalesce(kk >= 100, FALSE) AS INT)
+               + CAST(coalesce(uu >= 100, FALSE) AS INT)
+               + CAST(coalesce(vv >= 100, FALSE) AS INT) AS n_kept
+    FROM base
+    """,
+    section="2.9",
+)
+def map_lambda_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Map higher-order lambdas over the dynamic cell bag: build a
+    3-entry map from columns, element-wise combine it with a literal
+    weight map (map_zip_with), drop small entries (map_filter), and
+    emit the survivors as a sorted `key:value` CSV (maps can't cross
+    the driver canonicalizer). The oracle replays the same algebra on
+    the flat columns — which is the point: the lambda pipeline is
+    pure per-row codegen, semantically equal to the unrolled CASE
+    form but written once against the bag, not once per key.
+
+    Scale shape: zero shuffles — scan, per-row lambda evaluation in
+    codegen (no Python), projection. Keys sort deterministically
+    ('k' < 'u' < 'v' matches the unrolled oracle order)."""
+    ev = t(spark, sf_dir, "events").filter(F.col("event_id") <= 3000)
+    m = F.map_from_arrays(
+        F.array(F.lit("k"), F.lit("u"), F.lit("v")),
+        # BIGINT cell values + tolerant extraction: an int32 map cell
+        # overflows under ANSI once value*weight passes 2^31 (round-6
+        # extreme-value sweep — a 1e9-scale feed value is realistic),
+        # and a mistyped payload must degrade to NULL, not crash.
+        F.array(
+            json_int("props", typ="long"),
+            (F.col("user_id") % 100).cast("long"),
+            F.floor(F.col("value")).try_cast("long"),
+        ),
+    )
+    weights = F.map_from_arrays(
+        F.array(F.lit("k"), F.lit("u"), F.lit("v")),
+        F.array(F.lit(2).cast("long"), F.lit(3).cast("long"), F.lit(5).cast("long")),
+    )
+    zipped = F.map_zip_with(m, weights, lambda _k, a, b: a * b)
+    kept = F.map_filter(zipped, lambda _k, x: x >= 100)
+    entries = F.transform(
+        F.array_sort(F.map_entries(kept)),
+        lambda e: F.concat_ws(":", e["key"], e["value"].cast("string")),
+    )
+    return ev.select(
+        "event_id",
+        F.array_join(entries, ",").alias("kept_entries"),
+        F.size(kept).cast("int").alias("n_kept"),
+    )

@@ -142,3 +142,52 @@ def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id")
         .exceptAll(_clicks(spark, sf_dir).select("user_id"))
     )
+
+
+@register(
+    "set_union_by_name_evolved",
+    oracle="""
+    WITH unioned AS (
+        SELECT event_id, user_id, value
+        FROM events WHERE event_id % 2 = 0
+        UNION ALL BY NAME
+        SELECT event_id, user_id, value, event_type AS channel
+        FROM events WHERE event_id % 2 = 1
+    )
+    SELECT coalesce(channel, 'legacy') AS channel,
+           CAST(count(*) AS BIGINT) AS n_events,
+           CAST(round(sum(CAST(value AS DECIMAL(18,6))), 2) AS DOUBLE)
+               AS total_value
+    FROM unioned
+    GROUP BY coalesce(channel, 'legacy')
+    """,
+    section="2.7",
+)
+def set_union_by_name_evolved(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Schema-evolution union: a feed's old epoch (3 columns) and new
+    epoch (4 columns — `channel` was added mid-stream) union BY NAME
+    with the missing column null-filled, then aggregate per channel
+    with the legacy rows bucketed explicitly. Positional UNION would
+    silently misalign or reject here; by-name union is the only form
+    that survives additive schema evolution — the normal lifecycle of
+    a long-lived CDC subscription.
+
+    Scale shape: both branches are predicate-pushed scans of the same
+    file (no shuffle to union — it's a bag concat), and the single
+    aggregate is map-side combinable on the low-cardinality channel
+    key."""
+    ev = t(spark, sf_dir, "events")
+    old = ev.filter(F.col("event_id") % 2 == 0).select("event_id", "user_id", "value")
+    new = (
+        ev.filter(F.col("event_id") % 2 == 1)
+        .select("event_id", "user_id", "value", F.col("event_type").alias("channel"))
+    )
+    unioned = old.unionByName(new, allowMissingColumns=True)
+    return unioned.groupBy(
+        F.coalesce(F.col("channel"), F.lit("legacy")).alias("channel")
+    ).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_events"),
+        F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
+        .cast("double")
+        .alias("total_value"),
+    )

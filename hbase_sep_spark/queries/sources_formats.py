@@ -11,7 +11,7 @@ native timestamp; the explicit schema + format pin the semantics).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
 from hbase_sep_spark.io import scratch_dir, t
 from hbase_sep_spark.registry import register
@@ -211,4 +211,132 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.option("mergeSchema", "true")
         .parquet(f"{out}/batch=1", f"{out}/batch=2")
         .select("event_id", "user_id", "event_type", "value")
+    )
+
+
+_Z_BITS = 8
+_DUCK_Z = " | ".join(
+    f"(((u >> {i}) & 1) << {2 * i}) | (((v >> {i}) & 1) << {2 * i + 1})"
+    for i in range(_Z_BITS)
+)
+
+
+@register(
+    "layout_zorder_stats",
+    oracle=f"""
+    WITH keyed AS (
+        SELECT CAST(user_id % 256 AS BIGINT) AS u,
+               CAST(CAST(floor(value) AS BIGINT) % 256 AS BIGINT) AS v
+        FROM events
+    ),
+    z AS (SELECT u, v, {_DUCK_Z} AS zval FROM keyed)
+    SELECT CAST(zval // 256 AS BIGINT) AS zbucket,
+           CAST(count(*) AS BIGINT) AS n_rows,
+           CAST(min(u) AS BIGINT) AS u_min, CAST(max(u) AS BIGINT) AS u_max,
+           CAST(min(v) AS BIGINT) AS v_min, CAST(max(v) AS BIGINT) AS v_max
+    FROM z GROUP BY 1
+    """,
+    section="2.6",
+)
+def layout_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Z-order (Morton) clustering audit — the data-layout primitive
+    behind multi-dimensional file skipping: interleaving the bits of
+    two sort dimensions gives a 1-D sort key whose contiguous ranges
+    cover SMALL rectangles in both dimensions at once, so min/max
+    file stats prune on either predicate. The query computes the
+    16-bit Morton code of (user_id, value) per row — pure integer
+    shift/mask expressions, exact on both engines — then reports
+    each 256-wide z-range's row count and per-dimension min/max
+    envelope: the exact numbers a writer would place in parquet
+    footer stats after a z-order rewrite.
+
+    Scale shape: per-row codegen bit math + one map-side-combinable
+    aggregate on the z-bucket; at 100 TB this IS the clustering job's
+    statistics pass (the rewrite itself is a repartitionByRange on
+    zval). The bounded envelopes (u_max−u_min, v_max−v_min ≪ 255
+    per bucket) are the measurable pruning guarantee."""
+    ev = t(spark, sf_dir, "events")
+    u = (F.col("user_id") % 256).cast("long")
+    v = (F.floor("value").cast("long") % 256).cast("long")
+    keyed = ev.select(u.alias("u"), v.alias("v"))
+    zval = F.lit(0).cast("long")
+    for i in range(_Z_BITS):
+        zval = zval.bitwiseOR(
+            F.shiftleft(F.shiftright("u", i).bitwiseAND(F.lit(1)), 2 * i)
+        ).bitwiseOR(
+            F.shiftleft(F.shiftright("v", i).bitwiseAND(F.lit(1)), 2 * i + 1)
+        )
+    z = keyed.select("u", "v", zval.alias("zval"))
+    return z.groupBy((F.col("zval") / 256).cast("bigint").alias("zbucket")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+        F.min("u").cast("bigint").alias("u_min"),
+        F.max("u").cast("bigint").alias("u_max"),
+        F.min("v").cast("bigint").alias("v_min"),
+        F.max("v").cast("bigint").alias("v_max"),
+    )
+
+
+@register(
+    "layout_file_sizing_audit",
+    oracle="""
+    WITH per_src AS (
+        SELECT source,
+               CAST(count(*) AS BIGINT) AS n_docs,
+               CAST(sum(n_chars) AS BIGINT) AS total_bytes,
+               CAST(max(n_chars) AS BIGINT) AS max_doc_bytes
+        FROM documents GROUP BY source
+    )
+    SELECT source, n_docs, total_bytes, max_doc_bytes,
+           CAST(greatest(1, ceil(total_bytes / 16384.0)) AS BIGINT)
+               AS target_files,
+           round(total_bytes * 1.0 / n_docs, 2) + 0.0 AS avg_doc_bytes,
+           round(total_bytes * (count(*) OVER ()) * 1.0
+                 / sum(total_bytes) OVER (), 4) + 0.0 AS skew_vs_mean
+    FROM per_src
+    """,
+    section="2.6",
+)
+def layout_file_sizing_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-sizing / small-files layout audit — the table-maintenance
+    report behind every compaction scheduler: per write-partition
+    (source), the row count, byte volume, the target output-file
+    count at a fixed file-size budget (16 KiB here, standing in for
+    the production 128 MiB), the mean document size, and the skew of
+    this partition's volume vs the mean partition (compaction
+    priority: skew ≫ 1 needs splitting, many partitions with
+    target_files = 1 and tiny volume are the small-files problem).
+    All counts exact integers; doubles only in final rounded ratios.
+
+    Scale shape: one aggregate keyed by the write-partition column,
+    then window totals over one row per partition. This is the audit
+    that DECIDES repartition(n) before a write — sizing output files
+    to the budget is what keeps a 100 TB table scannable."""
+    docs = t(spark, sf_dir, "documents")
+    per_src = docs.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.sum("n_chars").cast("bigint").alias("total_bytes"),
+        F.max("n_chars").cast("bigint").alias("max_doc_bytes"),
+    )
+    wall = Window.partitionBy()
+    return per_src.select(
+        "source",
+        "n_docs",
+        "total_bytes",
+        "max_doc_bytes",
+        F.greatest(F.lit(1), F.ceil(F.col("total_bytes") / 16384.0))
+        .cast("bigint")
+        .alias("target_files"),
+        (F.round(F.col("total_bytes") * 1.0 / F.col("n_docs"), 2) + F.lit(0.0)).alias(
+            "avg_doc_bytes"
+        ),
+        (
+            F.round(
+                F.col("total_bytes")
+                * F.count(F.lit(1)).over(wall)
+                * 1.0
+                / F.sum("total_bytes").over(wall),
+                4,
+            )
+            + F.lit(0.0)
+        ).alias("skew_vs_mean"),
     )

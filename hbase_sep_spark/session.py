@@ -37,29 +37,8 @@ def get_spark(app_name: str = "hbase-sep-spark", shuffle_partitions: int | None 
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # AQE SMJ→SHJ rewrite threshold — measured rounds 13 AND 14,
-        # left OFF (the Spark default, 0). Solo A/B at sf10 it cut
-        # the fact⋈fact join 40%+ (BENCH_local_r13_shj_ab.json,
-        # fingerprint-identical), but the full-suite 64m session
-        # OOMed in round 13, and round 14 RE-TESTED it per
-        # VERDICT-r13 item 2 after scoping graph_pagerank's edge
-        # persist: it still dies — "Can't acquire 67108864 bytes
-        # memory to build hash relation, got 50459422" in warm-up —
-        # so the hazard is NOT the storage pool but raw build
-        # concurrency: the qualifying partitions are ~50 MB maps and
-        # 32 simultaneous no-spill builds exceed the execution pool
-        # on an 8 GB local[32] heap regardless of caches. Thresholds
-        # ≤32m never fire on the target join (its per-partition map
-        # is ~50 MB — round-14 scan), so there is no safe-and-useful
-        # default on this profile. A deployment with per-task memory
-        # to spare can opt in via $SPARK_GRAFT_SHJ_THRESHOLD; a
-        # sort-merge join spills and never fails this way, which is
-        # worth more at 100 TB than 40% on one join.
-        # (OPTIMIZATION_r13.md C6; OPTIMIZATION_r14.md C2.)
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "0"),
-        )
+        # AQE's SMJ→SHJ rewrite stays off (Spark's default, 0b): at 64m it OOMed the
+        # sf10 suite twice (OPTIMIZATION_r13.md C6, OPTIMIZATION_r14.md C2).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Bigger Arrow batches amortize the Python-worker transfer:
         # the round-10 sweep on Spark 4.1.2 measured the pandas-UDF

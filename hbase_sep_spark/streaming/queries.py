@@ -106,6 +106,11 @@ def _fresh_dir(spark: SparkSession, name: str) -> str:
     return path
 
 
+def _epoch_rows(batch_df: DataFrame, epoch_id: int, aggs) -> DataFrame:
+    """One epoch's sink rows: the batch's per-type `aggs`."""
+    return batch_df.groupBy("event_type").agg(*aggs).withColumn("epoch", F.lit(int(epoch_id)))
+
+
 def _epoch_sink(out_root: str, *aggs):
     """An idempotent micro-batch sink (the EventListener.processEvents
     analog): each batch's per-type `aggs` overwrite a deterministic
@@ -113,9 +118,7 @@ def _epoch_sink(out_root: str, *aggs):
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         (
-            batch_df.groupBy("event_type")
-            .agg(*aggs)
-            .withColumn("epoch", F.lit(int(epoch_id)))
+            _epoch_rows(batch_df, epoch_id, aggs)
             .write.mode("overwrite")
             .parquet(os.path.join(out_root, f"epoch={int(epoch_id)}"))
         )
@@ -123,9 +126,13 @@ def _epoch_sink(out_root: str, *aggs):
     return sink
 
 
-def _read_epochs(spark: SparkSession, out_root: str) -> DataFrame:
-    """The union of every epoch an _epoch_sink wrote."""
-    return spark.read.option("basePath", out_root).parquet(out_root + "/epoch=*")
+def _read_epochs(spark: SparkSession, out_root: str, stream_df: DataFrame, *aggs) -> DataFrame:
+    """The union of every epoch an _epoch_sink(out_root, *aggs) over
+    `stream_df` wrote, read as one directory partitioned by epoch; no
+    rows, in the same columns, when no micro-batch fired."""
+    if not os.listdir(out_root):
+        return _epoch_rows(spark.createDataFrame([], stream_df.schema), 0, aggs)
+    return spark.read.parquet(out_root)
 
 
 def _publish(merged: DataFrame, state_dir: str, epoch_id: int) -> None:
@@ -146,6 +153,22 @@ def _current(spark: SparkSession, state_dir: str) -> DataFrame | None:
     None before the first publish."""
     path = os.path.join(state_dir, "current")
     return spark.read.parquet(path) if os.path.exists(path) else None
+
+
+def _maintain(spark: SparkSession, stream_df: DataFrame, state_dir: str, merge) -> DataFrame:
+    """Drive `stream_df` through a parquet state table: each micro-batch
+    publishes merge(batch, current state or None). Returns the final
+    `current`, or, when no micro-batch fired, merge over an empty
+    batch (no rows, the columns a publish would have had)."""
+
+    def step(batch_df: DataFrame, epoch_id: int) -> None:
+        _publish(merge(batch_df, _current(batch_df.sparkSession, state_dir)), state_dir, epoch_id)
+
+    _drive(spark, stream_df.writeStream.foreachBatch(step))
+    current = _current(spark, state_dir)
+    if current is None:
+        return merge(spark.createDataFrame([], stream_df.schema), None)
+    return current
 
 
 def _content_hash(df: DataFrame) -> tuple[int, int]:
@@ -495,9 +518,10 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     of all epochs is read back."""
     out_root = _fresh_dir(spark, "foreach_sink")
     ev = read_stream(spark, _feed(sf_dir), batch_size=feed_batch_size(_feed(sf_dir), 2500, 4))
-    sink = _epoch_sink(out_root, F.count(F.lit(1)).alias("n_events"))
-    _drive(spark, ev.writeStream.foreachBatch(sink))
-    return _read_epochs(spark, out_root).groupBy("event_type").agg(F.sum("n_events").alias("n_events"))
+    n_events = F.count(F.lit(1)).alias("n_events")
+    _drive(spark, ev.writeStream.foreachBatch(_epoch_sink(out_root, n_events)))
+    epochs = _read_epochs(spark, out_root, ev, n_events)
+    return epochs.groupBy("event_type").agg(F.sum("n_events").alias("n_events"))
 
 
 @register("stream_sink_exactly_once_audit", oracle=None, section=SECTION)
@@ -528,12 +552,12 @@ def stream_sink_exactly_once_audit(spark: SparkSession, sf_dir: str) -> DataFram
     (asserted in tests/test_streaming.py)."""
     out_root = _fresh_dir(spark, "sink_x1_audit")
     audit: dict[int, tuple[int, int, int, int]] = {}
-    apply_batch = _epoch_sink(
-        out_root,
+    aggs = (
         F.count(F.lit(1)).alias("n_events"),
         F.min("event_id").alias("min_event_id"),
         F.max("event_id").alias("max_event_id"),
     )
+    apply_batch = _epoch_sink(out_root, *aggs)
 
     def sink_batch(batch_df: DataFrame, epoch_id: int) -> None:
         s = batch_df.sparkSession
@@ -565,7 +589,11 @@ def stream_sink_exactly_once_audit(spark: SparkSession, sf_dir: str) -> DataFram
     # table's per-type counts (the feed delivered exactly once into
     # the sink). Both sides are tiny aggregates; the compare is one
     # small join counted driver-side.
-    sunk = _read_epochs(spark, out_root).groupBy("event_type").agg(F.sum("n_events").alias("n_sunk"))
+    sunk = (
+        _read_epochs(spark, out_root, ev, *aggs)
+        .groupBy("event_type")
+        .agg(F.sum("n_events").alias("n_sunk"))
+    )
     expected = (
         _timed_events(spark, sf_dir).groupBy("event_type").agg(F.count(F.lit(1)).alias("n_expected"))
     )
@@ -697,22 +725,19 @@ def stream_incremental_upsert_view(spark: SparkSession, sf_dir: str) -> DataFram
     collapse. The final view must equal the batch latest-per-key
     query — asserted in tests/test_streaming.py.
     """
-    state_dir = _fresh_dir(spark, "upsert_view")
 
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
+    def upsert(batch_df: DataFrame, existing: DataFrame | None) -> DataFrame:
         latest = _final_rows(
             batch_df.select("user_id", "ts", "event_id", "event_type", "value"), "ts", "event_id"
         )
-        existing = _current(batch_df.sparkSession, state_dir)
         if existing is not None:
             latest = existing.join(latest.select("user_id"), "user_id", "left_anti").unionByName(latest)
-        _publish(latest, state_dir, epoch_id)
+        return latest
 
     ev = read_stream(
         spark, _feed(sf_dir), batch_size=feed_batch_size(_feed(sf_dir), 2000, 5), redeliver_every=7
     )
-    _drive(spark, ev.writeStream.foreachBatch(upsert))
-    return spark.read.parquet(os.path.join(state_dir, "current"))
+    return _maintain(spark, ev, _fresh_dir(spark, "upsert_view"), upsert)
 
 
 @register("stream_scd2_maintain", oracle=None, section=SECTION)
@@ -740,11 +765,9 @@ def stream_scd2_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     overwrite on the open partition); within-batch versioning is one
     user_id window; the first-new-ts side is key-cardinality and
     broadcasts."""
-    state_dir = _fresh_dir(spark, "scd2_maintain")
 
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
+    def merge_batch(batch_df: DataFrame, state: DataFrame | None) -> DataFrame:
         batch = batch_df.select("user_id", "event_id", "value", "ts")
-        state = _current(batch_df.sparkSession, state_dir)
         if state is not None:
             # Idempotence under redelivery: drop events already applied.
             batch = batch.join(state.select("event_id"), "event_id", "left_anti")
@@ -770,13 +793,12 @@ def stream_scd2_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .unionByName(closed_now)
                 .unionByName(new_rows)
             )
-        _publish(merged, state_dir, epoch_id)
+        return merged
 
     ev = read_stream(
         spark, _feed(sf_dir), batch_size=feed_batch_size(_feed(sf_dir), 2000, 5), redeliver_every=7
     )
-    _drive(spark, ev.writeStream.foreachBatch(merge_batch))
-    final = spark.read.parquet(os.path.join(state_dir, "current"))
+    final = _maintain(spark, ev, _fresh_dir(spark, "scd2_maintain"), merge_batch)
     return final.select(
         "user_id",
         "event_id",

@@ -451,7 +451,8 @@ _TABLE = (
          "vec_pca_project", "vec_kmeans_lloyd", "stream_bootstrap_then_tail",
          "pipeline_dataset_card_report", "events_latest_per_key", "agg_global",
          "ts_weekly_ohlc", "simsearch_cosine_topk", "dedup_exact_docs", "text_tfidf",
-         "stream_tumbling_count"),
+         "stream_tumbling_count", "stream_foreach_batch_sink", "stream_incremental_upsert_view",
+         "stream_scd2_maintain"),
         build=_empty("events", "documents", "embeddings"),
     ),
     Mutation(

@@ -588,7 +588,7 @@ def test_bloom_bitmap_is_superset_prefilter(spark):
     build-side key must pass the membership test (zero false
     negatives by construction) — exercised through the same
     bloom_build/bloom_member the query uses."""
-    from hbase_sep_spark.queries.analytics_r5b import (
+    from hbase_sep_spark.queries.joins import (
         _bloom_pos,
         bloom_build,
         bloom_member,

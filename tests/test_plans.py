@@ -296,7 +296,7 @@ def test_pagerank_caches_edges_no_cartesian(spark):
     Asserted on the PRE-checkpoint plan via _pagerank_iterate — the
     registered query eagerly checkpoints the result and releases the
     edges (VERDICT-r13 item 1), so its own plan is a checkpoint scan."""
-    from hbase_sep_spark.queries.advanced_analytics import _pagerank_iterate
+    from hbase_sep_spark.queries.graph import _pagerank_iterate
 
     final, ew = _pagerank_iterate(spark, SF_UNIT)
     try:
