@@ -234,7 +234,7 @@ def main() -> None:
     removed = sorted(n for n in a if n not in b)
     print(f"changed {args.ref_a}..{args.ref_b}: {len(changed)}")
     for n in changed:
-        helpers = sorted(h for h, _ in b[n].helpers ^ a[n].helpers) if n in a else []
+        helpers = sorted({h for h, _ in b[n].helpers ^ a[n].helpers}) if n in a else []
         print(f"  {n}  ({b[n].file}{': ' + ', '.join(helpers) if helpers else ''})")
     print(f"moved, unchanged {args.ref_a}..{args.ref_b}: {len(moved)}")
     for n in moved:
